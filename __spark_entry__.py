@@ -34,26 +34,6 @@ from pyspark.sql import functions as F
 
 from topic_store_spark.tables import load_table
 
-#: r14 optimization-round toggle (`tools/ab_bench.py asofstage:
-#: snapshot_asof`): True stages q_snapshot_asof's click and purchase
-#: event subsets ONCE each, hash(user_id)-partitioned + persisted +
-#: plan-finalized, so the asof/interval branches' four user-keyed
-#: exchanges (quote-dedup groupBy, asof union window, interval bin
-#: join at scale, per-click sum) inherit the staging partitioning
-#: instead of planning their own.  Runtime shuffle stages measured
-#: 6 -> 4 with broadcast disabled (the 100 TB regime) and 4 -> 1
-#: locally; results identical both regimes (repartition + persist are
-#: row-preserving) — oracle-checked.  DEFAULT False: the interleaved
-#: receipt (BENCH_AB_asofstage_snapshot_asof.json) stamped
-#: stage_off_faster at sf0.1 — the two persist+finalize probe jobs
-#: cost more than the exchanges they save on this fixture, where every
-#: branch's shuffle is a few MB.  The staging is the documented 100 TB
-#: configuration (exchange bytes scale with the corpus, the probe jobs
-#: are constant); flipping it on is a one-line production conf, and
-#: the A/B keeps both shapes measurable per round.
-ASOF_SHARED_STAGE = False
-
-
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
@@ -1225,57 +1205,12 @@ def q_snapshot_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type").alias("key"),
         F.col("value").cast("double").alias("v"),
     )
-    if ASOF_SHARED_STAGE:
-        # r14 (guide §2.4, VERDICT r13 item 5): the asof and interval
-        # branches read the SAME two event subsets, both keyed on
-        # user_id — stage each ONCE, hash(user_id)-partitioned, persist,
-        # and finalize the cached plan so every consumer inherits the
-        # partitioning: the asof quote-dedup groupBy (user_id, ts), the
-        # asof union window (user_id), the interval bin equi-join
-        # (user_id, _iv_bin) and the per-click sum (event_id, user_id,
-        # ts) all cluster on supersets of user_id, so none plans its
-        # own exchange.  Two staging exchanges replace four
-        # branch-local ones (six at scale, where the bin join cannot
-        # broadcast), and events is scanned twice instead of four
-        # times.  Row values are untouched — repartition + persist are
-        # row-preserving — so the oracle is unchanged.
-        from topic_store_spark.operators.util import (
-            expose_cached_partitioning,
-            hash_partition,
-            persist_tracked,
-        )
-
-        clicks_staged = expose_cached_partitioning(
-            persist_tracked(
-                hash_partition(
-                    events.filter(F.col("event_type") == "click").select(
-                        "event_id", "user_id", "ts",
-                        _epoch_sec(events).alias("ts_sec"),
-                    ),
-                    "user_id",
-                )
-            )
-        )
-        purchases_staged = expose_cached_partitioning(
-            persist_tracked(
-                hash_partition(
-                    events.filter(F.col("event_type") == "purchase").select(
-                        "user_id", "ts", "value", "event_id",
-                        _epoch_sec(events).alias("ts_sec"),
-                    ),
-                    "user_id",
-                )
-            )
-        )
-        probes = clicks_staged.select("event_id", "user_id", "ts")
-        quotes = purchases_staged.select("user_id", "ts", "value", "event_id")
-    else:
-        probes = events.filter(F.col("event_type") == "click").select(
-            "event_id", "user_id", "ts"
-        )
-        quotes = events.filter(F.col("event_type") == "purchase").select(
-            "user_id", "ts", "value", "event_id"
-        )
+    probes = events.filter(F.col("event_type") == "click").select(
+        "event_id", "user_id", "ts"
+    )
+    quotes = events.filter(F.col("event_type") == "purchase").select(
+        "user_id", "ts", "value", "event_id"
+    )
     joined = asof_join(
         probes, quotes, on="user_id", left_ts="ts", right_ts="ts",
         value_cols=["value"], tie_col="event_id",
@@ -1287,24 +1222,15 @@ def q_snapshot_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("user_id").cast("string").alias("key"),
         F.col("asof_value").cast("double").alias("v"),
     )
-    if ASOF_SHARED_STAGE:
-        clicks = clicks_staged
-        wins = purchases_staged.select(
-            "user_id",
-            F.col("ts_sec").alias("w_start"),
-            (F.col("ts_sec") + 14400.0).alias("w_end"),
-            F.round(F.col("value") * 1000).cast("long").alias("w_milli"),
-        )
-    else:
-        clicks = events.filter(F.col("event_type") == "click").select(
-            "event_id", "user_id", "ts", _epoch_sec(events).alias("ts_sec")
-        )
-        wins = events.filter(F.col("event_type") == "purchase").select(
-            "user_id",
-            _epoch_sec(events).alias("w_start"),
-            (_epoch_sec(events) + 14400.0).alias("w_end"),
-            F.round(F.col("value") * 1000).cast("long").alias("w_milli"),
-        )
+    clicks = events.filter(F.col("event_type") == "click").select(
+        "event_id", "user_id", "ts", _epoch_sec(events).alias("ts_sec")
+    )
+    wins = events.filter(F.col("event_type") == "purchase").select(
+        "user_id",
+        _epoch_sec(events).alias("w_start"),
+        (_epoch_sec(events) + 14400.0).alias("w_end"),
+        F.round(F.col("value") * 1000).cast("long").alias("w_milli"),
+    )
     iv = interval_join(
         clicks, wins, on="user_id", left_ts="ts_sec",
         right_start="w_start", right_end="w_end", bin_width=3600.0,
@@ -1717,26 +1643,10 @@ def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # TWO eager residual-pipeline driver jobs per DataFrame build.
     # Exactly equal by the permutation-commutes argument pinned in
     # tests/test_dedup_similarity.py::test_opq_fused_codebooks_equal_composed.
-    # similarity.FUSED_OPQ=False restores the composed build for
-    # `ab_bench.py opqfuse:ann_pq` interleaved receipts.
-    import topic_store_spark.operators.similarity as _sim
-
     src = ivf_residual_vectors(emb.filter(F.col("vec_id") < 16), cen)
-    if _sim.FUSED_OPQ:
-        perm, books = opq_permuted_codebooks(src, m=32)
-        emb_p = permute_vectors(emb, perm)
-        cen_p = emb_p.filter(F.col("vec_id") < 8)
-    else:
-        from topic_store_spark.operators.similarity import (
-            pq_codebooks,
-            variance_balanced_permutation,
-        )
-
-        perm = variance_balanced_permutation(src)
-        emb_p = permute_vectors(emb, perm)
-        cen_p = emb_p.filter(F.col("vec_id") < 8)
-        src_p = ivf_residual_vectors(emb_p.filter(F.col("vec_id") < 16), cen_p)
-        books = pq_codebooks(src_p, m=32)
+    perm, books = opq_permuted_codebooks(src, m=32)
+    emb_p = permute_vectors(emb, perm)
+    cen_p = emb_p.filter(F.col("vec_id") < 8)
     return ivf_pq_ann_neighbors(
         emb_p,
         queries=emb_p.filter(F.col("vec_id") < 10),

@@ -312,42 +312,27 @@ def test_connected_components_long_chain(spark, dme):
 
 
 def test_connected_components_probe_gate_parity_and_boundary(spark):
-    """r13 optimization: the single-probe driver gate (CC_PROBE_GATE)
-    must label identically to the r12 three-job gate, on BOTH sides of
-    the ``driver_max_edges`` boundary (probe == K rows -> fast path;
-    probe == K+1 rows -> distributed rounds), including exactly-at-K."""
-    from topic_store_spark.operators import dedup as dedup_mod
+    """The ``limit(K+1)`` probe picks the tier: raw pair rows <= K
+    label on the driver, K+1 overflow into the distributed rounds —
+    both sides must label identically, including exactly-at-K."""
     from topic_store_spark.operators.dedup import connected_components
 
-    # 5 distinct canonical edges: chain 1-2-3 + pair (10,11) + (20,21),
-    # with a duplicate and a self-loop that must not count toward K
+    # chain 1-2-3-4 + pair (10,11) + (20,21), with a duplicate and a
+    # self-loop: 7 RAW pair rows (the dup and self-loop DO count toward
+    # the driver-local bound)
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 20), (9, 9)],
         "a_doc long, b_doc long",
     )
     want = {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20, 9: 9}
-    orig = dedup_mod.CC_PROBE_GATE
-    orig_local = dedup_mod.CC_LOCAL_RESULT
-    try:
-        for local in (True, False):
-            dedup_mod.CC_LOCAL_RESULT = local
-            for gate in (True, False):
-                dedup_mod.CC_PROBE_GATE = gate
-                # dme 4/5/6 straddle the 5 distinct canonical edges
-                # (r13 probe tier); 6/7/8 straddle the 7 RAW pair rows
-                # (r14 local tier — dup + self-loop DO count toward its
-                # bound, so dme=6 overflows it into the r13 tiers)
-                for dme in (4, 5, 6, 7, 8):
-                    got = {
-                        r["node"]: r["component"]
-                        for r in connected_components(
-                            pairs, driver_max_edges=dme
-                        ).collect()
-                    }
-                    assert got == want, (local, gate, dme)
-    finally:
-        dedup_mod.CC_PROBE_GATE = orig
-        dedup_mod.CC_LOCAL_RESULT = orig_local
+    # dme 4..6 overflow into the distributed rounds; 7 (== raw rows)
+    # and 8 stay driver-local
+    for dme in (4, 5, 6, 7, 8):
+        got = {
+            r["node"]: r["component"]
+            for r in connected_components(pairs, driver_max_edges=dme).collect()
+        }
+        assert got == want, dme
 
 
 def test_connected_components_giant_star_and_selfloop(spark):
@@ -688,6 +673,7 @@ def test_ivf_pq_residual_exact_when_residuals_are_codebook(spark, embeddings):
 
     from topic_store_spark.functions.vectors import quantize_vector
     from topic_store_spark.operators.similarity import (
+        assign_to_lists,
         ivf_pq_ann_neighbors,
         ivf_residual_vectors,
         pq_codebooks,
@@ -696,6 +682,10 @@ def test_ivf_pq_residual_exact_when_residuals_are_codebook(spark, embeddings):
     corpus = embeddings.filter(F.col("vec_id") < 16)
     queries = corpus.filter(F.col("vec_id") < 4)
     cen = corpus.filter(F.col("vec_id") < 4)
+    # no centroids: empty assignment and empty residual relation
+    empty_cen = corpus.filter(F.lit(False))
+    assert assign_to_lists(corpus, empty_cen).count() == 0
+    assert ivf_residual_vectors(corpus, empty_cen).count() == 0
     src = ivf_residual_vectors(corpus, cen)
     books = pq_codebooks(src, m=8)
     got = ivf_pq_ann_neighbors(
@@ -1113,44 +1103,6 @@ def test_pair_cache_scope_thread_isolated(spark):
     assert set(pinned) == {"a", "b"}
 
 
-def test_ppjoin_cuts_flag_output_equality(spark):
-    """r11 A/B knob: PPJOIN_CUTS=False (pre-0ea8df7 candidate join) must
-    produce the identical pair set — the cuts prune only candidates the
-    exact verify rejects."""
-    from topic_store_spark.operators import dedup
-    from topic_store_spark.operators.dedup import (
-        ngram_jaccard_pairs,
-        release_pair_caches,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, " ".join(f"w{(i * 7 + k) % 23}" for k in range(12)))
-         for i in range(40)]
-        + [(100, "a b c d e f g h"), (101, "a b c d e f g x")],
-        "doc_id long, text string",
-    )
-
-    def pairs():
-        out = sorted(
-            (r["a_doc"], r["b_doc"], r["jaccard"])
-            for r in ngram_jaccard_pairs(
-                docs, n=2, threshold_num=1, threshold_den=3
-            ).collect()
-        )
-        release_pair_caches()
-        spark.catalog.clearCache()
-        return out
-
-    assert dedup.PPJOIN_CUTS is True  # production default
-    on = pairs()
-    dedup.PPJOIN_CUTS = False
-    try:
-        off = pairs()
-    finally:
-        dedup.PPJOIN_CUTS = True
-    assert on == off and len(on) > 0
-
-
 def test_semantic_dedup_max_cluster_size_valve(spark):
     """r12 scale valve (LSH-sign sub-buckets): (a) no-op when the cap
     covers every cluster, (b) under a tight cap the output is a SUBSET
@@ -1276,144 +1228,6 @@ def test_semantic_dedup_report_matches_composed(spark):
     assert fused == composed and len(fused) > 20
 
 
-def test_semantic_argmax_assignment_parity(spark):
-    """r14: the per-row argmax assignment (ARGMAX_ASSIGN: map-side
-    expression over collected centroid literals) must produce the
-    row-identical report to the r13 crossJoin+groupBy shape — the
-    affinity arithmetic and (aff desc, cen_id asc) tie-break are the
-    same ops, so every pair, cosine and audit count matches bit for
-    bit.  Covers the valve-on sub-split (whose sign-bit inputs ride
-    the assignment's c_qv) and the empty-centroid degenerate path."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from topic_store_spark.operators import dedup as dedup_mod
-    from topic_store_spark.operators.dedup import (
-        release_pair_caches,
-        semantic_dedup_report,
-    )
-
-    rng = np.random.RandomState(11)
-    rows = []
-    for i in range(60):
-        base = rng.randn(8)
-        rows.append((i, [float(x) for x in base]))
-        if i % 3 == 0:
-            rows.append((1000 + i, [float(x) for x in base + 1e-3]))
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    cen = emb.filter(F.col("vec_id") < 3)
-    empty_cen = emb.filter(F.lit(False))
-
-    def canon(df):
-        return sorted(tuple(r) for r in df.collect())
-
-    orig = dedup_mod.ARGMAX_ASSIGN
-    got = {}
-    try:
-        for mode in (True, False):
-            dedup_mod.ARGMAX_ASSIGN = mode
-            got[mode] = canon(
-                semantic_dedup_report(emb, cen, max_cluster_size=8)
-            )
-            release_pair_caches()
-            spark.catalog.clearCache()
-            assert (
-                semantic_dedup_report(
-                    emb, empty_cen, max_cluster_size=8
-                ).count()
-                == 0
-            ), mode
-            release_pair_caches()
-            spark.catalog.clearCache()
-    finally:
-        dedup_mod.ARGMAX_ASSIGN = orig
-        release_pair_caches()
-        spark.catalog.clearCache()
-    assert got[True] == got[False] and len(got[True]) > 20
-
-
-def test_arrow_pair_dot_parity(spark, embeddings):
-    """r14 VERDICT item 1: the Arrow-vectorized pair-verify dot
-    (ARROW_PAIR_DOT pandas UDF, numpy int64) must be bit-identical to
-    the interpreted aggregate(zip_with) fold on both pair-verify
-    carriers (semantic report + embedding LSH pairs) — int64 dot of
-    quantized components never leaves the exact range."""
-    from pyspark.sql import functions as F
-
-    from topic_store_spark.operators import dedup as dedup_mod
-    from topic_store_spark.operators.dedup import (
-        embedding_dup_pairs_lsh,
-        release_pair_caches,
-        semantic_dedup_report,
-    )
-
-    emb = embeddings.select("vec_id", "embedding")
-    clone = emb.select(
-        (F.col("vec_id") + 100000).alias("vec_id"), "embedding"
-    )
-    both = emb.unionByName(clone)
-    cen = emb.filter(F.col("vec_id") < 8)
-
-    def canon(df):
-        return sorted(tuple(r) for r in df.collect())
-
-    orig = dedup_mod.ARROW_PAIR_DOT
-    got = {}
-    try:
-        for mode in (True, False):
-            dedup_mod.ARROW_PAIR_DOT = mode
-            got[mode] = (
-                canon(semantic_dedup_report(both, cen, max_cluster_size=32)),
-                canon(embedding_dup_pairs_lsh(both)),
-            )
-            release_pair_caches()
-            spark.catalog.clearCache()
-    finally:
-        dedup_mod.ARROW_PAIR_DOT = orig
-        release_pair_caches()
-        spark.catalog.clearCache()
-    assert got[True][0] == got[False][0] and len(got[True][0]) > 0
-    assert got[True][1] == got[False][1] and len(got[True][1]) > 0
-
-
-def test_ivf_argmax_assignment_parity(spark, embeddings):
-    """r14: ARGMAX_ASSIGN's per-row argmax must reproduce the r13
-    crossJoin+groupBy shape row for row on BOTH IVF primitives —
-    assign_to_lists (assignment relation) and ivf_residual_vectors
-    (residual floats, whose winning-centroid vector rides the struct)
-    — including empty-centroid degenerate output."""
-    from pyspark.sql import functions as F
-
-    from topic_store_spark.operators import similarity as sim_mod
-    from topic_store_spark.operators.similarity import (
-        assign_to_lists,
-        ivf_residual_vectors,
-    )
-
-    cen = embeddings.filter(F.col("vec_id") < 8)
-    empty_cen = embeddings.filter(F.lit(False))
-
-    def canon(df):
-        return sorted(
-            tuple(tuple(v) if isinstance(v, list) else v for v in r)
-            for r in df.collect()
-        )
-
-    orig = sim_mod.ARGMAX_ASSIGN
-    got_a, got_r = {}, {}
-    try:
-        for mode in (True, False):
-            sim_mod.ARGMAX_ASSIGN = mode
-            got_a[mode] = canon(assign_to_lists(embeddings, cen))
-            got_r[mode] = canon(ivf_residual_vectors(embeddings, cen))
-            assert assign_to_lists(embeddings, empty_cen).count() == 0
-            assert ivf_residual_vectors(embeddings, empty_cen).count() == 0
-    finally:
-        sim_mod.ARGMAX_ASSIGN = orig
-    assert got_a[True] == got_a[False] and len(got_a[True]) > 0
-    assert got_r[True] == got_r[False] and len(got_r[True]) > 0
-
-
 def test_semantic_dedup_valve_empty_centroids(spark):
     """r12 ADVICE: with max_cluster_size set, an EMPTY centroid
     relation must degrade to the same empty pair set as the uncapped
@@ -1435,6 +1249,44 @@ def test_semantic_dedup_valve_empty_centroids(spark):
         release_pair_caches()
         spark.catalog.clearCache()
     assert uncapped == [] and capped == []
+
+
+def test_semantic_dedup_cluster_id_keeps_centroid_id_dtype(spark):
+    """``cluster_id`` carries the centroid id column's dtype whether or
+    not there are centroids (the argmax literals are emitted in that
+    type), and a non-integral centroid id is rejected by name."""
+    from topic_store_spark.operators.dedup import (
+        release_pair_caches,
+        semantic_cluster_dedup,
+    )
+
+    emb = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [1.0, 0.0]), (2, [0.0, 1.0])],
+        "vec_id long, embedding array<double>",
+    )
+    try:
+        for id_type in ("int", "bigint"):
+            cen = spark.createDataFrame(
+                [(7, [1.0, 0.0]), (9, [0.0, 1.0])],
+                f"vec_id {id_type}, embedding array<double>",
+            )
+            for c in (cen, cen.limit(0)):
+                out = semantic_cluster_dedup(emb, c)
+                assert out.schema["cluster_id"].dataType == (
+                    cen.schema["vec_id"].dataType
+                ), id_type
+            rows = semantic_cluster_dedup(emb, cen).collect()
+            assert [(r["a_id"], r["b_id"], r["cluster_id"]) for r in rows] == [
+                (0, 1, 7)
+            ]
+        str_cen = spark.createDataFrame(
+            [("7", [1.0, 0.0])], "vec_id string, embedding array<double>"
+        )
+        with pytest.raises(ValueError, match="STRING"):
+            semantic_cluster_dedup(emb, str_cen)
+    finally:
+        release_pair_caches()
+        spark.catalog.clearCache()
 
 
 def test_opq_fused_codebooks_equal_composed(spark, embeddings):

@@ -105,3 +105,46 @@ def test_semantic_cluster_dedup_matches_reference(spark):
             )
     finally:
         release_pair_caches()
+
+
+def test_semantic_dedup_report_uncapped_matches_reference(spark):
+    """The fused report's ``uncapped`` rows are the single-assignment
+    pair set: near-dup clones over a 3-centroid table must match the
+    reference bit-for-bit, and an empty centroid table yields no rows
+    at all (no pairs, no audit buckets)."""
+    from pyspark.sql import functions as F
+
+    from topic_store_spark.operators.dedup import (
+        release_pair_caches,
+        semantic_dedup_report,
+    )
+
+    rng = random.Random(11)
+    vecs = []
+    for i in range(60):
+        base = [rng.gauss(0, 1) for _ in range(8)]
+        vecs.append((i, base))
+        if i % 3 == 0:
+            vecs.append((1000 + i, [x + 1e-3 for x in base]))
+    cens = [(i, v) for i, v in vecs if i < 3]
+    emb = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
+    try:
+        want = _ref(vecs, cens, 95, 100, 1, 0.05)
+        got = {
+            (r["a_id"], r["b_id"]): (r["cluster_id"], r["cosine_q"])
+            for r in semantic_dedup_report(
+                emb, emb.filter(F.col("vec_id") < 3), max_cluster_size=1000
+            )
+            .filter(F.col("variant") == "uncapped")
+            .collect()
+        }
+        assert got == want and len(want) >= 20
+        release_pair_caches()
+        spark.catalog.clearCache()
+        empty = semantic_dedup_report(
+            emb, emb.filter(F.lit(False)), max_cluster_size=1000
+        )
+        assert empty.count() == 0
+    finally:
+        release_pair_caches()
+        spark.catalog.clearCache()

@@ -1,7 +1,7 @@
 """Interleaved same-session A/B harness (r10 VERDICT next-round #1/#2).
 
-Measures ONE query under two code variants toggled between executions in
-one Spark session, interleaved A B A B ... with the cache cleared before
+Measures ONE query under two variants (a session conf, or HEAD twice)
+switched between executions in one Spark session, interleaved A B A B ... with the cache cleared before
 every execution — the only protocol under which a per-query delta on
 this host means anything: the r10 closing bench's noise band (13.6%)
 swallowed every sub-second claim made from separate runs.
@@ -24,58 +24,23 @@ r12 protocol fixes (both from r11 ADVICE):
 
 Experiments:
 
-* ``ppjoin`` (default) — PPJOIN_CUTS on/off on the registry's
-  dedup_word_overlap carrier (sf documents fixture).
-* ``ppjoin_neardup`` — same toggle, but on a near-dup-RICH corpus built
-  replica-style from the sf documents table (each replica doc gets a
-  near-dup partner differing by a 2-word suffix), the candidate-density
-  regime where prefix filtering is supposed to pay (r11 VERDICT #2).
-  Size via SPARK_GRAFT_AB_REPLICAS (default 8 ≈ 8k docs + 8k partners
-  at sf0.01-shaped input; the bench reads $SPARK_GRAFT_SF_DIR).
 * ``aqefloor`` — ``spark.sql.adaptive.coalescePartitions
-  .minPartitionSize`` 64k (r11 session default) vs 1m (Spark default).
+  .minPartitionSize`` 64k (r11 session default) vs 1m (Spark default),
+  on the registry's dedup_word_overlap query.
 * ``null:<query>`` — BOTH variants are HEAD with no toggle at all: the
   measured "delta" is pure host/JVM noise, and the stamped spread is
   the definitive floor under which any future cross-round claim on that
   query is noise, not code (r11 VERDICT #4).
-* ``fastexpr:<query>`` — r13 unrolled codegen vector expressions
-  (similarity.FAST_EXPR) on/off on any registry query.
-* ``pairbarrier:<query>`` — r13 pair-verify evaluate-once Generate
-  barrier (operators.util.PROJECT_ONCE_BARRIER) on/off: OFF restores
-  the r12 plans whose join conditions re-evaluate the verify
-  expression per reference.
-* ``opqfuse:<query>`` — r13 fused one-collect OPQ derivation
-  (similarity.FUSED_OPQ) on/off (off = r12 composed two-collect build).
-* ``reportfuse:<query>`` — r13 fused semantic-report pair derivation
-  (dedup.FUSED_REPORT_PAIRS) on/off (off = r12 two self-joins).
-* ``ccprobe:<query>`` — r13 connected-components single-probe driver
-  gate (dedup.CC_PROBE_GATE) on/off (off = r12 checkpoint + count +
-  collect three-eager-job gate).
-* ``cclocal:<query>`` — r14 connected-components fully-local fast path
-  (dedup.CC_LOCAL_RESULT: one raw-pair probe collect, labels returned
-  as a local relation — no checkpoint, no distributed node join) on/off
-  (off = r13 checkpoint + distinct-edge probe shape).
-* ``argmax:<query>`` — r14 per-row argmax centroid assignment
-  (dedup/similarity ARGMAX_ASSIGN: map-side expression over collected
-  centroid literals, no corpus-scale exchange) on/off (off = r13
-  crossJoin(broadcast) + groupBy(c_id) argmax shape).
-* ``arrowdot:<query>`` — r14 Arrow-vectorized pair-verify dot
-  (dedup.ARROW_PAIR_DOT: pandas UDF + numpy int64 einsum, exact) on/off
-  (off = interpreted aggregate(zip_with) HOF fold; VERDICT r13 item 1
-  — the receipt decides the default either way).
-* ``gllazy:<query>`` — r14 $graphLookup lazy frontier gate
-  (pipeline.GL_LAZY_GATE: per-level checkpoint deferred into the gate
-  count, 1 eager job/level) on/off (off = r13 eager checkpoint + count
-  = 2 jobs/level).
-* ``asofstage:<query>`` — r14 snapshot_asof shared hash(user_id)
-  staging (entry ASOF_SHARED_STAGE) on/off (off = r13 per-branch
-  scans and exchanges).
 
-``ppjoin`` writes BENCH_AB.json (folded into BENCH_detail.json by
-bench.py); other experiments write BENCH_AB_<name>.json
-(``null:q`` -> BENCH_AB_null_<q>.json).
+The operators carry no A/B toggles: each has one physical plan, so a
+plan change is measured as a before/after pair of commits against the
+null floor, not as a flag flip.  Receipts written by retired
+experiments stay in the repo as history.
 
-Usage: python tools/ab_bench.py [sf_dir] [rounds_per_variant] [experiment]
+Every experiment writes BENCH_AB_<name>.json (``null:q`` ->
+BENCH_AB_null_<q>.json).
+
+Usage: python tools/ab_bench.py sf_dir rounds_per_variant {aqefloor|null:<query>}
 """
 
 from __future__ import annotations
@@ -86,7 +51,6 @@ import os
 import statistics
 import subprocess
 import sys
-import tempfile
 import time
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -105,48 +69,15 @@ def _git_rev() -> str:
         return "unknown"
 
 
-def _neardup_corpus(spark, sf_dir: str, replicas: int):
-    """Near-dup-RICH corpus: ``replicas`` word-suffixed (shingle-
-    disjoint) copies of the sf documents table, UNIONed with one
-    near-dup partner per replica doc (same text + a 2-word suffix, so
-    word-3-gram Jaccard stays >= ~0.9 for typical doc lengths).  Every
-    doc has >= 1 true near-dup -> candidate density is high everywhere,
-    the regime where PPJoin prefix cuts should prune least wastefully.
-    Materialized to parquet so both variants scan identical files."""
-    from pyspark.sql import functions as F
-
-    from topic_store_spark.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    rids = spark.range(replicas).select(F.col("id").cast("int").alias("rid"))
-    base = docs.crossJoin(F.broadcast(rids)).select(
-        (F.col("doc_id") + F.col("rid") * 1000000).alias("doc_id"),
-        F.array_join(
-            F.transform(
-                F.split("text", " "),
-                lambda w: F.concat(w, F.lit("~"), F.col("rid").cast("string")),
-            ),
-            " ",
-        ).alias("text"),
-    )
-    partners = base.select(
-        (F.col("doc_id") + 500000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" zz yy")).alias("text"),
-    )
-    return base.unionByName(partners)
-
-
 def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else os.environ.get(
-        "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    n_rounds = int(sys.argv[2]) if len(sys.argv) > 2 else 6
-    experiment = sys.argv[3] if len(sys.argv) > 3 else "ppjoin"
+    if len(sys.argv) != 4:
+        raise SystemExit(__doc__.rsplit("Usage: ", 1)[1].strip())
+    sf_dir, n_rounds, experiment = sys.argv[1], int(sys.argv[2]), sys.argv[3]
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entry_mod
-    from topic_store_spark.operators import dedup
     from topic_store_spark.operators.util import cache_scope
 
     spark = (
@@ -167,7 +98,6 @@ def main() -> int:
 
     _FLOOR = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
     query_name = QUERY
-    fixture_note = f"registry fixture at {sf_dir}"
     if experiment.startswith("null:"):
         query_name = experiment.split(":", 1)[1]
         exp = {
@@ -180,212 +110,6 @@ def main() -> int:
             },
         }
         fn = entry_mod.queries()[query_name]
-    elif experiment.startswith("fastexpr:"):
-        query_name = experiment.split(":", 1)[1]
-        from topic_store_spark.operators import similarity
-
-        exp = {
-            "label": ("r13 unrolled codegen vector expressions "
-                      "(similarity.FAST_EXPR) on vs off (r12 "
-                      "higher-order-function forms)"),
-            "variants": {
-                "fast_on": lambda: setattr(similarity, "FAST_EXPR", True),
-                "fast_off": lambda: setattr(similarity, "FAST_EXPR", False),
-            },
-        }
-        fn = entry_mod.queries()[query_name]
-    elif experiment.startswith("pairbarrier:"):
-        query_name = experiment.split(":", 1)[1]
-        from topic_store_spark.operators import util as op_util
-
-        exp = {
-            "label": ("r13 pair-verify evaluate-once Generate barrier "
-                      "(util.PROJECT_ONCE_BARRIER) on vs off (r12 "
-                      "join-condition-inlined plans)"),
-            "variants": {
-                "barrier_on": lambda: setattr(
-                    op_util, "PROJECT_ONCE_BARRIER", True),
-                "barrier_off": lambda: setattr(
-                    op_util, "PROJECT_ONCE_BARRIER", False),
-            },
-        }
-        fn = entry_mod.queries()[query_name]
-    elif experiment.startswith("opqfuse:"):
-        query_name = experiment.split(":", 1)[1]
-        from topic_store_spark.operators import similarity
-
-        exp = {
-            "label": ("r13 fused OPQ permutation+codebook derivation "
-                      "(similarity.FUSED_OPQ, one bounded collect) on vs "
-                      "off (r12 composed two-collect build)"),
-            "variants": {
-                "fuse_on": lambda: setattr(similarity, "FUSED_OPQ", True),
-                "fuse_off": lambda: setattr(similarity, "FUSED_OPQ", False),
-            },
-        }
-        fn = entry_mod.queries()[query_name]
-    elif experiment.startswith("reportfuse:"):
-        query_name = experiment.split(":", 1)[1]
-        from topic_store_spark.operators import dedup as dedup_mod
-
-        exp = {
-            "label": ("r13 fused semantic-report pair derivation "
-                      "(dedup.FUSED_REPORT_PAIRS: capped = filter of the "
-                      "uncapped self-join) on vs off (r12 two-join shape)"),
-            "variants": {
-                "fuse_on": lambda: setattr(
-                    dedup_mod, "FUSED_REPORT_PAIRS", True),
-                "fuse_off": lambda: setattr(
-                    dedup_mod, "FUSED_REPORT_PAIRS", False),
-            },
-        }
-        fn = entry_mod.queries()[query_name]
-    elif experiment.startswith("ccprobe:"):
-        query_name = experiment.split(":", 1)[1]
-        from topic_store_spark.operators import dedup as dedup_mod
-
-        exp = {
-            "label": ("r13 connected-components single-probe driver gate "
-                      "(dedup.CC_PROBE_GATE: one limit(K+1) collect) on vs "
-                      "off (r12 checkpoint+count+collect three-job gate)"),
-            "variants": {
-                "probe_on": lambda: setattr(
-                    dedup_mod, "CC_PROBE_GATE", True),
-                "probe_off": lambda: setattr(
-                    dedup_mod, "CC_PROBE_GATE", False),
-            },
-        }
-        fn = entry_mod.queries()[query_name]
-    elif experiment.startswith("cclocal:"):
-        query_name = experiment.split(":", 1)[1]
-        from topic_store_spark.operators import dedup as dedup_mod
-
-        exp = {
-            "label": ("r14 connected-components fully-local fast path "
-                      "(dedup.CC_LOCAL_RESULT: one raw-pair probe, labels "
-                      "returned as a local relation) on vs off (r13 "
-                      "e-checkpoint + distinct-edge probe + distributed "
-                      "node join)"),
-            "variants": {
-                "local_on": lambda: setattr(
-                    dedup_mod, "CC_LOCAL_RESULT", True),
-                "local_off": lambda: setattr(
-                    dedup_mod, "CC_LOCAL_RESULT", False),
-            },
-        }
-        fn = entry_mod.queries()[query_name]
-    elif experiment.startswith("argmax:"):
-        query_name = experiment.split(":", 1)[1]
-        from topic_store_spark.operators import dedup as dedup_mod
-        from topic_store_spark.operators import similarity as sim_mod
-
-        def _set_argmax(v):
-            dedup_mod.ARGMAX_ASSIGN = v
-            sim_mod.ARGMAX_ASSIGN = v
-
-        exp = {
-            "label": ("r14 per-row argmax centroid assignment over "
-                      "collected centroid literals (dedup/similarity "
-                      "ARGMAX_ASSIGN: map-side, no corpus-scale "
-                      "exchange) on vs off (r13 crossJoin(broadcast)+"
-                      "groupBy argmax)"),
-            "variants": {
-                "argmax_on": lambda: _set_argmax(True),
-                "argmax_off": lambda: _set_argmax(False),
-            },
-        }
-        fn = entry_mod.queries()[query_name]
-    elif experiment.startswith("arrowdot:"):
-        query_name = experiment.split(":", 1)[1]
-        from topic_store_spark.operators import dedup as dedup_mod
-
-        exp = {
-            "label": ("r14 Arrow-vectorized pair-verify dot "
-                      "(dedup.ARROW_PAIR_DOT: pandas UDF + numpy int64 "
-                      "einsum, exact) on vs off (interpreted "
-                      "aggregate(zip_with) HOF fold)"),
-            "variants": {
-                "arrow_on": lambda: setattr(
-                    dedup_mod, "ARROW_PAIR_DOT", True),
-                "arrow_off": lambda: setattr(
-                    dedup_mod, "ARROW_PAIR_DOT", False),
-            },
-        }
-        fn = entry_mod.queries()[query_name]
-    elif experiment.startswith("gllazy:"):
-        query_name = experiment.split(":", 1)[1]
-        from topic_store_spark.query import pipeline as pl_mod
-
-        exp = {
-            "label": ("r14 $graphLookup lazy frontier gate "
-                      "(pipeline.GL_LAZY_GATE: checkpoint deferred into "
-                      "the gate count — 1 eager job/level) on vs off "
-                      "(r13 eager checkpoint + count = 2 jobs/level)"),
-            "variants": {
-                "lazy_on": lambda: setattr(pl_mod, "GL_LAZY_GATE", True),
-                "lazy_off": lambda: setattr(pl_mod, "GL_LAZY_GATE", False),
-            },
-        }
-        fn = entry_mod.queries()[query_name]
-    elif experiment.startswith("asofstage:"):
-        query_name = experiment.split(":", 1)[1]
-
-        exp = {
-            "label": ("r14 snapshot_asof shared hash(user_id) staging "
-                      "(entry ASOF_SHARED_STAGE: click/purchase subsets "
-                      "staged once, branches inherit the partitioning) "
-                      "on vs off (r13 per-branch scans + per-branch "
-                      "exchanges)"),
-            "variants": {
-                "stage_on": lambda: setattr(
-                    entry_mod, "ASOF_SHARED_STAGE", True),
-                "stage_off": lambda: setattr(
-                    entry_mod, "ASOF_SHARED_STAGE", False),
-            },
-        }
-        fn = entry_mod.queries()[query_name]
-    elif experiment == "ppjoin_neardup":
-        replicas = int(os.environ.get("SPARK_GRAFT_AB_REPLICAS", "8"))
-        work = tempfile.mkdtemp(prefix="tss_ab_neardup_")
-        fixture = os.path.join(work, "neardup.parquet")
-        _neardup_corpus(spark, sf_dir, replicas).repartition(
-            int(cpus)
-        ).write.mode("overwrite").parquet(fixture)
-        fixture_note = (
-            f"near-dup-rich corpus: {replicas} shingle-disjoint replicas "
-            f"of {sf_dir}/documents, each doc + one >=0.9-Jaccard partner "
-            f"({fixture})"
-        )
-
-        def fn(spark, _sf_dir):
-            from topic_store_spark.operators.dedup import word_overlap_pairs
-
-            corpus = spark.read.parquet(fixture)
-            return word_overlap_pairs(
-                corpus, n=3, jaccard_num=8, jaccard_den=10,
-                containment_num=9, containment_den=10,
-                max_shingle_freq=int(
-                    os.environ.get("SPARK_GRAFT_AB_FREQ_CAP", "1000")),
-                prefix_filter=True,
-            )
-
-        exp = {
-            "label": ("PPJoin join-time cuts (0ea8df7) on/off, near-dup-"
-                      "rich fixture (high candidate density)"),
-            "variants": {
-                "ppjoin_on": lambda: setattr(dedup, "PPJOIN_CUTS", True),
-                "ppjoin_off": lambda: setattr(dedup, "PPJOIN_CUTS", False),
-            },
-        }
-    elif experiment == "ppjoin":
-        exp = {
-            "label": "PPJoin join-time cuts (0ea8df7) on/off",
-            "variants": {
-                "ppjoin_on": lambda: setattr(dedup, "PPJOIN_CUTS", True),
-                "ppjoin_off": lambda: setattr(dedup, "PPJOIN_CUTS", False),
-            },
-        }
-        fn = entry_mod.queries()[QUERY]
     elif experiment == "aqefloor":
         exp = {
             "label": f"{_FLOOR} 64k (r11 session default) vs 1m (Spark default)",
@@ -447,24 +171,7 @@ def main() -> int:
             sec = run_timed(variants[name])
             samples[name].append(round(sec, 3))
             print(f"# {name}: {sec:.2f}s", file=sys.stderr)
-    # restore production defaults no matter which variant ran last
-    from topic_store_spark.operators import similarity as _sim
-    from topic_store_spark.operators import util as _op_util
-
-    dedup.PPJOIN_CUTS = True
-    dedup.FUSED_REPORT_PAIRS = True
-    dedup.CC_PROBE_GATE = True
-    dedup.CC_LOCAL_RESULT = True
-    dedup.ARGMAX_ASSIGN = True
-    dedup.ARROW_PAIR_DOT = False
-    _sim.ARGMAX_ASSIGN = False  # receipt-decided default (r14)
-    from topic_store_spark.query import pipeline as _pl
-
-    _pl.GL_LAZY_GATE = True
-    entry_mod.ASOF_SHARED_STAGE = False  # receipt-decided default (r14)
-    _sim.FAST_EXPR = True
-    _sim.FUSED_OPQ = True
-    _op_util.PROJECT_ONCE_BARRIER = True
+    # restore the session default no matter which variant ran last
     spark.conf.set(_FLOOR, "64k")
 
     def stats(s: list[float]) -> dict:
@@ -502,7 +209,7 @@ def main() -> int:
             "times), per-round order alternation, cache cleared per "
             "execution"
         ),
-        "fixture": fixture_note,
+        "fixture": f"registry fixture at {sf_dir}",
         "sf_dir": sf_dir,
         "rows": rows[a],
         "variants": st,
@@ -514,8 +221,7 @@ def main() -> int:
             datetime.timezone.utc
         ).strftime("%Y-%m-%dT%H:%M:%SZ"),
     }
-    fname = ("BENCH_AB.json" if experiment == "ppjoin"
-             else f"BENCH_AB_{experiment.replace(':', '_')}.json")
+    fname = f"BENCH_AB_{experiment.replace(':', '_')}.json"
     with open(os.path.join(_REPO, fname), "w") as fh:
         json.dump(out, fh, indent=1, sort_keys=True)
     print(json.dumps({k: out[k] for k in

@@ -67,23 +67,6 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1_000_000).selectExpr("sum(id)").collect()
 
-    # Triage toggles (diagnostic only — claims still go through
-    # tools/ab_bench.py): TSS_FAST_EXPR / TSS_PAIR_BARRIER = 0|1 pin the
-    # r13 expression-form and pair-barrier switches for this run.
-    from topic_store_spark.operators import similarity as _sim
-    from topic_store_spark.operators import util as _op_util
-
-    if os.environ.get("TSS_FAST_EXPR") is not None:
-        _sim.FAST_EXPR = os.environ["TSS_FAST_EXPR"] == "1"
-    if os.environ.get("TSS_PAIR_BARRIER") is not None:
-        _op_util.PROJECT_ONCE_BARRIER = os.environ["TSS_PAIR_BARRIER"] == "1"
-    print(json.dumps({
-        "config": {
-            "fast_expr": _sim.FAST_EXPR,
-            "pair_barrier": _op_util.PROJECT_ONCE_BARRIER,
-        }
-    }), flush=True)
-
     queries = entry_mod.queries()
     for name in names:
         fn = queries[name]

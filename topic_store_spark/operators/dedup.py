@@ -314,122 +314,6 @@ def _ordered_docs(sh: DataFrame, max_shingle_freq: int | None) -> DataFrame:
     return _persist_tracked(docs)
 
 
-#: A/B instrumentation knob (r11): when False, the prefix candidate
-#: joins skip the PPJoin positional/size-ratio join-time cuts (revert to
-#: the pre-0ea8df7 shape) WITHOUT changing the output pair set — the
-#: exact verify rejects everything the cuts would have pruned.  Flipped
-#: only by tools/ab_bench.py to measure the cuts' real effect
-#: interleaved in one session.  Production default True is EVIDENCED
-#: (r12, re-stamped under the codegen-cache-fixed protocol): on the
-#: near-dup-rich replica corpus — high candidate density, where prefix
-#: filtering is supposed to pay — the interleaved A/B stamped
-#: ppjoin_on_faster (median 10.13s vs 11.27s, delta 1.14s above the
-#: 1.08s steady spread; BENCH_AB_ppjoin_neardup.json; the pre-fix run
-#: stamped the same verdict at 8.92 vs 9.87).  On the sparse registry
-#: fixture the delta stays inside noise (BENCH_AB.json: unresolved),
-#: i.e. the cuts cost nothing there.
-PPJOIN_CUTS = True
-
-#: r13 optimization-round toggle (`tools/ab_bench.py
-#: reportfuse:dedup_semantic`): True derives the fused report's capped
-#: pair set by FILTERING the uncapped self-join's output on matching
-#: sub-bucket keys (one corpus-scale pair join, pinned pair-sized);
-#: False restores the r12 two-join shape whose capped join re-evaluated
-#: the per-pair dot fold over its whole candidate subset.  Outputs are
-#: identical (same-cluster AND same-sub == the capped join keys;
-#: threshold predicate unchanged) — oracle-checked.
-FUSED_REPORT_PAIRS = True
-
-#: r13 optimization-round toggle (`tools/ab_bench.py ccprobe:<query>`):
-#: True gates :func:`connected_components`' driver fast path with ONE
-#: eager ``limit(driver_max_edges+1)`` collect off the e-checkpoint —
-#: when the edge set fits, the probe IS the complete edge set, so the
-#: reference shape's three eager jobs (checkpoint(edges) + count() +
-#: collect()) and the checkpoint write collapse into one job.  False
-#: restores the r12 materialize+count+collect gate.  Outputs identical:
-#: union-find labels are order-independent (min reachable id), and the
-#: distributed path is byte-identical either way — oracle-checked
-#: (dedup_clusters).
-CC_PROBE_GATE = True
-
-#: r14 optimization-round toggle (`tools/ab_bench.py cclocal:<query>`):
-#: True probes the RAW pair projection with ONE ``limit(K+1)`` collect
-#: BEFORE any checkpoint — when the raw pair multiset fits the driver
-#: budget it contains the complete edge AND node sets, so the label
-#: relation is computed entirely on the driver and returned as a local
-#: relation: one eager job total, no checkpoint write, and the returned
-#: plan does no distributed work beyond scanning the local rows (the
-#: r13 shape still paid an e-checkpoint materialization per execution
-#: plus a distributed node-set distinct + label join in the returned
-#: plan).  On overflow (raw pairs > K, which also covers every case the
-#: r13 distinct-edge probe would overflow, plus the rare raw>K>distinct
-#: band) it falls through to the r13/r12 checkpointed tiers unchanged.
-#: False restores the r13 shape.  Outputs identical: same union-find,
-#: same label fixpoint, self-loop/null handling matched to the
-#: distributed path's semantics — oracle-checked (dedup_clusters).
-CC_LOCAL_RESULT = True
-
-#: r14 optimization-round toggle (`tools/ab_bench.py argmax:<query>`):
-#: True computes the single-probe centroid assignment as a PER-ROW
-#: argmax expression over the (bounded, centroid-count-sized) collected
-#: quantized centroid literals — ``array_max(array(struct(aff, -cen_id,
-#: cen_id), ...))`` — so the assignment is MAP-SIDE: the r13 shape's
-#: corpus-scale ``crossJoin(broadcast(cen)) + groupBy(c_id).agg(max(
-#: struct(...)))`` exchange (which carried the full 64-long quantized
-#: vector payload per row, ~550 B) disappears from the plan (guide
-#: §2.3/§2.4: shuffle fewer bytes / remove shuffles outright).  The
-#: struct comparison fields and every arithmetic op are identical —
-#: same fold dots over the same quantized longs, same
-#: ``dot / SQRT(CAST(n AS DOUBLE))`` affinity, same (aff desc, cen_id
-#: asc) tie-break — so the assignment, and every downstream pair/audit
-#: row, is bit-identical (oracle-checked: dedup_semantic).  False
-#: restores the r13 crossJoin+groupBy shape.
-ARGMAX_ASSIGN = True
-
-#: r14 experiment toggle (`tools/ab_bench.py arrowdot:<query>`): True
-#: computes the pair-verify integer dot through a VECTORIZED Arrow
-#: pandas UDF (numpy int64 row-wise dot — exact: every product/sum of
-#: quantized components is far inside int64, so the longs are
-#: bit-identical to the JVM fold's) instead of the interpreted
-#: ``aggregate(zip_with(...))`` higher-order fold, which is
-#: CodegenFallback (one lambda frame per element per candidate pair).
-#: The r13 alternatives to the fold (full unroll, sequence-fold) were
-#: measured dead ends; this is guide §4.2's sanctioned boundary — hand
-#: whole Arrow batches to numpy.  The UDF is marked non-deterministic
-#: so the threshold filter cannot duplicate it (guide §4.4).  Default
-#: decided by the interleaved A/B receipt
-#: (BENCH_AB_arrowdot_dedup_semantic.json).
-ARROW_PAIR_DOT = False
-
-
-def _arrow_pair_dot(a: str, b: str):
-    """Row-wise integer dot of two array<bigint> columns as a
-    vectorized Arrow pandas UDF: batches cross the boundary columnar,
-    numpy does one int64 einsum per batch.  Exact (int64 throughout,
-    no float round-trip), so results are bit-identical to
-    :func:`similarity._int_dot`'s fold."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    # `from __future__ import annotations` stringifies the hints below;
-    # pandas_udf resolves them against THIS module's globals, so the
-    # lazily-imported pd must be visible there (module-level pandas
-    # import deliberately avoided — only this experiment needs it)
-    globals().setdefault("pd", pd)
-
-    @pandas_udf("long")
-    def _dot(xa: pd.Series, xb: pd.Series) -> pd.Series:
-        import numpy as np
-
-        if len(xa) == 0:
-            return pd.Series([], dtype="int64")
-        va = np.vstack(xa.to_numpy()).astype(np.int64, copy=False)
-        vb = np.vstack(xb.to_numpy()).astype(np.int64, copy=False)
-        return pd.Series(np.einsum("ij,ij->i", va, vb))
-
-    return _dot.asNondeterministic()(F.col(a), F.col(b))
-
-
 def _prefix_len(threshold_num: int, threshold_den: int):
     """Prefix length |X| - ceil(t*|X|) + 1 (integer ceil via div)."""
     return (
@@ -475,10 +359,9 @@ def _jaccard_prefix_cands(
         .join(prefix.alias("y"), "shingle")
         .filter(F.col("x.doc") < F.col("y.doc"))
     )
-    if PPJOIN_CUTS:
-        out = out.filter(
-            F.least("x.sz", "y.sz") * den >= F.greatest("x.sz", "y.sz") * num
-        ).filter(ubound * (num + den) >= (F.col("x.sz") + F.col("y.sz")) * num)
+    out = out.filter(
+        F.least("x.sz", "y.sz") * den >= F.greatest("x.sz", "y.sz") * num
+    ).filter(ubound * (num + den) >= (F.col("x.sz") + F.col("y.sz")) * num)
     out = out.select(
         F.col("x.doc").alias("a_doc"), F.col("y.doc").alias("b_doc")
     )
@@ -528,8 +411,7 @@ def _containment_prefix_cands(
             | ((F.col("x.sz") == F.col("y.sz")) & (F.col("x.doc") != F.col("y.doc")))
         )
     )
-    if PPJOIN_CUTS:
-        out = out.filter(ubound * den >= F.col("x.sz") * num)
+    out = out.filter(ubound * den >= F.col("x.sz") * num)
     out = out.select(
         F.least("x.doc", "y.doc").alias("a_doc"),
         F.greatest("x.doc", "y.doc").alias("b_doc"),
@@ -927,42 +809,22 @@ def embedding_dup_pairs_lsh(
     (call with different plane seeds and union).  Everything is
     deterministic md5-derived, so the SQL oracle reproduces the exact
     pair set."""
-    from topic_store_spark.operators.similarity import (
-        FAST_EXPR,
-        lsh_bucket_key,
-        lsh_bucket_key_sql,
+    from topic_store_spark.functions.vectors import (
+        int_dot_sql,
+        int_self_dot_sql,
+        quantize_sql,
     )
+    from topic_store_spark.operators.similarity import lsh_bucket_key_sql
 
-    if FAST_EXPR:
-        # r13: single-SQL-string builds of quantize / self-dot /
-        # sign pattern (the identical HOF folds — see
-        # functions/vectors.py); qv staged once instead of the inline
-        # form's three quantize evaluations per row
-        from topic_store_spark.functions.vectors import (
-            int_dot_sql,
-            int_self_dot_sql,
-            quantize_sql,
-        )
-
-        q = ensure_parallelism(df).select(
-            F.col(id_col).alias("vid"),
-            F.expr(quantize_sql(f"`{vec_col}`")).alias("qv"),
-            F.expr(lsh_bucket_key_sql(f"`{vec_col}`", planes, dim)).alias(
-                "bucket"
-            ),
-        ).withColumn("nrm", F.expr(int_self_dot_sql("`qv`")))
-        dot = F.expr(int_dot_sql("`a_qv`", "`b_qv`"))
-    else:
-        q = ensure_parallelism(df).select(
-            F.col(id_col).alias("vid"),
-            quantize_vector(F.col(vec_col)).alias("qv"),
-            lsh_bucket_key(F.col(vec_col), planes, dim).alias("bucket"),
-        ).withColumn("nrm", int_self_dot(F.col("qv")))
-        dot = F.aggregate(
-            F.zip_with(F.col("a_qv"), F.col("b_qv"), lambda x, y: x * y),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        )
+    # single-SQL-string builds of quantize / self-dot / sign pattern
+    # (the identical HOF folds — see functions/vectors.py); qv staged
+    # once instead of three quantize evaluations per row
+    q = ensure_parallelism(df).select(
+        F.col(id_col).alias("vid"),
+        F.expr(quantize_sql(f"`{vec_col}`")).alias("qv"),
+        F.expr(lsh_bucket_key_sql(f"`{vec_col}`", planes, dim)).alias("bucket"),
+    ).withColumn("nrm", F.expr(int_self_dot_sql("`qv`")))
+    dot = F.expr(int_dot_sql("`a_qv`", "`b_qv`"))
     left = q.select(
         F.col("vid").alias("a_id"), F.col("qv").alias("a_qv"),
         F.col("nrm").alias("a_n"), "bucket",
@@ -973,12 +835,8 @@ def embedding_dup_pairs_lsh(
     )
     dec = "decimal(38,0)"
     joined = left.join(right, "bucket").filter(F.col("a_id") < F.col("b_id"))
-    if ARROW_PAIR_DOT:
-        staged = joined.withColumn("dot", _arrow_pair_dot("a_qv", "b_qv"))
-    else:
-        staged = project_once(joined, dot=dot)
     return (
-        staged
+        project_once(joined, dot=dot)
         .filter(
             (F.col("dot") > 0)
             & (
@@ -1106,119 +964,42 @@ def connected_components(
     bound is hit unconverged — wrong cluster labels must never ship
     silently.
 
-    **Driver fast path** (default, ``CC_LOCAL_RESULT``): the verified
-    pair graph is typically minuscule next to the corpus.  ONE eager
-    ``limit(driver_max_edges+1).collect()`` of the raw ``(u, v)`` pair
-    projection both gates the fast path and fetches its input: when the
-    raw pair multiset fits the budget it contains the complete node and
-    edge sets, so union-find AND the label relation are computed on the
-    driver and returned as a local relation — no checkpoint, no
-    distributed node join, one job total (the same bounded-collect
-    logic as a broadcast join).  Driver memory envelope: at the default
-    ``driver_max_edges`` = 2^20 the probe transiently holds ≤ 2^20+1
-    two-field Rows (~hundreds of MB of Python objects worst-case,
-    released after the union-find; the label local relation is ≤ 2 longs
-    per distinct node).  Callers needing a smaller envelope pass a
-    smaller ``driver_max_edges``.  On overflow the probe rows are
-    discarded and the checkpointed tiers below run: the r13
-    ``CC_PROBE_GATE`` distinct-edge probe (A/B fallback), then the
-    distributed star-contraction rounds unchanged.
+    Two tiers, chosen by the size of the raw pair relation:
+
+    1. **Driver-local** (raw pairs <= ``driver_max_edges`` = K): the
+       verified pair graph is typically minuscule next to the corpus.
+       ONE eager ``limit(K+1).collect()`` of the raw ``(u, v)`` pair
+       projection both picks the tier and fetches its input: when it
+       returns at most K rows it is the complete pair multiset, so
+       union-find AND the label relation are computed on the driver and
+       returned as a local relation — no checkpoint, no distributed node
+       join, one job total (the same bounded-collect logic as a
+       broadcast join).  Driver memory envelope: at the default K = 2^20
+       the probe transiently holds <= 2^20+1 two-field Rows (~hundreds
+       of MB of Python objects worst-case, released after the
+       union-find; the label relation is <= 2 longs per distinct node).
+       Callers needing a smaller envelope pass a smaller
+       ``driver_max_edges``.
+    2. **Distributed** (raw pairs > K): the probe rows are discarded (an
+       arbitrary subset, never used as input), the raw pair projection
+       and then the canonical edge set are checkpointed, and the
+       star-contraction rounds run.  Overflow cost: the pipeline that
+       produced ``pairs`` runs twice — once for the probe and once more
+       for the checkpoint.
     """
     from topic_store_spark.operators.util import materialize_iter
 
-    if CC_LOCAL_RESULT:
-        # tier 1: probe the RAW pair projection (no checkpoint — this is
-        # the only action that consumes it when the probe fits).  limit
-        # below the bound returns every row, so the probe IS the
-        # complete pair multiset; union-find labels are min-reachable-id
-        # under any union order, so row order/duplicates are irrelevant.
-        raw = (
-            pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-            .limit(driver_max_edges + 1)
-            .collect()
-        )
-        if len(raw) <= driver_max_edges:
-            parent: dict = {}
-
-            def find(x):
-                r = x
-                while parent.get(r, r) != r:
-                    r = parent[r]
-                while parent.get(x, x) != r:  # path compression
-                    parent[x], x = r, parent[x]
-                return r
-
-            seen = set()
-            for row in raw:
-                u, v = row[0], row[1]
-                seen.add(u)
-                seen.add(v)
-                # null endpoints carry no connectivity (the distributed
-                # path's ``u != v`` filter is null-rejecting); self-loops
-                # label themselves via ``seen``
-                if u is None or v is None or u == v:
-                    continue
-                ru, rv = find(u), find(v)
-                if ru != rv:
-                    if rv < ru:
-                        ru, rv = rv, ru
-                    parent[rv] = ru
-            labels = [(x, find(x)) for x in seen]
-            spark = pairs.sparkSession
-            node_type = pairs.schema[a_col].dataType
-            lab_schema = StructType(
-                [
-                    StructField("node", node_type, True),
-                    StructField("component", node_type, True),
-                ]
-            )
-            return spark.createDataFrame(labels, lab_schema)
-        # overflow: fall through to the checkpointed tiers (the K+1
-        # probe rows are an arbitrary subset, never used as input)
-
-    # materialize the raw pair projection once: every later reference
-    # (node set, initial edges) reads the checkpoint instead of re-running
-    # the candidate-generation pipeline that produced the pairs
-    e = materialize_iter(
+    # tier 1: probe the RAW pair projection (no checkpoint — this is
+    # the only action that consumes it when the probe fits).  limit
+    # below the bound returns every row, so the probe IS the complete
+    # pair multiset; union-find labels are min-reachable-id under any
+    # union order, so row order/duplicates are irrelevant.
+    raw = (
         pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
+        .limit(driver_max_edges + 1)
+        .collect()
     )
-    nodes = (
-        e.select(F.col("u").alias("node"))
-        .unionByName(e.select(F.col("v").alias("node")))
-        .distinct()
-    )
-    # canonical undirected edge: (bigger, smaller); self-loops carry no
-    # connectivity (their nodes still label themselves via ``nodes``)
-    edges_df = (
-        e.filter(F.col("u") != F.col("v"))
-        .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-        .distinct()
-    )
-
-    if CC_PROBE_GATE:
-        # One eager job gates the fast path AND fetches its input: a
-        # ``limit(K+1)`` collect off the e-checkpoint.  When the edge
-        # set fits the driver budget the probe IS the complete edge set
-        # (limit below the bound returns every row of the distinct;
-        # row order is irrelevant to union-find — labels are min
-        # reachable id under any union order), so the old shape's
-        # [checkpoint(edges), count(), collect()] three eager jobs —
-        # plus the checkpoint write — collapse into this one.  Past the
-        # bound the probe rows are discarded and the distributed path
-        # pays one (cheap, same-shuffle-class-as-the-old-count) gate
-        # job before materializing exactly as before.
-        probe = edges_df.limit(driver_max_edges + 1).collect()
-        n_edges = len(probe)
-    else:
-        # r13 A/B reference shape: materialize + count + (maybe) collect
-        edges = materialize_iter(edges_df)
-        n_edges = edges.count()
-        probe = None
-    if n_edges == 0:
-        return nodes.select("node", F.col("node").alias("component"))
-
-    if n_edges <= driver_max_edges:
-        collected = probe if probe is not None else edges.collect()
+    if len(raw) <= driver_max_edges:
         parent: dict = {}
 
         def find(x):
@@ -1229,35 +1010,52 @@ def connected_components(
                 parent[x], x = r, parent[x]
             return r
 
-        for row in collected:
-            ru, rv = find(row[0]), find(row[1])
+        seen = set()
+        for row in raw:
+            u, v = row[0], row[1]
+            seen.add(u)
+            seen.add(v)
+            # null endpoints carry no connectivity (the distributed
+            # path's ``u != v`` filter is null-rejecting); self-loops
+            # label themselves via ``seen``
+            if u is None or v is None or u == v:
+                continue
+            ru, rv = find(u), find(v)
             if ru != rv:
                 # union by value: the smaller id becomes the root, which
                 # IS the component label the distributed path converges to
                 if rv < ru:
                     ru, rv = rv, ru
                 parent[rv] = ru
-        labels = [(x, find(x)) for x in parent]
-        spark = pairs.sparkSession
-        node_type = edges_df.schema["u"].dataType
+        labels = [(x, find(x)) for x in seen]
+        node_type = pairs.schema[a_col].dataType
         lab_schema = StructType(
             [
-                StructField("node", node_type, False),
-                StructField("component", node_type, False),
+                StructField("node", node_type, True),
+                StructField("component", node_type, True),
             ]
         )
-        lab = spark.createDataFrame(labels, lab_schema)
-        return nodes.join(lab, "node", "left").select(
-            "node", F.coalesce("component", "node").alias("component")
-        )
+        return pairs.sparkSession.createDataFrame(labels, lab_schema)
 
-    if probe is not None:
-        # probe overflowed the driver budget: materialize the edge
-        # relation for the iterative rounds exactly as the reference
-        # shape does (the K+1 probe rows are discarded — they are an
-        # arbitrary subset, never used as the edge set)
-        edges = materialize_iter(edges_df)
-        n_edges = edges.count()
+    # tier 2: materialize the raw pair projection once: every later
+    # reference (node set, initial edges) reads the checkpoint instead of
+    # re-running the candidate-generation pipeline that produced the pairs
+    e = materialize_iter(
+        pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
+    )
+    nodes = (
+        e.select(F.col("u").alias("node"))
+        .unionByName(e.select(F.col("v").alias("node")))
+        .distinct()
+    )
+    # canonical undirected edge: (bigger, smaller); self-loops carry no
+    # connectivity (their nodes still label themselves via ``nodes``)
+    edges = materialize_iter(
+        e.filter(F.col("u") != F.col("v"))
+        .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
+        .distinct()
+    )
+    n_edges = edges.count()
 
     for _ in range(max_iter):
         # -- large-star: group the symmetrized graph by u; neighbors v > u
@@ -1337,24 +1135,23 @@ def _semantic_assignment(
     cen = _quantized(centroids, id_col, vec_col, "cen")
     c = _quantized(ensure_parallelism(df), id_col, vec_col, "c")
 
-    if n_probe <= 1 and ARGMAX_ASSIGN:
-        # r14: per-row argmax over the collected quantized centroid
-        # literals — map-side assignment, no corpus-scale exchange (the
-        # groupBy form shuffled every row WITH its 64-long vector
-        # payload just to pick a max over |centroids| candidates).  The
-        # collect is bounded by the centroid count — the same budget as
-        # the ANN codebook collects — and replaces the broadcast-build
-        # job the crossJoin form paid anyway.  Affinity arithmetic and
-        # tie-break are IDENTICAL to the groupBy form (same fold dot
-        # over the same JVM-quantized longs, same double division by
-        # SQRT(CAST(n AS DOUBLE)), struct-ordered (aff, -cen_id)), so
-        # every assignment bit matches — equality pinned in
-        # tests/test_dedup_similarity.py and by the oracle.
+    if n_probe <= 1:
+        # per-row argmax over the collected quantized centroid literals
+        # — map-side assignment, no corpus-scale exchange (a groupBy
+        # argmax would shuffle every row WITH its 64-long vector payload
+        # just to pick a max over |centroids| candidates).  The collect
+        # is bounded by the centroid count — the same budget as the ANN
+        # codebook collects.  Affinity arithmetic and tie-break match
+        # the multi-probe ranking below (same fold dot over the same
+        # JVM-quantized longs, same double division by
+        # SQRT(CAST(n AS DOUBLE)), struct-ordered (aff, -cen_id)) —
+        # checked against a brute-force reference in
+        # tests/test_semantic_fuzz.py and by the oracle.
         from topic_store_spark.operators.similarity import argmax_best_sql
 
+        ctype = cen.schema["cen_id"].dataType
         cen_rows = cen.collect()
         if not cen_rows:
-            ctype = cen.schema["cen_id"].dataType
             assigned = (
                 c.select(
                     "c_id", "c_qv", "c_n",
@@ -1366,42 +1163,10 @@ def _semantic_assignment(
             # project_once barrier (the ann_ivf lesson): the pair join's
             # inferred isnotnull(cluster_id) predicate would otherwise
             # push below this projection and re-run the whole argmax
-            best_sql = argmax_best_sql(cen_rows, "c_qv")
+            best_sql = argmax_best_sql(cen_rows, "c_qv", ctype)
             assigned = project_once(
                 c, cluster_id=F.expr(f"({best_sql}).cen_id")
             ).select("c_id", "c_qv", "c_n", "cluster_id")
-    elif n_probe <= 1:
-        # r13 A/B reference shape (`ab_bench.py argmax:<query>` off):
-        # broadcast crossJoin + corpus-scale groupBy argmax
-        aff = _int_dot("c_qv", "cen_qv") / F.sqrt(
-            F.col("cen_n").cast("double")
-        )
-        scored = c.crossJoin(F.broadcast(cen)).withColumn("aff", aff)
-        # argmax via max(struct) instead of a row_number window: the
-        # partial aggregate reduces each vector's |centroids| candidate
-        # rows to one BEFORE the exchange, so the assignment shuffle
-        # moves n rows, not n x |centroids|, and needs no sort.  max over
-        # (aff, -cen_id) == "affinity desc, cen_id asc" — same
-        # deterministic tie-break as the oracle's row_number.
-        best = F.max(
-            F.struct(
-                F.col("aff"),
-                (-F.col("cen_id")).alias("neg_cen"),
-                F.col("cen_id"),
-                F.col("c_qv"),
-                F.col("c_n"),
-            )
-        ).alias("best")
-        assigned = (
-            scored.groupBy("c_id")
-            .agg(best)
-            .select(
-                "c_id",
-                F.col("best.c_qv").alias("c_qv"),
-                F.col("best.c_n").alias("c_n"),
-                F.col("best.cen_id").alias("cluster_id"),
-            )
-        )
     else:
         # multi-probe: rank the (small, constant) centroid list per
         # vector and keep probe 1 unconditionally plus probes 2..n_probe
@@ -1526,7 +1291,7 @@ def _semantic_assignment(
                     )
                     .withColumn(
                         # string-form column ref -> the fold-form SQL
-                        # sign-pattern under FAST_EXPR (same bits)
+                        # sign-pattern
                         "_bits", lsh_bucket_key("c_qv", max_bits, vdim)
                     )
                     .withColumn("_sub", F.substring("_bits", F.lit(1), b_bits))
@@ -1668,16 +1433,9 @@ def _pairs_within(
     from topic_store_spark.operators.similarity import _int_dot
 
     joined = left.join(right, join_keys).filter(F.col("a_id") < F.col("b_id"))
-    if ARROW_PAIR_DOT:
-        # r14 Arrow experiment: vectorized numpy dot, single evaluation
-        # guaranteed by the non-deterministic marking instead of the
-        # Generate barrier (a Python UDF cannot ride the generator)
-        staged = joined.withColumn("dot", _arrow_pair_dot("a_qv", "b_qv"))
-    else:
-        staged = project_once(joined, dot=_int_dot("a_qv", "b_qv"))
     dec = "decimal(38,0)"
     pairs = (
-        staged
+        project_once(joined, dot=_int_dot("a_qv", "b_qv"))
         .filter(
             (F.col("dot") > 0)
             & (
@@ -1734,19 +1492,11 @@ def semantic_dedup_report(
     the ``_sub`` key.  Sub-bucket prefix semantics and the recall
     trade are documented on :func:`semantic_cluster_dedup`.
     """
-    assigned, join_keys = _semantic_assignment(
+    assigned, _ = _semantic_assignment(
         df, centroids, vec_col, id_col, 1, 0.05, max_cluster_size, dim
     )
     out_cols = ["cluster_id", "a_id", "b_id", "cosine_q"]
-    if not FUSED_REPORT_PAIRS:
-        # r12 shape, kept for `ab_bench.py reportfuse:dedup_semantic`
-        # interleaved receipts: two independent self-joins (the capped
-        # one re-evaluating the pair dot over its whole candidate set)
-        full = _pairs_within(
-            assigned, ["cluster_id"], threshold_num, threshold_den
-        )
-        capped = _pairs_within(assigned, join_keys, threshold_num, threshold_den)
-    elif "_sub" in assigned.columns:
+    if "_sub" in assigned.columns:
         # r13: ONE corpus-scale pair self-join serves both branches —
         # a pair is within the same (cluster, sub-bucket) iff it is
         # within the same cluster AND both ends carry the same sub key,

@@ -28,61 +28,13 @@ from pyspark.sql import functions as F
 from topic_store_spark.functions.vectors import (
     int_dot_sql,
     int_self_dot_sql,
-    int_self_dot,
     quantize_sql,
     quantize_vector,
 )
 
-#: r13 optimization-round switch for the SQL-string expression builds
-#: (one F.expr/py4j round trip per composite vector expression instead
-#: of dozens of Column calls — build-time only, the parsed tree is the
-#: identical HOF fold) and the staged evaluate-once projections that
-#: ride them (quantize computed 1x per row instead of 3x).  OFF
-#: restores the r12 inline-Column plans — the toggle exists for
-#: `tools/ab_bench.py` interleaved A/B receipts (the PPJOIN_CUTS
-#: pattern).  Results are identical either way (same expressions;
-#: oracle-checked).
-FAST_EXPR = True
-
-#: r13 optimization-round toggle (`tools/ab_bench.py opqfuse:ann_pq`):
-#: True lets q_ann_pq derive the OPQ permutation AND the PQ codebooks
-#: from ONE bounded collect (:func:`opq_permuted_codebooks`); False
-#: restores the r12 composed build (variance_balanced_permutation +
-#: a second residual pipeline + pq_codebooks = two eager driver jobs
-#: per DataFrame build).  Same permutation, same codebooks, bit-equal
-#: results (pinned by tests/test_dedup_similarity.py
-#: ::test_opq_fused_codebooks_equal_composed).
-FUSED_OPQ = True
-
-#: r14 optimization-round toggle (`tools/ab_bench.py argmax:<query>`
-#: sets this together with dedup.ARGMAX_ASSIGN): True computes
-#: centroid assignments (:func:`assign_to_lists`,
-#: :func:`ivf_residual_vectors`) as a PER-ROW argmax expression over
-#: the collected quantized centroid literals — map-side, removing the
-#: corpus-scale ``crossJoin(broadcast) + groupBy(c_id).agg(max(
-#: struct))`` exchange that carried the full quantized-vector payload
-#: per row (guide §2.3/§2.4).  The centroid collect is bounded by the
-#: centroid count (same budget class as the PQ codebook collects).
-#: Affinity arithmetic and tie-break are identical ops on identical
-#: operands, so every assignment bit matches — oracle-checked
-#: (ann_ivf / ann_pq / dedup_semantic).  False restores the r13
-#: crossJoin+groupBy shape.
-#:
-#: DEFAULT False for the IVF family — receipt-decided (r14):
-#: `argmax:ann_pq` stamped **argmax_off_faster** at sf0.1 (3.09 vs
-#: 4.28s median, delta 1.19 > spread 0.87) and `argmax:ann_ivf` leaned
-#: the same way — the ``with_vec`` form materializes the 8 literal
-#: 64-long centroid arrays PER ROW inside the interpreted argmax,
-#: which costs more at this fixture than the n-row exchange it
-#: removes.  The semantic-dedup family's toggle (dedup.ARGMAX_ASSIGN)
-#: stays True: there the assignment feeds a persisted relation and its
-#: argmax carries no vector literals — `argmax:dedup_semantic` stamped
-#: **argmax_on_faster** (3.35 vs 3.85s, delta 0.51 > spread 0.25).
-#: At 100 TB the exchange-removal argument favors True here too
-#: (exchange bytes scale with the corpus; the per-row literal cost is
-#: constant per row) — a production conf flip, measurable per round
-#: via `ab_bench.py argmax:<query>`.
-ARGMAX_ASSIGN = False
+#: Spark-SQL literal suffix per integral centroid-id type — the id
+#: literals :func:`argmax_best_sql` emits keep the centroid id dtype
+_ID_LITERAL_SUFFIX = {"tinyint": "Y", "smallint": "S", "int": "", "bigint": "L"}
 
 
 def _q(name: str) -> str:
@@ -90,51 +42,49 @@ def _q(name: str) -> str:
     return f"`{name}`"
 
 
-def argmax_best_sql(cen_rows, vec_sql: str, with_vec: bool = False) -> str:
+def argmax_best_sql(cen_rows, vec_sql: str, id_type) -> str:
     """``array_max(array(named_struct(...), ...))`` — the best-centroid
     struct for one row, as a Spark-SQL string over the collected
     quantized centroid rows (``cen_id``/``cen_qv``/``cen_n``).  Struct
-    fields are ``(aff, neg_cen, cen_id[, cen_qv])`` compared in order —
-    the same ``(aff desc, cen_id asc)`` deterministic tie-break as the
-    crossJoin+groupBy ``max(struct(...))`` form (``neg_cen`` is unique,
-    so later fields never decide), and the affinity is the identical
-    ``fold-dot / SQRT(CAST(n AS DOUBLE))`` double.  ``with_vec`` adds
-    the winning centroid's quantized vector as a literal field (for
-    residual computation)."""
+    fields are ``(aff, neg_cen, cen_id)`` compared in order — the
+    ``(aff desc, cen_id asc)`` deterministic tie-break (``neg_cen`` is
+    unique, so later fields never decide); the affinity is the
+    ``fold-dot / SQRT(CAST(n AS DOUBLE))`` double.  ``cen_id`` literals
+    are emitted in ``id_type`` (the centroid id column's integral
+    DataType), so the picked id keeps the centroid id dtype; any other
+    type raises ``ValueError``."""
+    suffix = _ID_LITERAL_SUFFIX.get(id_type.simpleString())
+    if suffix is None:
+        raise ValueError(
+            "argmax_best_sql: centroid ids must be TINYINT, SMALLINT, INT "
+            f"or BIGINT, got {id_type.simpleString().upper()}"
+        )
     structs = []
     for r in cen_rows:
         lits = ",".join(f"{int(x)}L" for x in r["cen_qv"])
-        cid = int(r["cen_id"])
+        cid = r["cen_id"]
         aff = (
             f"({int_dot_sql(vec_sql, f'array({lits})')}) "
             f"/ SQRT(CAST({int(r['cen_n'])}L AS DOUBLE))"
         )
-        fields = (
-            f"'aff', {aff}, 'neg_cen', {-cid}L, 'cen_id', {cid}L"
+        structs.append(
+            f"named_struct('aff', {aff}, 'neg_cen', {-cid}L, "
+            f"'cen_id', {cid}{suffix})"
         )
-        if with_vec:
-            fields += f", 'cen_qv', array({lits})"
-        structs.append(f"named_struct({fields})")
     return f"array_max(array({', '.join(structs)}))"
 
 
 def _quantized(
     df: DataFrame, id_col: str, vec_col: str, prefix: str
 ) -> DataFrame:
-    """``(id, qv, n)`` quantized view.  With FAST_EXPR the quantized
-    array is STAGED in its own projection and the self-dot reads the
-    staged column — the inline form re-evaluates the quantize transform
-    three times per row (once for qv, twice inside the self-dot fold)
+    """``(id, qv, n)`` quantized view.  The quantized array is STAGED in
+    its own projection and the self-dot reads the staged column — an
+    inline form would re-evaluate the quantize transform three times
+    per row (once for qv, twice inside the self-dot fold)
     because higher-order functions get no subexpression elimination and
     CollapseProject happily inlines the alias.  (Staging holds: the
     alias is referenced 3x and the transform is non-cheap, so the two
     Projects do NOT collapse.)"""
-    if not FAST_EXPR:
-        return df.select(
-            F.col(id_col).alias(f"{prefix}_id"),
-            quantize_vector(F.col(vec_col)).alias(f"{prefix}_qv"),
-            int_self_dot(quantize_vector(F.col(vec_col))).alias(f"{prefix}_n"),
-        )
     staged = df.select(
         F.col(id_col).alias(f"{prefix}_id"),
         F.expr(quantize_sql(_q(vec_col))).alias(f"{prefix}_qv"),
@@ -246,13 +196,7 @@ def topk_neighbors_partial(
 
 
 def _int_dot(a: str, b: str):
-    if FAST_EXPR:
-        return F.expr(int_dot_sql(_q(a), _q(b)))
-    return F.aggregate(
-        F.zip_with(F.col(a), F.col(b), lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
+    return F.expr(int_dot_sql(_q(a), _q(b)))
 
 
 def assign_to_lists(
@@ -266,36 +210,14 @@ def assign_to_lists(
     IVF index persists (`operators/index.py` IVFIndex) and
     ``search_lists`` probes.
 
-    r14 (``ARGMAX_ASSIGN``, default): the assignment is a PER-ROW
-    argmax expression over the collected quantized centroid literals —
-    map-side, no corpus-scale exchange.  The r13 fallback shape
-    (argmax via max(struct), same rationale and tie-break as
-    semantic_cluster_dedup) reduced each vector's |centroids| candidate
-    rows to one BEFORE the exchange, but still shuffled n rows WITH
-    their quantized-vector payload.
+    Argmax via max(struct) (same rationale and tie-break as
+    semantic_cluster_dedup's multi-probe ranking): the partial aggregate
+    reduces each vector's |centroids| candidate rows to one BEFORE the
+    exchange, so the assignment shuffle moves n rows, not n x
+    |centroids|.
     """
     cen = _quantized(centroids, id_col, vec_col, "cen")
     c = _quantized(corpus, id_col, vec_col, "c")
-    if ARGMAX_ASSIGN:
-        cen_rows = cen.collect()
-        if not cen_rows:
-            # no centroids: the crossJoin form yields an empty relation
-            ctype = cen.schema["cen_id"].dataType
-            return c.select(
-                "c_id", "c_qv", "c_n",
-                F.lit(None).cast(ctype).alias("list_id"),
-            ).filter(F.lit(False))
-        # project_once barrier: without it the join's inferred
-        # isnotnull(list_id) predicate pushes below the projection and
-        # re-evaluates the FULL argmax (and the quantize feeding it)
-        # per row — measured 0.96 -> 1.56s on ann_ivf before the
-        # barrier (BENCH_AB_argmax_ann_ivf.json, first stamp)
-        from topic_store_spark.operators.util import project_once
-
-        best = argmax_best_sql(cen_rows, "c_qv")
-        return project_once(
-            c, list_id=F.expr(f"({best}).cen_id")
-        ).select("c_id", "c_qv", "c_n", "list_id")
     aff = _int_dot("c_qv", "cen_qv") / F.sqrt(F.col("cen_n").cast("double"))
     best = F.max(
         F.struct(
@@ -472,16 +394,13 @@ def _hyperplane_sign(vec_col, plane: int, dim: int):
 def lsh_bucket_key(vec_col, planes: int = 8, dim: int = 64):
     """Random-hyperplane LSH bucket id: `planes`-bit sign pattern.
 
-    ``vec_col`` may be a Column (r12 HOF form) or a column-NAME string —
-    the string form (with FAST_EXPR) emits the SAME fold-form HOF
-    expression as one SQL string (one py4j round trip; the unrolled
-    codegen draft was measured 2-20x WORSE and rejected — see
-    OPTIMIZATION_r13.md), identical doubles and sign bits (same
-    operand order)."""
+    ``vec_col`` may be a Column (HOF form) or a column-NAME string —
+    the string form emits the SAME fold-form HOF expression as one SQL
+    string (one py4j round trip; the unrolled codegen draft was
+    measured 2-20x WORSE and rejected — see OPTIMIZATION_r13.md),
+    identical doubles and sign bits (same operand order)."""
     if isinstance(vec_col, str):
-        if FAST_EXPR:
-            return F.expr(lsh_bucket_key_sql(_q(vec_col), planes, dim))
-        vec_col = F.col(vec_col)
+        return F.expr(lsh_bucket_key_sql(_q(vec_col), planes, dim))
     return F.concat(*[_hyperplane_sign(vec_col, p, dim) for p in range(planes)])
 
 
@@ -511,30 +430,21 @@ def lsh_ann_neighbors(
     probe-side fan-out changes; the corpus is still bucketed once."""
 
     def _bucketed(df: DataFrame, prefix: str) -> DataFrame:
-        # (id, qv, n, bucket); with FAST_EXPR the quantize / self-dot /
-        # sign-pattern arithmetic is the unrolled codegen form — same
-        # operand order, identical values (see functions/vectors.py)
-        if FAST_EXPR:
-            staged = df.select(
-                F.col(id_col).alias(f"{prefix}_id"),
-                F.expr(quantize_sql(_q(vec_col))).alias(f"{prefix}_qv"),
-                F.expr(lsh_bucket_key_sql(_q(vec_col), planes, dim)).alias(
-                    "bucket"
-                ),
-            )
-            return staged.select(
-                f"{prefix}_id",
-                f"{prefix}_qv",
-                F.expr(int_self_dot_sql(_q(f"{prefix}_qv"))).alias(
-                    f"{prefix}_n"
-                ),
-                "bucket",
-            )
-        return df.select(
+        # (id, qv, n, bucket); the quantize / self-dot / sign-pattern
+        # arithmetic is one SQL string each — same operand order,
+        # identical values (see functions/vectors.py)
+        staged = df.select(
             F.col(id_col).alias(f"{prefix}_id"),
-            quantize_vector(F.col(vec_col)).alias(f"{prefix}_qv"),
-            int_self_dot(quantize_vector(F.col(vec_col))).alias(f"{prefix}_n"),
-            lsh_bucket_key(F.col(vec_col), planes, dim).alias("bucket"),
+            F.expr(quantize_sql(_q(vec_col))).alias(f"{prefix}_qv"),
+            F.expr(lsh_bucket_key_sql(_q(vec_col), planes, dim)).alias(
+                "bucket"
+            ),
+        )
+        return staged.select(
+            f"{prefix}_id",
+            f"{prefix}_qv",
+            F.expr(int_self_dot_sql(_q(f"{prefix}_qv"))).alias(f"{prefix}_n"),
+            "bucket",
         )
 
     c = _bucketed(corpus, "c")
@@ -544,31 +454,20 @@ def lsh_ann_neighbors(
         # stage the per-plane projections ONCE (HOF folds get no CSE),
         # then derive signs, the margin order, and every probe key from
         # the staged columns
-        if FAST_EXPR:
-            staged0 = queries.select(
-                F.col(id_col).alias("q_id"),
-                F.expr(quantize_sql(_q(vec_col))).alias("q_qv"),
-                *[
-                    F.expr(_proj_sql(_q(vec_col), p, dim)).alias(f"_pr{p}")
-                    for p in range(planes)
-                ],
-            )
-            staged = staged0.select(
-                "q_id",
-                "q_qv",
-                F.expr(int_self_dot_sql(_q("q_qv"))).alias("q_n"),
-                *[f"_pr{p}" for p in range(planes)],
-            )
-        else:
-            staged = queries.select(
-                F.col(id_col).alias("q_id"),
-                quantize_vector(F.col(vec_col)).alias("q_qv"),
-                int_self_dot(quantize_vector(F.col(vec_col))).alias("q_n"),
-                *[
-                    _hyperplane_proj(F.col(vec_col), p, dim).alias(f"_pr{p}")
-                    for p in range(planes)
-                ],
-            )
+        staged0 = queries.select(
+            F.col(id_col).alias("q_id"),
+            F.expr(quantize_sql(_q(vec_col))).alias("q_qv"),
+            *[
+                F.expr(_proj_sql(_q(vec_col), p, dim)).alias(f"_pr{p}")
+                for p in range(planes)
+            ],
+        )
+        staged = staged0.select(
+            "q_id",
+            "q_qv",
+            F.expr(int_self_dot_sql(_q("q_qv"))).alias("q_n"),
+            *[f"_pr{p}" for p in range(planes)],
+        )
         signs = F.array(
             *[
                 F.when(F.col(f"_pr{p}") >= 0, F.lit("1")).otherwise(F.lit("0"))
@@ -816,33 +715,6 @@ def ivf_residual_vectors(
     identically by construction."""
     cen = _quantized(centroids, id_col, vec_col, "cen")
     c = _quantized(corpus, id_col, vec_col, "c")
-    if ARGMAX_ASSIGN:
-        # r14: per-row argmax with the winning centroid's quantized
-        # vector carried as a literal struct field — the residual
-        # subtract and /1000.0 scale-back are the identical integer /
-        # double ops on identical operands as the groupBy form
-        cen_rows = cen.collect()
-        if not cen_rows:
-            return c.select(
-                F.col("c_id").alias(id_col),
-                F.transform(
-                    F.col("c_qv"),
-                    lambda v: v.cast("double") / F.lit(1000.0),
-                ).alias(vec_col),
-            ).filter(F.lit(False))
-        from topic_store_spark.operators.util import project_once
-
-        best = argmax_best_sql(cen_rows, "c_qv", with_vec=True)
-        return project_once(
-            c,
-            _res=F.expr(
-                f"transform(zip_with(c_qv, ({best}).cen_qv, "
-                "(x, y) -> x - y), "
-                "v -> CAST(v AS DOUBLE) / 1000.0D)"
-            ),
-        ).select(
-            F.col("c_id").alias(id_col), F.col("_res").alias(vec_col)
-        )
     aff = _int_dot("c_qv", "cen_qv") / F.sqrt(F.col("cen_n").cast("double"))
     best = F.max(
         F.struct(
@@ -926,42 +798,7 @@ def _pq_encode_corpus(
 ) -> DataFrame:
     """``(c_id, list_id, codes)``: coarse-assign every corpus vector
     and PQ-encode it (residual or raw) in staged projections.  The full
-    vector is DROPPED here — downstream carries ``m`` codes/row.
-
-    r14 (``ARGMAX_ASSIGN``): the coarse assignment is a per-row argmax
-    over collected centroid literals — map-side, removing the
-    corpus-scale crossJoin+groupBy exchange (the r13 fallback shuffled
-    n rows with their full quantized vectors).  The best struct is
-    STAGED in its own projection because both ``list_id`` and the
-    residual read it (HOFs get no subexpression elimination)."""
-    if ARGMAX_ASSIGN:
-        cen_rows = cen.collect()
-        if not cen_rows:
-            ctype = cen.schema["cen_id"].dataType
-            assigned = c.select(
-                "c_id",
-                F.col("c_qv").alias("c_ev"),
-                F.lit(None).cast(ctype).alias("list_id"),
-            ).filter(F.lit(False))
-            return coder.encode(assigned, "c_ev", ["c_id", "list_id"])
-        from topic_store_spark.operators.util import project_once
-
-        best = argmax_best_sql(cen_rows, "c_qv", with_vec=True)
-        # project_once, not a plain staged projection: pushed
-        # isnotnull(list_id)/join predicates would substitute the alias
-        # and re-run the whole argmax per row (the ann_ivf lesson)
-        staged = project_once(c, _best=F.expr(best))
-        enc_sql = (
-            "zip_with(c_qv, _best.cen_qv, (x, y) -> x - y)"
-            if residual
-            else "c_qv"
-        )
-        assigned = staged.select(
-            "c_id",
-            F.expr(enc_sql).alias("c_ev"),
-            F.col("_best.cen_id").alias("list_id"),
-        )
-        return coder.encode(assigned, "c_ev", ["c_id", "list_id"])
+    vector is DROPPED here — downstream carries ``m`` codes/row."""
     aff = _int_dot("c_qv", "cen_qv") / F.sqrt(F.col("cen_n").cast("double"))
     best = F.max(
         F.struct(
@@ -1023,21 +860,11 @@ def _pq_adc_rank(
 ) -> DataFrame:
     """Score every (probe, same-list code row) pair by integer ADC and
     keep each query's top-k (smallest distance, ties to lower id)."""
-    if FAST_EXPR:
-        # same fold as the Column form below, one py4j round trip
-        adc = F.expr(
-            "aggregate(zip_with(codes, lut, "
-            "(cd, l) -> element_at(l, cd + 1)), "
-            "CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-        )
-    else:
-        adc = F.aggregate(
-            F.zip_with(
-                F.col("codes"), F.col("lut"), lambda cd, l: F.element_at(l, cd + 1)
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        )
+    adc = F.expr(
+        "aggregate(zip_with(codes, lut, "
+        "(cd, l) -> element_at(l, cd + 1)), "
+        "CAST(0 AS BIGINT), (acc, v) -> acc + v)"
+    )
     scored = (
         encoded.join(F.broadcast(luts), "list_id")
         .filter(F.col("q_id") != F.col("c_id"))
@@ -1231,10 +1058,7 @@ def opq_permuted_codebooks(
     sub-slice of the ``j``-th PERMUTED residual (ordered by id, exactly
     :func:`pq_codebooks`' layout).
     """
-    if FAST_EXPR:
-        qv = F.expr(quantize_sql(_q(vec_col))).alias("_qv")
-    else:
-        qv = quantize_vector(F.col(vec_col)).alias("_qv")
+    qv = F.expr(quantize_sql(_q(vec_col))).alias("_qv")
     rows = (
         residuals.select(F.col(id_col).alias("_id"), qv)
         .orderBy("_id")

@@ -265,13 +265,6 @@ def explode_nonempty(df: DataFrame, arr_col: str, out_name: str, *keep: str) -> 
     return out.filter(F.col(out_name).isNotNull())
 
 
-#: r13 A/B toggle (`tools/ab_bench.py pairbarrier:<query>`): False
-#: restores the r12 plain-withColumn plans (threshold predicates inlined
-#: into join conditions, expressions re-evaluated per reference).
-#: Results are identical either way — only the physical plan moves.
-PROJECT_ONCE_BARRIER = True
-
-
 def project_once(df: DataFrame, **cols) -> DataFrame:
     """Attach computed columns so each evaluates EXACTLY ONCE per row,
     behind a Generate-based optimizer barrier.
@@ -299,11 +292,6 @@ def project_once(df: DataFrame, **cols) -> DataFrame:
     """
     from pyspark.sql import functions as F
 
-    if not PROJECT_ONCE_BARRIER:
-        out = df
-        for n, c in cols.items():
-            out = out.withColumn(n, c)
-        return out
     struct = F.struct(*[c.alias(n) for n, c in cols.items()])
     gen = df.select("*", F.explode_outer(F.array(struct)).alias("_once"))
     return gen.select(

@@ -2800,22 +2800,6 @@ def _compile_densify(df: DataFrame, spec: dict[str, Any]) -> DataFrame:
 _GL_BROADCAST_MAX_ROWS = 500_000
 
 
-#: r14 optimization-round toggle (`tools/ab_bench.py gllazy:<query>`):
-#: True defers each BFS level's frontier checkpoint to the count() that
-#: immediately follows it, fusing the former materialize-job + count-job
-#: pair into ONE eager job per level (2 jobs/level -> 1; the count still
-#: gates emptiness AND the broadcast hint exactly as before, and the
-#: joins still read the truncated-lineage checkpoint).  False restores
-#: the r13 eager-checkpoint shape.  Results identical either way.
-GL_LAZY_GATE = True
-
-
-def _materialize(df: DataFrame, eager: bool = True) -> DataFrame:
-    from topic_store_spark.operators.util import materialize_iter
-
-    return materialize_iter(df, eager=eager)
-
-
 def _graph_lookup(
     out: DataFrame, spec: dict[str, Any], tables: dict[str, DataFrame] | None
 ) -> DataFrame:
@@ -2831,7 +2815,9 @@ def _graph_lookup(
     the collection as a DAG of session documents).
 
     Scale posture (r2 verdict item 5): the frontier is materialized per
-    level (checkpoint — truncates lineage, gives an exact row count) and
+    level (checkpoint — truncates lineage, gives an exact row count; the
+    checkpoint is lazy, so it is written by the count() that follows it
+    — one eager job per level, not a checkpoint job plus a count job) and
     the broadcast hint is GATED on that count: a small frontier broadcasts
     (frontier<->edges join with zero edge shuffle), a frontier past
     ``_GL_BROADCAST_MAX_ROWS`` joins un-hinted so the planner/AQE picks a
@@ -2840,6 +2826,8 @@ def _graph_lookup(
     a count on the materialized frontier; document sets never reach the
     driver.
     """
+    from topic_store_spark.operators.util import materialize_iter
+
     if not tables or spec["from"] not in tables:
         raise ValueError(f"$graphLookup: unknown collection {spec.get('from')!r}")
     foreign = tables[spec["from"]]
@@ -2863,9 +2851,9 @@ def _graph_lookup(
     )
 
     starts = out.select(compile_value(spec["startWith"]).alias("_gl_start"))
-    frontier = _materialize(
+    frontier = materialize_iter(
         starts.distinct().select("_gl_start", F.col("_gl_start").alias("_gl_key")),
-        eager=not GL_LAZY_GATE,
+        eager=False,
     )
     n_frontier = frontier.count()
     expanded = frontier.select("_gl_start", "_gl_key").limit(0)
@@ -2888,10 +2876,10 @@ def _graph_lookup(
         expanded = expanded.union(frontier)
         if depth == max_depth:
             break
-        frontier = _materialize(
+        frontier = materialize_iter(
             matched.select("_gl_start", F.col("_gl_next").alias("_gl_key"))
             .subtract(expanded),
-            eager=not GL_LAZY_GATE,
+            eager=False,
         )
         n_frontier = frontier.count()
         if n_frontier == 0:
