@@ -316,3 +316,190 @@ def test_delete_many_and_compact(spark, tmp_path):
     assert n_files == 1
     assert sorted(r["n"] for r in store.find().collect()) == [0, 2, 4, 6]
     assert store.count(estimate=True) == 4  # footer fast path intact
+
+
+def _job_ids(spark, fn) -> list:
+    """Spark jobs launched while ``fn`` runs, counted under a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"storage-etl-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_to_df_on_unchanged_store_launches_no_job(spark, tmp_path):
+    """The merged schema is cached per instance while the part-file set
+    holds: a repeated to_df() skips the mergeSchema footer job."""
+    store = ParquetStorage(spark, str(tmp_path / "cache.parquet"))
+    store.insert_many([{"n": i} for i in range(3)])
+    store.insert_one({"n": 3, "extra": "x"})
+    merged = store.to_df().schema
+    assert _job_ids(spark, lambda: store.to_df().schema) == []
+    fresh = ParquetStorage(spark, store.path)
+    assert _job_ids(spark, lambda: fresh.to_df().schema) != []  # a miss merges footers
+    assert store.to_df().schema == merged == fresh.to_df().schema
+    assert sorted(r["n"] for r in store.to_df().collect()) == [0, 1, 2, 3]
+
+
+def test_to_df_sees_foreign_appends_and_rewrites(spark, tmp_path):
+    """Every change of the part-file set invalidates the cached schema:
+    an append through another instance, and the atomic-swap rewrites of
+    update_one_by_id, delete_many and compact."""
+    path = str(tmp_path / "visible.parquet")
+    store = ParquetStorage(spark, path)
+    ids = store.insert_many([{"n": i} for i in range(6)])
+    assert "extra" not in store.to_df().columns
+
+    ParquetStorage(spark, path).insert_one({"n": 6, "extra": "x"})
+    df = store.to_df()
+    assert "extra" in df.columns and df.count() == 7
+
+    store.update_one_by_id(ids[0], note="set")
+    assert store.find_by_id(ids[0])["note"] == "set"
+
+    assert store.delete_many({"n": {"$gte": 4}}) == 3
+    assert sorted(r["n"] for r in store.to_df().collect()) == [0, 1, 2, 3]
+
+    before = set(store.to_df().inputFiles())
+    assert store.compact() == 1
+    after = store.to_df()
+    assert len(after.inputFiles()) == 1 and before.isdisjoint(after.inputFiles())
+    assert {"note", "extra"} <= set(after.columns)
+    assert sorted(r["n"] for r in after.collect()) == [0, 1, 2, 3]
+
+
+def _sorted_fields(dtype):
+    from pyspark.sql import types as T
+
+    if isinstance(dtype, T.StructType):
+        return sorted((f.name, _sorted_fields(f.dataType)) for f in dtype.fields)
+    if isinstance(dtype, T.ArrayType):
+        return ["array", _sorted_fields(dtype.elementType)]
+    return dtype.simpleString()
+
+
+def test_insert_many_arrow_matches_row_path(spark, tmp_path):
+    """insert_many's Arrow batch writes what the row path writes:
+    createDataFrame(documents_to_rows(...)) through write_df, with blobs
+    externalized by externalize_blobs.  Naive datetimes keep their
+    local-wall-time meaning under a non-UTC TZ."""
+    import calendar
+    import datetime as dt
+    import time
+
+    from pyspark.sql import Row
+
+    from topic_store_spark.codec import documents_to_rows, infer_schema
+
+    saved_tz = os.environ.get("TZ")
+    os.environ["TZ"] = "Asia/Kolkata"  # +05:30, no DST
+    time.tzset()
+    try:
+        threshold = 8
+        naive = dt.datetime(2021, 3, 4, 5, 6, 7, 890)
+        aware = dt.datetime(2021, 3, 4, 5, 6, 7, 890, tzinfo=dt.timezone(dt.timedelta(hours=-4)))
+        seed = TopicStore({"k": 7, "robot": {"battery": 1.5}})
+        docs = [
+            {
+                "k": None,  # null in the whole batch: adopts the store's bigint
+                "robot": {"battery": None, "pose": {"x": 1, "y": 2.5}},
+                "v": 1,
+                "mixed": 1,
+                "scan": [1.0, 2.0],
+                "tags": [{"name": "a", "at": naive}, {"name": "b", "at": None}],
+                "payload": b"\xff" * (threshold - 4),
+                "day": dt.date(2020, 2, 29),
+                "t_naive": naive,
+                "t_aware": aware,
+            },
+            {
+                "k": None,
+                "robot": {"pose": {"x": 3, "y": None}},
+                "v": 2.5,  # widens v to double
+                "mixed": "text",  # ragged: mixed falls back to string
+                "scan": [3],
+                "tags": None,
+                "payload": b"\xfe" * threshold,
+                "t_naive": naive + dt.timedelta(days=1),
+                "t_aware": None,
+            },
+            {"k": None, "mixed": {"nested": [1, 2]}, "payload": b"\xfd" * (threshold + 4), "day": None},
+            {"k": None, "payload": None, "robot": None},
+        ]
+        stores = [TopicStore(d) for d in docs]
+        dicts = [s.dict for s in stores]
+
+        blobs_a, blobs_b = str(tmp_path / "blobs_a"), str(tmp_path / "blobs_b")
+        arrow = ParquetStorage(spark, str(tmp_path / "a.parquet"), blob_dir=blobs_a, blob_threshold=threshold)
+        rows = ParquetStorage(spark, str(tmp_path / "b.parquet"))
+        seed_schema = infer_schema([seed.dict])
+        for store in (arrow, rows):
+            store.write_df(
+                spark.createDataFrame(documents_to_rows([seed.dict], seed_schema), seed_schema)
+            )
+
+        arrow.insert_many(stores)
+        schema = infer_schema(dicts, reference=rows.to_df().schema)
+        legacy = spark.createDataFrame(documents_to_rows(dicts, schema), schema)
+        rows.write_df(externalize_blobs(legacy, blobs_b, threshold=threshold))
+
+        def stored(store, blob_dir):
+            out = []
+            for r in store.to_df().orderBy("_id").collect():
+                d = r.asDict(recursive=True)
+                if d["payload"] is not None and d["payload"]["__blob__"] is not None:
+                    d["payload"]["__blob__"] = os.path.relpath(d["payload"]["__blob__"], blob_dir)
+                out.append(d)
+            return out
+
+        a_df = arrow.to_df()
+        # mergeSchema orders fields by footer order, which is file-name order
+        assert _sorted_fields(a_df.schema) == _sorted_fields(rows.to_df().schema)
+        assert stored(arrow, blobs_a) == stored(rows, blobs_b)
+        types = dict(a_df.dtypes)
+        assert (types["k"], types["v"], types["mixed"], types["day"], types["t_naive"]) == (
+            "bigint", "double", "string", "date", "timestamp",
+        )
+        assert (types["scan"], types["tags"]) == ("array<double>", "array<struct<name:string,at:timestamp>>")
+        assert a_df.schema["robot"].dataType["battery"].dataType.simpleString() == "double"
+
+        # pointer structs and blob files
+        big = f"{stores[2].id}_payload.bin"
+        assert os.listdir(blobs_a) == os.listdir(blobs_b) == [big]
+        for blob_dir in (blobs_a, blobs_b):
+            with open(os.path.join(blob_dir, big), "rb") as fh:
+                assert fh.read() == b"\xfd" * (threshold + 4)
+        pointers = {r["_id"]: r["payload"] for r in a_df.collect()}
+        assert pointers[stores[0].id] == Row(__blob__=None, size=4, inline=b"\xff" * 4)
+        assert pointers[stores[1].id] == Row(__blob__=None, size=8, inline=b"\xfe" * 8)
+        assert pointers[stores[2].id] == Row(
+            __blob__=os.path.join(blobs_a, big), size=12, inline=None
+        )
+        assert pointers[stores[3].id] is None
+
+        # naive = local wall time (+05:30), aware = its own offset
+        micros = {
+            r["_id"]: (r["naive"], r["aware"], r["nested"])
+            for r in a_df.select(
+                "_id",
+                F.unix_micros("t_naive").alias("naive"),
+                F.unix_micros("t_aware").alias("aware"),
+                F.unix_micros(F.col("tags")[0]["at"]).alias("nested"),
+            ).collect()
+        }
+        wall_utc = calendar.timegm(naive.timetuple()) * 10**6 + 890
+        local = wall_utc - (5 * 3600 + 1800) * 10**6
+        assert micros[stores[0].id] == (local, wall_utc + 4 * 3600 * 10**6, local)
+    finally:
+        if saved_tz is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = saved_tz
+        time.tzset()

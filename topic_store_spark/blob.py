@@ -8,12 +8,16 @@ with a lazy-skip mode (database.py:174,202-204) and GC on delete
 
 Spark-side policy: big ``BinaryType`` cells are written as individual
 files under a blob directory and the cell is replaced by a pointer struct
-``{__blob__: path, size: n}``.  Externalization runs distributed — each
-executor writes its own partition's blobs (no driver fan-in).  Lazy skip
-is free: don't resolve the pointer column (column pruning never reads the
-bytes).  At 100 TB this is the difference between a 16 MB row limit and
-none: rows stay small, scans stay columnar, blobs stream straight from
-the file system only when actually selected.
+``{__blob__: path, size: n}``.  Both directions are one function over an
+Arrow record batch (``externalize_batch`` / ``rehydrate_batch``).  On a
+DataFrame they run distributed under ``mapInArrow`` — each executor
+writes or reads its own partition's blobs (no driver fan-in);
+``ParquetStorage.insert_many`` runs ``externalize_batch`` on the driver
+over the batch it is about to append.  Lazy skip is free: don't resolve
+the pointer column (column pruning never reads the bytes).  At 100 TB
+this is the difference between a 16 MB row limit and none: rows stay
+small, scans stay columnar, blobs stream straight from the file system
+only when actually selected.
 """
 
 from __future__ import annotations
@@ -28,9 +32,108 @@ DEFAULT_THRESHOLD = 16 * 1024 * 1024  # MongoDB's 16MB doc cap motivated GridFS
 
 _POINTER_FIELDS = ("__blob__", "size")
 
+POINTER_TYPE = T.StructType(
+    [
+        T.StructField("__blob__", T.StringType()),
+        T.StructField("size", T.LongType()),
+        T.StructField("inline", T.BinaryType()),
+    ]
+)
 
-def _binary_columns(schema: T.StructType) -> list[str]:
+
+def binary_columns(schema: T.StructType) -> list[str]:
     return [f.name for f in schema.fields if isinstance(f.dataType, T.BinaryType)]
+
+
+def _pointer_columns(schema: T.StructType) -> list[str]:
+    return [
+        f.name
+        for f in schema.fields
+        if isinstance(f.dataType, T.StructType)
+        and {sf.name for sf in f.dataType.fields} >= set(_POINTER_FIELDS)
+    ]
+
+
+def _retyped(schema: T.StructType, columns: list[str], dtype: T.DataType) -> T.StructType:
+    return T.StructType(
+        [T.StructField(f.name, dtype, True) if f.name in columns else f for f in schema.fields]
+    )
+
+
+def externalized_schema(schema: T.StructType, columns: list[str]) -> T.StructType:
+    """``schema`` with the binary ``columns`` turned into pointer structs."""
+    return _retyped(schema, columns, POINTER_TYPE)
+
+
+def externalize_batch(batch, columns: list[str], blob_dir: str, threshold: int, id_col: str = "_id"):
+    """One ``pyarrow.RecordBatch`` with its binary ``columns`` replaced
+    by pointer structs.
+
+    A cell over ``threshold`` bytes is written to
+    ``<blob_dir>/<id>_<column>.bin`` (a random id when the batch has no
+    ``id_col``) and becomes ``{path, size, null}``; a cell at or under
+    it stays in-row as ``{null, size, bytes}``, so small payloads keep
+    their locality — mirroring GridFS being applied only to big blobs.
+    A null cell stays null."""
+    import uuid
+
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    pointer = to_arrow_type(POINTER_TYPE)
+    names = batch.schema.names
+    ids = batch.column(id_col).to_pylist() if id_col in names else None
+    arrays = []
+    for name, column in zip(names, batch.columns):
+        if name not in columns:
+            arrays.append(column)
+            continue
+        paths, sizes, inline = [], [], []
+        for pos, cell in enumerate(column.to_pylist()):
+            path = None
+            if cell is not None and len(cell) > threshold:
+                doc_id = ids[pos] if ids is not None else uuid.uuid4().hex
+                path = os.path.join(blob_dir, f"{doc_id}_{name}.bin")
+                with open(path, "wb") as fh:
+                    fh.write(cell)
+            paths.append(path)
+            sizes.append(None if cell is None else len(cell))
+            inline.append(cell if path is None else None)
+        arrays.append(
+            pa.StructArray.from_arrays(
+                [pa.array(paths, pa.string()), pa.array(sizes, pa.int64()), pa.array(inline, pa.binary())],
+                fields=list(pointer),
+                mask=column.is_null(),
+            )
+        )
+    return pa.RecordBatch.from_arrays(arrays, names=names)
+
+
+def rehydrate_batch(batch, columns: list[str]):
+    """One ``pyarrow.RecordBatch`` with its pointer ``columns`` resolved
+    back to binary: inline bytes as they are, external ones read from
+    their file, a null pointer (or one without either) as null."""
+    import pyarrow as pa
+
+    names = batch.schema.names
+    arrays = []
+    for name, column in zip(names, batch.columns):
+        if name not in columns:
+            arrays.append(column)
+            continue
+        resolved = []
+        for cell in column.to_pylist():
+            if cell is None:
+                resolved.append(None)
+            elif cell.get("inline") is not None:
+                resolved.append(cell["inline"])
+            elif cell["__blob__"] is None:
+                resolved.append(None)
+            else:
+                with open(cell["__blob__"], "rb") as fh:
+                    resolved.append(fh.read())
+        arrays.append(pa.array(resolved, pa.binary()))
+    return pa.RecordBatch.from_arrays(arrays, names=names)
 
 
 def externalize_blobs(
@@ -40,146 +143,48 @@ def externalize_blobs(
     columns: list[str] | None = None,
     id_col: str = "_id",
 ) -> DataFrame:
-    """Replace oversized binary cells with pointer structs.
-
-    Cells at or under the threshold stay in-row (pointer struct with a
-    null path and the bytes kept in a sibling field) so small payloads
-    keep their locality — mirroring GridFS being applied only to big
-    blobs.
-    """
-    columns = columns or _binary_columns(df.schema)
+    """Replace oversized binary cells with pointer structs
+    (``externalize_batch`` per Arrow batch, distributed)."""
+    columns = columns or binary_columns(df.schema)
     if not columns:
         return df
     os.makedirs(blob_dir, exist_ok=True)
 
-    pointer_type = T.StructType(
-        [
-            T.StructField("__blob__", T.StringType()),
-            T.StructField("size", T.LongType()),
-            T.StructField("inline", T.BinaryType()),
-        ]
-    )
-
-    out_schema = T.StructType(
-        [
-            T.StructField(f.name, pointer_type, True)
-            if f.name in columns
-            else f
-            for f in df.schema.fields
-        ]
-    )
-
-    has_id = id_col in df.columns
-    field_order = [f.name for f in out_schema.fields]
-
-    # Arrow-batched externalization, mirror of the rehydrate path below:
-    # rows cross to Python as columnar batches (no per-row pickling of
-    # the full row even when nothing exceeds the threshold), and each
-    # batch writes only its oversized cells.
     def _write_batches(batches):
-        import os as _os
-        import uuid as _uuid
+        for batch in batches:
+            yield externalize_batch(batch, columns, blob_dir, threshold, id_col)
 
-        import pandas as pd
-
-        for pdf in batches:
-            for name in columns:
-                pointers = []
-                for pos, cell in enumerate(pdf[name]):
-                    if cell is None:
-                        pointers.append(None)
-                        continue
-                    payload = bytes(cell)
-                    if len(payload) > threshold:
-                        doc_id = (
-                            pdf[id_col].iloc[pos] if has_id else _uuid.uuid4().hex
-                        )
-                        fpath = _os.path.join(blob_dir, f"{doc_id}_{name}.bin")
-                        with open(fpath, "wb") as fh:
-                            fh.write(payload)
-                        pointers.append(
-                            {"__blob__": fpath, "size": len(payload), "inline": None}
-                        )
-                    else:
-                        pointers.append(
-                            {"__blob__": None, "size": len(payload), "inline": payload}
-                        )
-                pdf[name] = pd.Series(pointers, index=pdf.index, dtype=object)
-            yield pdf[field_order]
-
-    return df.mapInPandas(_write_batches, out_schema)
+    return df.mapInArrow(_write_batches, externalized_schema(df.schema, columns))
 
 
 def rehydrate_blobs(
     df: DataFrame, columns: list[str] | None = None, skip_fetch_binary: bool = False
 ) -> DataFrame:
-    """Reverse transform: pointer structs -> binary cells.
+    """Reverse transform: pointer structs -> binary cells
+    (``rehydrate_batch`` per Arrow batch, distributed: one pass resolves
+    every pointer column of the batch).
 
     ``skip_fetch_binary=True`` leaves pointers unresolved (parity:
     reference database.py:174 slow-connection path) — the cheap path,
     since unresolved pointers never touch the blob files at all.
     """
     if columns is None:
-        columns = [
-            f.name
-            for f in df.schema.fields
-            if isinstance(f.dataType, T.StructType)
-            and {sf.name for sf in f.dataType.fields} >= set(_POINTER_FIELDS)
-        ]
+        columns = _pointer_columns(df.schema)
     if not columns or skip_fetch_binary:
         return df
 
-    out_schema = T.StructType(
-        [
-            T.StructField(f.name, T.BinaryType(), True)
-            if f.name in columns
-            else f
-            for f in df.schema.fields
-        ]
-    )
-    field_order = [f.name for f in out_schema.fields]
-    targets = list(columns)
-
-    # Arrow-batched fetch: one pass resolves every pointer column of the
-    # batch, so rehydration (the egress hot path at scale) amortizes both
-    # the Python transfer and the per-partition filesystem handles instead
-    # of paying row-at-a-time UDF overhead per cell.
     def _fetch_batches(batches):
-        import pandas as pd
+        for batch in batches:
+            yield rehydrate_batch(batch, columns)
 
-        for pdf in batches:
-            for name in targets:
-                resolved = []
-                for cell in pdf[name]:
-                    if not isinstance(cell, dict):
-                        resolved.append(None)
-                        continue
-                    inline = cell.get("inline")
-                    if inline is not None:
-                        resolved.append(bytes(inline))
-                        continue
-                    path = cell.get("__blob__")
-                    if path is None:
-                        resolved.append(None)
-                        continue
-                    with open(path, "rb") as fh:
-                        resolved.append(fh.read())
-                pdf[name] = pd.Series(resolved, index=pdf.index, dtype=object)
-            yield pdf[field_order]
-
-    return df.mapInPandas(_fetch_batches, out_schema)
+    return df.mapInArrow(_fetch_batches, _retyped(df.schema, columns, T.BinaryType()))
 
 
 def collect_blob_paths(df: DataFrame, columns: list[str] | None = None) -> list[str]:
     """All externalized file paths referenced by these rows — the delete-side
     maintenance input (parity: GridFS GC, reference database.py:268-278)."""
     if columns is None:
-        columns = [
-            f.name
-            for f in df.schema.fields
-            if isinstance(f.dataType, T.StructType)
-            and {sf.name for sf in f.dataType.fields} >= set(_POINTER_FIELDS)
-        ]
+        columns = _pointer_columns(df.schema)
     paths: list[str] = []
     for name in columns:
         rows = (

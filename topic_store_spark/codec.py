@@ -436,3 +436,47 @@ def documents_to_rows(documents: list[dict], schema: T.StructType) -> list[tuple
         tuple(_coerce(doc.get(f.name), f.dataType) for f in schema.fields)
         for doc in documents
     ]
+
+
+def _has_timestamp(dtype: T.DataType) -> bool:
+    if isinstance(dtype, T.TimestampType):
+        return True
+    if isinstance(dtype, T.ArrayType):
+        return _has_timestamp(dtype.elementType)
+    if isinstance(dtype, T.StructType):
+        return any(_has_timestamp(f.dataType) for f in dtype.fields)
+    return False
+
+
+def _timestamps_to_micros(value: Any, dtype: T.DataType) -> Any:
+    """``TimestampType`` cells -> epoch microseconds, the way Spark's own
+    ``TimestampType.toInternal`` reads them: an aware datetime by its
+    offset, a naive one as local wall time.  (Arrow would read a naive
+    datetime in a ``timestamp[us, tz=UTC]`` column as UTC.)"""
+    if value is None:
+        return None
+    if isinstance(dtype, T.TimestampType):
+        return dtype.toInternal(value)
+    if isinstance(dtype, T.ArrayType):
+        return [_timestamps_to_micros(v, dtype.elementType) for v in value]
+    if isinstance(dtype, T.StructType):
+        return tuple(_timestamps_to_micros(v, f.dataType) for v, f in zip(value, dtype.fields))
+    return value
+
+
+def rows_to_arrow(rows: list[tuple], schema: T.StructType):
+    """``documents_to_rows`` output -> one ``pyarrow.RecordBatch`` typed
+    by ``to_arrow_schema(schema)``.  As a ``pyarrow.Table`` it is what
+    ``createDataFrame`` turns into a local relation, with no per-row
+    pickling into a parallelized RDD."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    arrays = []
+    for field, arrow_field, values in zip(schema.fields, arrow_schema, columns):
+        if _has_timestamp(field.dataType):
+            values = [_timestamps_to_micros(v, field.dataType) for v in values]
+        arrays.append(pa.array(values, arrow_field.type))
+    return pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)

@@ -4,7 +4,16 @@
 directory of parquet files (immutable appends, the same write pattern as
 the reference's append-only ``.topic_store`` pickle stream,
 reference filesystem.py:49-50, but columnar, splittable and
-predicate-pushdown-friendly at 100 TB).
+predicate-pushdown-friendly at 100 TB).  ``insert_many`` builds one
+Arrow batch on the driver (``codec.rows_to_arrow``), externalizes its
+oversized binaries there (``blob.externalize_batch``) and appends it as a
+local relation.  ``to_df()`` keeps the last merged schema per instance,
+keyed by the sorted ``(path, size, mtime_ns)`` of the store's part files:
+while the key holds it reads with that schema instead of re-running
+Spark's ``mergeSchema`` footer job.  The key is sound because part files
+are immutable — appends add new files, and every rewrite (``compact``,
+``delete_many``, ``update_one_by_id``) goes through the atomic directory
+swap, which writes files under new names.
 
 ``TopicStorage`` is the legacy migration reader/writer for the
 reference's ``.topic_store`` pickle-stream format
@@ -30,7 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from topic_store_spark.api import Storage, register_storage
-from topic_store_spark.codec import documents_to_rows, infer_schema
+from topic_store_spark.codec import documents_to_rows, infer_schema, rows_to_arrow
 from topic_store_spark.data import TopicStore
 
 logger = logging.getLogger(__name__)
@@ -45,6 +54,32 @@ def with_partition_date(df: DataFrame, col_name: str = "_ts_date") -> DataFrame:
     return df.withColumn(
         col_name, F.to_date(F.timestamp_seconds(F.col("_ts_meta.sys_time")))
     )
+
+
+def _hidden(name: str) -> bool:
+    # Spark's listing rule: "_x" and ".x" are not data, "_k=v" partition
+    # directories are
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def _part_files(path: str) -> list[str]:
+    """A store's data files, sorted: the path itself when it is a file,
+    else every parquet/part file under it, partition directories
+    included, skipping what Spark skips when it lists a store
+    (``_SUCCESS``, ``_temporary/``, ``.crc`` checksums)."""
+    if not os.path.isdir(path):
+        return [path] if os.path.exists(path) else []
+    out = []
+    for root, dirs, names in os.walk(path):
+        dirs[:] = [d for d in dirs if not _hidden(d)]
+        out += [
+            os.path.join(root, n)
+            for n in names
+            if not _hidden(n)
+            and not n.endswith(".crc")
+            and (n.endswith(".parquet") or n.startswith("part-"))
+        ]
+    return sorted(out)
 
 
 @register_storage
@@ -76,26 +111,19 @@ class ParquetStorage(Storage):
         # write and find() rehydrates them unless skip_fetch_binary
         self.blob_dir = blob_dir
         self.blob_threshold = blob_threshold
+        # (part-file key, merged schema) of the last mergeSchema read
+        self._schema_cache: tuple[list, T.StructType] | None = None
 
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> "ParquetStorage":
         return cls(spark, path)
 
     def _exists(self) -> bool:
-        p = self.path
-        if os.path.isdir(p):
-            # partitioned layouts nest part files under key=value dirs
-            for _root, _dirs, files in os.walk(p):
-                if any(
-                    name.endswith(".parquet") or name.startswith("part-")
-                    for name in files
-                ):
-                    return True
-            return False
-        return os.path.exists(p)
+        return bool(_part_files(self.path))
 
     def to_df(self) -> DataFrame:
-        if not self._exists():
+        files = _part_files(self.path)
+        if not files:
             schema = T.StructType(
                 [
                     T.StructField("_id", T.StringType()),
@@ -112,7 +140,16 @@ class ParquetStorage(Storage):
                 ]
             )
             return self.spark.createDataFrame([], schema)
-        return self.spark.read.option("mergeSchema", "true").parquet(self.path)
+        key = [(p, st.st_size, st.st_mtime_ns) for p in files for st in (os.stat(p),)]
+        if self._schema_cache is not None and self._schema_cache[0] == key:
+            return self.spark.read.schema(self._schema_cache[1]).parquet(self.path)
+        df = self.spark.read.option("mergeSchema", "true").parquet(self.path)
+        self._schema_cache = (key, df.schema)
+        return df
+
+    def _store_schema(self) -> T.StructType | None:
+        """The stored files' merged schema; None for an empty store."""
+        return self.to_df().schema if self._exists() else None
 
     def insert_one(self, document: dict | TopicStore) -> str:
         store = document if isinstance(document, TopicStore) else TopicStore(document)
@@ -120,16 +157,33 @@ class ParquetStorage(Storage):
         return store.id
 
     def insert_many(self, documents: list[dict | TopicStore]) -> list[str]:
+        import pyarrow as pa
+
         stores = [
             d if isinstance(d, TopicStore) else TopicStore(d) for d in documents
         ]
         docs = [s.dict for s in stores]
         # all-null fields adopt the store's existing type (no evidence of
         # their own), so {"n": None} appends cleanly to a BIGINT column
-        reference = self.to_df().schema if self._exists() else None
-        schema = infer_schema(docs, reference=reference)
-        df = self.spark.createDataFrame(documents_to_rows(docs, schema), schema)
-        self.write_df(df)
+        existing = self._store_schema()
+        schema = infer_schema(docs, reference=existing)
+        batch = rows_to_arrow(documents_to_rows(docs, schema), schema)
+        if self.blob_dir:
+            from topic_store_spark.blob import (
+                DEFAULT_THRESHOLD,
+                binary_columns,
+                externalize_batch,
+                externalized_schema,
+            )
+
+            columns = binary_columns(schema)
+            if columns:
+                os.makedirs(self.blob_dir, exist_ok=True)
+                threshold = self.blob_threshold or DEFAULT_THRESHOLD
+                batch = externalize_batch(batch, columns, self.blob_dir, threshold)
+                schema = externalized_schema(schema, columns)
+        df = self.spark.createDataFrame(pa.Table.from_batches([batch]), schema)
+        self._append(df, existing)
         return [s.id for s in stores]
 
     def write_df(self, df: DataFrame) -> None:
@@ -139,13 +193,18 @@ class ParquetStorage(Storage):
             df = externalize_blobs(
                 df, self.blob_dir, threshold=self.blob_threshold or DEFAULT_THRESHOLD
             )
-        if self._exists():
+        self._append(df, self._store_schema())
+
+    def _append(self, df: DataFrame, existing: T.StructType | None) -> None:
+        """Append ``df`` as new part files; ``existing`` is the store's
+        schema before the write (None for an empty store)."""
+        if existing is not None:
             # guard runs on the FINAL written shape (after blob pointer
             # rewrite): an incompatible part file would poison every
             # subsequent read, so refuse the write instead
             from topic_store_spark.codec import schema_merge_conflicts
 
-            conflicts = schema_merge_conflicts(self.to_df().schema, df.schema)
+            conflicts = schema_merge_conflicts(existing, df.schema)
             if conflicts:
                 raise ValueError(
                     "append would corrupt the store (subsequent reads fail "
@@ -171,23 +230,9 @@ class ParquetStorage(Storage):
         if estimate and query:
             raise ValueError("estimate=True cannot be combined with a query")
         if estimate:
-            if not self._exists():
-                return 0
             import pyarrow.parquet as pq
 
-            total = 0
-            if os.path.isdir(self.path):
-                for root, _dirs, files in os.walk(self.path):
-                    for name in files:
-                        if name.endswith(".parquet") or (
-                            name.startswith("part-") and not name.endswith(".crc")
-                        ):
-                            total += pq.ParquetFile(
-                                os.path.join(root, name)
-                            ).metadata.num_rows
-            else:
-                total = pq.ParquetFile(self.path).metadata.num_rows
-            return total
+            return sum(pq.ParquetFile(p).metadata.num_rows for p in _part_files(self.path))
         return super().count(query)
 
     def find(self, *args, skip_fetch_binary: bool = False, **kwargs) -> DataFrame:
@@ -304,10 +349,7 @@ class ParquetStorage(Storage):
         else:
             df = df.repartition(files)
         self._overwrite(df)
-        count = 0
-        for _root, _dirs, names in os.walk(self.path):
-            count += sum(1 for f in names if f.endswith(".parquet") or f.startswith("part-"))
-        return count
+        return len(_part_files(self.path))
 
 
 @register_storage
@@ -401,6 +443,8 @@ class RaggedParquetStorage(Storage):
         return store.id
 
     def insert_many(self, documents: list[dict | TopicStore]) -> list[str]:
+        import pyarrow as pa
+
         stores = [
             d if isinstance(d, TopicStore) else TopicStore(d) for d in documents
         ]
@@ -417,7 +461,8 @@ class RaggedParquetStorage(Storage):
                     json.dumps(payload, default=_json_default, sort_keys=True),
                 )
             )
-        self.spark.createDataFrame(rows, self.SCHEMA).write.mode("append").parquet(
+        table = pa.Table.from_batches([rows_to_arrow(rows, self.SCHEMA)])
+        self.spark.createDataFrame(table, self.SCHEMA).write.mode("append").parquet(
             self.path
         )
         return [s.id for s in stores]
