@@ -601,8 +601,13 @@ def q_mongo_facet(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_mongo_graph_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4: $graphLookup — ancestor closure over the halving hierarchy
     (parent = floor(doc_id / 2)), maxDepth 3, with a self-loop at the
-    root exercising the cycle guard.  One distributed equi-join per
-    depth level over DISTINCT start keys; oracle is a recursive CTE."""
+    root exercising the cycle guard.  The double start key meets the
+    bigint doc_id as in Spark's join (3.0 finds 3).  Up to the local
+    tier's bound (2^18 rows and reached pairs; sf0.1 has 5,000 docs and
+    about 20,000 pairs) the BFS over keys runs on the driver from two
+    scalar Arrow probes and joins back to the documents as a broadcast
+    local relation; past it, one distributed equi-join per depth level
+    over DISTINCT start keys.  Oracle is a recursive CTE."""
     from topic_store_spark.query.pipeline import apply_pipeline
 
     docs = _t(spark, sf_dir, "documents").select("doc_id")

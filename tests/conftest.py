@@ -1,3 +1,4 @@
+import contextlib
 import os
 import sys
 
@@ -30,3 +31,38 @@ def table(spark, sf_dir, name):
     from topic_store_spark.tables import load_table
 
     return load_table(spark, sf_dir, name)
+
+
+GRAPH_LOOKUP_TIERS = ("local", "distributed")
+
+
+@contextlib.contextmanager
+def graph_lookup_tier(tier: str):
+    """Run ``$graphLookup`` on one of its two tiers: ``"distributed"``
+    sets the local tier's row bound to 0, so any non-empty edge probe
+    overflows it."""
+    import topic_store_spark.query.pipeline as pl
+
+    saved = pl._GL_LOCAL_MAX_ROWS
+    if tier == "distributed":
+        pl._GL_LOCAL_MAX_ROWS = 0
+    try:
+        yield
+    finally:
+        pl._GL_LOCAL_MAX_ROWS = saved
+
+
+def spark_job_ids(spark, fn) -> list:
+    """Spark jobs launched while ``fn`` runs, counted under a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"job-count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return list(sc.statusTracker().getJobIdsForGroup(group))

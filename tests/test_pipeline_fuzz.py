@@ -20,6 +20,7 @@ import random
 
 import pytest
 
+from tests.conftest import GRAPH_LOOKUP_TIERS, graph_lookup_tier
 from tests.test_find_fuzz import _filter, _m_query
 from tests.test_value_expr_fuzz import _m_eval, _num_expr
 from topic_store_spark.query.pipeline import apply_pipeline
@@ -1344,13 +1345,16 @@ def test_graph_lookup_matches_reference(spark):
         if restrict is not None:
             spec["restrictSearchWithMatch"] = restrict
 
-        out = apply_pipeline(
-            starts_df, [{"$graphLookup": spec}], tables={"nodes": nodes_df}
-        )
-        got = {
-            r["sid"]: sorted((_freeze(e) for e in r["reach"]), key=repr)
-            for r in (row.asDict(recursive=True) for row in out.collect())
-        }
+        got = {}
+        for tier in GRAPH_LOOKUP_TIERS:
+            with graph_lookup_tier(tier):
+                out = apply_pipeline(
+                    starts_df, [{"$graphLookup": spec}], tables={"nodes": nodes_df}
+                )
+                got[tier] = {
+                    r["sid"]: sorted((_freeze(e) for e in r["reach"]), key=repr)
+                    for r in (row.asDict(recursive=True) for row in out.collect())
+                }
         want = {}
         for s in starts:
             reached = _ref_graph_reach(
@@ -1364,11 +1368,12 @@ def test_graph_lookup_matches_reference(spark):
                     e["d"] = depth
                 elems.append(_freeze(e))
             want[s["sid"]] = sorted(elems, key=repr)
-        if got != want:
-            bad = {k: (got[k], want[k]) for k in got if got[k] != want[k]}
-            failures.append((spec, list(bad.items())[:1]))
+        for tier, rows in got.items():
+            if rows != want:
+                bad = {k: (rows[k], want[k]) for k in rows if rows[k] != want[k]}
+                failures.append((tier, spec, list(bad.items())[:1]))
     assert not failures, (
-        f"{len(failures)}/8 $graphLookup specs diverge; "
+        f"{len(failures)}/16 $graphLookup (spec, tier) runs diverge; "
         f"first: {failures[0]}"
     )
 

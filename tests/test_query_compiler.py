@@ -3,7 +3,12 @@
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import table
+from tests.conftest import (
+    GRAPH_LOOKUP_TIERS,
+    graph_lookup_tier,
+    spark_job_ids,
+    table,
+)
 from topic_store_spark.query import (
     apply_pipeline,
     apply_projection,
@@ -738,52 +743,56 @@ def test_pipeline_graph_lookup_ancestors(spark):
     base = spark.createDataFrame(
         [(1, 1), (2, 1), (4, 2), (8, 4), (9, 4)], "doc_id long, parent long"
     )
-    out = apply_pipeline(
-        base,
-        [
-            {
-                "$graphLookup": {
-                    "from": "base",
-                    "startWith": "$parent",
-                    "connectFromField": "parent",
-                    "connectToField": "doc_id",
-                    "as": "ancestry",
-                    "maxDepth": 10,
-                    "depthField": "d",
-                }
-            }
-        ],
-        tables={"base": base},
-    )
-    rows = {r["doc_id"]: r["ancestry"] for r in out.collect()}
-    assert [(a["doc_id"], a["d"]) for a in rows[8]] == [(1, 2), (2, 1), (4, 0)]
-    # self-loop terminates: root's only ancestor is itself at depth 0
-    assert [(a["doc_id"], a["d"]) for a in rows[1]] == [(1, 0)]
-    assert [(a["doc_id"], a["d"]) for a in rows[9]] == [(1, 2), (2, 1), (4, 0)]
+    for tier in GRAPH_LOOKUP_TIERS:
+        with graph_lookup_tier(tier):
+            out = apply_pipeline(
+                base,
+                [
+                    {
+                        "$graphLookup": {
+                            "from": "base",
+                            "startWith": "$parent",
+                            "connectFromField": "parent",
+                            "connectToField": "doc_id",
+                            "as": "ancestry",
+                            "maxDepth": 10,
+                            "depthField": "d",
+                        }
+                    }
+                ],
+                tables={"base": base},
+            )
+            rows = {r["doc_id"]: r["ancestry"] for r in out.collect()}
+            assert [(a["doc_id"], a["d"]) for a in rows[8]] == [(1, 2), (2, 1), (4, 0)]
+            # self-loop terminates: root's only ancestor is itself at depth 0
+            assert [(a["doc_id"], a["d"]) for a in rows[1]] == [(1, 0)]
+            assert [(a["doc_id"], a["d"]) for a in rows[9]] == [(1, 2), (2, 1), (4, 0)]
 
 
 def test_pipeline_graph_lookup_max_depth(spark):
     base = spark.createDataFrame(
         [(1, 1), (2, 1), (4, 2), (8, 4)], "doc_id long, parent long"
     )
-    out = apply_pipeline(
-        base,
-        [
-            {
-                "$graphLookup": {
-                    "from": "base",
-                    "startWith": "$parent",
-                    "connectFromField": "parent",
-                    "connectToField": "doc_id",
-                    "as": "anc",
-                    "maxDepth": 0,
-                }
-            }
-        ],
-        tables={"base": base},
-    )
-    rows = {r["doc_id"]: [a["doc_id"] for a in r["anc"]] for r in out.collect()}
-    assert rows[8] == [4]  # depth 0 only: the immediate parent
+    for tier in GRAPH_LOOKUP_TIERS:
+        with graph_lookup_tier(tier):
+            out = apply_pipeline(
+                base,
+                [
+                    {
+                        "$graphLookup": {
+                            "from": "base",
+                            "startWith": "$parent",
+                            "connectFromField": "parent",
+                            "connectToField": "doc_id",
+                            "as": "anc",
+                            "maxDepth": 0,
+                        }
+                    }
+                ],
+                tables={"base": base},
+            )
+            rows = {r["doc_id"]: [a["doc_id"] for a in r["anc"]] for r in out.collect()}
+            assert rows[8] == [4]  # depth 0 only: the immediate parent
 
 
 def test_pipeline_graph_lookup_skewed_fanout(spark):
@@ -799,30 +808,281 @@ def test_pipeline_graph_lookup_skewed_fanout(spark):
     )
     base = spark.createDataFrame(edges, "doc_id long, parent long")
     starts = spark.createDataFrame([(0,)], "root long")
-    out = apply_pipeline(
-        starts,
+    for tier in GRAPH_LOOKUP_TIERS:
+        with graph_lookup_tier(tier):
+            out = apply_pipeline(
+                starts,
+                [
+                    {
+                        "$graphLookup": {
+                            "from": "base",
+                            "startWith": "$root",
+                            "connectFromField": "doc_id",
+                            "connectToField": "parent",
+                            "as": "desc",
+                            "maxDepth": 1,
+                            "depthField": "d",
+                        }
+                    }
+                ],
+                tables={"base": base},
+            )
+            row = out.first()
+            by_depth: dict[int, int] = {}
+            for d in row["desc"]:
+                by_depth[d["d"]] = by_depth.get(d["d"], 0) + 1
+            # depth 0: the 200 direct children; depth 1: their 400 children;
+            # maxDepth=1 stops there even though deeper edges exist
+            assert by_depth == {0: 200, 1: 400}
+
+
+def _graph_lookup_by_tier(src, spec, tables) -> dict:
+    """(output schema, sorted row reprs) of one ``$graphLookup`` per
+    tier; repr keeps NaN comparable and -0.0 apart from 0.0."""
+    got = {}
+    for tier in GRAPH_LOOKUP_TIERS:
+        with graph_lookup_tier(tier):
+            out = apply_pipeline(src, [{"$graphLookup": spec}], tables=tables)
+            got[tier] = (
+                out.schema,
+                sorted(repr(r.asDict(recursive=True)) for r in out.collect()),
+            )
+    return got
+
+
+def test_graph_lookup_tiers_same_schema_and_rows(spark):
+    """Both tiers give the same rows and the same output schema,
+    nullability included, with and without depthField (a new field and
+    one overwriting an existing field), under restrictSearchWithMatch,
+    and on nested and array columns."""
+    base = spark.createDataFrame(
         [
-            {
-                "$graphLookup": {
-                    "from": "base",
-                    "startWith": "$root",
-                    "connectFromField": "doc_id",
-                    "connectToField": "parent",
-                    "as": "desc",
-                    "maxDepth": 1,
-                    "depthField": "d",
-                }
-            }
+            (1, 1, "a", (1.5, [1, 2]), [0.5]),
+            (2, 1, "b", None, []),
+            (4, 2, None, (None, None), None),
+            (8, 4, "c", (2.0, [3]), [1.0, 2.0]),
         ],
-        tables={"base": base},
+        "doc_id long, parent long, tag string, "
+        "pose struct<x: double, ids: array<int>>, scan array<double>",
     )
-    row = out.first()
-    by_depth: dict[int, int] = {}
-    for d in row["desc"]:
-        by_depth[d["d"]] = by_depth.get(d["d"], 0) + 1
-    # depth 0: the 200 direct children; depth 1: their 400 children;
-    # maxDepth=1 stops there even though deeper edges exist
-    assert by_depth == {0: 200, 1: 400}
+    base_spec = {
+        "from": "base",
+        "startWith": "$parent",
+        "connectFromField": "parent",
+        "connectToField": "doc_id",
+        "as": "anc",
+    }
+    for extra in (
+        {},
+        {"depthField": "d", "maxDepth": 1},
+        {"depthField": "tag"},  # overwrites a string field with the depth
+        {"restrictSearchWithMatch": {"tag": {"$ne": "b"}}, "depthField": "d"},
+    ):
+        got = _graph_lookup_by_tier(base, {**base_spec, **extra}, {"base": base})
+        assert got["local"] == got["distributed"], extra
+    elem = got["local"][0]["anc"].dataType.elementType
+    assert [f.name for f in elem.fields] == ["doc_id", "parent", "tag", "pose", "scan", "d"]
+
+
+def test_graph_lookup_local_tier_bounds(spark, monkeypatch):
+    """The local tier runs up to its bound K and the distributed tier
+    past it, with the same answer, on each of the three things K bounds:
+    the (key, next) edge rows at K-1, K and K+1, the start-key rows, and
+    the (start, key) pairs the BFS reaches.  Null keys and null starts
+    do not count."""
+    import topic_store_spark.query.pipeline as pl
+
+    # chain 6 -> 5 -> ... -> 1 -> 1 plus a row with a null key
+    base = spark.createDataFrame(
+        [(i, max(i - 1, 1)) for i in range(1, 7)] + [(None, 3)],
+        "doc_id long, parent long",
+    )
+    spec = {
+        "from": "base",
+        "startWith": "$s",
+        "connectFromField": "parent",
+        "connectToField": "doc_id",
+        "as": "anc",
+        "depthField": "d",
+    }
+    distributed = []
+    real = pl._graph_lookup_distributed
+    monkeypatch.setattr(
+        pl, "_graph_lookup_distributed", lambda *a: distributed.append(1) or real(*a)
+    )
+
+    def run(starts, k):
+        src = spark.createDataFrame([(s,) for s in starts], "s long")
+        distributed.clear()
+        with monkeypatch.context() as m:
+            m.setattr(pl, "_GL_LOCAL_MAX_ROWS", k)
+            out = apply_pipeline(src, [{"$graphLookup": spec}], tables={"base": base})
+            rows = sorted(repr(r.asDict(recursive=True)) for r in out.collect())
+        return ("distributed" if distributed else "local"), rows
+
+    # six non-null edge keys; start 2 reaches two keys
+    tier, want = run([2, None], 100)
+    assert tier == "local" and len(want) == 2
+    assert run([2, None], 5) == ("distributed", want)
+    assert run([2, None], 6) == ("local", want)
+    assert run([2, None], 7) == ("local", want)
+    # seven start rows (one distinct key) against the six edge rows
+    tier, want = run([2] * 7, 100)
+    assert run([2] * 7, 6) == ("distributed", want)
+    assert run([2] * 7, 7) == ("local", want)
+    # starts 2, 3 and 4 reach 2 + 3 + 4 = 9 (start, key) pairs
+    tier, want = run([2, 3, 4], 100)
+    assert run([2, 3, 4], 8) == ("distributed", want)
+    assert run([2, 3, 4], 9) == ("local", want)
+
+
+def test_graph_lookup_driver_fetches_keys_only(spark, monkeypatch):
+    """The local tier's driver probes fetch the scalar start, key and
+    next columns only: documents far wider than the keys (a 64 KiB blob
+    each) stay in Spark on both tiers, and the answers agree."""
+    blob = bytes(range(256)) * 256
+    nodes = spark.createDataFrame(
+        [(i, max(i - 1, 1), blob) for i in range(1, 9)],
+        "id long, parent long, img binary",
+    )
+    starts = spark.createDataFrame([(8,), (3,)], "s long")
+    spec = {
+        "from": "nodes",
+        "startWith": "$s",
+        "connectFromField": "parent",
+        "connectToField": "id",
+        "as": "r",
+    }
+    fetched = []
+    frame = type(starts)
+    real = frame.toArrow
+    monkeypatch.setattr(
+        frame, "toArrow", lambda self: fetched.append(self.columns) or real(self)
+    )
+    got = {}
+    for tier in GRAPH_LOOKUP_TIERS:
+        with graph_lookup_tier(tier):
+            out = apply_pipeline(starts, [{"$graphLookup": spec}], tables={"nodes": nodes})
+        got[tier] = {
+            r["s"]: [(e["id"], e["img"] == blob) for e in r["r"]]
+            for r in out.collect()
+        }
+    assert got["local"] == got["distributed"]
+    assert got["local"][3] == [(1, True), (2, True), (3, True)]
+    assert fetched == [["_gl_start"], ["_gl_key", "_gl_next"], ["_gl_start"]]
+
+
+def test_graph_lookup_numeric_key_mixing_nan_and_negative_zero(spark):
+    """Keys compare as in Spark's join on both tiers: a double start
+    matches a long key (3.0 finds 3), NaN matches NaN, -0.0 matches
+    0.0, and the reached documents show -0.0 as 0.0 (grouping
+    normalizes it)."""
+    nodes = spark.createDataFrame([(3, 2), (2, 1), (1, None)], "k long, nxt long")
+    starts = spark.createDataFrame(
+        [(0, 3.0), (1, 2.5), (2, 1.0)], "sid long, s double"
+    )
+    spec = {
+        "from": "nodes",
+        "startWith": "$s",
+        "connectFromField": "nxt",
+        "connectToField": "k",
+        "as": "r",
+    }
+    got = _graph_lookup_by_tier(starts, spec, {"nodes": nodes})
+    assert got["local"] == got["distributed"]
+    for tier in GRAPH_LOOKUP_TIERS:
+        with graph_lookup_tier(tier):
+            out = apply_pipeline(starts, [{"$graphLookup": spec}], tables={"nodes": nodes})
+            rows = {r["sid"]: [e["k"] for e in r["r"]] for r in out.collect()}
+        assert rows == {0: [1, 2, 3], 1: [], 2: [1]}, tier
+
+    nan = float("nan")
+    fnodes = spark.createDataFrame(
+        [(nan, -0.0, "a"), (0.0, None, "b"), (1.0, nan, "c")],
+        "k double, nxt double, tag string",
+    )
+    fstarts = spark.createDataFrame(
+        [(0, nan), (1, -0.0), (2, 1.0), (3, 0.0)], "sid long, s double"
+    )
+    fspec = {**spec, "from": "fnodes", "depthField": "d"}
+    got = _graph_lookup_by_tier(fstarts, fspec, {"fnodes": fnodes})
+    assert got["local"] == got["distributed"]
+    with graph_lookup_tier("local"):
+        out = apply_pipeline(fstarts, [{"$graphLookup": fspec}], tables={"fnodes": fnodes})
+        rows = {
+            r["sid"]: [(e["tag"], repr(e["nxt"]), e["d"]) for e in r["r"]]
+            for r in out.collect()
+        }
+    assert rows == {
+        0: [("b", "None", 1), ("a", "0.0", 0)],
+        1: [("b", "None", 0)],
+        2: [("b", "None", 2), ("c", "nan", 0), ("a", "0.0", 1)],
+        3: [("b", "None", 0)],
+    }
+
+
+def test_graph_lookup_null_and_duplicate_starts_duplicate_docs(spark):
+    """Null starts reach nothing, duplicate starts share one traversal,
+    identical foreign documents collapse to one, and a depthField named
+    like an existing field replaces it in place with the depth."""
+    nodes = spark.createDataFrame(
+        [(1, 1, "x"), (2, 1, "y"), (2, 1, "y"), (3, 2, "z")],
+        "id long, parent long, d string",
+    )
+    starts = spark.createDataFrame(
+        [(0, 3), (1, 3), (2, None), (3, 7)], "sid long, s long"
+    )
+    spec = {
+        "from": "nodes",
+        "startWith": "$s",
+        "connectFromField": "parent",
+        "connectToField": "id",
+        "as": "r",
+        "depthField": "d",
+    }
+    got = _graph_lookup_by_tier(starts, spec, {"nodes": nodes})
+    assert got["local"] == got["distributed"]
+    elem = got["local"][0]["r"].dataType.elementType
+    assert [(f.name, f.dataType.simpleString()) for f in elem.fields] == [
+        ("id", "bigint"), ("parent", "bigint"), ("d", "int"),
+    ]
+    with graph_lookup_tier("local"):
+        out = apply_pipeline(starts, [{"$graphLookup": spec}], tables={"nodes": nodes})
+        rows = {r["sid"]: [tuple(e) for e in r["r"]] for r in out.collect()}
+    chain = [(1, 1, 2), (2, 1, 1), (3, 2, 0)]
+    assert rows == {0: chain, 1: chain, 2: [], 3: []}
+
+
+def test_graph_lookup_local_tier_job_count(spark):
+    """The local tier launches two jobs while the pipeline is built (the
+    start probe and the edge probe), whatever the depth; the distributed
+    tier takes one job per depth level here (21).  The action runs at
+    most five: the local relation's broadcast, the shared tail's one
+    exchange, the input side's exchange, the broadcast of the grouped
+    arrays that AQE picks at runtime, and the result stage."""
+    base = spark.createDataFrame(
+        [(i, max(i - 1, 1)) for i in range(1, 40)], "doc_id long, parent long"
+    )
+    spec = {
+        "from": "base",
+        "startWith": "$parent",
+        "connectFromField": "parent",
+        "connectToField": "doc_id",
+        "as": "anc",
+    }
+    built = []
+    build = spark_job_ids(
+        spark,
+        lambda: built.append(
+            apply_pipeline(base, [{"$graphLookup": spec}], tables={"base": base})
+        ),
+    )
+    assert len(build) == 2
+    rows = []
+    assert len(spark_job_ids(spark, lambda: rows.extend(built[0].collect()))) <= 5
+    assert "LocalTableScan" in built[0]._jdf.queryExecution().executedPlan().toString()
+    # maxDepth defaults to 20: 39 reaches 38 down to 18
+    assert {r["doc_id"]: len(r["anc"]) for r in rows}[39] == 21
 
 
 def test_pipeline_fill_locf_linear_value(spark):
@@ -2053,28 +2313,30 @@ def test_graph_lookup_restrict_search_with_match(spark):
         [(1, 1, "ok"), (2, 1, "blocked"), (4, 2, "ok"), (8, 4, "ok")],
         "doc_id long, parent long, status string",
     )
-    out = apply_pipeline(
-        base,
-        [{"$graphLookup": {
-            "from": "base",
-            "startWith": "$parent",
-            "connectFromField": "parent",
-            "connectToField": "doc_id",
-            "as": "anc",
-            "restrictSearchWithMatch": {"status": {"$ne": "blocked"}},
-        }}],
-        tables={"base": base},
-    )
-    rows = {r["doc_id"]: sorted(a["doc_id"] for a in r["anc"])
-            for r in out.collect()}
-    # node 2 is restricted out: 8's chain stops at 4; 4's at nothing
-    # past 2; and 2's own ancestry (1) is still reachable? no — the
-    # restriction removes doc 2's PARENT step target only if that doc
-    # itself is blocked; 1 is ok so 2 -> [1]
-    assert rows[8] == [4]
-    assert rows[4] == []  # parent 2 is blocked
-    assert rows[2] == [1]
-    assert rows[1] == [1]  # self-loop root, unrestricted
+    for tier in GRAPH_LOOKUP_TIERS:
+        with graph_lookup_tier(tier):
+            out = apply_pipeline(
+                base,
+                [{"$graphLookup": {
+                    "from": "base",
+                    "startWith": "$parent",
+                    "connectFromField": "parent",
+                    "connectToField": "doc_id",
+                    "as": "anc",
+                    "restrictSearchWithMatch": {"status": {"$ne": "blocked"}},
+                }}],
+                tables={"base": base},
+            )
+            rows = {r["doc_id"]: sorted(a["doc_id"] for a in r["anc"])
+                    for r in out.collect()}
+            # node 2 is restricted out: 8's chain stops at 4; 4's at nothing
+            # past 2; and 2's own ancestry (1) is still reachable? no — the
+            # restriction removes doc 2's PARENT step target only if that doc
+            # itself is blocked; 1 is ok so 2 -> [1]
+            assert rows[8] == [4]
+            assert rows[4] == []  # parent 2 is blocked
+            assert rows[2] == [1]
+            assert rows[1] == [1]  # self-loop root, unrestricted
 
 
 def test_union_with_documents_source(spark):

@@ -7,6 +7,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import spark_job_ids
 from topic_store_spark import TopicStore, load
 from topic_store_spark.blob import (
     collect_blob_paths,
@@ -318,22 +319,6 @@ def test_delete_many_and_compact(spark, tmp_path):
     assert store.count(estimate=True) == 4  # footer fast path intact
 
 
-def _job_ids(spark, fn) -> list:
-    """Spark jobs launched while ``fn`` runs, counted under a job group."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"storage-etl-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "job count")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-    return list(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_to_df_on_unchanged_store_launches_no_job(spark, tmp_path):
     """The merged schema is cached per instance while the part-file set
     holds: a repeated to_df() skips the mergeSchema footer job."""
@@ -341,9 +326,9 @@ def test_to_df_on_unchanged_store_launches_no_job(spark, tmp_path):
     store.insert_many([{"n": i} for i in range(3)])
     store.insert_one({"n": 3, "extra": "x"})
     merged = store.to_df().schema
-    assert _job_ids(spark, lambda: store.to_df().schema) == []
+    assert spark_job_ids(spark, lambda: store.to_df().schema) == []
     fresh = ParquetStorage(spark, store.path)
-    assert _job_ids(spark, lambda: fresh.to_df().schema) != []  # a miss merges footers
+    assert spark_job_ids(spark, lambda: fresh.to_df().schema) != []  # a miss merges footers
     assert store.to_df().schema == merged == fresh.to_df().schema
     assert sorted(r["n"] for r in store.to_df().collect()) == [0, 1, 2, 3]
 
@@ -373,6 +358,124 @@ def test_to_df_sees_foreign_appends_and_rewrites(spark, tmp_path):
     assert len(after.inputFiles()) == 1 and before.isdisjoint(after.inputFiles())
     assert {"note", "extra"} <= set(after.columns)
     assert sorted(r["n"] for r in after.collect()) == [0, 1, 2, 3]
+
+
+def _fresh_schema(spark, path):
+    return spark.read.option("mergeSchema", "true").parquet(path).schema
+
+
+def test_to_df_after_own_insert_launches_no_job(spark, tmp_path):
+    """An append whose footer schema is the cached merged schema extends
+    the cache: to_df() right after this instance's insert_many reads
+    with it, and no mergeSchema job runs."""
+    store = ParquetStorage(spark, str(tmp_path / "grow.parquet"))
+    store.insert_many([{"n": i, "robot": {"x": 0.5}} for i in range(3)])
+    store.to_df()
+    for batch in range(3):
+        store.insert_many([{"n": 10 * batch + i, "robot": {"x": 1.5}} for i in range(2)])
+        assert spark_job_ids(spark, lambda: store.to_df().schema) == []
+        assert store.to_df().schema == _fresh_schema(spark, store.path)
+    assert store.to_df().count() == 9
+
+
+def test_schema_cache_matches_merge_on_heterogeneous_store(spark, tmp_path):
+    """After every append to a store whose early files have fewer and
+    nested-narrower columns, the schema to_df() reads with is the one a
+    fresh mergeSchema read gives: names, order and types.  An append
+    written with the store's merged schema extends the cache (no job);
+    any other append merges footers again."""
+    path = str(tmp_path / "hetero.parquet")
+    store = ParquetStorage(spark, path)
+    full = {"n": 3, "robot": {"x": 2.0, "tag": "a"}, "scan": [1.0], "z": "w"}
+
+    def own_shape(n):
+        # the merged field order follows the (random) listing order of
+        # the early files, so this batch is written with the store's schema
+        df = store.to_df()
+        row = df.filter(F.col("n") == 3).first().asDict()
+        store.write_df(spark.createDataFrame([dict(row, n=n)], df.schema))
+
+    appends = [
+        lambda: store.insert_many([{"n": 1}]),
+        lambda: store.insert_many([{"n": 2, "robot": {"x": 1.0}}]),
+        lambda: store.insert_many([full]),
+        lambda: own_shape(4),
+        lambda: store.insert_many([{"n": 5, "robot": {"x": 3.0}}]),
+        lambda: own_shape(6),
+        lambda: store.insert_many([dict(full, n=7)]),
+    ]
+    merged = []
+    for append in appends:
+        append()
+        merged.append(spark_job_ids(spark, lambda: store.to_df().schema) != [])
+        got = store.to_df().schema
+        assert got == _fresh_schema(spark, path)
+        assert got == ParquetStorage(spark, path).to_df().schema
+    assert merged[:3] == [True, True, True] and merged[3] is False and merged[5] is False
+    assert merged[4] is True  # a narrower file
+    assert sorted(r["n"] for r in store.to_df().collect()) == list(range(1, 8))
+
+
+def test_schema_cache_falls_back_on_foreign_footers(spark, tmp_path):
+    """A part file without Spark's schema metadata (written by pyarrow)
+    and a Spark append that adds a column both miss the extension: the
+    next to_df() merges footers and shows the new column."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "foreign.parquet")
+    store = ParquetStorage(spark, path)
+    store.insert_many([{"n": i} for i in range(2)])
+    columns = store.to_df().columns
+
+    pq.write_table(
+        pa.table({"_id": ["p"], "n": pa.array([7], pa.int64()), "from_pa": [1.5]}),
+        os.path.join(path, "part-99999-pyarrow.parquet"),
+    )
+    assert spark_job_ids(spark, lambda: store.to_df().schema) != []
+    df = store.to_df()
+    assert df.columns == columns + ["from_pa"]
+    assert sorted((r["n"], r["from_pa"]) for r in df.select("n", "from_pa").collect()) == [
+        (0, None), (1, None), (7, 1.5),
+    ]
+
+    ParquetStorage(spark, path).insert_one({"n": 8, "extra": "x"})
+    assert spark_job_ids(spark, lambda: store.to_df().schema) != []
+    assert "extra" in store.to_df().columns
+    assert store.to_df().schema == _fresh_schema(spark, path)
+
+
+def test_schema_cache_on_partitioned_store(spark, tmp_path):
+    """Partition columns are not in the footers; the extension compares
+    the data columns and only accepts files in partition directories it
+    has seen.  A new partition value merges footers again."""
+    path = str(tmp_path / "parted.parquet")
+    store = ParquetStorage(spark, path, partition_by=("_ts_date",))
+    base = 1704067200.0  # 2024-01-01 UTC
+
+    def docs(day, ns):
+        out = []
+        for n in ns:
+            doc = TopicStore({"n": n, "robot": {"x": float(n)}})
+            doc.dict["_ts_meta"]["sys_time"] = base + day * 86400.0 + n
+            out.append(doc)
+        return out
+
+    store.insert_many(docs(0, [0, 1]))
+    store.to_df()
+    store.insert_many(docs(0, [2]))  # same partition directory
+    assert spark_job_ids(spark, lambda: store.to_df().schema) == []
+    assert store.to_df().schema == _fresh_schema(spark, path)
+    store.insert_many(docs(1, [3]))  # new partition directory
+    assert spark_job_ids(spark, lambda: store.to_df().schema) != []
+    df = store.to_df()
+    assert df.schema == _fresh_schema(spark, path)
+    assert df.schema["_ts_date"].dataType.simpleString() == "date"
+    assert sorted((r["n"], str(r["_ts_date"])) for r in df.collect()) == [
+        (0, "2024-01-01"), (1, "2024-01-01"), (2, "2024-01-01"), (3, "2024-01-02"),
+    ]
+    # one part file per insert_many and partition value
+    assert len([p for p in (tmp_path / "parted.parquet").rglob("part-*")]) == 3
 
 
 def _sorted_fields(dtype):

@@ -7,13 +7,27 @@ reference filesystem.py:49-50, but columnar, splittable and
 predicate-pushdown-friendly at 100 TB).  ``insert_many`` builds one
 Arrow batch on the driver (``codec.rows_to_arrow``), externalizes its
 oversized binaries there (``blob.externalize_batch``) and appends it as a
-local relation.  ``to_df()`` keeps the last merged schema per instance,
-keyed by the sorted ``(path, size, mtime_ns)`` of the store's part files:
-while the key holds it reads with that schema instead of re-running
-Spark's ``mergeSchema`` footer job.  The key is sound because part files
-are immutable — appends add new files, and every rewrite (``compact``,
-``delete_many``, ``update_one_by_id``) goes through the atomic directory
-swap, which writes files under new names.
+local relation, one part file per batch.  ``to_df()`` keeps the last
+merged schema per instance, keyed by the sorted ``(path, size,
+mtime_ns)`` of the store's part files: while the key holds it reads
+with that schema instead of re-running Spark's ``mergeSchema`` footer
+job.  The key is sound because part files are immutable — appends add
+new files, and every rewrite (``compact``, ``delete_many``,
+``update_one_by_id``) goes through the atomic directory swap, which
+writes files under new names.
+
+On a key miss the cache is extended instead of re-merged when every
+cached part file is still present and every new one (a) sits in a
+directory the cache already lists, so no new partition value can
+change an inferred partition column type, and (b) carries a Spark
+footer schema (``org.apache.spark.sql.parquet.row.metadata``, read with
+pyarrow, no Spark job) equal to the cached schema minus the partition
+columns.  Why this is sound: Spark merges footers as a left fold in
+listing order, and a merge only appends fields (nested ones too), so
+every prefix of the fold is a prefix of the cached schema F, and files
+of schema F inserted anywhere in the listing fold to F again.  The
+precondition is that appends do not reorder the existing files relative
+to each other in the listing.  Any other miss runs ``mergeSchema``.
 
 ``TopicStorage`` is the legacy migration reader/writer for the
 reference's ``.topic_store`` pickle-stream format
@@ -82,6 +96,25 @@ def _part_files(path: str) -> list[str]:
     return sorted(out)
 
 
+def _as_nullable(dtype: T.DataType) -> T.DataType:
+    """``dtype`` with every field and element nullable, as Spark's file
+    sources read a written schema."""
+    if isinstance(dtype, T.StructType):
+        return T.StructType(
+            [
+                T.StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+                for f in dtype.fields
+            ]
+        )
+    if isinstance(dtype, T.ArrayType):
+        return T.ArrayType(_as_nullable(dtype.elementType), True)
+    if isinstance(dtype, T.MapType):
+        return T.MapType(
+            _as_nullable(dtype.keyType), _as_nullable(dtype.valueType), True
+        )
+    return dtype
+
+
 @register_storage
 class ParquetStorage(Storage):
     """Append-only parquet collection (canonical store).
@@ -141,11 +174,51 @@ class ParquetStorage(Storage):
             )
             return self.spark.createDataFrame([], schema)
         key = [(p, st.st_size, st.st_mtime_ns) for p in files for st in (os.stat(p),)]
-        if self._schema_cache is not None and self._schema_cache[0] == key:
+        if self._schema_cache is not None and (
+            self._schema_cache[0] == key or self._appends_keep_schema(key)
+        ):
+            self._schema_cache = (key, self._schema_cache[1])
             return self.spark.read.schema(self._schema_cache[1]).parquet(self.path)
         df = self.spark.read.option("mergeSchema", "true").parquet(self.path)
         self._schema_cache = (key, df.schema)
         return df
+
+    def _appends_keep_schema(self, key: list) -> bool:
+        """True when ``key`` is the cached part-file set plus new files
+        whose Spark footer schema is the cached merged schema, partition
+        columns aside, each in a partition directory the cache already
+        saw (a new partition value can change the inferred partition
+        column type).  No Spark job: footers are read with pyarrow."""
+        import pyarrow.parquet as pq
+
+        cached_key, schema = self._schema_cache
+        cached = set(cached_key)
+        if not cached <= set(key):
+            return False
+        dirs = {os.path.dirname(p) for p, _, _ in cached_key}
+        for entry in key:
+            if entry in cached:
+                continue
+            p = entry[0]
+            folder = os.path.dirname(p)
+            if folder not in dirs:
+                return False
+            parts = {
+                d.split("=", 1)[0]
+                for d in os.path.relpath(folder, self.path).split(os.sep)
+                if "=" in d
+            }
+            try:
+                meta = pq.read_metadata(p).metadata or {}
+            except (OSError, ValueError):  # unreadable footer: let Spark say
+                return False
+            footer = meta.get(b"org.apache.spark.sql.parquet.row.metadata")
+            if footer is None:
+                return False
+            data = T.StructType([f for f in schema.fields if f.name not in parts])
+            if _as_nullable(T.StructType.fromJson(json.loads(footer))) != data:
+                return False
+        return True
 
     def _store_schema(self) -> T.StructType | None:
         """The stored files' merged schema; None for an empty store."""
@@ -182,8 +255,9 @@ class ParquetStorage(Storage):
                 threshold = self.blob_threshold or DEFAULT_THRESHOLD
                 batch = externalize_batch(batch, columns, self.blob_dir, threshold)
                 schema = externalized_schema(schema, columns)
+        # one slice, so one part file per batch (per partition value)
         df = self.spark.createDataFrame(pa.Table.from_batches([batch]), schema)
-        self._append(df, existing)
+        self._append(df.coalesce(1), existing)
         return [s.id for s in stores]
 
     def write_df(self, df: DataFrame) -> None:
