@@ -335,6 +335,29 @@ def test_connected_components_probe_gate_parity_and_boundary(spark):
         assert got == want, dme
 
 
+def test_connected_components_driver_tier_is_local_relation(spark):
+    """The driver tier returns its labels as an Arrow local relation,
+    not a parallelized Python list (``Scan ExistingRDD``, whose reads
+    start Python workers), and the label columns keep the node id's
+    type, integral or string."""
+    from topic_store_spark.operators.dedup import connected_components
+
+    cases = [
+        ("a_doc int, b_doc int", [(1, 2), (2, 3), (8, 7)], {1: 1, 2: 1, 3: 1, 7: 7, 8: 7}),
+        ("a_doc long, b_doc long", [(5, 4), (1 << 40, 4)], {4: 4, 5: 4, 1 << 40: 4}),
+        ("a_doc string, b_doc string", [("b", "a"), ("c", "b"), ("x", "y")],
+         {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}),
+    ]
+    for ddl, rows, want in cases:
+        pairs = spark.createDataFrame(rows, ddl)
+        labels = connected_components(pairs)
+        plan = labels._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+        node_type = pairs.schema["a_doc"].dataType
+        assert [f.dataType for f in labels.schema.fields] == [node_type, node_type]
+        assert {r["node"]: r["component"] for r in labels.collect()} == want
+
+
 def test_connected_components_giant_star_and_selfloop(spark):
     """A giant star (hub = max id, the shape label propagation handles
     worst when the hub is NOT the min) plus a self-loop-only node."""

@@ -606,3 +606,158 @@ def test_insert_many_arrow_matches_row_path(spark, tmp_path):
         else:
             os.environ["TZ"] = saved_tz
         time.tzset()
+
+
+SPARK_ROW_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_keys(path):
+    import pyarrow.parquet as pq
+
+    return pq.read_metadata(path).metadata or {}
+
+
+def test_insert_many_launches_no_job(spark, tmp_path):
+    """insert_many writes its part file with pyarrow: no Spark job (a
+    Spark append launches one), into an empty store and, once the
+    schema is cached, into a filled one."""
+    store = ParquetStorage(spark, str(tmp_path / "direct.parquet"))
+    assert spark_job_ids(spark, lambda: store.insert_many([{"n": 0, "robot": {"x": 0.5}}])) == []
+    store.to_df()
+    for n in (1, 2):
+        batch = [{"n": n, "robot": {"x": 1.5}}]
+        assert spark_job_ids(spark, lambda: store.insert_many(batch)) == []
+    assert sorted(r["n"] for r in store.to_df().collect()) == [0, 1, 2]
+
+
+def test_direct_append_footer_carries_spark_schema(spark, tmp_path):
+    """Each appended file is named like Spark's and its footer holds
+    what Spark's writer puts there: the Spark schema (equal to the store
+    schema) and the Spark version, and no ARROW:schema copy."""
+    import json
+    import re
+
+    from pyspark.sql import types as T
+
+    store = ParquetStorage(spark, str(tmp_path / "footer.parquet"))
+    store.insert_many([{"n": 1, "robot": {"x": 0.5}, "scan": [1.0, 2.0]}])
+    store.insert_many([{"n": 2, "robot": {"x": 1.5}, "scan": [3.0]}])
+    names = sorted(os.listdir(store.path))
+    assert len(names) == 2
+    for name in names:
+        assert re.fullmatch(r"part-00000-[0-9a-f-]{36}-c000\.snappy\.parquet", name), name
+        meta = _footer_keys(os.path.join(store.path, name))
+        assert set(meta) == {SPARK_ROW_KEY, b"org.apache.spark.version"}
+        assert meta[b"org.apache.spark.version"].decode() == spark.version
+        schema = T.StructType.fromJson(json.loads(meta[SPARK_ROW_KEY]))
+        assert schema == store.to_df().schema == _fresh_schema(spark, store.path)
+
+
+def test_direct_append_seen_by_fresh_instance(spark, tmp_path):
+    """A new instance sees directly appended rows through to_df(),
+    count(estimate=True) and compact().  Dates and timestamps before the
+    Gregorian cutover read back unchanged even when the session asks to
+    rebase files of unknown writers: the footer marks a Spark 3+ writer."""
+    import datetime as dt
+
+    utc = dt.timezone.utc
+    path = str(tmp_path / "fresh.parquet")
+    docs = [
+        {"n": i, "day": dt.date(1200 + i, 3, 1), "at": dt.datetime(1500 + i, 1, 1, tzinfo=utc)}
+        for i in range(4)
+    ]
+    ParquetStorage(spark, path).insert_many(docs[:2])
+    ParquetStorage(spark, path).insert_many(docs[2:])
+
+    def rows(store):
+        return sorted(
+            (r["n"], r["day"], r["at"].astimezone(utc).replace(tzinfo=None))
+            for r in store.to_df().collect()
+        )
+
+    want = [(d["n"], d["day"], d["at"].replace(tzinfo=None)) for d in docs]
+    key = "spark.sql.parquet.datetimeRebaseModeInRead"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "LEGACY")
+    try:
+        fresh = ParquetStorage(spark, path)
+        assert rows(fresh) == want
+        assert fresh.count(estimate=True) == fresh.count() == 4
+        assert fresh.compact() == 1
+        assert rows(ParquetStorage(spark, path)) == want
+    finally:
+        spark.conf.set(key, saved)
+
+
+def test_direct_append_temp_file_is_invisible(spark, tmp_path):
+    """A leftover ``.``-prefixed temp file (an interrupted append) is
+    not data: to_df(), both counts and _part_files skip it."""
+    from topic_store_spark.filesystem import _part_files
+
+    store = ParquetStorage(spark, str(tmp_path / "tmpfile.parquet"))
+    store.insert_many([{"n": i} for i in range(3)])
+    files = _part_files(store.path)
+    leftover = os.path.join(store.path, ".part-00000-leftover-c000.snappy.parquet.tmp")
+    with open(leftover, "wb") as fh:
+        fh.write(b"PAR1 truncated")
+    fresh = ParquetStorage(spark, store.path)
+    assert _part_files(store.path) == files
+    assert fresh.count(estimate=True) == fresh.count() == store.to_df().count() == 3
+
+
+def test_direct_append_codec_follows_session_conf(spark, tmp_path):
+    """The part file uses spark.sql.parquet.compression.codec; Spark's
+    lz4 codec, which pyarrow does not write, appends through Spark."""
+    import pyarrow.parquet as pq
+
+    key = "spark.sql.parquet.compression.codec"
+    saved = spark.conf.get(key)
+    store = ParquetStorage(spark, str(tmp_path / "codec.parquet"))
+    try:
+        spark.conf.set(key, "zstd")
+        store.insert_many([{"n": 1, "s": "x" * 100}])
+        (name,) = os.listdir(store.path)
+        assert name.endswith(".zstd.parquet")
+        column = pq.read_metadata(os.path.join(store.path, name)).row_group(0).column(0)
+        assert column.compression == "ZSTD"
+
+        spark.conf.set(key, "lz4")
+        assert spark_job_ids(spark, lambda: store.insert_many([{"n": 2, "s": "y"}])) != []
+    finally:
+        spark.conf.set(key, saved)
+    assert sorted(r["n"] for r in ParquetStorage(spark, store.path).to_df().collect()) == [1, 2]
+
+
+def test_direct_append_incompatible_insert_leaves_no_file(spark, tmp_path):
+    """The merge guard runs before the direct write: an incompatible
+    insert raises and leaves the store directory as it was."""
+    store = ParquetStorage(spark, str(tmp_path / "guard.parquet"))
+    store.insert_many([{"n": 1, "nested": {"v": 2.5}}])
+    before = sorted(os.listdir(store.path))
+    with pytest.raises(ValueError, match="RaggedParquetStorage"):
+        store.insert_many([{"n": "not a number"}])
+    with pytest.raises(ValueError, match="nested.v"):
+        store.insert_many([{"nested": {"v": "also wrong"}}])
+    assert sorted(os.listdir(store.path)) == before
+    assert [r["n"] for r in store.to_df().collect()] == [1]
+
+
+def test_ragged_direct_append_roundtrip(spark, tmp_path):
+    """RaggedParquetStorage.insert_many shares the direct writer: no
+    Spark job, Spark's footer keys, and a fresh instance reads and
+    queries the rows."""
+    from topic_store_spark.filesystem import RaggedParquetStorage
+
+    path = str(tmp_path / "landing.ragged.parquet")
+    store = RaggedParquetStorage(spark, path)
+    docs = [{"v": 1, "robot": {"name": "husky"}}, {"v": "text", "blob": b"\x00\x01"}]
+    ids = []
+    assert spark_job_ids(spark, lambda: ids.extend(store.insert_many(docs))) == []
+    (name,) = os.listdir(path)
+    assert SPARK_ROW_KEY in _footer_keys(os.path.join(path, name))
+    fresh = load(path, spark)
+    assert isinstance(fresh, RaggedParquetStorage)
+    assert fresh.to_df().schema == RaggedParquetStorage.SCHEMA
+    assert sorted(r["_id"] for r in fresh.to_df().collect()) == sorted(ids)
+    assert [r["_id"] for r in fresh.find({"v": {"$gte": 1}}).collect()] == [ids[0]]
+    assert [r["_id"] for r in fresh.find({"robot.name": "husky"}).collect()] == [ids[0]]

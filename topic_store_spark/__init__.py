@@ -26,12 +26,33 @@ bucketing), scale infrastructure (Bloom prefilters, count-min-sketch
 heavy hitters, salting), web ingestion (WARC, HTML->text), multimodal
 codecs (PNG/WAV/JPEG/MJPEG-AVI from scratch; audio STFT+log-mel), and
 an end-to-end corpus build (operators/build.py).
+
+The four exported names load on first access (PEP 562): the package
+root imports no pyspark, so ``python -m topic_store_spark.worker_daemon``
+can clean the worker's ``sys.path`` before pyspark is first imported.
 """
 
-from topic_store_spark.data import TopicStore
-from topic_store_spark.api import Storage, load
-from topic_store_spark.session import get_spark
+import importlib
 
 __version__ = "0.1.0"
 
 __all__ = ["TopicStore", "Storage", "load", "get_spark", "__version__"]
+
+_EXPORTS = {
+    "TopicStore": "topic_store_spark.data",
+    "Storage": "topic_store_spark.api",
+    "load": "topic_store_spark.api",
+    "get_spark": "topic_store_spark.session",
+}
+
+
+def __getattr__(name: str):
+    if name not in _EXPORTS:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    value = getattr(importlib.import_module(_EXPORTS[name]), name)
+    globals()[name] = value
+    return value
+
+
+def __dir__():
+    return sorted(set(globals()) | set(__all__))

@@ -6,15 +6,36 @@ the reference's append-only ``.topic_store`` pickle stream,
 reference filesystem.py:49-50, but columnar, splittable and
 predicate-pushdown-friendly at 100 TB).  ``insert_many`` builds one
 Arrow batch on the driver (``codec.rows_to_arrow``), externalizes its
-oversized binaries there (``blob.externalize_batch``) and appends it as a
-local relation, one part file per batch.  ``to_df()`` keeps the last
-merged schema per instance, keyed by the sorted ``(path, size,
-mtime_ns)`` of the store's part files: while the key holds it reads
-with that schema instead of re-running Spark's ``mergeSchema`` footer
-job.  The key is sound because part files are immutable — appends add
-new files, and every rewrite (``compact``, ``delete_many``,
-``update_one_by_id``) goes through the atomic directory swap, which
-writes files under new names.
+oversized binaries there (``blob.externalize_batch``) and writes it
+straight to one part file with ``pyarrow.parquet``: no Spark job, so an
+append pays for its rows and not for a job's fixed cost.  The file is
+written under a ``.``-prefixed temp name in the store directory (Spark's
+listing and ``_part_files`` skip it) and renamed to
+``part-00000-<uuid>-c000.<codec>.parquet`` once complete, so readers
+never see a partial file.  The name is the one Spark's writer gives a
+one-task append, so the file sorts among the others, and mergeSchema
+folds the footers, as Spark's own file would.  The codec is the session's
+``spark.sql.parquet.compression.codec``; with Spark's lzo, lz4 or
+lz4_raw codec the batch appends through Spark instead.
+``RaggedParquetStorage.insert_many`` uses the same writer.  The footer
+carries the keys Spark's own writer puts there:
+``org.apache.spark.sql.parquet.row.metadata`` (the batch's Spark schema,
+so ``mergeSchema`` and the cache extension below see Spark's types) and
+``org.apache.spark.version`` (a Spark 3+ writer, so dates and timestamps
+are read without calendar rebase); pyarrow's own ``ARROW:schema`` key is
+cut from the footer.  Two writes stay on Spark's writer, the only path
+for them: ``partition_by`` stores (their hive directory names use
+Spark's partition-value encoding) and ``write_df``, whose input is a
+distributed DataFrame.
+
+``to_df()`` keeps the last merged schema per instance, keyed by the
+sorted ``(path, size, mtime_ns)`` of the store's part files: while the
+key holds it reads with that schema instead of re-running Spark's
+``mergeSchema`` footer job (``insert_many`` takes the store schema from
+the cache without building a DataFrame).  The key is sound because part
+files are immutable — appends add new files, and every rewrite
+(``compact``, ``delete_many``, ``update_one_by_id``) goes through the
+atomic directory swap, which writes files under new names.
 
 On a key miss the cache is extended instead of re-merged when every
 cached part file is still present and every new one (a) sits in a
@@ -96,6 +117,137 @@ def _part_files(path: str) -> list[str]:
     return sorted(out)
 
 
+# spark.sql.parquet.compression.codec -> (pyarrow codec, file-name infix
+# as parquet-mr names it); Spark's other codecs (lzo, lz4, lz4_raw)
+# append through Spark
+_PYARROW_CODECS = {
+    "none": ("none", ""),
+    "uncompressed": ("none", ""),
+    "snappy": ("snappy", ".snappy"),
+    "gzip": ("gzip", ".gz"),
+    "zstd": ("zstd", ".zstd"),
+    "brotli": ("brotli", ".br"),
+}
+
+
+def _check_append(existing: T.StructType | None, schema: T.StructType) -> None:
+    """Refuse an append of ``schema`` that Spark could not merge with the
+    store's ``existing`` schema (None for an empty store)."""
+    if existing is None:
+        return
+    # guard runs on the FINAL written shape (after blob pointer
+    # rewrite): an incompatible part file would poison every
+    # subsequent read, so refuse the write instead
+    from topic_store_spark.codec import schema_merge_conflicts
+
+    conflicts = schema_merge_conflicts(existing, schema)
+    if conflicts:
+        raise ValueError(
+            "append would corrupt the store (subsequent reads fail "
+            "with CANNOT_MERGE_SCHEMAS): incompatible column types "
+            f"{conflicts}; cast the data, or use RaggedParquetStorage "
+            "for structurally heterogeneous corpora"
+        )
+
+
+def _thrift_key_values(items: list[tuple[bytes, bytes]]) -> bytes:
+    """A parquet footer's ``key_value_metadata`` list of at most 14
+    entries in thrift's compact encoding: the list header (size, struct
+    type), then per ``KeyValue`` the key and the value as binary fields
+    1 and 2 and a stop byte."""
+
+    def binary(value: bytes) -> bytes:
+        n, size = len(value), bytearray()
+        while n > 0x7F:
+            size.append(n & 0x7F | 0x80)
+            n >>= 7
+        size.append(n)
+        return b"\x18" + bytes(size) + value  # field delta 1, type binary
+
+    return bytes([len(items) << 4 | 0xC]) + b"".join(
+        binary(k) + binary(v) + b"\x00" for k, v in items
+    )
+
+
+def _drop_arrow_schema(path: str, metadata: dict[bytes, bytes]) -> None:
+    """Rewrite the footer of the parquet file at ``path``, written by
+    pyarrow with key-value ``metadata``, without pyarrow's
+    ``ARROW:schema`` entry.  pyarrow writes key-value metadata only
+    together with that entry (``store_schema=False`` drops both); it is
+    a base64 Arrow schema holding a second copy of the Spark schema,
+    about a third of a small file, and Spark never reads it.  pyarrow
+    appends it after ``metadata``, so the footer's key-value list is
+    re-encoded without its last entry; column chunk offsets point before
+    the footer and stay valid.  Unless the list is found exactly once,
+    the file stays as written."""
+    import pyarrow.parquet as pq
+
+    arrow = pq.read_metadata(path).metadata.get(b"ARROW:schema")
+    if arrow is None:
+        return
+    items = list(metadata.items())
+    with open(path, "r+b") as fh:
+        data = fh.read()
+        start = len(data) - 8 - int.from_bytes(data[-8:-4], "little")
+        footer = data[start:-8]
+        old = _thrift_key_values(items + [(b"ARROW:schema", arrow)])
+        if footer.count(old) != 1:
+            return
+        footer = footer.replace(old, _thrift_key_values(items))
+        fh.seek(start)
+        fh.write(footer + len(footer).to_bytes(4, "little") + b"PAR1")
+        fh.truncate()
+
+
+def _append_table(spark: SparkSession, path: str, table, schema: T.StructType) -> None:
+    """Append ``table`` (typed by ``schema``) to the store at ``path`` as
+    one part file written by pyarrow: no Spark job.  The file is written
+    under a ``.``-prefixed name, which Spark's listing and ``_part_files``
+    skip, and renamed to ``part-00000-<uuid>-c000.<codec>.parquet`` (the
+    name Spark gives a one-task append) once complete.  Its footer
+    carries what Spark's writer puts there: the Spark schema under
+    ``org.apache.spark.sql.parquet.row.metadata`` (so readers,
+    ``mergeSchema`` and the schema-cache extension see Spark's types) and
+    ``org.apache.spark.version`` (a Spark 3+ writer: no datetime rebase
+    on read)."""
+    import uuid
+
+    import pyarrow.parquet as pq
+
+    codec = spark.conf.get("spark.sql.parquet.compression.codec").lower()
+    if codec not in _PYARROW_CODECS:
+        spark.createDataFrame(table, schema).coalesce(1).write.mode("append").parquet(path)
+        return
+    compression, infix = _PYARROW_CODECS[codec]
+    metadata = {
+        b"org.apache.spark.sql.parquet.row.metadata": schema.json().encode(),
+        b"org.apache.spark.version": spark.version.encode(),
+    }
+    os.makedirs(path, exist_ok=True)
+    name = f"part-00000-{uuid.uuid4()}-c000{infix}.parquet"
+    tmp = os.path.join(path, f".{name}.tmp")
+    try:
+        # plain pages: over a small batch's mostly distinct values a
+        # dictionary page costs more than it saves (compact() rewrites
+        # through Spark, whose writer picks the encoding per column)
+        pq.write_table(
+            table.replace_schema_metadata(metadata),
+            tmp,
+            compression=compression,
+            use_dictionary=False,
+        )
+        _drop_arrow_schema(tmp, metadata)
+        os.rename(tmp, os.path.join(path, name))
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+
+
+def _file_key(files: list[str]) -> list[tuple[str, int, int]]:
+    """The schema cache's key: ``(path, size, mtime_ns)`` per part file."""
+    return [(p, st.st_size, st.st_mtime_ns) for p in files for st in (os.stat(p),)]
+
+
 def _as_nullable(dtype: T.DataType) -> T.DataType:
     """``dtype`` with every field and element nullable, as Spark's file
     sources read a written schema."""
@@ -173,15 +325,23 @@ class ParquetStorage(Storage):
                 ]
             )
             return self.spark.createDataFrame([], schema)
-        key = [(p, st.st_size, st.st_mtime_ns) for p in files for st in (os.stat(p),)]
+        key = _file_key(files)
+        schema = self._cached_schema(key)
+        if schema is not None:
+            return self.spark.read.schema(schema).parquet(self.path)
+        df = self.spark.read.option("mergeSchema", "true").parquet(self.path)
+        self._schema_cache = (key, df.schema)
+        return df
+
+    def _cached_schema(self, key: list) -> T.StructType | None:
+        """The cached merged schema while it holds for the part files
+        ``key`` (the same set, or appends that keep it); None on a miss."""
         if self._schema_cache is not None and (
             self._schema_cache[0] == key or self._appends_keep_schema(key)
         ):
             self._schema_cache = (key, self._schema_cache[1])
-            return self.spark.read.schema(self._schema_cache[1]).parquet(self.path)
-        df = self.spark.read.option("mergeSchema", "true").parquet(self.path)
-        self._schema_cache = (key, df.schema)
-        return df
+            return self._schema_cache[1]
+        return None
 
     def _appends_keep_schema(self, key: list) -> bool:
         """True when ``key`` is the cached part-file set plus new files
@@ -221,8 +381,13 @@ class ParquetStorage(Storage):
         return True
 
     def _store_schema(self) -> T.StructType | None:
-        """The stored files' merged schema; None for an empty store."""
-        return self.to_df().schema if self._exists() else None
+        """The stored files' merged schema; None for an empty store.  A
+        cache hit builds no DataFrame (no JVM file listing)."""
+        files = _part_files(self.path)
+        if not files:
+            return None
+        schema = self._cached_schema(_file_key(files))
+        return schema if schema is not None else self.to_df().schema
 
     def insert_one(self, document: dict | TopicStore) -> str:
         store = document if isinstance(document, TopicStore) else TopicStore(document)
@@ -255,9 +420,15 @@ class ParquetStorage(Storage):
                 threshold = self.blob_threshold or DEFAULT_THRESHOLD
                 batch = externalize_batch(batch, columns, self.blob_dir, threshold)
                 schema = externalized_schema(schema, columns)
-        # one slice, so one part file per batch (per partition value)
-        df = self.spark.createDataFrame(pa.Table.from_batches([batch]), schema)
-        self._append(df.coalesce(1), existing)
+        table = pa.Table.from_batches([batch])
+        if self.partition_by:
+            # hive directory names use Spark's partition-value encoding, so
+            # Spark writes them; one slice, one part file per partition value
+            df = self.spark.createDataFrame(table, schema).coalesce(1)
+            self._append(df, existing)
+        else:
+            _check_append(existing, schema)
+            _append_table(self.spark, self.path, table, schema)
         return [s.id for s in stores]
 
     def write_df(self, df: DataFrame) -> None:
@@ -272,20 +443,7 @@ class ParquetStorage(Storage):
     def _append(self, df: DataFrame, existing: T.StructType | None) -> None:
         """Append ``df`` as new part files; ``existing`` is the store's
         schema before the write (None for an empty store)."""
-        if existing is not None:
-            # guard runs on the FINAL written shape (after blob pointer
-            # rewrite): an incompatible part file would poison every
-            # subsequent read, so refuse the write instead
-            from topic_store_spark.codec import schema_merge_conflicts
-
-            conflicts = schema_merge_conflicts(existing, df.schema)
-            if conflicts:
-                raise ValueError(
-                    "append would corrupt the store (subsequent reads fail "
-                    "with CANNOT_MERGE_SCHEMAS): incompatible column types "
-                    f"{conflicts}; cast the data, or use RaggedParquetStorage "
-                    "for structurally heterogeneous corpora"
-                )
+        _check_append(existing, df.schema)
         writer = df.write.mode("append")
         if self.partition_by:
             missing = [c for c in self.partition_by if c not in df.columns]
@@ -536,9 +694,7 @@ class RaggedParquetStorage(Storage):
                 )
             )
         table = pa.Table.from_batches([rows_to_arrow(rows, self.SCHEMA)])
-        self.spark.createDataFrame(table, self.SCHEMA).write.mode("append").parquet(
-            self.path
-        )
+        _append_table(self.spark, self.path, table, self.SCHEMA)
         return [s.id for s in stores]
 
     def write_df(self, df: DataFrame) -> None:

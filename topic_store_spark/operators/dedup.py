@@ -987,6 +987,9 @@ def connected_components(
        produced ``pairs`` runs twice — once for the probe and once more
        for the checkpoint.
     """
+    import pyarrow as pa
+
+    from topic_store_spark.codec import rows_to_arrow
     from topic_store_spark.operators.util import materialize_iter
 
     # tier 1: probe the RAW pair projection (no checkpoint — this is
@@ -1035,7 +1038,12 @@ def connected_components(
                 StructField("component", node_type, True),
             ]
         )
-        return pairs.sparkSession.createDataFrame(labels, lab_schema)
+        # an Arrow local relation: a Python list would pickle through
+        # parallelize and start Python workers to read it back
+        batch = rows_to_arrow(labels, lab_schema)
+        return pairs.sparkSession.createDataFrame(
+            pa.Table.from_batches([batch]), lab_schema
+        )
 
     # tier 2: materialize the raw pair projection once: every later
     # reference (node set, initial edges) reads the checkpoint instead of
