@@ -1,11 +1,12 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints one
-JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"""Benchmark harness: runs every registry query at $SPARK_GRAFT_SF_DIR
+(default: the sf0.1 test fixture) on ``get_spark``'s session
+(local[$SPARK_GRAFT_CPUS]) and prints one JSON line: {"metric": ...,
+"value": total_sec, "unit": "sec", "queries": {name: sec}, "sf": ...}.
 
-Each query is executed once to completion (foreach no-op sink — measures
-full plan execution, not driver collect overhead, except aggregations
-whose results are tiny and collected).
+Each execution builds the query and runs its full plan to Spark's noop
+sink through ``tools/harness.run_timed``; a query's number is the build
+plus the write.  Medians, spreads and raw samples go to
+BENCH_detail.json.
 """
 
 from __future__ import annotations
@@ -13,189 +14,45 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 _REPO = os.path.dirname(os.path.abspath(__file__))
-
-# Files whose change invalidates an A/B timing receipt.  Doc/artifact
-# commits do not (r12: strict rev equality false-alarmed on every
-# post-stamp docs commit).
-_MEASURED_SURFACE = (
-    "topic_store_spark", "__spark_entry__.py", "bench.py",
-    "tools/ab_bench.py",
-)
-
-
-def mark_receipt_stale_if_surface_changed(ab: dict, repo: str) -> None:
-    """Mark an ab_bench receipt stale unless it provably validates HEAD.
-
-    r11 ADVICE: a receipt produced under OLDER code must not travel with
-    a new bench as if it validated HEAD — ab_bench stamps git_rev, and
-    the receipt is marked stale when any MEASURED surface (package,
-    entry, bench harnesses) changed between that rev and the tree this
-    bench runs in.  r12 ADVICE hardening: a failed git command (unknown
-    rev -> exit 128, empty stdout) must NOT read as "no change", and the
-    diff runs against the WORKING TREE so uncommitted edits to a
-    measured surface invalidate a receipt exactly like committed ones.
-    Any ambiguity fails toward stale.
-    """
-    import subprocess
-
-    def _git(*args):
-        proc = subprocess.run(
-            ["git", "-C", repo, *args],
-            capture_output=True, text=True, timeout=10,
-        )
-        if proc.returncode != 0:
-            return None
-        return proc.stdout.strip()
-
-    try:
-        head = _git("rev-parse", "--short", "HEAD")
-        rev = ab.get("git_rev", "")
-        changed: str | None = None
-        if head and rev and rev != "unknown":
-            # diff REV against the WORKING TREE (not rev..HEAD):
-            # uncommitted edits count too.
-            changed = _git(
-                "diff", "--name-only", rev, "--", *_MEASURED_SURFACE,
-            )
-    except Exception:  # noqa: BLE001 - diff failure -> stale
-        head, rev, changed = "", "", None
-    if not (head and rev and rev != "unknown" and changed == ""):
-        ab["stale"] = True
-        ab["stale_note"] = (
-            f"receipt stamped at rev {ab.get('git_rev', 'unstamped')}; "
-            f"this bench ran at {head or 'unknown'} and a measured "
-            "surface changed in between (or the diff could not be "
-            "checked); re-run tools/ab_bench.py before citing it "
-            "for HEAD"
-        )
 sys.path.insert(0, _REPO)
 
-# Since round 4 the bench covers EVERY registered query — the registry is
-# exactly 50 entries, each with a same-round oracle row, and the one
-# historically degenerate plan (uncapped char-5-gram self-join) now runs
-# with its max_shingle_freq hot-key cap, so nothing needs excluding.
-# None = all of queries(); set a list to restrict during development.
-HEADLINE: list[str] | None = None
+# Six interleaved timed rounds: with 4 the r10 closing band was 13.6% of
+# the total; the per-query medians over 6 are the number a cross-round
+# comparison reads (the min stays the headline).
+ROUNDS = 6
+# Two untimed warmup executions per query first: with one, timed samples
+# still declined across rounds (C2 JIT keeps compiling through the first
+# pass over 50 queries).  Measured same-day at sf0.1: band 12.62s (23.9%)
+# at one warmup vs 8.56s (15.8%) at two, and the worst query's spread
+# fell 1.96s -> 0.35s.  The remaining band is multi-tenant host variance;
+# per-query A/B claims go through tools/ab_bench.py.
+WARMUPS = 2
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
 
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as entry_mod
+    from tools.harness import run_timed, total_s
+    from topic_store_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("topic-store-spark-bench")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "24g")
-        # r4 A/B vs the 10MB default on tpch_q3_topk (the r3 +25% "drift"
-        # suspect): both thresholds produce the identical
-        # 2xBroadcastHashJoin + TakeOrderedAndProject plan and their
-        # min-of-4 timings overlap within +-0.3s across JVMs — the drift
-        # was host noise, so the 64m setting (which broadcast-protects
-        # larger dims at bigger SFs) stays.
-        .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-        .config("spark.sql.codegen.cache.maxEntries", "5000")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="topic-store-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # Warm the JVM (codegen, parquet reader, shuffle machinery) so timings
-    # measure the engine, not first-query class loading.
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    entry_mod.queries()["tpch_q1_pricing"](spark, sf_dir).write.format(
-        "noop"
-    ).mode("overwrite").save()
-
-    from topic_store_spark.operators.util import cache_scope
-
     queries = entry_mod.queries()
-    headline = HEADLINE if HEADLINE is not None else list(queries)
-    samples: dict[str, list[float]] = {}
-    errors: dict[str, str] = {}
-    # THREE interleaved rounds (ABC ABC ABC, not AAA BBB CCC): a query's
-    # samples land minutes apart, so a transient host-load burst can spoil
-    # at most one of them.  Per-query result is the min; the emitted
-    # median/spread give each cross-round comparison its own error bar —
-    # r5's +11.6% "drift" on untouched queries was unattributable with
-    # min-of-2 alone.  Every query is isolated in try/except so one
-    # failure can never zero the whole bench (the r2 lesson): failures are
-    # recorded per-query and the JSON line is always emitted.
-    # r11: 6 rounds (was 4) — the r10 closing band was 13.6% of total
-    # with 4; medians over 6 rounds are the committed per-query number a
-    # cross-round comparison should read (min stays the headline).
-    n_rounds = int(os.environ.get("SPARK_GRAFT_BENCH_ROUNDS", "6"))
-    # r10: one UNTIMED warmup execution per query before the timed
-    # rounds.  r9's BENCH_detail showed first samples 2-3x steady state
-    # (per-query codegen / shuffle-machinery warmup: unigram 6.48 vs
-    # 2.47) — the min-of-N headline absorbed it but the noise band
-    # (~7%) didn't, so sub-0.4s perf claims were unprovable.  With
-    # every query pre-warmed, ALL timed samples are steady-state.
-    # r11: TWO warmup passes — with one, timed samples still declined
-    # across rounds (C2 JIT keeps compiling through the first timed
-    # pass over 50 queries); measured same-day at sf0.1: band 12.62s
-    # (23.9%) at warmup=1 vs 8.56s (15.8%) at warmup=2, and the worst
-    # query's spread fell 1.96s -> 0.35s.  The remaining band is
-    # multi-tenant host variance (~0.2-0.6s on every 0.3-3s query) —
-    # per-query A/B claims go through tools/ab_bench.py, which carries
-    # its own spread and refuses to stamp verdicts inside it.
-    warmup_rounds = int(os.environ.get("SPARK_GRAFT_BENCH_WARMUP", "2"))
-    for _ in range(warmup_rounds):
-        for name in headline:
-            if name in errors:
-                continue
-            spark.catalog.clearCache()
-            try:
-                # cache_scope: operators' tracked persists (dedup pair
-                # artifacts, corpus LM counts) release when the
-                # execution finishes instead of accumulating stale
-                # references across 50 queries x N rounds (r10 ADVICE)
-                with cache_scope():
-                    queries[name](spark, sf_dir).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-            except Exception as exc:  # noqa: BLE001 - record, keep going
-                errors[name] = f"{type(exc).__name__}: {exc}"[:500]
-                print(f"# {name}: ERROR {errors[name]}", file=sys.stderr)
-    for round_idx in range(n_rounds):
-        for name in headline:
-            if name in errors:
-                continue
-            fn = queries[name]
-            # drop blocks persisted by prior queries so each measurement
-            # starts from storage, not from another query's cache
-            spark.catalog.clearCache()
-            t0 = time.time()
-            try:
-                with cache_scope():
-                    df = fn(spark, sf_dir)
-                    # Execute the full plan; count() alone can prune
-                    # work, so write to a no-op sink.
-                    df.write.format("noop").mode("overwrite").save()
-            except Exception as exc:  # noqa: BLE001 - record, keep going
-                errors[name] = f"{type(exc).__name__}: {exc}"[:500]
-                samples.pop(name, None)
-                print(f"# {name}: ERROR {errors[name]}", file=sys.stderr)
-                continue
-            samples.setdefault(name, []).append(round(time.time() - t0, 3))
-            if round_idx == n_rounds - 1:
-                print(
-                    f"# {name}: {min(samples[name]):.2f}s "
-                    f"(spread {max(samples[name]) - min(samples[name]):.2f}s)",
-                    file=sys.stderr,
-                )
+    build_s, exec_s, errors = run_timed(
+        spark,
+        {name: (lambda fn=fn: fn(spark, sf_dir)) for name, fn in queries.items()},
+        warmups=WARMUPS,
+        rounds=ROUNDS,
+    )
+    samples = total_s(build_s, exec_s)
+    for name, s in samples.items():
+        print(f"# {name}: {min(s):.2f}s (spread {max(s) - min(s):.2f}s)",
+              file=sys.stderr)
 
     timings = {n: min(s) for n, s in samples.items()}
     medians = {n: sorted(s)[len(s) // 2] for n, s in samples.items()}
@@ -221,16 +78,16 @@ def main() -> None:
         "queries": {n: round(t, 2) for n, t in timings.items()},
         # total drift below this is steady-state noise, not signal
         "noise_band_sec": round(sum(spreads.values()), 2),
-        "rounds": n_rounds,
+        "rounds": ROUNDS,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }
     if errors:
         out["errors"] = errors
     detail = {
         "protocol": (
-            f"{warmup_rounds} untimed warmup execution(s) per query, then "
-            f"{n_rounds} timed interleaved rounds (cache cleared before "
-            "every execution); headline = per-query min over timed "
+            f"{WARMUPS} untimed warmup execution(s) per query, then "
+            f"{ROUNDS} timed interleaved rounds, the order reversed every "
+            "round (cache cleared before every execution); headline = per-query min over timed "
             "samples; noise band = per-query spread of the drop-max "
             "trimmed timed samples, summed.  Cross-round per-query "
             "comparisons should read the MEDIANS, and no A/B claim is "
@@ -251,19 +108,10 @@ def main() -> None:
         "medians": medians,
         "spreads_steady_state": spreads,
         "samples": samples,
-        "rounds": n_rounds,
-        "warmup_rounds": warmup_rounds,
+        "rounds": ROUNDS,
+        "warmup_rounds": WARMUPS,
         "sf": out["sf"],
     }
-    # fold in the latest interleaved A/B receipt so it travels with the
-    # bench (tools/ab_bench.py writes it; absent file = no claim).
-    try:
-        with open(os.path.join(_REPO, "BENCH_AB.json")) as fh:
-            ab = json.load(fh)
-        mark_receipt_stale_if_surface_changed(ab, _REPO)
-        detail["ab"] = ab
-    except (OSError, ValueError):
-        pass
     try:
         with open(os.path.join(_REPO, "BENCH_detail.json"), "w") as fh:
             json.dump(detail, fh, indent=1, sort_keys=True)

@@ -113,6 +113,30 @@ def test_schema_inference_merge():
     assert {f.name for f in b.fields} == {"x", "y"}
 
 
+def test_empty_and_all_null_lists_take_their_type_from_evidence(spark, tmp_path):
+    from pyspark.sql import types as T
+
+    from topic_store_spark.filesystem import ParquetStorage
+
+    doubles = T.ArrayType(T.DoubleType())
+    ref = T.StructType([T.StructField("scan", doubles)])
+    # an empty or all-null list carries no element type: the store's
+    # reference decides, and a sibling document in the same batch widens it
+    assert infer_schema([{"scan": []}], reference=ref)["scan"].dataType == doubles
+    assert infer_schema([{"scan": [None]}], reference=ref)["scan"].dataType == doubles
+    assert infer_schema([{"scan": []}, {"scan": [1.0]}])["scan"].dataType == doubles
+    assert infer_schema([{"scan": [None]}, {"scan": [1.0]}])["scan"].dataType == doubles
+    # with no evidence at all the string placeholder stays
+    assert infer_schema([{"scan": []}])["scan"].dataType == T.ArrayType(T.StringType())
+
+    store = ParquetStorage(spark, str(tmp_path / "scans.parquet"))
+    store.insert_many([{"scan": [1.0, 2.0]}])
+    ids = store.insert_many([{"scan": []}, {"scan": [None]}])
+    assert store.to_df().schema["scan"].dataType == doubles
+    assert store.find_by_id(ids[0])["scan"] == []
+    assert store.find_by_id(ids[1])["scan"] == [None]
+
+
 def test_spark_roundtrip_documents(spark, tmp_path):
     from topic_store_spark.filesystem import ParquetStorage
 

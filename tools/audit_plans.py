@@ -1,8 +1,7 @@
 """Physical-plan audit: scale evidence for the headline queries.
 
-For every query in ``bench.HEADLINE`` (plus any extra names passed on the
-command line) this captures ``df.explain("formatted")`` output and checks
-the plan properties that matter at 100 TB / 1000 executors:
+For every query in ``queries()`` this captures ``df.explain("formatted")``
+output and checks the plan properties that matter at 100 TB / 1000 executors:
 
 - **pushed filters** — a filtered parquet scan must show ``PushedFilters``
   (predicate reaches the reader, partitions/row-groups are skipped);
@@ -286,28 +285,15 @@ def main() -> int:
     write_md = "--write-md" in sys.argv
     runtime_check = "--runtime-check" in sys.argv
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
-    extra = args[1:]
-
-    from pyspark.sql import SparkSession
 
     import __spark_entry__ as entry_mod
-    from bench import HEADLINE
+    from topic_store_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("audit_plans")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "8g")
-        .config("spark.sql.codegen.cache.maxEntries", "5000")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark(
+        app_name="audit_plans", master="local[8]", shuffle_partitions=8)
 
     queries = entry_mod.queries()
-    headline = HEADLINE if HEADLINE is not None else list(queries)
-    names = [n for n in headline if n in queries] + [
-        n for n in extra if n in queries and n not in headline]
+    names = list(queries)
 
     # The registered dedup_minhash_lsh materializes its pair artifact and
     # returns the read-back, so its registry plan is a bare parquet scan;

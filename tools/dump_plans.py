@@ -26,24 +26,12 @@ def main() -> None:
     sf_dir = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.01"
     names = sys.argv[4:]
 
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as entry_mod
     from tools.audit_plans import _plan_text
+    from topic_store_spark.operators.util import cache_scope
+    from topic_store_spark.session import get_spark
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("dump-plans")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-        .config("spark.driver.memory", "24g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="dump-plans")
     spark.sparkContext.setLogLevel("ERROR")
 
     out_dir = os.path.join(_REPO, "plans", tag)
@@ -52,7 +40,6 @@ def main() -> None:
     queries = entry_mod.queries()
     if not names:
         names = list(queries)
-    from topic_store_spark.operators.util import cache_scope
 
     for name in names:
         with cache_scope():

@@ -1,16 +1,19 @@
 """Per-query time decomposition: where do the bench seconds actually go?
 
-For each requested query (default: the 12 slowest from BENCH_r12), runs
-the same protocol as bench.py (2 untimed warmups, then N timed rounds,
-cache cleared per execution) but splits each timed execution into:
+For each requested query (default: the 23 dedup, ANN and corpus
+queries in ``DEFAULT``, which took 35.5 s of BENCH_r14's 49.6 s total),
+runs bench.py's protocol through ``tools/harness.run_timed``
+(2 untimed warmups, then N timed rounds, cache cleared per execution)
+and reports each timed execution split into:
 
 - ``build``    — the Python ``fn(spark, sf_dir)`` call: DataFrame
   construction, eager per-op analysis, and any bounded driver collects
   (codebooks, permutations, minhash artifact writes);
 - ``exec``     — the ``noop`` write;
-- and, for the FINAL round, the JVM QueryPlanningTracker phases of the
-  written plan (analysis / optimization / planning, ms) so driver-side
-  Catalyst cost is visible separately from task execution.
+- and, for the FINAL round's DataFrame, the JVM QueryPlanningTracker
+  phases (analysis / optimization / planning, ms; ``planning_phases``
+  plans it once more, outside the timed region) so driver-side Catalyst
+  cost is visible separately from task execution.
 
 Output: one JSON line per query to stdout.  This is a diagnostic tool —
 numbers guide optimization; claims still go through tools/ab_bench.py.
@@ -23,7 +26,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
@@ -43,65 +45,36 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     rounds = int(sys.argv[2]) if len(sys.argv) > 2 else 3
     names = sys.argv[3:] or DEFAULT
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
-    from pyspark.sql import SparkSession
 
     import __spark_entry__ as entry_mod
-    from topic_store_spark.operators.util import cache_scope
+    from tools.harness import planning_phases, run_timed
+    from topic_store_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("profile-queries")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "24g")
-        .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-        .config("spark.sql.codegen.cache.maxEntries", "5000")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="profile-queries")
     spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
 
     queries = entry_mod.queries()
     for name in names:
-        fn = queries[name]
-        # warmups (same as bench.py)
-        for _ in range(2):
-            spark.catalog.clearCache()
-            with cache_scope():
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        builds, execs = [], []
-        phases = {}
-        for r in range(rounds):
-            spark.catalog.clearCache()
-            with cache_scope():
-                t0 = time.time()
-                df = fn(spark, sf_dir)
-                t1 = time.time()
-                df.write.format("noop").mode("overwrite").save()
-                t2 = time.time()
-                builds.append(round(t1 - t0, 3))
-                execs.append(round(t2 - t1, 3))
-                if r == rounds - 1:
-                    try:
-                        tr = df._jdf.queryExecution().tracker()
-                        ph = tr.phases()
-                        it = ph.keysIterator()
-                        while it.hasNext():
-                            k = it.next()
-                            s = ph.apply(k)
-                            phases[k] = int(s.durationMs())
-                    except Exception as exc:  # noqa: BLE001
-                        phases = {"error": str(exc)[:120]}
+        built = []  # the DataFrame each execution wrote; the last is read
+
+        def build(fn=queries[name]):
+            built.append(fn(spark, sf_dir))
+            return built[-1]
+
+        build_s, exec_s, errors = run_timed(
+            spark, {name: build}, warmups=2, rounds=rounds)
+        if errors:
+            print(json.dumps({"query": name, "error": errors[name]}),
+                  flush=True)
+            continue
+        try:
+            phases = planning_phases(built[-1])
+        except Exception as exc:  # noqa: BLE001 - phases are advisory
+            phases = {"error": str(exc)[:120]}
         print(json.dumps({
             "query": name,
-            "build_min": min(builds), "build_all": builds,
-            "exec_min": min(execs), "exec_all": execs,
+            "build_min": min(build_s[name]), "build_all": build_s[name],
+            "exec_min": min(exec_s[name]), "exec_all": exec_s[name],
             "tracker_phases_ms_last": phases,
         }), flush=True)
 

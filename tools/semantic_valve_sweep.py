@@ -5,8 +5,8 @@ centroids the uncapped within-cluster pair space grows ~quadratically
 with the corpus.  The ``max_cluster_size`` valve sub-splits oversized
 clusters on deterministic hyperplane sign bits so per-bucket pair space
 stays bounded.  This tool measures BOTH configurations on the SAME
-session at each scale factor, interleaved (A/B/A/B...), with the same
-noop-write sink bench.py times, and writes
+session at each scale factor, interleaved (A B B A ...), with the same
+noop-write sink bench.py times (``tools/harness.run_timed``), and writes
 ``BENCH_valve_semantic.json`` stamped with the git rev — the receipt
 for "the valve-on shape grows sub-quadratically".
 
@@ -17,7 +17,7 @@ Usage:
 
 Protocol notes: run on a QUIET box (no concurrent Spark jobs); one
 warmup pair per SF then ``ROUNDS`` timed pairs; medians reported;
-operator pair caches released between runs so no run reuses another's
+operator pair caches are scoped to each run so no run reuses another's
 persisted assignment.
 """
 from __future__ import annotations
@@ -46,38 +46,34 @@ def _corpus(spark, sf_dir):
     return emb.unionByName(clone), emb.filter(F.col("vec_id") < 8)
 
 
-def _run(spark, sf_dir, cap):
-    from topic_store_spark.operators.dedup import (
-        release_pair_caches,
-        semantic_cluster_dedup,
-    )
+def _build(spark, sf_dir, cap):
+    from topic_store_spark.operators.dedup import semantic_cluster_dedup
 
     both, cen = _corpus(spark, sf_dir)
-    t0 = time.time()
-    semantic_cluster_dedup(
-        both, centroids=cen, max_cluster_size=cap
-    ).write.format("noop").mode("overwrite").save()
-    dt = time.time() - t0
-    release_pair_caches()
-    spark.catalog.clearCache()
-    return dt
+    return semantic_cluster_dedup(both, centroids=cen, max_cluster_size=cap)
 
 
 def main() -> None:
     sf_dirs = sys.argv[1:] or ["/root/testdata/sf0.1", "/tmp/tss_scaled/sf1"]
+    from tools.harness import run_timed, total_s
     from topic_store_spark.session import get_spark
 
     spark = get_spark(app_name="semantic-valve-sweep")
     out = {"cap": CAP, "rounds": ROUNDS, "sweep": {}}
     for sf_dir in sf_dirs:
         label = os.path.basename(sf_dir.rstrip("/"))
-        # warmup pair (JVM/codegen/scan cache)
-        _run(spark, sf_dir, None)
-        _run(spark, sf_dir, CAP)
-        times: dict[str, list[float]] = {"uncapped": [], "capped": []}
-        for _ in range(ROUNDS):
-            times["uncapped"].append(_run(spark, sf_dir, None))
-            times["capped"].append(_run(spark, sf_dir, CAP))
+        build_s, exec_s, errors = run_timed(
+            spark,
+            {
+                "uncapped": lambda: _build(spark, sf_dir, None),
+                "capped": lambda: _build(spark, sf_dir, CAP),
+            },
+            warmups=1,
+            rounds=ROUNDS,
+        )
+        if errors:
+            raise RuntimeError(f"{label}: {errors}")
+        times = total_s(build_s, exec_s)
         out["sweep"][label] = {
             v: {
                 "median": round(statistics.median(ts), 2),

@@ -49,13 +49,14 @@ import os
 import pathlib
 import sys
 import tempfile
-import time
 
 _REPO = str(pathlib.Path(__file__).resolve().parent.parent)
 sys.path.insert(0, _REPO)
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
+
+from tools.harness import run_timed, total_s
 
 
 def _fixture(spark, path: str, n_rows: int, skewed: bool) -> None:
@@ -79,14 +80,13 @@ def _fixture(spark, path: str, n_rows: int, skewed: bool) -> None:
     )
 
 
-def _time(spark, make_df, rounds: int) -> float:
-    best = float("inf")
-    for _ in range(rounds):
-        spark.catalog.clearCache()
-        t0 = time.monotonic()
-        make_df().write.format("noop").mode("overwrite").save()
-        best = min(best, time.monotonic() - t0)
-    return round(best, 3)
+def _time(spark, builds: dict, rounds: int) -> dict[str, float]:
+    """Best build-plus-write seconds per plan over ``rounds`` interleaved
+    rounds."""
+    build_s, exec_s, errors = run_timed(spark, builds, warmups=0, rounds=rounds)
+    if errors:
+        raise RuntimeError(f"skew plans failed: {errors}")
+    return {n: min(s) for n, s in total_s(build_s, exec_s).items()}
 
 
 def main() -> None:
@@ -161,15 +161,13 @@ def main() -> None:
         }
 
     # warm the JVM so the first measured plan doesn't eat class loading
-    spark.read.parquet(fixtures["uniform"]).groupBy("domain").count().write.format(
-        "noop"
-    ).mode("overwrite").save()
+    spark.read.parquet(fixtures["uniform"]).groupBy("domain").count().collect()
 
     results: dict[str, dict[str, float]] = {}
     for kind, path in fixtures.items():
         df = spark.read.parquet(path)
-        for name, mk in plans(df).items():
-            results.setdefault(name, {})[kind] = _time(spark, mk, rounds)
+        for name, sec in _time(spark, plans(df), rounds).items():
+            results.setdefault(name, {})[kind] = sec
         # dim side: every domain value with a payload column, written to
         # parquet so the join reads a real scan (not an in-memory range)
         dim_path = os.path.join(tmp, f"dim_{kind}")
@@ -182,7 +180,8 @@ def main() -> None:
         for name, (conf_pairs, mk) in join_plans(df, dim).items():
             restore = _conf(conf_pairs)
             try:
-                results.setdefault(name, {})[kind] = _time(spark, mk, rounds)
+                results.setdefault(name, {})[kind] = _time(
+                    spark, {name: mk}, rounds)[name]
             finally:
                 restore()
 
@@ -204,8 +203,8 @@ def main() -> None:
         f"`python tools/skew_bench.py {n_rows} {rounds}` — synthetic",
         f"{n_rows:,}-row fixtures (32 parquet files, local[{cpus}]),",
         "uniform = 1024 even domains, skewed = domain `hot` holds 50% of",
-        "all rows.  Timings are min-of-%d with the cache cleared per run."
-        % rounds,
+        "all rows.  Timings are min-of-%d build+write with the cache cleared per"
+        " run; the five plans without a conf change run interleaved." % rounds,
         "",
         "| plan | uniform (s) | skewed (s) | skew/uniform |",
         "|---|---|---|---|",

@@ -301,7 +301,7 @@ def _infer_type(value: Any) -> T.DataType:
         elem: T.DataType = T.NullType()
         for item in value:
             elem = merge_types(elem, _infer_type(item))
-        return T.ArrayType(elem if not isinstance(elem, T.NullType) else T.StringType())
+        return T.ArrayType(elem)
     if isinstance(value, dict):
         return T.StructType(
             [T.StructField(str(k), _infer_type(v), True) for k, v in value.items()]
