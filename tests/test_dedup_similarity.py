@@ -1344,3 +1344,107 @@ def test_opq_fused_codebooks_equal_composed(spark, embeddings):
 
     assert perm_f == perm_c
     assert books_f == books_c
+
+
+# --- exact ties: every operator breaks them on the lower id -------------
+#
+# Centroids 7 and 3 sit at the same norm on either side of the x axis, so
+# the corpus vectors 9 = (1,0,0,0) and 4 = (0,0,1,0) have EQUAL affinity
+# to both (exact integer dots 600000/600000 and 0/0), and so does the
+# query 100 = (1,0,0,0).  The centroids differ in their vectors, so the
+# residual shows which one was picked.  Against query 100, neighbours 2
+# and 5 have the same exact dot (600000), below 9's (1000000).
+
+
+def _tie_frames(spark):
+    schema = "vec_id long, embedding array<float>"
+    cen = spark.createDataFrame(
+        [(7, [0.6, -0.8, 0.0, 0.0]), (3, [0.6, 0.8, 0.0, 0.0])], schema
+    )
+    corpus = spark.createDataFrame(
+        [
+            (5, [0.6, -0.8, 0.0, 0.0]),
+            (2, [0.6, 0.8, 0.0, 0.0]),
+            (9, [1.0, 0.0, 0.0, 0.0]),
+            (4, [0.0, 0.0, 1.0, 0.0]),
+        ],
+        schema,
+    )
+    queries = spark.createDataFrame([(100, [1.0, 0.0, 0.0, 0.0])], schema)
+    return cen, corpus, queries
+
+
+def test_tied_centroid_affinity_picks_lower_centroid_id(spark):
+    from topic_store_spark.operators.dedup import _semantic_assignment
+    from topic_store_spark.operators.similarity import (
+        assign_to_lists,
+        ivf_pq_ann_neighbors,
+        ivf_residual_vectors,
+        pq_codebooks,
+    )
+    from topic_store_spark.operators.util import cache_scope
+
+    cen, corpus, queries = _tie_frames(spark)
+    lists = {
+        r["c_id"]: r["list_id"]
+        for r in assign_to_lists(corpus, cen).collect()
+    }
+    assert lists == {5: 7, 2: 3, 9: 3, 4: 3}
+
+    resid = {
+        r["vec_id"]: [round(x, 6) for x in r["embedding"]]
+        for r in ivf_residual_vectors(corpus, cen).collect()
+    }
+    assert resid[9] == [0.4, -0.8, 0.0, 0.0]  # (1,0,0,0) - centroid 3
+    assert resid[4] == [-0.6, -0.8, 1.0, 0.0]
+
+    # nprobe=1: the tied query probes list 3 alone, where the tied corpus
+    # vectors 9 and 4 must have been encoded
+    books = pq_codebooks(corpus, m=2)
+    got = ivf_pq_ann_neighbors(corpus, queries, cen, books, k=5, nprobe=1)
+    assert {r["neighbor_id"] for r in got.collect()} == {2, 4, 9}
+
+    def clusters(n_probe, probe_eps):
+        with cache_scope():
+            assigned, _ = _semantic_assignment(
+                corpus, cen, "embedding", "vec_id", n_probe, probe_eps, None
+            )
+            rows = assigned.collect()
+        out: dict[int, set[int]] = {}
+        for r in rows:
+            out.setdefault(r["c_id"], set()).add(r["cluster_id"])
+        return out
+
+    # n_probe=1: the map-side literal argmax
+    assert clusters(1, 0.05) == {5: {7}, 2: {3}, 9: {3}, 4: {3}}
+    # n_probe=2 with a negative probe_eps keeps probe 1 alone ...
+    assert clusters(2, -1.0) == {5: {7}, 2: {3}, 9: {3}, 4: {3}}
+    # ... and with the default the exact ties also join their runner-up
+    assert clusters(2, 0.05) == {5: {7}, 2: {3}, 9: {3, 7}, 4: {3, 7}}
+
+
+def test_tied_neighbour_dot_ranks_lower_neighbour_id_first(spark):
+    from topic_store_spark.operators.similarity import (
+        assign_to_lists,
+        search_lists,
+        topk_neighbors_partial,
+    )
+
+    cen, corpus, queries = _tie_frames(spark)
+
+    def ranked(df):
+        return [
+            r["neighbor_id"]
+            for r in df.orderBy("rank").collect()
+        ]
+
+    assert ranked(topk_neighbors(corpus, queries, k=3)) == [9, 2, 5]
+    assert ranked(topk_neighbors_partial(corpus, queries, k=3)) == [9, 2, 5]
+    assigned = assign_to_lists(corpus, cen)
+    assert ranked(search_lists(assigned, queries, cen, k=3, nprobe=2)) == [9, 2, 5]
+    # nprobe=1 probes the tied query's lower centroid, list 3
+    assert ranked(search_lists(assigned, queries, cen, k=5, nprobe=1)) == [9, 2, 4]
+    # one plane: 9, 2 and 5 share the query's bucket, 4 does not
+    assert ranked(
+        lsh_ann_neighbors(corpus, queries, k=3, planes=1, dim=4)
+    ) == [9, 2, 5]

@@ -381,9 +381,10 @@ def test_to_df_after_own_insert_launches_no_job(spark, tmp_path):
 def test_schema_cache_matches_merge_on_heterogeneous_store(spark, tmp_path):
     """After every append to a store whose early files have fewer and
     nested-narrower columns, the schema to_df() reads with is the one a
-    fresh mergeSchema read gives: names, order and types.  An append
-    written with the store's merged schema extends the cache (no job);
-    any other append merges footers again."""
+    fresh mergeSchema read gives: names, order and types.  The first
+    insert into the empty store seeds the cache with its own schema,
+    and an append written with the store's merged schema extends it (no
+    job); any other append merges footers again."""
     path = str(tmp_path / "hetero.parquet")
     store = ParquetStorage(spark, path)
     full = {"n": 3, "robot": {"x": 2.0, "tag": "a"}, "scan": [1.0], "z": "w"}
@@ -411,7 +412,8 @@ def test_schema_cache_matches_merge_on_heterogeneous_store(spark, tmp_path):
         got = store.to_df().schema
         assert got == _fresh_schema(spark, path)
         assert got == ParquetStorage(spark, path).to_df().schema
-    assert merged[:3] == [True, True, True] and merged[3] is False and merged[5] is False
+    # the first insert seeds the cache: its file is the whole store
+    assert merged[:3] == [False, True, True] and merged[3] is False and merged[5] is False
     assert merged[4] is True  # a narrower file
     assert sorted(r["n"] for r in store.to_df().collect()) == list(range(1, 8))
 

@@ -1,8 +1,10 @@
 """Dump ``df.explain("formatted")`` for declared queries to files.
 
-Round-13 deliverable helper: writes ``plans/<tag>/<query>_<suffix>.txt``
-for every requested query (default: all of ``queries()``), so the
-before/after plan evidence for each optimization is committed verbatim.
+Writes ``plans/<tag>/<query>_<suffix>.txt`` for every requested query
+(default: all of ``queries()``).  Every id that changes from one build
+of the same plan to the next is masked (:func:`normalize_plan`), so two
+dumps of an unchanged plan are byte-identical and ``diff -r`` of two
+tags shows only real plan changes.
 
 Usage:
     python tools/dump_plans.py <tag> <suffix> [sf_dir] [query ...]
@@ -14,10 +16,26 @@ e.g.
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
+
+#: per-build counters in plan text: expression ids (``#123``/``#123L``),
+#: fresh lambda-variable suffixes (``x_45``) and exchange ``plan_id=6``
+_VOLATILE = (
+    (re.compile(r"#\d+L?"), "#"),
+    (re.compile(r"_\d+\b"), "_"),
+    (re.compile(r"plan_id=\d+"), "plan_id="),
+)
+
+
+def normalize_plan(text: str) -> str:
+    """``text`` with the per-build ids of :data:`_VOLATILE` masked."""
+    for pattern, mask in _VOLATILE:
+        text = pattern.sub(mask, text)
+    return text
 
 
 def main() -> None:
@@ -45,7 +63,7 @@ def main() -> None:
         with cache_scope():
             try:
                 df = queries[name](spark, sf_dir)
-                text = _plan_text(df)
+                text = normalize_plan(_plan_text(df))
             except Exception as exc:  # noqa: BLE001 - record the failure
                 text = f"ERROR building plan: {type(exc).__name__}: {exc}\n"
             path = os.path.join(out_dir, f"{name}_{suffix}.txt")

@@ -11,7 +11,9 @@ parallelizes like real data):
 - uniform: 1024 domains, even split
 - skewed:  domain "hot" = 50% of all rows, the rest uniform over 1023
 
-Plans measured (min over rounds, cache cleared per run):
+Plans measured (min over rounds, cache cleared per run; each plan's
+uniform and skewed runs interleave in one ``run_timed`` call, in an
+order that alternates every round, after one untimed warm-up round):
 
 - agg_direct:   groupBy(domain).agg(count, sum) — map-side partial
                 aggregation absorbs the hot key before the shuffle
@@ -80,13 +82,16 @@ def _fixture(spark, path: str, n_rows: int, skewed: bool) -> None:
     )
 
 
-def _time(spark, builds: dict, rounds: int) -> dict[str, float]:
-    """Best build-plus-write seconds per plan over ``rounds`` interleaved
-    rounds."""
-    build_s, exec_s, errors = run_timed(spark, builds, warmups=0, rounds=rounds)
+def _time(spark, builds: dict, rounds: int, results: dict) -> None:
+    """Time ``builds`` (named ``<plan>@<fixture>``) over one warm-up and
+    ``rounds`` interleaved rounds; store each best build-plus-write
+    seconds as ``results[plan][fixture]``."""
+    build_s, exec_s, errors = run_timed(spark, builds, warmups=1, rounds=rounds)
     if errors:
         raise RuntimeError(f"skew plans failed: {errors}")
-    return {n: min(s) for n, s in total_s(build_s, exec_s).items()}
+    for name, samples in total_s(build_s, exec_s).items():
+        plan, kind = name.split("@")
+        results.setdefault(plan, {})[kind] = min(samples)
 
 
 def main() -> None:
@@ -160,14 +165,9 @@ def main() -> None:
             ),
         }
 
-    # warm the JVM so the first measured plan doesn't eat class loading
-    spark.read.parquet(fixtures["uniform"]).groupBy("domain").count().collect()
-
-    results: dict[str, dict[str, float]] = {}
-    for kind, path in fixtures.items():
-        df = spark.read.parquet(path)
-        for name, sec in _time(spark, plans(df), rounds).items():
-            results.setdefault(name, {})[kind] = sec
+    dfs = {kind: spark.read.parquet(path) for kind, path in fixtures.items()}
+    joins = {}
+    for kind, df in dfs.items():
         # dim side: every domain value with a payload column, written to
         # parquet so the join reads a real scan (not an in-memory range)
         dim_path = os.path.join(tmp, f"dim_{kind}")
@@ -176,14 +176,30 @@ def main() -> None:
             .withColumn("dim_payload", F.md5(F.col("domain")))
             .write.mode("overwrite").parquet(dim_path)
         )
-        dim = spark.read.parquet(dim_path)
-        for name, (conf_pairs, mk) in join_plans(df, dim).items():
-            restore = _conf(conf_pairs)
-            try:
-                results.setdefault(name, {})[kind] = _time(
-                    spark, {name: mk}, rounds)[name]
-            finally:
-                restore()
+        joins[kind] = join_plans(df, spark.read.parquet(dim_path))
+
+    results: dict[str, dict[str, float]] = {}
+    _time(
+        spark,
+        {
+            f"{name}@{kind}": mk
+            for kind, df in dfs.items()
+            for name, mk in plans(df).items()
+        },
+        rounds,
+        results,
+    )
+    for name, (conf_pairs, _) in joins["uniform"].items():
+        restore = _conf(conf_pairs)
+        try:
+            _time(
+                spark,
+                {f"{name}@{kind}": joins[kind][name][1] for kind in dfs},
+                rounds,
+                results,
+            )
+        finally:
+            restore()
 
     ratios = {
         name: round(r["skewed"] / r["uniform"], 2)
@@ -204,7 +220,9 @@ def main() -> None:
         f"{n_rows:,}-row fixtures (32 parquet files, local[{cpus}]),",
         "uniform = 1024 even domains, skewed = domain `hot` holds 50% of",
         "all rows.  Timings are min-of-%d build+write with the cache cleared per"
-        " run; the five plans without a conf change run interleaved." % rounds,
+        " run, after one untimed warm-up round.  Each plan's uniform and skewed"
+        " runs interleave, in an order that alternates every round; the five"
+        " plans without a conf change all interleave together." % rounds,
         "",
         "| plan | uniform (s) | skewed (s) | skew/uniform |",
         "|---|---|---|---|",

@@ -429,6 +429,12 @@ class ParquetStorage(Storage):
         else:
             _check_append(existing, schema)
             _append_table(self.spark, self.path, table, schema)
+            if existing is None:
+                # this instance wrote the store's only part file, so its
+                # schema is the merged one: no mergeSchema job to learn it
+                files = _part_files(self.path)
+                if len(files) == 1:
+                    self._schema_cache = (_file_key(files), _as_nullable(schema))
         return [s.id for s in stores]
 
     def write_df(self, df: DataFrame) -> None:

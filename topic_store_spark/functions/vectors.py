@@ -2,13 +2,17 @@
 
 Two tiers:
 
-- double-precision expressions (``dot_product``/``cosine_similarity``)
-  for the Python API — built-in higher-order functions, JVM-side;
-- an exact integer-quantized tier (``quantize_vector`` + integer dot)
-  used by the oracle-checked operators: components scale to
-  ``round(x * 1000)`` longs, so dot products and norms are exact integer
-  arithmetic and threshold tests can be cross-multiplied — bit-identical
-  in any engine, no floating-point summation-order hazards.
+- double-precision Column expressions (``dot_product``/
+  ``cosine_similarity``) for the Python API — built-in higher-order
+  functions, JVM-side;
+- an exact integer-quantized tier used by the oracle-checked operators:
+  components scale to ``round(x * 1000)`` longs (``quantize_vector``,
+  or ``quantize_sql`` as a Spark-SQL string), so dot products and norms
+  are exact integer arithmetic (``int_dot_sql``) and threshold tests
+  can be cross-multiplied — bit-identical in any engine, no
+  floating-point summation-order hazards.  The operators build these
+  as SQL strings (see below); ``operators/similarity.py`` composes them
+  into its quantized view, affinity and top-k helpers.
 """
 
 from __future__ import annotations
@@ -42,23 +46,12 @@ def quantize_vector(a: Column, scale: int = QUANT_SCALE) -> Column:
     )
 
 
-def int_dot(a: Column, b: Column) -> Column:
-    """Exact integer dot product of quantized vectors (long)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0).cast("long"), lambda acc, v: acc + v
-    )
-
-
-def int_self_dot(a: Column) -> Column:
-    return int_dot(a, a)
-
-
 # ---------------------------------------------------------------------------
 # SQL-string forms (r13 optimization round).
 #
-# These emit the SAME higher-order-function expressions as the Column
-# builders above — `aggregate(zip_with(...))` folds with identical
-# operand order — but as Spark-SQL STRINGS: one ``F.expr`` is one py4j
+# These emit the higher-order-function expressions of the integer tier
+# — `aggregate(zip_with(...))` folds in the oracle's operand order —
+# as Spark-SQL STRINGS: one ``F.expr`` is one py4j
 # round trip plus one JVM-side parse, versus O(dim-independent but
 # still dozens of) Python Column calls per composite expression.  The
 # r13 build/exec decomposition (`tools/profile_queries.py`) showed
@@ -81,8 +74,9 @@ def int_self_dot(a: Column) -> Column:
 
 
 def int_dot_sql(a: str, b: str) -> str:
-    """:func:`int_dot` over two column names, as one Spark-SQL string
-    (the identical ``aggregate(zip_with(...))`` fold)."""
+    """Exact integer dot product of two quantized-vector column names
+    (a bigint ``aggregate(zip_with(...))`` fold), as one Spark-SQL
+    string."""
     return (
         f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
         "CAST(0 AS BIGINT), (acc, v) -> acc + v)"

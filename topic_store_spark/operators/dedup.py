@@ -7,7 +7,10 @@ Five strategies over a ``documents``-shaped table (id + text) or an
 - ``ngram_jaccard_pairs``     exact n-gram Jaccard via shingle self-join
 - ``minhash_lsh_pairs``       MinHash signatures -> LSH bands -> verify
 - ``simhash_pairs``           SimHash bands -> Hamming verify
-- ``embedding_dup_pairs``     quantized-cosine near-dup pairs
+- ``embedding_dup_pairs``     quantized-cosine near-dup pairs (brute
+  force; ``embedding_dup_pairs_lsh`` and ``semantic_cluster_dedup``
+  bound the candidates by hyperplane bucket or centroid cluster, and
+  all three verify with one exact check, ``_cosine_pairs``)
 
 Scale design: every strategy is a shuffle-on-key plan with no driver
 loops.  Three deliberate physical-plan choices (measured ~100x on the
@@ -53,7 +56,16 @@ from topic_store_spark.functions.text import (
     shingles_from_tokens,
     tokens,
 )
-from topic_store_spark.functions.vectors import int_self_dot, quantize_vector
+from topic_store_spark.operators.similarity import (
+    _cen_rank,
+    _cosine_q,
+    _int_dot,
+    _q,
+    _quantized,
+    _with_affinity,
+    argmax_best_sql,
+    lsh_bucket_key_sql,
+)
 from topic_store_spark.operators.util import (
     cache_scope as pair_cache_scope,
     ensure_parallelism,
@@ -789,6 +801,62 @@ def simhash_pairs(
     return inter.unionByName(intra)
 
 
+def _cosine_pairs(
+    q: DataFrame,
+    keys: list[str],
+    threshold_num: int,
+    threshold_den: int,
+    lead: tuple[str, ...] = (),
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """``(*lead, a_id, b_id, cosine_q, a<carry>..., b<carry>...)``: the
+    pairs ``a_id < b_id`` of a quantized relation ``q`` (``c_id, c_qv,
+    c_n``) that agree on ``keys`` (every pair when ``keys`` is empty)
+    and whose quantized cosine is at least ``threshold_num /
+    threshold_den``.
+
+    The check is exact: ``dot > 0`` and the cross-multiplied ``den^2 *
+    dot^2 >= num^2 * a_n * b_n`` in DECIMAL(38,0) — no FP
+    summation-order hazard, oracle-identical.  The dot runs once per
+    CANDIDATE PAIR — the hottest expression of the embedding family — so
+    it is staged through ``project_once``: the threshold filter cannot
+    inline it into the join condition (an inlined form evaluated the
+    fold 4x per pair).  ``carry`` columns ride both sides as
+    ``a<col>``/``b<col>``."""
+
+    def side(p: str) -> DataFrame:
+        return q.select(
+            F.col("c_id").alias(f"{p}_id"), F.col("c_qv").alias(f"{p}_qv"),
+            F.col("c_n").alias(f"{p}_n"), *keys,
+            *[F.col(k).alias(f"{p}{k}") for k in carry],
+        )
+
+    left, right = side("a"), side("b")
+    joined = left.join(right, keys) if keys else left.crossJoin(right)
+    dec = "decimal(38,0)"
+    return (
+        project_once(
+            joined.filter(F.col("a_id") < F.col("b_id")),
+            dot=_int_dot("a_qv", "b_qv"),
+        )
+        .filter(
+            (F.col("dot") > 0)
+            & (
+                F.col("dot").cast(dec) * F.col("dot").cast(dec) * (threshold_den**2)
+                >= F.col("a_n").cast(dec) * F.col("b_n").cast(dec) * (threshold_num**2)
+            )
+        )
+        .select(
+            *lead,
+            "a_id",
+            "b_id",
+            _cosine_q("dot", "a_n", "b_n"),
+            *[F.col(f"a{k}") for k in carry],
+            *[F.col(f"b{k}") for k in carry],
+        )
+    )
+
+
 def embedding_dup_pairs_lsh(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -808,53 +876,13 @@ def embedding_dup_pairs_lsh(
     near-identical vectors share; exact recall needs multiple tables
     (call with different plane seeds and union).  Everything is
     deterministic md5-derived, so the SQL oracle reproduces the exact
-    pair set."""
-    from topic_store_spark.functions.vectors import (
-        int_dot_sql,
-        int_self_dot_sql,
-        quantize_sql,
+    pair set.  Each vector hashes to exactly one bucket, so every (a,b)
+    pair appears at most once — no dedup shuffle needed."""
+    q = _quantized(
+        ensure_parallelism(df), id_col, vec_col, "c",
+        bucket=F.expr(lsh_bucket_key_sql(_q(vec_col), planes, dim)),
     )
-    from topic_store_spark.operators.similarity import lsh_bucket_key_sql
-
-    # single-SQL-string builds of quantize / self-dot / sign pattern
-    # (the identical HOF folds — see functions/vectors.py); qv staged
-    # once instead of three quantize evaluations per row
-    q = ensure_parallelism(df).select(
-        F.col(id_col).alias("vid"),
-        F.expr(quantize_sql(f"`{vec_col}`")).alias("qv"),
-        F.expr(lsh_bucket_key_sql(f"`{vec_col}`", planes, dim)).alias("bucket"),
-    ).withColumn("nrm", F.expr(int_self_dot_sql("`qv`")))
-    dot = F.expr(int_dot_sql("`a_qv`", "`b_qv`"))
-    left = q.select(
-        F.col("vid").alias("a_id"), F.col("qv").alias("a_qv"),
-        F.col("nrm").alias("a_n"), "bucket",
-    )
-    right = q.select(
-        F.col("vid").alias("b_id"), F.col("qv").alias("b_qv"),
-        F.col("nrm").alias("b_n"), "bucket",
-    )
-    dec = "decimal(38,0)"
-    joined = left.join(right, "bucket").filter(F.col("a_id") < F.col("b_id"))
-    return (
-        project_once(joined, dot=dot)
-        .filter(
-            (F.col("dot") > 0)
-            & (
-                F.col("dot").cast(dec) * F.col("dot").cast(dec) * (threshold_den**2)
-                >= F.col("a_n").cast(dec) * F.col("b_n").cast(dec) * (threshold_num**2)
-            )
-        )
-        .select(
-            "a_id",
-            "b_id",
-            (
-                F.col("dot")
-                / F.sqrt((F.col("a_n") * F.col("b_n")).cast("double"))
-            ).alias("cosine_q"),
-        )
-        # each vector hashes to exactly one bucket, so every (a,b) pair
-        # appears at most once — no dedup shuffle needed
-    )
+    return _cosine_pairs(q, ["bucket"], threshold_num, threshold_den)
 
 
 #: ``embedding_dup_pairs`` refuses inputs past this size — the crossJoin
@@ -872,9 +900,7 @@ def embedding_dup_pairs(
 ) -> DataFrame:
     """Near-duplicate pairs by quantized cosine >= num/den.
 
-    Quantized components make dot/norms exact longs; the threshold test is
-    the cross-multiplied ``den^2 * dot^2 >= num^2 * n_a * n_b`` in
-    DECIMAL(38,0) — no FP summation-order hazard, oracle-identical.
+    The exact check of :func:`_cosine_pairs` over every pair.
     Brute-force O(n^2) pair space: correct VERIFICATION BASELINE only —
     guarded by ``max_rows`` (default 50k vectors; pass ``None`` to bypass
     deliberately).  The scale path is ``embedding_dup_pairs_lsh`` /
@@ -889,44 +915,8 @@ def embedding_dup_pairs(
                 f"embedding_dup_pairs_lsh (bucketed scale path) or pass "
                 f"max_rows=None to force."
             )
-    q = ensure_parallelism(df).select(
-        F.col(id_col).alias("vid"),
-        quantize_vector(F.col(vec_col)).alias("qv"),
-    ).withColumn("nrm", int_self_dot(F.col("qv")))
-    left = q.select(
-        F.col("vid").alias("a_id"), F.col("qv").alias("a_qv"), F.col("nrm").alias("a_n")
-    )
-    right = q.select(
-        F.col("vid").alias("b_id"), F.col("qv").alias("b_qv"), F.col("nrm").alias("b_n")
-    )
-    dot = F.aggregate(
-        F.zip_with(F.col("a_qv"), F.col("b_qv"), lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    dec = "decimal(38,0)"
-    pairs = (
-        project_once(
-            left.crossJoin(right).filter(F.col("a_id") < F.col("b_id")),
-            dot=dot,
-        )
-        .filter(
-            (F.col("dot") > 0)
-            & (
-                F.col("dot").cast(dec) * F.col("dot").cast(dec) * (threshold_den**2)
-                >= F.col("a_n").cast(dec) * F.col("b_n").cast(dec) * (threshold_num**2)
-            )
-        )
-        .select(
-            "a_id",
-            "b_id",
-            (
-                F.col("dot")
-                / F.sqrt((F.col("a_n") * F.col("b_n")).cast("double"))
-            ).alias("cosine_q"),
-        )
-    )
-    return pairs
+    q = _quantized(ensure_parallelism(df), id_col, vec_col, "c")
+    return _cosine_pairs(q, [], threshold_num, threshold_den)
 
 
 def connected_components(
@@ -1138,8 +1128,6 @@ def _semantic_assignment(
     key list.  Factored out of :func:`semantic_cluster_dedup` (r13) so
     :func:`semantic_bucket_audit` exposes the exact same sub-bucket
     assignment the pair join uses."""
-    from topic_store_spark.operators.similarity import _int_dot, _quantized
-
     cen = _quantized(centroids, id_col, vec_col, "cen")
     c = _quantized(ensure_parallelism(df), id_col, vec_col, "c")
 
@@ -1155,8 +1143,6 @@ def _semantic_assignment(
         # SQRT(CAST(n AS DOUBLE)), struct-ordered (aff, -cen_id)) —
         # checked against a brute-force reference in
         # tests/test_semantic_fuzz.py and by the oracle.
-        from topic_store_spark.operators.similarity import argmax_best_sql
-
         ctype = cen.schema["cen_id"].dataType
         cen_rows = cen.collect()
         if not cen_rows:
@@ -1179,27 +1165,18 @@ def _semantic_assignment(
         # multi-probe: rank the (small, constant) centroid list per
         # vector and keep probe 1 unconditionally plus probes 2..n_probe
         # whose affinity is within probe_eps (relative) of the best
-        aff = _int_dot("c_qv", "cen_qv") / F.sqrt(
-            F.col("cen_n").cast("double")
-        )
-        scored = c.crossJoin(F.broadcast(cen)).withColumn("aff", aff)
         probes = F.slice(
             F.sort_array(
-                F.collect_list(
-                    F.struct(
-                        F.col("aff"),
-                        (-F.col("cen_id")).alias("neg_cen"),
-                        F.col("cen_id"),
-                        F.col("c_qv"),
-                        F.col("c_n"),
-                    )
-                ),
-                asc=False,
+                F.collect_list(_cen_rank("cen_id", "c_qv", "c_n")), asc=False
             ),
             1,
             n_probe,
         )
-        grouped = scored.groupBy("c_id").agg(probes.alias("probes"))
+        grouped = (
+            _with_affinity(c, cen, "c_qv")
+            .groupBy("c_id")
+            .agg(probes.alias("probes"))
+        )
         best_aff = F.col("probes")[0]["aff"]
         near_tie = (best_aff - F.col("p.aff")) <= probe_eps * F.greatest(
             F.abs(best_aff), F.lit(1.0)
@@ -1229,8 +1206,6 @@ def _semantic_assignment(
         # see docstring) — same vector, same bucket on every
         # run/engine, so capped runs are reproducible.  16 planes cap
         # the split at 65536 buckets per cluster.
-        from topic_store_spark.operators.similarity import lsh_bucket_key
-
         # r12 ADVICE: an empty centroid relation means an empty
         # assignment — skip the sub-split (the dim probe would be
         # first() -> None) so the capped path degrades to the same
@@ -1298,9 +1273,8 @@ def _semantic_assignment(
                         "_csize", F.element_at(csize_map, F.col("cluster_id"))
                     )
                     .withColumn(
-                        # string-form column ref -> the fold-form SQL
-                        # sign-pattern
-                        "_bits", lsh_bucket_key("c_qv", max_bits, vdim)
+                        "_bits",
+                        F.expr(lsh_bucket_key_sql(_q("c_qv"), max_bits, vdim)),
                     )
                     .withColumn("_sub", F.substring("_bits", F.lit(1), b_bits))
                     .drop("_bits", "_csize")
@@ -1423,45 +1397,9 @@ def _pairs_within(
     Only meaningful for single-assignment relations (n_probe == 1)."""
     if carry and n_probe > 1:
         raise ValueError("_pairs_within: carry requires n_probe == 1")
-    carry = carry or []
-    left = assigned.select(
-        F.col("c_id").alias("a_id"), F.col("c_qv").alias("a_qv"),
-        F.col("c_n").alias("a_n"), *join_keys,
-        *[F.col(k).alias(f"a{k}") for k in carry],
-    )
-    right = assigned.select(
-        F.col("c_id").alias("b_id"), F.col("c_qv").alias("b_qv"),
-        F.col("c_n").alias("b_n"), *join_keys,
-        *[F.col(k).alias(f"b{k}") for k in carry],
-    )
-    # the pair-verify dot runs once per CANDIDATE PAIR — the hottest
-    # expression in the semantic family; staged through project_once so
-    # the threshold filter cannot inline it into the join condition
-    # (the before-plan evaluated the fold 4x per pair)
-    from topic_store_spark.operators.similarity import _int_dot
-
-    joined = left.join(right, join_keys).filter(F.col("a_id") < F.col("b_id"))
-    dec = "decimal(38,0)"
-    pairs = (
-        project_once(joined, dot=_int_dot("a_qv", "b_qv"))
-        .filter(
-            (F.col("dot") > 0)
-            & (
-                F.col("dot").cast(dec) * F.col("dot").cast(dec) * (threshold_den**2)
-                >= F.col("a_n").cast(dec) * F.col("b_n").cast(dec) * (threshold_num**2)
-            )
-        )
-        .select(
-            "cluster_id",
-            "a_id",
-            "b_id",
-            (
-                F.col("dot")
-                / F.sqrt((F.col("a_n") * F.col("b_n")).cast("double"))
-            ).alias("cosine_q"),
-            *[F.col(f"a{k}") for k in carry],
-            *[F.col(f"b{k}") for k in carry],
-        )
+    pairs = _cosine_pairs(
+        assigned, join_keys, threshold_num, threshold_den,
+        lead=("cluster_id",), carry=carry or (),
     )
     if n_probe > 1:
         # a pair co-assigned to two shared clusters is found twice —

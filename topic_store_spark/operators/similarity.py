@@ -1,5 +1,22 @@
 """Similarity search over embedding columns.
 
+Every operator rests on one exact-integer contract, and each step of it
+is written once here (``dedup.py``'s embedding and semantic operators
+call the same helpers):
+
+- ``_quantized``: components become ``round(x * 1000)`` longs next to
+  their exact self-dot, so dot products and norms are exact integers;
+- ``_with_affinity`` / ``_cen_rank``: a vector's centroid affinity
+  ``dot / sqrt(|cen|^2)`` and its ``(aff desc, cen_id asc)`` order;
+- ``_nearest_list`` (the max of that order: inverted-list assignment),
+  ``_probe_lists`` (its ``nprobe`` best per query) and ``_topk`` (each
+  query's ``k`` best neighbours, ties to the lower neighbour id);
+- ``_cosine_q``: every reported cosine, the exact dot over the root of
+  the exact self-dot product.
+
+That contract is what lets the SQL oracle reproduce every result bit
+for bit.
+
 - ``topk_neighbors``      exact top-k by quantized inner product
   (embeddings here are unit-norm, so inner product == cosine ranking);
   broadcast the query side, rank with a per-query window.  The
@@ -22,7 +39,7 @@ from __future__ import annotations
 
 import functools as _functools
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from topic_store_spark.functions.vectors import (
@@ -75,24 +92,120 @@ def argmax_best_sql(cen_rows, vec_sql: str, id_type) -> str:
 
 
 def _quantized(
-    df: DataFrame, id_col: str, vec_col: str, prefix: str
+    df: DataFrame, id_col: str, vec_col: str, prefix: str, **extra: Column
 ) -> DataFrame:
-    """``(id, qv, n)`` quantized view.  The quantized array is STAGED in
-    its own projection and the self-dot reads the staged column — an
-    inline form would re-evaluate the quantize transform three times
-    per row (once for qv, twice inside the self-dot fold)
-    because higher-order functions get no subexpression elimination and
-    CollapseProject happily inlines the alias.  (Staging holds: the
-    alias is referenced 3x and the transform is non-cheap, so the two
-    Projects do NOT collapse.)"""
+    """``(id, qv, n)`` quantized view, plus each ``extra`` column under
+    its keyword name.  The quantized array is STAGED in its own
+    projection and the self-dot reads the staged column — an inline form
+    would re-evaluate the quantize transform three times per row (once
+    for qv, twice inside the self-dot fold) because higher-order
+    functions get no subexpression elimination and CollapseProject
+    happily inlines the alias.  (Staging holds: the alias is referenced
+    3x and the transform is non-cheap, so the two Projects do NOT
+    collapse.)  ``extra`` columns are computed in the first projection
+    from the raw vector and passed through the second."""
     staged = df.select(
         F.col(id_col).alias(f"{prefix}_id"),
         F.expr(quantize_sql(_q(vec_col))).alias(f"{prefix}_qv"),
+        *[col.alias(name) for name, col in extra.items()],
     )
     return staged.select(
         f"{prefix}_id",
         f"{prefix}_qv",
         F.expr(int_self_dot_sql(_q(f"{prefix}_qv"))).alias(f"{prefix}_n"),
+        *extra,
+    )
+
+
+def _int_dot(a: str, b: str) -> Column:
+    return F.expr(int_dot_sql(_q(a), _q(b)))
+
+
+def _cosine_q(dot: str, a_n: str, b_n: str) -> Column:
+    """``cosine_q``: the exact integer ``dot`` over the root of the exact
+    self-dot product — every cosine the operators report."""
+    return (
+        F.col(dot) / F.sqrt((F.col(a_n) * F.col(b_n)).cast("double"))
+    ).alias("cosine_q")
+
+
+def _topk(scored: DataFrame, k: int, order: Column, value: Column) -> DataFrame:
+    """``(query_id, neighbor_id, rank, value)``: each ``q_id``'s ``k``
+    best ``scored`` rows by ``order``, ties to the lower ``c_id``."""
+    w = Window.partitionBy("q_id").orderBy(order, F.col("c_id").asc())
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(
+            F.col("q_id").alias("query_id"),
+            F.col("c_id").alias("neighbor_id"),
+            F.col("rank"),
+            value,
+        )
+    )
+
+
+def _scored_pairs(
+    corpus: DataFrame, queries: DataFrame, id_col: str, vec_col: str
+) -> DataFrame:
+    """Every (corpus, query) pair but a vector with itself, with its
+    exact ``dot``; the query side is broadcast."""
+    q = _quantized(queries, id_col, vec_col, "q")
+    c = _quantized(corpus, id_col, vec_col, "c")
+    return (
+        c.crossJoin(F.broadcast(q))
+        .filter(F.col("q_id") != F.col("c_id"))
+        .withColumn("dot", _int_dot("q_qv", "c_qv"))
+    )
+
+
+def _with_affinity(rows: DataFrame, cen: DataFrame, vec: str) -> DataFrame:
+    """``rows x cen`` (centroids broadcast) with ``aff``, the quantized
+    ``vec``'s affinity to each centroid: ``dot / sqrt(cen_n)`` on exact
+    integer dots, so every engine computes the identical double."""
+    aff = _int_dot(vec, "cen_qv") / F.sqrt(F.col("cen_n").cast("double"))
+    return rows.crossJoin(F.broadcast(cen)).withColumn("aff", aff)
+
+
+def _cen_rank(*fields: str) -> Column:
+    """``struct(aff, neg_cen, *fields)``: its max (or descending sort) is
+    the best centroid under ``(aff desc, cen_id asc)`` — ``neg_cen`` is
+    unique per row, so ``fields`` never decide."""
+    return F.struct(
+        F.col("aff"),
+        (-F.col("cen_id")).alias("neg_cen"),
+        *[F.col(f) for f in fields],
+    )
+
+
+def _nearest_list(c: DataFrame, cen: DataFrame, *fields: str) -> DataFrame:
+    """``(c_id, best)``: each quantized corpus vector's nearest centroid,
+    ``best`` the max :func:`_cen_rank` struct carrying ``fields``.
+
+    Argmax via max(struct): the partial aggregate reduces each vector's
+    |centroids| candidate rows to one BEFORE the exchange, so the
+    assignment shuffle moves n rows, not n x |centroids|."""
+    return (
+        _with_affinity(c, cen, "c_qv")
+        .groupBy("c_id")
+        .agg(F.max(_cen_rank(*fields)).alias("best"))
+    )
+
+
+def _probe_lists(
+    q: DataFrame, cen: DataFrame, nprobe: int, *cols: Column | str
+) -> DataFrame:
+    """``cols`` of each quantized query's ``nprobe`` nearest centroids,
+    ranked ``(aff desc, cen_id asc)``.  The window is over Q x
+    |centroids| rows, never corpus-scale."""
+    w = Window.partitionBy("q_id").orderBy(
+        F.col("aff").desc(), F.col("cen_id").asc()
+    )
+    return (
+        _with_affinity(q, cen, "q_qv")
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= nprobe)
+        .select(*cols)
     )
 
 
@@ -107,28 +220,9 @@ def topk_neighbors(
     neighbor id.  The query side is broadcast (it's the small dim side);
     the corpus never shuffles — the plan is scan + broadcast join +
     per-query TopK, which survives any corpus size."""
-    q = _quantized(queries, id_col, vec_col, "q")
-    c = _quantized(corpus, id_col, vec_col, "c")
-    dot = _int_dot("q_qv", "c_qv")
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("q_id") != F.col("c_id"))
-        .withColumn("dot", dot)
-    )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("dot").desc(), F.col("c_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("q_id").alias("query_id"),
-            F.col("c_id").alias("neighbor_id"),
-            F.col("rank"),
-            (F.col("dot") / F.sqrt((F.col("q_n") * F.col("c_n")).cast("double"))).alias(
-                "cosine_q"
-            ),
-        )
+    return _topk(
+        _scored_pairs(corpus, queries, id_col, vec_col), k,
+        F.col("dot").desc(), _cosine_q("dot", "q_n", "c_n"),
     )
 
 
@@ -153,9 +247,6 @@ def topk_neighbors_partial(
     ``dot DESC, neighbor_id ASC`` — identical ordering and results to
     ``topk_neighbors``.
     """
-    q = _quantized(queries, id_col, vec_col, "q")
-    c = _quantized(corpus, id_col, vec_col, "c")
-    dot = _int_dot("q_qv", "c_qv")
     cand = F.struct(
         F.col("dot"),
         (-F.col("c_id")).alias("neg_id"),
@@ -163,11 +254,7 @@ def topk_neighbors_partial(
         F.col("q_n"),
         F.col("c_n"),
     )
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("q_id") != F.col("c_id"))
-        .withColumn("dot", dot)
-    )
+    scored = _scored_pairs(corpus, queries, id_col, vec_col)
     local = scored.groupBy(
         "q_id", F.spark_partition_id().alias("_pid")
     ).agg(
@@ -188,15 +275,8 @@ def topk_neighbors_partial(
         F.col("q_id").alias("query_id"),
         F.col("cand.c_id").alias("neighbor_id"),
         (F.col("pos") + 1).alias("rank"),
-        (
-            F.col("cand.dot")
-            / F.sqrt((F.col("cand.q_n") * F.col("cand.c_n")).cast("double"))
-        ).alias("cosine_q"),
+        _cosine_q("cand.dot", "cand.q_n", "cand.c_n"),
     )
-
-
-def _int_dot(a: str, b: str):
-    return F.expr(int_dot_sql(_q(a), _q(b)))
 
 
 def assign_to_lists(
@@ -208,37 +288,15 @@ def assign_to_lists(
     """Inverted-list assignment: each corpus vector to its nearest
     centroid.  Returns ``(c_id, c_qv, c_n, list_id)`` — the relation an
     IVF index persists (`operators/index.py` IVFIndex) and
-    ``search_lists`` probes.
-
-    Argmax via max(struct) (same rationale and tie-break as
-    semantic_cluster_dedup's multi-probe ranking): the partial aggregate
-    reduces each vector's |centroids| candidate rows to one BEFORE the
-    exchange, so the assignment shuffle moves n rows, not n x
-    |centroids|.
+    ``search_lists`` probes (see :func:`_nearest_list`).
     """
     cen = _quantized(centroids, id_col, vec_col, "cen")
     c = _quantized(corpus, id_col, vec_col, "c")
-    aff = _int_dot("c_qv", "cen_qv") / F.sqrt(F.col("cen_n").cast("double"))
-    best = F.max(
-        F.struct(
-            F.col("aff"),
-            (-F.col("cen_id")).alias("neg_cen"),
-            F.col("cen_id"),
-            F.col("c_qv"),
-            F.col("c_n"),
-        )
-    ).alias("best")
-    return (
-        c.crossJoin(F.broadcast(cen))
-        .withColumn("aff", aff)
-        .groupBy("c_id")
-        .agg(best)
-        .select(
-            "c_id",
-            F.col("best.c_qv").alias("c_qv"),
-            F.col("best.c_n").alias("c_n"),
-            F.col("best.cen_id").alias("list_id"),
-        )
+    return _nearest_list(c, cen, "cen_id", "c_qv", "c_n").select(
+        "c_id",
+        F.col("best.c_qv").alias("c_qv"),
+        F.col("best.c_n").alias("c_n"),
+        F.col("best.cen_id").alias("list_id"),
     )
 
 
@@ -256,38 +314,16 @@ def search_lists(
     half of ``ivf_ann_neighbors``."""
     cen = _quantized(centroids, id_col, vec_col, "cen")
     q = _quantized(queries, id_col, vec_col, "q")
-
-    # probe side is query-count-sized — the window is over Q x |centroids|
-    # rows, never corpus-scale
-    q_aff = _int_dot("q_qv", "cen_qv") / F.sqrt(F.col("cen_n").cast("double"))
-    w_probe = Window.partitionBy("q_id").orderBy(
-        F.col("aff").desc(), F.col("cen_id").asc()
+    probes = _probe_lists(
+        q, cen, nprobe, "q_id", "q_qv", "q_n", F.col("cen_id").alias("list_id")
     )
-    probes = (
-        q.crossJoin(F.broadcast(cen))
-        .withColumn("aff", q_aff)
-        .withColumn("rn", F.row_number().over(w_probe))
-        .filter(F.col("rn") <= nprobe)
-        .select("q_id", "q_qv", "q_n", F.col("cen_id").alias("list_id"))
-    )
-
     scored = (
         assigned.join(F.broadcast(probes), "list_id")
         .filter(F.col("q_id") != F.col("c_id"))
         .withColumn("dot", _int_dot("q_qv", "c_qv"))
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("dot").desc(), F.col("c_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("q_id").alias("query_id"),
-            F.col("c_id").alias("neighbor_id"),
-            F.col("rank"),
-            (F.col("dot") / F.sqrt((F.col("q_n") * F.col("c_n")).cast("double"))).alias(
-                "cosine_q"
-            ),
-        )
+    return _topk(
+        scored, k, F.col("dot").desc(), _cosine_q("dot", "q_n", "c_n")
     )
 
 
@@ -324,7 +360,13 @@ def ivf_ann_neighbors(
 def _plane_weights(plane: int, dim: int) -> tuple[float, ...]:
     """Deterministic hyperplane weights, cached: weight_i =
     hexint(md5("p:i")[0:4])/65536 - 0.5 — exact binary fractions, so the
-    doubles match the SQL oracle bit-for-bit."""
+    doubles match the SQL oracle bit-for-bit.
+
+    The weights are pure constants, but Catalyst does not constant-fold
+    higher-order functions — an in-plan ``transform(sequence(...), md5)``
+    formulation re-hashed dim x planes md5s PER ROW.  So they are
+    computed driver-side with the byte-identical formula and emitted as
+    a literal array (:func:`_proj_sql`)."""
     import hashlib
 
     return tuple(
@@ -335,12 +377,11 @@ def _plane_weights(plane: int, dim: int) -> tuple[float, ...]:
 
 
 def _proj_sql(vec_sql: str, plane: int, dim: int) -> str:
-    """<v, h_plane> as one Spark-SQL string: the identical
-    ``aggregate(zip_with(...))`` left-fold as :func:`_hyperplane_proj`
-    (same weights as ``D``-suffixed double literals, same operand
-    order, bit-identical doubles), built in ONE py4j round trip
-    instead of O(dim) Column calls.  See functions/vectors.py for the
-    r13 build-vs-exec rationale."""
+    """<v, h_plane> as one Spark-SQL string: an ``aggregate(zip_with(...))``
+    left-fold over the weights as ``D``-suffixed double literals (the
+    oracle's operand order, bit-identical doubles), built in ONE py4j
+    round trip instead of O(dim) Column calls.  See functions/vectors.py
+    for the build-vs-exec rationale."""
     weights = ", ".join(
         f"{w!r}D" for w in _plane_weights(plane, dim)
     )
@@ -360,48 +401,6 @@ def lsh_bucket_key_sql(vec_sql: str, planes: int = 8, dim: int = 64) -> str:
     return "concat(" + ", ".join(
         _sign_sql(vec_sql, p, dim) for p in range(planes)
     ) + ")"
-
-
-def _hyperplane_proj(vec_col, plane: int, dim: int):
-    """<v, h_plane> where h_plane[i] is a deterministic pseudo-random in
-    [-0.5, 0.5): (md5("p:i") first 4 hex as int)/65536 - 0.5.
-
-    The weights are pure constants, but Catalyst does not constant-fold
-    higher-order functions — an in-plan ``transform(sequence(...), md5)``
-    formulation re-hashed dim x planes md5s PER ROW.  So the weights are
-    computed driver-side with the byte-identical formula (hashlib md5;
-    /65536 and -0.5 are exact binary ops, so the doubles match the SQL
-    oracle bit-for-bit) and emitted as a literal array; the projection
-    stays the same left-fold over the same operand order.
-
-    Column-input compatibility form; the hot paths use
-    :func:`_proj_sql` (identical operand order, codegen-able)."""
-    ws = _plane_weights(plane, dim)
-    weights = F.array(*[F.lit(w) for w in ws])
-    return F.aggregate(
-        F.zip_with(vec_col, weights, lambda x, w: x.cast("double") * w),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _hyperplane_sign(vec_col, plane: int, dim: int):
-    """'1'/'0' sign bit of the plane projection (see _hyperplane_proj)."""
-    proj = _hyperplane_proj(vec_col, plane, dim)
-    return F.when(proj >= 0, F.lit("1")).otherwise(F.lit("0"))
-
-
-def lsh_bucket_key(vec_col, planes: int = 8, dim: int = 64):
-    """Random-hyperplane LSH bucket id: `planes`-bit sign pattern.
-
-    ``vec_col`` may be a Column (HOF form) or a column-NAME string —
-    the string form emits the SAME fold-form HOF expression as one SQL
-    string (one py4j round trip; the unrolled codegen draft was
-    measured 2-20x WORSE and rejected — see OPTIMIZATION_r13.md),
-    identical doubles and sign bits (same operand order)."""
-    if isinstance(vec_col, str):
-        return F.expr(lsh_bucket_key_sql(_q(vec_col), planes, dim))
-    return F.concat(*[_hyperplane_sign(vec_col, p, dim) for p in range(planes)])
 
 
 def lsh_ann_neighbors(
@@ -430,21 +429,9 @@ def lsh_ann_neighbors(
     probe-side fan-out changes; the corpus is still bucketed once."""
 
     def _bucketed(df: DataFrame, prefix: str) -> DataFrame:
-        # (id, qv, n, bucket); the quantize / self-dot / sign-pattern
-        # arithmetic is one SQL string each — same operand order,
-        # identical values (see functions/vectors.py)
-        staged = df.select(
-            F.col(id_col).alias(f"{prefix}_id"),
-            F.expr(quantize_sql(_q(vec_col))).alias(f"{prefix}_qv"),
-            F.expr(lsh_bucket_key_sql(_q(vec_col), planes, dim)).alias(
-                "bucket"
-            ),
-        )
-        return staged.select(
-            f"{prefix}_id",
-            f"{prefix}_qv",
-            F.expr(int_self_dot_sql(_q(f"{prefix}_qv"))).alias(f"{prefix}_n"),
-            "bucket",
+        return _quantized(
+            df, id_col, vec_col, prefix,
+            bucket=F.expr(lsh_bucket_key_sql(_q(vec_col), planes, dim)),
         )
 
     c = _bucketed(corpus, "c")
@@ -454,19 +441,12 @@ def lsh_ann_neighbors(
         # stage the per-plane projections ONCE (HOF folds get no CSE),
         # then derive signs, the margin order, and every probe key from
         # the staged columns
-        staged0 = queries.select(
-            F.col(id_col).alias("q_id"),
-            F.expr(quantize_sql(_q(vec_col))).alias("q_qv"),
-            *[
-                F.expr(_proj_sql(_q(vec_col), p, dim)).alias(f"_pr{p}")
+        staged = _quantized(
+            queries, id_col, vec_col, "q",
+            **{
+                f"_pr{p}": F.expr(_proj_sql(_q(vec_col), p, dim))
                 for p in range(planes)
-            ],
-        )
-        staged = staged0.select(
-            "q_id",
-            "q_qv",
-            F.expr(int_self_dot_sql(_q("q_qv"))).alias("q_n"),
-            *[f"_pr{p}" for p in range(planes)],
+            },
         )
         signs = F.array(
             *[
@@ -505,26 +485,15 @@ def lsh_ann_neighbors(
             "q_id", "q_qv", "q_n",
             F.explode(F.array(*keys)).alias("bucket"),
         )
-    dot = _int_dot("q_qv", "c_qv")
     scored = c.join(F.broadcast(q_bucketed), "bucket").filter(
         F.col("q_id") != F.col("c_id")
     )
     if probes > 1:
         # a (query, candidate) pair can arrive via several probe buckets
         scored = scored.dropDuplicates(["q_id", "c_id"])
-    scored = scored.withColumn("dot", dot)
-    w = Window.partitionBy("q_id").orderBy(F.col("dot").desc(), F.col("c_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("q_id").alias("query_id"),
-            F.col("c_id").alias("neighbor_id"),
-            F.col("rank"),
-            (F.col("dot") / F.sqrt((F.col("q_n") * F.col("c_n")).cast("double"))).alias(
-                "cosine_q"
-            ),
-        )
+    scored = scored.withColumn("dot", _int_dot("q_qv", "c_qv"))
+    return _topk(
+        scored, k, F.col("dot").desc(), _cosine_q("dot", "q_n", "c_n")
     )
 
 
@@ -715,29 +684,14 @@ def ivf_residual_vectors(
     identically by construction."""
     cen = _quantized(centroids, id_col, vec_col, "cen")
     c = _quantized(corpus, id_col, vec_col, "c")
-    aff = _int_dot("c_qv", "cen_qv") / F.sqrt(F.col("cen_n").cast("double"))
-    best = F.max(
-        F.struct(
-            F.col("aff"),
-            (-F.col("cen_id")).alias("neg_cen"),
-            F.col("c_qv"),
-            F.col("cen_qv"),
-        )
-    ).alias("best")
-    return (
-        c.crossJoin(F.broadcast(cen))
-        .withColumn("aff", aff)
-        .groupBy("c_id")
-        .agg(best)
-        .select(
-            F.col("c_id").alias(id_col),
-            F.transform(
-                F.zip_with(
-                    F.col("best.c_qv"), F.col("best.cen_qv"), lambda x, y: x - y
-                ),
-                lambda v: v.cast("double") / F.lit(1000.0),
-            ).alias(vec_col),
-        )
+    return _nearest_list(c, cen, "c_qv", "cen_qv").select(
+        F.col("c_id").alias(id_col),
+        F.transform(
+            F.zip_with(
+                F.col("best.c_qv"), F.col("best.cen_qv"), lambda x, y: x - y
+            ),
+            lambda v: v.cast("double") / F.lit(1000.0),
+        ).alias(vec_col),
     )
 
 
@@ -799,31 +753,13 @@ def _pq_encode_corpus(
     """``(c_id, list_id, codes)``: coarse-assign every corpus vector
     and PQ-encode it (residual or raw) in staged projections.  The full
     vector is DROPPED here — downstream carries ``m`` codes/row."""
-    aff = _int_dot("c_qv", "cen_qv") / F.sqrt(F.col("cen_n").cast("double"))
-    best = F.max(
-        F.struct(
-            F.col("aff"),
-            (-F.col("cen_id")).alias("neg_cen"),
-            F.col("cen_id"),
-            F.col("c_qv"),
-            F.col("cen_qv"),
-        )
-    ).alias("best")
     enc_vec = (
         F.zip_with(F.col("best.c_qv"), F.col("best.cen_qv"), lambda x, y: x - y)
         if residual
         else F.col("best.c_qv")
     )
-    assigned = (
-        c.crossJoin(F.broadcast(cen))
-        .withColumn("aff", aff)
-        .groupBy("c_id")
-        .agg(best)
-        .select(
-            "c_id",
-            enc_vec.alias("c_ev"),
-            F.col("best.cen_id").alias("list_id"),
-        )
+    assigned = _nearest_list(c, cen, "cen_id", "c_qv", "cen_qv").select(
+        "c_id", enc_vec.alias("c_ev"), F.col("best.cen_id").alias("list_id")
     )
     return coder.encode(assigned, "c_ev", ["c_id", "list_id"])
 
@@ -836,21 +772,14 @@ def _pq_query_luts(
     query alone; residual LUTs on the (query, probed list) pair — either
     way this side is probe-sized (the residual zip_with stays the HOF
     form deliberately: probe-count rows, never corpus-scale)."""
-    q_aff = _int_dot("q_qv", "cen_qv") / F.sqrt(F.col("cen_n").cast("double"))
-    w_probe = Window.partitionBy("q_id").orderBy(
-        F.col("aff").desc(), F.col("cen_id").asc()
-    )
     q_enc = (
         F.zip_with(F.col("q_qv"), F.col("cen_qv"), lambda x, y: x - y)
         if residual
         else F.col("q_qv")
     )
-    probes = (
-        q.crossJoin(F.broadcast(cen))
-        .withColumn("aff", q_aff)
-        .withColumn("rn", F.row_number().over(w_probe))
-        .filter(F.col("rn") <= nprobe)
-        .select("q_id", q_enc.alias("q_ev"), F.col("cen_id").alias("list_id"))
+    probes = _probe_lists(
+        q, cen, nprobe,
+        "q_id", q_enc.alias("q_ev"), F.col("cen_id").alias("list_id"),
     )
     return coder.luts(probes, "q_ev", ["q_id", "list_id"])
 
@@ -870,19 +799,7 @@ def _pq_adc_rank(
         .filter(F.col("q_id") != F.col("c_id"))
         .withColumn("adc_dist", adc)
     )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("adc_dist").asc(), F.col("c_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("q_id").alias("query_id"),
-            F.col("c_id").alias("neighbor_id"),
-            "rank",
-            "adc_dist",
-        )
-    )
+    return _topk(scored, k, F.col("adc_dist").asc(), F.col("adc_dist"))
 
 
 def kmeans_centroids(
@@ -937,7 +854,7 @@ def kmeans_centroids(
         )
     )
 
-    def _dist2(a: str, b: str):
+    def _dist2(a: str, b: str) -> Column:
         return F.aggregate(
             F.zip_with(F.col(a), F.col(b), lambda x, y: (x - y) * (x - y)),
             F.lit(0.0),
@@ -975,18 +892,7 @@ def kmeans_centroids(
         shift = (
             centroids.alias("o")
             .join(new_centroids.alias("n"), "cen_id")
-            .select(
-                F.max(
-                    F.aggregate(
-                        F.zip_with(
-                            F.col("o._km_c"), F.col("n._km_c"),
-                            lambda x, y: (x - y) * (x - y),
-                        ),
-                        F.lit(0.0),
-                        lambda acc, v: acc + v,
-                    )
-                ).alias("s")
-            )
+            .select(F.max(_dist2("o._km_c", "n._km_c")).alias("s"))
             .first()["s"]
         )
         centroids = new_centroids
