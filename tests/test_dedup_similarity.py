@@ -1385,10 +1385,7 @@ def test_tied_centroid_affinity_picks_lower_centroid_id(spark):
     from topic_store_spark.operators.util import cache_scope
 
     cen, corpus, queries = _tie_frames(spark)
-    lists = {
-        r["c_id"]: r["list_id"]
-        for r in assign_to_lists(corpus, cen).collect()
-    }
+    lists = {r["c_id"]: r["list_id"] for r in assign_to_lists(corpus, cen).collect()}
     assert lists == {5: 7, 2: 3, 9: 3, 4: 3}
 
     resid = {
@@ -1433,10 +1430,7 @@ def test_tied_neighbour_dot_ranks_lower_neighbour_id_first(spark):
     cen, corpus, queries = _tie_frames(spark)
 
     def ranked(df):
-        return [
-            r["neighbor_id"]
-            for r in df.orderBy("rank").collect()
-        ]
+        return [r["neighbor_id"] for r in df.orderBy("rank").collect()]
 
     assert ranked(topk_neighbors(corpus, queries, k=3)) == [9, 2, 5]
     assert ranked(topk_neighbors_partial(corpus, queries, k=3)) == [9, 2, 5]
