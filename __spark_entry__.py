@@ -32,7 +32,7 @@ if _REPO not in sys.path:
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from topic_store_spark.tables import load_table
+from topic_store_spark.tables import load_table, read_written
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
@@ -1082,17 +1082,15 @@ def _zordered_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes skip most files on min-max stats (measured footer evidence:
     COVERAGE.md 'Z-order scan pruning')."""
     key = (spark.sparkContext.applicationId, sf_dir)
-    path = _ZORDER_EVENTS_MEMO.get(key)
-    if path is None:
+    memo = _ZORDER_EVENTS_MEMO.get(key)
+    if memo is None:
         from topic_store_spark.operators.zorder import write_zordered
 
-        path = _session_tmpdir("tss_zorder_events_")
-        write_zordered(
-            _t(spark, sf_dir, "events"), path, ["user_id", "value"],
-            bits=8, num_files=16,
-        )
-        _ZORDER_EVENTS_MEMO[key] = path
-    return spark.read.parquet(path)
+        events = _t(spark, sf_dir, "events")
+        memo = (_session_tmpdir("tss_zorder_events_"), events.schema)
+        write_zordered(events, memo[0], ["user_id", "value"], bits=8, num_files=16)
+        _ZORDER_EVENTS_MEMO[key] = memo
+    return read_written(spark, *memo)
 
 
 def q_orders_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1450,8 +1448,8 @@ def _shared_minhash_pairs(
     between queries, and a real pipeline persists its index to storage,
     not executor memory."""
     key = (spark.sparkContext.applicationId, sf_dir)
-    path = _MINHASH_PAIRS_MEMO.get(key)
-    if path is None or rebuild:
+    memo = _MINHASH_PAIRS_MEMO.get(key)
+    if memo is None or rebuild:
         from topic_store_spark.operators.dedup import minhash_lsh_pairs
 
         corpus = _docs_with_near_dups(spark, sf_dir)
@@ -1459,11 +1457,10 @@ def _shared_minhash_pairs(
             corpus, n=3, num_perm=16, bands=8,
             threshold_num=8, threshold_den=10,
         )
-        if path is None:
-            path = _session_tmpdir("tss_minhash_pairs_")
+        path = memo[0] if memo else _session_tmpdir("tss_minhash_pairs_")
         pairs.write.mode("overwrite").parquet(path)
-        _MINHASH_PAIRS_MEMO[key] = path
-    return spark.read.parquet(path)
+        memo = _MINHASH_PAIRS_MEMO[key] = (path, pairs.schema)
+    return read_written(spark, *memo)
 
 
 def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1622,15 +1619,14 @@ def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     split: RECALL.md's clustered sweep shows m=32 holding >=0.8x of
     plain IVF's recall) instead of the 64-cell vector (the 100 TB
     memory story).  Codebooks derive deterministically from the first 16
-    vectors' RESIDUALS (operators/similarity.py ivf_residual_vectors +
-    pq_codebooks; the k-means trainer is the pytest-covered production
-    path), and residual subtraction happens on the integer grid, so the
+    vectors' RESIDUALS (operators/similarity.py opq_sample_codebooks;
+    the k-means trainer is the pytest-covered production path), and
+    residual subtraction happens on the integer grid, so the
     argmin encoding and integer ADC sums reproduce exactly in the DuckDB
     oracle."""
     from topic_store_spark.operators.similarity import (
         ivf_pq_ann_neighbors,
-        ivf_residual_vectors,
-        opq_permuted_codebooks,
+        opq_sample_codebooks,
         permute_vectors,
     )
 
@@ -1642,14 +1638,16 @@ def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # DuckDB where the float Procrustes rotation could not).  IVF
     # assignment is permutation-invariant; only the subspace split (and
     # hence codebooks/codes/ADC) changes — the OPQ effect.
-    # r13: ONE bounded collect derives both the permutation and the
-    # permuted-residual codebooks (opq_permuted_codebooks) — the
+    # ONE bounded collect of the 16-row sample and the centroids
+    # derives both the permutation and the permuted-residual codebooks,
+    # the residuals computed on the driver (opq_sample_codebooks) — the
     # composed variance_balanced_permutation + pq_codebooks form ran
     # TWO eager residual-pipeline driver jobs per DataFrame build.
     # Exactly equal by the permutation-commutes argument pinned in
     # tests/test_dedup_similarity.py::test_opq_fused_codebooks_equal_composed.
-    src = ivf_residual_vectors(emb.filter(F.col("vec_id") < 16), cen)
-    perm, books = opq_permuted_codebooks(src, m=32)
+    perm, books = opq_sample_codebooks(
+        emb.filter(F.col("vec_id") < 16), cen, m=32
+    )
     emb_p = permute_vectors(emb, perm)
     cen_p = emb_p.filter(F.col("vec_id") < 8)
     return ivf_pq_ann_neighbors(

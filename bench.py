@@ -43,7 +43,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     queries = entry_mod.queries()
-    build_s, exec_s, errors = run_timed(
+    build_s, exec_s, errors, _ = run_timed(
         spark,
         {name: (lambda fn=fn: fn(spark, sf_dir)) for name, fn in queries.items()},
         warmups=WARMUPS,

@@ -54,15 +54,7 @@ def graph_lookup_tier(tier: str):
 
 def spark_job_ids(spark, fn) -> list:
     """Spark jobs launched while ``fn`` runs, counted under a job group."""
-    import uuid
+    from tools.harness import job_ids, run_in_job_group
 
-    sc = spark.sparkContext
-    group = f"job-count-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "job count")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-    return list(sc.statusTracker().getJobIdsForGroup(group))
+    _, group = run_in_job_group(spark, fn)
+    return job_ids(spark, group)

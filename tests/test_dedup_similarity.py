@@ -1312,38 +1312,62 @@ def test_semantic_dedup_cluster_id_keeps_centroid_id_dtype(spark):
         spark.catalog.clearCache()
 
 
-def test_opq_fused_codebooks_equal_composed(spark, embeddings):
-    """r13 fused OPQ derivation (`opq_permuted_codebooks`, ONE bounded
-    collect) must reproduce the composed pipeline it replaced EXACTLY:
-    variance_balanced_permutation -> permute_vectors -> re-derived
-    residuals -> pq_codebooks.  This is the equality q_ann_pq's oracle
-    identity rides on (the permutation commutes with per-element
-    quantization and integer-exact IVF assignment)."""
-    from pyspark.sql import functions as F
-
+def _composed_opq(sample, cen, m):
+    """The pre-r13 q_ann_pq build path: the permutation of the sample's
+    residuals, then codebooks of the permuted sample's residuals."""
     from topic_store_spark.operators.similarity import (
         ivf_residual_vectors,
-        opq_permuted_codebooks,
         permute_vectors,
         pq_codebooks,
         variance_balanced_permutation,
     )
 
-    emb = embeddings
-    cen = emb.filter(F.col("vec_id") < 8)
-    src = ivf_residual_vectors(emb.filter(F.col("vec_id") < 16), cen)
+    perm = variance_balanced_permutation(ivf_residual_vectors(sample, cen))
+    src_p = ivf_residual_vectors(
+        permute_vectors(sample, perm), permute_vectors(cen, perm)
+    )
+    return perm, pq_codebooks(src_p, m=m)
 
-    # composed (the pre-r13 q_ann_pq build path)
-    perm_c = variance_balanced_permutation(src)
-    emb_p = permute_vectors(emb, perm_c)
-    cen_p = emb_p.filter(F.col("vec_id") < 8)
-    src_p = ivf_residual_vectors(emb_p.filter(F.col("vec_id") < 16), cen_p)
-    books_c = pq_codebooks(src_p, m=32)
 
-    perm_f, books_f = opq_permuted_codebooks(src, m=32)
+def test_opq_fused_codebooks_equal_composed(spark, embeddings):
+    """The fused OPQ derivation (`opq_sample_codebooks`: ONE bounded
+    collect, the residuals computed on the driver) must reproduce the
+    composed pipeline EXACTLY: variance_balanced_permutation ->
+    permute_vectors -> re-derived residuals -> pq_codebooks.  This is
+    the equality q_ann_pq's oracle identity rides on (the permutation
+    commutes with per-element quantization and integer-exact IVF
+    assignment).  Exact affinity ties go to the lower centroid id on
+    both paths."""
+    from topic_store_spark.operators.similarity import opq_sample_codebooks
 
-    assert perm_f == perm_c
-    assert books_f == books_c
+    sample = embeddings.filter(F.col("vec_id") < 16)
+    cen = embeddings.filter(F.col("vec_id") < 8)
+    assert opq_sample_codebooks(sample, cen, m=32) == _composed_opq(sample, cen, 32)
+    tie_cen, tie_corpus, _ = _tie_frames(spark)
+    assert opq_sample_codebooks(tie_corpus, tie_cen, m=2) == _composed_opq(
+        tie_corpus, tie_cen, 2
+    )
+
+
+def test_embedding_pair_scans_filter_no_quantize_transform(embeddings):
+    """The pair threshold's inferred ``isnotnull(c_n)`` stops at the
+    self-dot's barrier: no scan-side Filter (or parquet DataFilters)
+    evaluates the quantize transform over the raw embedding."""
+    import re
+
+    from tools.audit_plans import _plan_text
+    from topic_store_spark.operators.dedup import (
+        embedding_dup_pairs,
+        embedding_dup_pairs_lsh,
+    )
+
+    for pairs in (embedding_dup_pairs_lsh(embeddings), embedding_dup_pairs(embeddings)):
+        blocks = _plan_text(pairs).split("\n\n")
+        scan_side = [
+            b for b in blocks if re.match(r"\(\d+\) (Filter|Scan parquet)", b)
+        ]
+        assert scan_side
+        assert not [b for b in scan_side if "transform(embedding" in b]
 
 
 # --- exact ties: every operator breaks them on the lower id -------------

@@ -86,13 +86,14 @@ def test_run_timed_rounds_and_alternating_order(spark):
     from tools.harness import run_timed, total_s
 
     calls: list[str] = []
-    build_s, exec_s, errors = run_timed(
+    build_s, exec_s, errors, build_jobs = run_timed(
         spark, _builds(spark, calls), warmups=1, rounds=3)
     assert errors == {}
     assert {n: len(s) for n, s in build_s.items()} == {"a": 3, "b": 3}
     assert {n: len(s) for n, s in exec_s.items()} == {"a": 3, "b": 3}
     assert all(t >= 0 for s in (*build_s.values(), *exec_s.values()) for t in s)
     assert calls == ["a", "b", "b", "a", "a", "b", "b", "a"]
+    assert build_jobs == {"a": [0, 0, 0], "b": [0, 0, 0]}
     assert total_s(build_s, exec_s) == {
         n: [round(b + e, 3) for b, e in zip(build_s[n], exec_s[n])]
         for n in ("a", "b")}
@@ -103,13 +104,30 @@ def test_run_timed_isolates_a_failing_build(spark, fail_on_call):
     from tools.harness import run_timed
 
     calls: list[str] = []
-    build_s, exec_s, errors = run_timed(
+    build_s, exec_s, errors, build_jobs = run_timed(
         spark, _builds(spark, calls, fail_on_call), warmups=1, rounds=3)
     assert list(errors) == ["bad"] and errors["bad"] == "ValueError: boom"
-    assert set(build_s) == set(exec_s) == {"a", "b"}
+    assert set(build_s) == set(exec_s) == set(build_jobs) == {"a", "b"}
     assert all(len(s) == 3 for s in (*build_s.values(), *exec_s.values()))
     assert calls.count("bad") == fail_on_call
     assert calls.count("a") == calls.count("b") == 4
+
+
+def test_run_timed_counts_the_jobs_of_each_build_not_of_its_write(spark):
+    """A build that collects twice launches two jobs; the noop write of
+    its result launches more, which are not the build's."""
+    from tools.harness import run_timed
+
+    def build():
+        spark.range(10).collect()
+        spark.range(20).collect()
+        return spark.range(100).selectExpr("id % 7 AS k").groupBy("k").count()
+
+    build_s, _, errors, build_jobs = run_timed(
+        spark, {"two": build, "none": lambda: spark.range(5)},
+        warmups=1, rounds=2)
+    assert errors == {} and len(build_s["two"]) == 2
+    assert build_jobs == {"two": [2, 2], "none": [0, 0]}
 
 
 def test_run_timed_releases_persists_made_inside_a_build(spark):
@@ -123,7 +141,7 @@ def test_run_timed_releases_persists_made_inside_a_build(spark):
         pinned.append(df)
         return df.selectExpr("sum(id) AS s")
 
-    build_s, _, errors = run_timed(spark, {"p": build}, warmups=0, rounds=2)
+    build_s, _, errors, _ = run_timed(spark, {"p": build}, warmups=0, rounds=2)
     assert errors == {} and len(build_s["p"]) == 2
     assert len(pinned) == 2
     assert not any(df.is_cached for df in pinned)

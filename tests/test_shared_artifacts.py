@@ -59,3 +59,19 @@ def test_zordered_events_content_identical(spark, sf_dir):
     sn = src.select([F.col(c).cast("string") for c in sorted(z.columns)])
     assert zn.exceptAll(sn).count() == 0
     assert sn.exceptAll(zn).count() == 0
+
+
+def test_artifact_read_backs_skip_schema_inference(spark, sf_dir):
+    """A re-read of a standing artifact launches no Spark job, and its
+    schema is the one footer inference would give."""
+    import os
+
+    import __spark_entry__ as e
+    from tests.conftest import spark_job_ids
+
+    for read in (e._shared_minhash_pairs, e._zordered_events):
+        read(spark, sf_dir)
+        got = []
+        assert spark_job_ids(spark, lambda: got.append(read(spark, sf_dir))) == []
+        path = os.path.dirname(got[0].inputFiles()[0])
+        assert got[0].schema == spark.read.parquet(path).schema

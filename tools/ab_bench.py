@@ -76,7 +76,7 @@ def main() -> int:
             rows[name] = fn(spark, sf_dir).count()
     assert len(set(rows.values())) == 1, f"variant outputs differ: {rows}"
 
-    build_s, exec_s, errors = run_timed(
+    build_s, exec_s, errors, _ = run_timed(
         spark, {name: lambda: fn(spark, sf_dir) for name in names},
         warmups=WARMUPS, rounds=n_rounds,
     )

@@ -13,11 +13,36 @@ from __future__ import annotations
 
 import sys
 import time
+import uuid
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 from topic_store_spark.operators.util import cache_scope
+
+
+def run_in_job_group(
+    spark: SparkSession, fn: Callable[[], object]
+) -> tuple[object, str]:
+    """``(fn(), group)``: run ``fn`` under a Spark job group of its own.
+    Jobs that Spark's thread pools start for it (a broadcast's collect)
+    inherit the group; read them with :func:`job_ids`."""
+    sc = spark.sparkContext
+    group = f"job-count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        return fn(), group
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def job_ids(spark: SparkSession, group: str) -> list[int]:
+    """The Spark jobs launched under ``group``, once the listener bus has
+    delivered their start events."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def run_timed(
@@ -26,7 +51,10 @@ def run_timed(
     *,
     warmups: int,
     rounds: int,
-) -> tuple[dict[str, list[float]], dict[str, list[float]], dict[str, str]]:
+) -> tuple[
+    dict[str, list[float]], dict[str, list[float]], dict[str, str],
+    dict[str, list[int]],
+]:
     """Execute every build ``warmups`` untimed then ``rounds`` timed times.
 
     Each execution clears the session cache, enters a
@@ -34,6 +62,10 @@ def run_timed(
     ``build()`` (driver work: DataFrame construction and any eager
     collects) and then the ``noop`` write of its result.  The scope
     releases every persist the operators tracked during the execution.
+    ``build()`` runs under a job group of its own, so the Spark jobs it
+    launches (schema inference, eager collects, cache probes) are
+    counted apart from the write's; they are read after the write,
+    outside the timed region.
 
     Rounds are interleaved (ABC ABC, not AAA BBB) so one host-load burst
     spoils at most one sample per name, and the order reverses every
@@ -44,12 +76,14 @@ def run_timed(
     rounds and from the returned samples, and its error is recorded;
     the other names keep running.
 
-    Returns ``(build_s, exec_s, errors)``: per surviving name, ``rounds``
-    samples in seconds each, and per failed name ``"Type: message"``.
+    Returns ``(build_s, exec_s, errors, build_jobs)``: per surviving
+    name, ``rounds`` samples each of build and write seconds and of the
+    build's Spark job count, and per failed name ``"Type: message"``.
     """
     names = list(builds)
     build_s: dict[str, list[float]] = {n: [] for n in names}
     exec_s: dict[str, list[float]] = {n: [] for n in names}
+    build_jobs: dict[str, list[int]] = {n: [] for n in names}
     errors: dict[str, str] = {}
     for round_idx in range(warmups + rounds):
         order = names if round_idx % 2 == 0 else names[::-1]
@@ -60,19 +94,20 @@ def run_timed(
             try:
                 with cache_scope():
                     t0 = time.perf_counter()
-                    df = builds[name]()
+                    df, group = run_in_job_group(spark, builds[name])
                     t1 = time.perf_counter()
                     df.write.format("noop").mode("overwrite").save()
                     t2 = time.perf_counter()
             except Exception as exc:  # noqa: BLE001 - record, keep going
                 errors[name] = f"{type(exc).__name__}: {exc}"[:500]
-                del build_s[name], exec_s[name]
+                del build_s[name], exec_s[name], build_jobs[name]
                 print(f"# {name}: ERROR {errors[name]}", file=sys.stderr)
                 continue
             if round_idx >= warmups:
                 build_s[name].append(round(t1 - t0, 3))
                 exec_s[name].append(round(t2 - t1, 3))
-    return build_s, exec_s, errors
+                build_jobs[name].append(len(job_ids(spark, group)))
+    return build_s, exec_s, errors, build_jobs
 
 
 def total_s(

@@ -8,7 +8,8 @@ and reports each timed execution split into:
 
 - ``build``    — the Python ``fn(spark, sf_dir)`` call: DataFrame
   construction, eager per-op analysis, and any bounded driver collects
-  (codebooks, permutations, minhash artifact writes);
+  (codebooks, permutations, minhash artifact writes), with the number
+  of Spark jobs each build launched (``build_jobs_all``);
 - ``exec``     — the ``noop`` write;
 - and, for the FINAL round's DataFrame, the JVM QueryPlanningTracker
   phases (analysis / optimization / planning, ms; ``planning_phases``
@@ -61,7 +62,7 @@ def main() -> None:
             built.append(fn(spark, sf_dir))
             return built[-1]
 
-        build_s, exec_s, errors = run_timed(
+        build_s, exec_s, errors, build_jobs = run_timed(
             spark, {name: build}, warmups=2, rounds=rounds)
         if errors:
             print(json.dumps({"query": name, "error": errors[name]}),
@@ -74,6 +75,7 @@ def main() -> None:
         print(json.dumps({
             "query": name,
             "build_min": min(build_s[name]), "build_all": build_s[name],
+            "build_jobs_all": build_jobs[name],
             "exec_min": min(exec_s[name]), "exec_all": exec_s[name],
             "tracker_phases_ms_last": phases,
         }), flush=True)

@@ -62,7 +62,7 @@ def main() -> None:
     out = {"cap": CAP, "rounds": ROUNDS, "sweep": {}}
     for sf_dir in sf_dirs:
         label = os.path.basename(sf_dir.rstrip("/"))
-        build_s, exec_s, errors = run_timed(
+        build_s, exec_s, errors, _ = run_timed(
             spark,
             {
                 "uncapped": lambda: _build(spark, sf_dir, None),

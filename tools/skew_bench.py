@@ -86,7 +86,7 @@ def _time(spark, builds: dict, rounds: int, results: dict) -> None:
     """Time ``builds`` (named ``<plan>@<fixture>``) over one warm-up and
     ``rounds`` interleaved rounds; store each best build-plus-write
     seconds as ``results[plan][fixture]``."""
-    build_s, exec_s, errors = run_timed(spark, builds, warmups=1, rounds=rounds)
+    build_s, exec_s, errors, _ = run_timed(spark, builds, warmups=1, rounds=rounds)
     if errors:
         raise RuntimeError(f"skew plans failed: {errors}")
     for name, samples in total_s(build_s, exec_s).items():

@@ -280,6 +280,25 @@ def rosify_dict(tree: Any):
 from pyspark.sql import types as T  # noqa: E402
 
 
+def as_nullable(dtype: T.DataType) -> T.DataType:
+    """``dtype`` with every field and element nullable, as Spark's file
+    sources read a written schema."""
+    if isinstance(dtype, T.StructType):
+        return T.StructType(
+            [
+                T.StructField(f.name, as_nullable(f.dataType), True, f.metadata)
+                for f in dtype.fields
+            ]
+        )
+    if isinstance(dtype, T.ArrayType):
+        return T.ArrayType(as_nullable(dtype.elementType), True)
+    if isinstance(dtype, T.MapType):
+        return T.MapType(
+            as_nullable(dtype.keyType), as_nullable(dtype.valueType), True
+        )
+    return dtype
+
+
 def _infer_type(value: Any) -> T.DataType:
     if value is None:
         return T.NullType()

@@ -74,7 +74,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from topic_store_spark.api import Storage, register_storage
-from topic_store_spark.codec import documents_to_rows, infer_schema, rows_to_arrow
+from topic_store_spark.codec import (
+    as_nullable,
+    documents_to_rows,
+    infer_schema,
+    rows_to_arrow,
+)
 from topic_store_spark.data import TopicStore
 
 logger = logging.getLogger(__name__)
@@ -248,25 +253,6 @@ def _file_key(files: list[str]) -> list[tuple[str, int, int]]:
     return [(p, st.st_size, st.st_mtime_ns) for p in files for st in (os.stat(p),)]
 
 
-def _as_nullable(dtype: T.DataType) -> T.DataType:
-    """``dtype`` with every field and element nullable, as Spark's file
-    sources read a written schema."""
-    if isinstance(dtype, T.StructType):
-        return T.StructType(
-            [
-                T.StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
-                for f in dtype.fields
-            ]
-        )
-    if isinstance(dtype, T.ArrayType):
-        return T.ArrayType(_as_nullable(dtype.elementType), True)
-    if isinstance(dtype, T.MapType):
-        return T.MapType(
-            _as_nullable(dtype.keyType), _as_nullable(dtype.valueType), True
-        )
-    return dtype
-
-
 @register_storage
 class ParquetStorage(Storage):
     """Append-only parquet collection (canonical store).
@@ -376,7 +362,7 @@ class ParquetStorage(Storage):
             if footer is None:
                 return False
             data = T.StructType([f for f in schema.fields if f.name not in parts])
-            if _as_nullable(T.StructType.fromJson(json.loads(footer))) != data:
+            if as_nullable(T.StructType.fromJson(json.loads(footer))) != data:
                 return False
         return True
 
@@ -434,7 +420,7 @@ class ParquetStorage(Storage):
                 # schema is the merged one: no mergeSchema job to learn it
                 files = _part_files(self.path)
                 if len(files) == 1:
-                    self._schema_cache = (_file_key(files), _as_nullable(schema))
+                    self._schema_cache = (_file_key(files), as_nullable(schema))
         return [s.id for s in stores]
 
     def write_df(self, df: DataFrame) -> None:

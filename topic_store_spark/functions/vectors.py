@@ -70,6 +70,15 @@ def quantize_vector(a: Column, scale: int = QUANT_SCALE) -> Column:
 # churned seconds of janino per plan.  Hence: SQL strings for the
 # build, the r12 fold semantics for execution, bit-identical results
 # by construction (it is the same expression tree after parsing).
+#
+# The same holds for per-element staging projections: building a
+# ``select`` of 32 ``F.slice(...).alias(...)`` Columns (``ann_pq``'s
+# sub-vector staging) measured ~97 ms of driver wall time, 68 ms of it
+# Python CPU (one py4j call per Column, literal and alias), against
+# ~10 ms (3 ms Python) for the same projection through one
+# ``selectExpr`` (warm, mean of 50 builds, local[2], 4 vCPUs).  So
+# ``PQCoder``'s stagings, its LUT array and ``permute_vectors`` are SQL
+# strings too; the parsed plans are byte-identical to the Column forms'.
 # ---------------------------------------------------------------------------
 
 

@@ -56,6 +56,7 @@ from topic_store_spark.functions.text import (
     shingles_from_tokens,
     tokens,
 )
+from topic_store_spark.functions.vectors import int_self_dot_sql
 from topic_store_spark.operators.similarity import (
     _cen_rank,
     _cosine_q,
@@ -67,6 +68,9 @@ from topic_store_spark.operators.similarity import (
     lsh_bucket_key_sql,
 )
 from topic_store_spark.operators.util import (
+    MAX_BUILD_ROWS,
+    BoundedCollectOverflow,
+    bounded_collect,
     cache_scope as pair_cache_scope,
     ensure_parallelism,
     explode_nonempty,
@@ -290,11 +294,16 @@ def _ordered_docs(sh: DataFrame, max_shingle_freq: int | None) -> DataFrame:
     """Persisted (doc, ss, sz): each doc's cap-filtered shingle keys as
     ONE array under the global (df asc, key asc) order — the relation
     every prefix scheme slices and every verification intersects.
-    Tracked for :func:`release_pair_caches`."""
+    Tracked for :func:`release_pair_caches`, as is the flat
+    ``(doc, shingle)`` relation it is rolled up from."""
     from topic_store_spark.functions.hashing import shingle_key60
 
-    flat = explode_nonempty(sh, "shs", "shingle", "doc").select(
-        "doc", shingle_key60(F.col("shingle")).alias("shingle")
+    # pinned: the df rollup and the join-back both read ``flat``, and
+    # unpinned each re-ran the normalize / shingle / md5-key subtree
+    flat = _persist_tracked(
+        explode_nonempty(sh, "shs", "shingle", "doc").select(
+            "doc", shingle_key60(F.col("shingle")).alias("shingle")
+        )
     )
     # document frequency as a keyed rollup + join-back, NOT a window
     # count: shingle df is Zipf-distributed, and `count over (partition
@@ -857,6 +866,20 @@ def _cosine_pairs(
     )
 
 
+def _pair_side(df: DataFrame, id_col: str, vec_col: str, **extra) -> DataFrame:
+    """The ``c`` :func:`_quantized` view of ``df`` that
+    :func:`_cosine_pairs` joins, its self-dot ``c_n`` behind a
+    :func:`project_once` barrier.  The
+    pair threshold's null-intolerant use of ``a_n``/``b_n`` makes
+    Catalyst infer ``isnotnull(c_n)``; unbarred, that predicate is
+    pushed below the staging into each scan's Filter (and the parquet
+    ``DataFilters``) with the self-dot and two quantize transforms
+    inlined — three quantize passes per row.  Behind the barrier the
+    predicate reads the once-computed value."""
+    q = _quantized(ensure_parallelism(df), id_col, vec_col, "c", **extra)
+    return project_once(q.drop("c_n"), c_n=F.expr(int_self_dot_sql("c_qv")))
+
+
 def embedding_dup_pairs_lsh(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -878,8 +901,8 @@ def embedding_dup_pairs_lsh(
     deterministic md5-derived, so the SQL oracle reproduces the exact
     pair set.  Each vector hashes to exactly one bucket, so every (a,b)
     pair appears at most once — no dedup shuffle needed."""
-    q = _quantized(
-        ensure_parallelism(df), id_col, vec_col, "c",
+    q = _pair_side(
+        df, id_col, vec_col,
         bucket=F.expr(lsh_bucket_key_sql(_q(vec_col), planes, dim)),
     )
     return _cosine_pairs(q, ["bucket"], threshold_num, threshold_den)
@@ -915,7 +938,7 @@ def embedding_dup_pairs(
                 f"embedding_dup_pairs_lsh (bucketed scale path) or pass "
                 f"max_rows=None to force."
             )
-    q = _quantized(ensure_parallelism(df), id_col, vec_col, "c")
+    q = _pair_side(df, id_col, vec_col)
     return _cosine_pairs(q, [], threshold_num, threshold_den)
 
 
@@ -958,20 +981,21 @@ def connected_components(
 
     1. **Driver-local** (raw pairs <= ``driver_max_edges`` = K): the
        verified pair graph is typically minuscule next to the corpus.
-       ONE eager ``limit(K+1).collect()`` of the raw ``(u, v)`` pair
+       ONE eager :func:`bounded_collect` of the raw ``(u, v)`` pair
        projection both picks the tier and fetches its input: when it
        returns at most K rows it is the complete pair multiset, so
        union-find AND the label relation are computed on the driver and
        returned as a local relation — no checkpoint, no distributed node
        join, one job total (the same bounded-collect logic as a
        broadcast join).  Driver memory envelope: at the default K = 2^20
-       the probe transiently holds <= 2^20+1 two-field Rows (~hundreds
-       of MB of Python objects worst-case, released after the
-       union-find; the label relation is <= 2 longs per distinct node).
+       the probe transiently holds <= 2^20 ``(u, v)`` pairs as an Arrow
+       table and two lists of Python ids, released after the
+       union-find (the label relation is <= 2 longs per distinct
+       node).
        Callers needing a smaller envelope pass a smaller
        ``driver_max_edges``.
-    2. **Distributed** (raw pairs > K): the probe rows are discarded (an
-       arbitrary subset, never used as input), the raw pair projection
+    2. **Distributed** (raw pairs > K): the probe's overflow is caught
+       (its rows, an arbitrary subset, are never used), the raw pair projection
        and then the canonical edge set are checkpointed, and the
        star-contraction rounds run.  Overflow cost: the pipeline that
        produced ``pairs`` runs twice — once for the probe and once more
@@ -987,12 +1011,15 @@ def connected_components(
     # below the bound returns every row, so the probe IS the complete
     # pair multiset; union-find labels are min-reachable-id under any
     # union order, so row order/duplicates are irrelevant.
-    raw = (
-        pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-        .limit(driver_max_edges + 1)
-        .collect()
-    )
-    if len(raw) <= driver_max_edges:
+    try:
+        raw = bounded_collect(
+            pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v")),
+            driver_max_edges,
+            "connected_components",
+        )
+    except BoundedCollectOverflow:
+        raw = None
+    if raw is not None:
         parent: dict = {}
 
         def find(x):
@@ -1004,8 +1031,8 @@ def connected_components(
             return r
 
         seen = set()
-        for row in raw:
-            u, v = row[0], row[1]
+        us, vs = raw.column("u").to_pylist(), raw.column("v").to_pylist()
+        for u, v in zip(us, vs):
             seen.add(u)
             seen.add(v)
             # null endpoints carry no connectivity (the distributed
@@ -1129,8 +1156,14 @@ def _semantic_assignment(
     :func:`semantic_bucket_audit` exposes the exact same sub-bucket
     assignment the pair join uses."""
     cen = _quantized(centroids, id_col, vec_col, "cen")
-    c = _quantized(ensure_parallelism(df), id_col, vec_col, "c")
+    # no round-robin spread of the input (``ensure_parallelism``): the
+    # cluster repartition below follows the per-row assignment, so a
+    # spread would move every vector twice, and cost one more eager
+    # stage in the pin's probe, to parallelize inputs with fewer files
+    # than cores
+    c = _quantized(df, id_col, vec_col, "c")
 
+    cen_rows = None
     if n_probe <= 1:
         # per-row argmax over the collected quantized centroid literals
         # — map-side assignment, no corpus-scale exchange (a groupBy
@@ -1144,7 +1177,9 @@ def _semantic_assignment(
         # checked against a brute-force reference in
         # tests/test_semantic_fuzz.py and by the oracle.
         ctype = cen.schema["cen_id"].dataType
-        cen_rows = cen.collect()
+        cen_rows = bounded_collect(
+            cen, MAX_BUILD_ROWS, "semantic_cluster_dedup centroids"
+        ).to_pylist()
         if not cen_rows:
             assigned = (
                 c.select(
@@ -1191,48 +1226,53 @@ def _semantic_assignment(
                 F.col("p.cen_id").alias("cluster_id"),
             )
         )
+    # the assignment is pinned HASH-PARTITIONED BY CLUSTER with its AQE
+    # plan finalized: both sides of every pair self-join (hash(cluster)
+    # is a subset of the (cluster, _sub) join keys, the same rule
+    # doc-keyed rollups ride), the bucket-audit rollup and the size
+    # rollup below then inherit the partitioning with NO further
+    # exchange.  One corpus-scale repartition buys every consumer;
+    # without it each pair join shuffled BOTH sides per branch
+    # (measured in the r13 fused-report plan: 7 at-scale exchanges ->
+    # 3).  The one pin also serves the sub-split: its size rollup reads
+    # the pin, and the sign bits are a projection over it that each
+    # consumer evaluates (a second pin of the sub-split relation would
+    # cost another eager job to expose its partitioning).
+    assigned = expose_cached_partitioning(
+        _persist_tracked(hash_partition(assigned, "cluster_id"))
+    )
     join_keys = ["cluster_id"]
     if max_cluster_size is not None:
-        # the size rollup and the dim probe both read the raw
-        # assignment before the sub-split reshapes it — pin it (same
-        # tracked lifecycle as minhash_lsh_pairs' persist; see
-        # release_pair_caches)
-        assigned = _persist_tracked(assigned)
         # sub-split oversized clusters: bucket count from the cluster's
-        # own size (a tiny per-centroid rollup off the pinned
-        # assignment, broadcast back); bucket id = the first
-        # ceil(log2(n_sub)) SIGN BITS of the deterministic hyperplane
-        # projections (near-parallel pairs co-bucket with ~0.9/bit,
-        # see docstring) — same vector, same bucket on every
-        # run/engine, so capped runs are reproducible.  16 planes cap
-        # the split at 65536 buckets per cluster.
-        # r12 ADVICE: an empty centroid relation means an empty
-        # assignment — skip the sub-split (the dim probe would be
-        # first() -> None) so the capped path degrades to the same
-        # empty pair set the uncapped path returns.  r13: a caller-pinned
-        # ``dim`` skips the eager first() probe outright (one less
-        # driver job in the build path); empty centroids then degrade
-        # through the size rollup instead (no cluster -> no sub-split).
+        # own size; bucket id = the first ceil(log2(n_sub)) SIGN BITS of
+        # the deterministic hyperplane projections (near-parallel pairs
+        # co-bucket with ~0.9/bit, see docstring) — same vector, same
+        # bucket on every run/engine, so capped runs are reproducible.
+        # 16 planes cap the split at 65536 buckets per cluster.  An
+        # empty centroid relation means an empty assignment: no
+        # sub-split, the same empty pair set the uncapped path returns.
         if dim is not None:
             vdim = dim
+        elif cen_rows is not None:
+            vdim = len(cen_rows[0]["cen_qv"]) if cen_rows else 0
         else:
             dim_row = centroids.select(vec_col).first()
             vdim = len(dim_row[0]) if dim_row and dim_row[0] is not None else 0
         if vdim > 0:
-            sizes = assigned.groupBy("cluster_id").agg(
-                F.count(F.lit(1)).alias("_csize")
-            )
             # r13: each sign bit is a 16-fold higher-order projection
-            # PER ROW — compute only the planes any cluster can use.
-            # The size rollup is bounded by the centroid count (same
-            # budget as the centroid collects), so the driver reads it
-            # once off the pinned assignment: max_bits =
-            # ceil(log2(ceil(max|c|/cap))), clamped to the 16-plane /
-            # 65536-bucket ceiling.  Prefixes are unchanged (plane p's
-            # bit never depends on the plane count), so capped outputs
-            # are identical to the all-16-planes form — measured r13:
-            # the capped sf0.1 carrier branch 3.7s -> ~2s.
-            size_rows = sizes.collect()
+            # PER ROW — compute only the planes any cluster can use:
+            # max_bits = ceil(log2(ceil(max|c|/cap))), clamped to the
+            # 16-plane / 65536-bucket ceiling.  Prefixes are unchanged
+            # (plane p's bit never depends on the plane count), so
+            # capped outputs are identical to the all-16-planes form —
+            # measured r13: the capped sf0.1 carrier branch 3.7s -> ~2s.
+            size_rows = bounded_collect(
+                assigned.groupBy("cluster_id").agg(
+                    F.count(F.lit(1)).alias("_csize")
+                ),
+                MAX_BUILD_ROWS,
+                "semantic_cluster_dedup cluster sizes",
+            ).to_pylist()
             max_sub = max(
                 (
                     max(-(-r["_csize"] // max_cluster_size), 1)
@@ -1248,17 +1288,12 @@ def _semantic_assignment(
                 b_bits = F.least(
                     F.ceil(F.log2(n_sub)).cast("int"), F.lit(16)
                 )
-                # r14: ``size_rows`` is already on the driver (the
-                # max_bits gate above collected it) — attach ``_csize``
-                # as a LITERAL MAP LOOKUP instead of re-joining the
-                # rollup: the r13 broadcast join re-ran the sizes
-                # aggregation (its own exchange + broadcast build)
-                # inside the final cache's materialization.  Every
-                # downstream op (n_sub / b_bits / substring) is the
-                # identical JVM expression over the identical exact
-                # counts, so sub-bucket keys are unchanged; every
-                # assigned cluster_id appears in size_rows by
-                # construction, matching the inner join's row set.
+                # r14: the sizes are already on the driver — ``_csize``
+                # is a LITERAL MAP LOOKUP, not a join back to the
+                # rollup.  Every downstream op (n_sub / b_bits /
+                # substring) is the identical JVM expression over the
+                # identical exact counts; every assigned cluster_id
+                # appears in size_rows by construction.
                 csize_map = F.create_map(
                     *[
                         lit
@@ -1280,19 +1315,6 @@ def _semantic_assignment(
                     .drop("_bits", "_csize")
                 )
                 join_keys = ["cluster_id", "_sub"]
-    # r13: the FINAL assignment (post-sub-split) is pinned
-    # HASH-PARTITIONED BY CLUSTER with its AQE plan finalized — both
-    # sides of every pair self-join (hash(cluster) is a subset of the
-    # (cluster, _sub) join keys, the same rule doc-keyed rollups ride)
-    # and the bucket-audit rollup then inherit the partitioning with
-    # NO further exchange.  One corpus-scale repartition buys every
-    # downstream consumer; without it each pair join shuffled BOTH
-    # sides per branch (measured in the r13 fused-report plan: 7
-    # at-scale exchanges -> 3).  Sign bits are computed once into the
-    # cache, not once per consumer.
-    assigned = expose_cached_partitioning(
-        _persist_tracked(hash_partition(assigned, "cluster_id"))
-    )
     return assigned, join_keys
 
 
@@ -1343,8 +1365,8 @@ def semantic_cluster_dedup(
     honest knob as the text family's ``max_shingle_freq``:
     correctness-exact runs leave it None, web-scale runs with frozen
     centroids set it to the largest size one task's pair scan absorbs.
-    Setting it runs one eager driver probe of the SMALL centroid
-    relation (vector dimension for the plane weights).
+    Setting it runs one eager, bounded size rollup off the pinned
+    assignment (the plane count), with no exchange.
 
     Recall caveat of ``n_probe=1`` (any single-assignment scheme): a
     near-dup pair split across two clusters is missed — near-identical

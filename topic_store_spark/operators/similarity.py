@@ -38,6 +38,7 @@ for bit.
 from __future__ import annotations
 
 import functools as _functools
+import math
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -48,6 +49,7 @@ from topic_store_spark.functions.vectors import (
     quantize_sql,
     quantize_vector,
 )
+from topic_store_spark.operators.util import MAX_BUILD_ROWS, bounded_collect
 
 #: Spark-SQL literal suffix per integral centroid-id type — the id
 #: literals :func:`argmax_best_sql` emits keep the centroid id dtype
@@ -513,14 +515,14 @@ def pq_codebooks(
     Returns ``codebooks[s][j] = quantized int sub-vector`` for use as
     literals in :func:`ivf_pq_ann_neighbors`.
     """
-    rows = (
+    rows = bounded_collect(
         sources.select(
             F.col(id_col).alias("_id"),
             quantize_vector(F.col(vec_col)).alias("_qv"),
-        )
-        .orderBy("_id")
-        .collect()
-    )
+        ).orderBy("_id"),
+        MAX_BUILD_ROWS,
+        "pq_codebooks",
+    ).to_pylist()
     if not rows:
         raise ValueError("pq_codebooks: empty source table")
     dim = len(rows[0]["_qv"])
@@ -558,9 +560,13 @@ def train_pq_codebooks(
         sliced = df.select(
             F.col(id_col), F.slice(F.col(vec_col), s * sub + 1, sub).alias("_sub")
         )
-        cen = kmeans_centroids(
-            sliced, k, max_iter=max_iter, id_col=id_col, vec_col="_sub"
-        ).orderBy("cen_id").collect()
+        cen = bounded_collect(
+            kmeans_centroids(
+                sliced, k, max_iter=max_iter, id_col=id_col, vec_col="_sub"
+            ).orderBy("cen_id"),
+            k,
+            "train_pq_codebooks",
+        ).to_pylist()
         books.append(
             [[int(round(x * 1000)) for x in r["embedding"]] for r in cen]
         )
@@ -603,12 +609,10 @@ class PQCoder:
         )
 
     def _stage_subs(self, df: DataFrame, vec_name: str, keep: list[str]) -> DataFrame:
-        return df.select(
-            *keep,
+        return df.selectExpr(
+            *map(_q, keep),
             *[
-                F.slice(F.col(vec_name), s * self.sub + 1, self.sub).alias(
-                    f"_sub{s}"
-                )
+                f"slice({_q(vec_name)}, {s * self.sub + 1}, {self.sub}) AS _sub{s}"
                 for s in range(self.m)
             ],
         )
@@ -618,14 +622,12 @@ class PQCoder:
         integer L2^2 from the staged sub-slice to every code.  Staging
         means the downstream argmin (codes) reads a materialized array
         instead of re-evaluating the 16-way distance transform twice."""
-        return df.select(
-            *keep,
+        return df.selectExpr(
+            *map(_q, keep),
             *[
-                F.expr(
-                    f"transform({self._book_sql(self.codebooks[s])}, cb -> "
-                    f"aggregate(zip_with(_sub{s}, cb, "
-                    "(x, y) -> (x - y) * (x - y)), 0L, (acc, v) -> acc + v))"
-                ).alias(f"_d{s}")
+                f"transform({self._book_sql(self.codebooks[s])}, cb -> "
+                f"aggregate(zip_with(_sub{s}, cb, "
+                f"(x, y) -> (x - y) * (x - y)), 0L, (acc, v) -> acc + v)) AS _d{s}"
                 for s in range(self.m)
             ],
         )
@@ -655,16 +657,16 @@ class PQCoder:
     def encode(self, df: DataFrame, vec_name: str, keep: list[str]) -> DataFrame:
         """``keep + (codes array<int>)``: per-subspace integer argmin
         (ties to the lower code id — array_position's first minimum)."""
-        return self._staged(df, vec_name, keep).select(
-            *keep, F.expr(self.codes_sql).alias("codes")
+        return self._staged(df, vec_name, keep).selectExpr(
+            *map(_q, keep), f"{self.codes_sql} AS codes"
         )
 
     def luts(self, df: DataFrame, vec_name: str, keep: list[str]) -> DataFrame:
         """``keep + (lut array<array<bigint>>)``: the ADC lookup table —
         exact integer L2^2 from the vector's sub-slices to every code."""
-        return self._staged(df, vec_name, keep).select(
-            *keep,
-            F.array(*[F.col(f"_d{s}") for s in range(self.m)]).alias("lut"),
+        subs = ", ".join(f"_d{s}" for s in range(self.m))
+        return self._staged(df, vec_name, keep).selectExpr(
+            *map(_q, keep), f"array({subs}) AS lut"
         )
 
 
@@ -908,7 +910,7 @@ def kmeans_centroids(
 def _variance_balanced_perm_of(vecs: list[list[int]]) -> list[int]:
     """The allocation rule of :func:`variance_balanced_permutation`,
     over already-quantized integer vectors (shared by the fused
-    :func:`opq_permuted_codebooks` so both paths use ONE formula)."""
+    :func:`opq_sample_codebooks` so both paths use ONE formula)."""
     dims = len(vecs[0])
     if dims % 2:
         raise ValueError("variance_balanced_permutation: even dim count only")
@@ -924,61 +926,90 @@ def _variance_balanced_perm_of(vecs: list[list[int]]) -> list[int]:
     return perm
 
 
-def opq_permuted_codebooks(
-    residuals: DataFrame,
+def opq_sample_codebooks(
+    sample: DataFrame,
+    centroids: DataFrame,
     m: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> tuple[list[int], list[list[list[int]]]]:
-    """Fused OPQ-permutation + PQ-codebook derivation from ONE bounded
-    collect of the residual training sample (r13 optimization round).
+    """Fused OPQ-permutation + PQ-codebook derivation from the residuals
+    of a training ``sample`` to its nearest ``centroids``, from ONE
+    bounded collect of both quantized relations and no exchange: both
+    are training sized (the codebook sample and the coarse centroid
+    table), so the residuals are computed on the driver.
 
-    Exactly equal to the composed pipeline it replaces —
-    ``perm = variance_balanced_permutation(residuals)`` followed by
-    ``pq_codebooks(ivf_residual_vectors(permute_vectors(corpus, perm),
-    permuted_centroids), m)`` — because every step commutes with the
-    permutation EXACTLY (pinned by tests/test_dedup_similarity.py
+    Exactly equal to the composed pipeline —
+    ``perm = variance_balanced_permutation(ivf_residual_vectors(sample,
+    centroids))`` followed by
+    ``pq_codebooks(ivf_residual_vectors(permute_vectors(sample, perm),
+    permute_vectors(centroids, perm)), m)`` (pinned by
+    tests/test_dedup_similarity.py
     ::test_opq_fused_codebooks_equal_composed):
 
-    - ``quantize_vector`` is per-element, so quantize∘permute =
-      permute∘quantize bit-for-bit;
-    - IVF assignment is permutation-invariant: the integer dot/self-dot
-      sums are the same multiset of ``long`` addends (exact regardless
-      of order), so every affinity double — and hence every
-      argmax/tie-break on ``(aff, -cen_id)`` — is IDENTICAL;
-    - the residual is an element-wise integer subtract, so the permuted
-      pipeline's residual ints are the permutation of the unpermuted
-      residual ints;
-    - ``pq_codebooks`` would re-quantize the residual floats
-      (``ints/1000.0``), which recovers the ints exactly (the
-      established grid contract ``round((i/1000.0)*1000.0) == i``).
+    - the vectors are quantized by the JVM with the same
+      ``quantize_sql``, and quantization is per-element, so
+      quantize∘permute = permute∘quantize bit-for-bit;
+    - the nearest centroid maximizes ``(dot / sqrt(|cen|^2), -cen_id)``
+      over exact integer dots, and Python's int-to-double conversion,
+      ``sqrt`` and division are the same correctly rounded IEEE
+      operations as Spark's, so every affinity and tie-break is the one
+      ``ivf_residual_vectors`` computes; the assignment is
+      permutation-invariant (the dot sums are the same multiset of
+      exact integer addends);
+    - the residual is an element-wise integer subtract, so permuting it
+      equals subtracting permuted vectors, and ``pq_codebooks``'
+      re-quantization of the residual floats (``ints/1000.0``) recovers
+      the ints exactly (the grid contract ``round((i/1000.0)*1000.0) ==
+      i``).
 
-    The composed form costs TWO eager driver jobs on every DataFrame
-    build (the permutation's collect + the codebook collect, each a
-    crossJoin/groupBy residual computation); this costs one.  The
-    Python-side int conversion is shared with
-    :func:`variance_balanced_permutation` so the allocation rule cannot
-    drift between the two paths.
+    The composed form costs two eager residual computations per build,
+    each a broadcast, an assignment exchange and a sort.  ``sample`` ids
+    are assumed unique.
 
     Returns ``(perm, codebooks)`` with ``codebooks[s][j]`` the ``s``-th
     sub-slice of the ``j``-th PERMUTED residual (ordered by id, exactly
     :func:`pq_codebooks`' layout).
     """
-    qv = F.expr(quantize_sql(_q(vec_col))).alias("_qv")
-    rows = (
-        residuals.select(F.col(id_col).alias("_id"), qv)
-        .orderBy("_id")
-        .collect()
-    )
-    if not rows:
-        raise ValueError("opq_permuted_codebooks: empty source table")
-    vecs = [list(r["_qv"]) for r in rows]
+
+    def side(df: DataFrame, tag: int) -> DataFrame:
+        return df.select(
+            F.lit(tag).alias("_side"),
+            F.col(id_col).alias("_id"),
+            F.expr(quantize_sql(_q(vec_col))).alias("_qv"),
+        )
+
+    rows = bounded_collect(
+        side(sample, 0).unionByName(side(centroids, 1)),
+        MAX_BUILD_ROWS,
+        "opq_sample_codebooks",
+    ).to_pylist()
+    cens = [
+        (r["_id"], r["_qv"], math.sqrt(sum(x * x for x in r["_qv"])))
+        for r in rows
+        if r["_side"] == 1 and r["_qv"] is not None
+    ]
+    rows.sort(key=lambda r: r["_id"])
+    vecs = [r["_qv"] for r in rows if r["_side"] == 0]
+    if not vecs or not cens:
+        raise ValueError("opq_sample_codebooks: empty sample or centroid table")
+    if any(v is None for v in vecs):
+        raise ValueError("opq_sample_codebooks: null sample vector")
     dims = len(vecs[0])
     if dims % m != 0:
-        raise ValueError(f"opq_permuted_codebooks: dim {dims} not divisible by m={m}")
-    perm = _variance_balanced_perm_of(vecs)
+        raise ValueError(f"opq_sample_codebooks: dim {dims} not divisible by m={m}")
+
+    def affinity(vec: list[int], cen) -> tuple[float, int]:
+        cid, cv, root = cen
+        return sum(x * y for x, y in zip(vec, cv)) / root, -cid
+
+    residuals = []
+    for vec in vecs:
+        best = max(cens, key=lambda cen: affinity(vec, cen))[1]
+        residuals.append([x - y for x, y in zip(vec, best)])
+    perm = _variance_balanced_perm_of(residuals)
     sub = dims // m
-    permuted = [[v[p] for p in perm] for v in vecs]
+    permuted = [[v[p] for p in perm] for v in residuals]
     books = [
         [v[s * sub : (s + 1) * sub] for v in permuted] for s in range(m)
     ]
@@ -1006,11 +1037,13 @@ def variance_balanced_permutation(
     vectors in the carried config) residual relation from
     `ivf_residual_vectors`; the collect here is the same bounded
     driver-side step the codebook derivation already takes."""
-    rows = residuals.select(vec_col).collect()
+    rows = bounded_collect(
+        residuals.select(vec_col), MAX_BUILD_ROWS, "variance_balanced_permutation"
+    ).to_pylist()
     if not rows:
         raise ValueError("variance_balanced_permutation: empty sample")
     vecs = [
-        [int(round(x * 1000.0)) for x in r[0]] for r in rows
+        [int(round(x * 1000.0)) for x in r[vec_col]] for r in rows
     ]  # back to the exact integer grid
     return _variance_balanced_perm_of(vecs)
 
@@ -1020,10 +1053,8 @@ def permute_vectors(
 ) -> DataFrame:
     """Apply a dimension permutation to a vector column — one JVM-side
     array rebuild, exact for any value (no float arithmetic at all)."""
-    col = F.col(vec_col)
-    return df.withColumn(
-        vec_col, F.array(*[F.element_at(col, i + 1) for i in perm])
-    )
+    cells = ", ".join(f"element_at({_q(vec_col)}, {i + 1})" for i in perm)
+    return df.withColumn(vec_col, F.expr(f"array({cells})"))
 
 
 def train_opq_rotation(

@@ -213,6 +213,39 @@ def expose_cached_partitioning(df: DataFrame) -> DataFrame:
     return df
 
 
+#: the row bound of every build-time collect (centroids, codebooks,
+#: training samples, per-cluster sizes): facts an operator learns on the
+#: driver while it builds a plan are sized by a model parameter, never
+#: by the corpus
+MAX_BUILD_ROWS = 1 << 16
+
+
+class BoundedCollectOverflow(ValueError):
+    """A build-time collect found more than its row bound."""
+
+    def __init__(self, operator: str, max_rows: int) -> None:
+        self.operator, self.max_rows = operator, max_rows
+        super().__init__(
+            f"{operator}: build-time collect exceeds max_rows={max_rows}"
+        )
+
+
+def bounded_collect(df: DataFrame, max_rows: int, operator: str):
+    """``df``'s rows as a ``pyarrow.Table``, or
+    :class:`BoundedCollectOverflow` naming ``operator`` and ``max_rows``
+    when it has more than ``max_rows``.
+
+    One Spark job: ``limit(max_rows + 1).toArrow()`` runs the limit as a
+    single job however many partitions ``df`` has (its gather shuffle is
+    a stage of that job), where ``collect()`` of a limit scans partitions
+    in growing batches, one job per batch, whenever the result fits; and
+    the limit keeps an oversized input from reaching the driver."""
+    table = df.limit(max_rows + 1).toArrow()
+    if table.num_rows > max_rows:
+        raise BoundedCollectOverflow(operator, max_rows)
+    return table
+
+
 def release_tracked_caches() -> None:
     """Unpersist every UNSCOPED tracked intermediate.  Idempotent;
     relations pinned inside an active :class:`cache_scope` are owned by
