@@ -386,14 +386,20 @@ def test_expression_operators_compile(spark, probe_df):
 def test_group_accumulators_compile(spark, probe_df):
     from topic_store_spark.query.pipeline import apply_pipeline
 
+    containers = {
+        "$group": lambda probe: {"_id": None, "x": probe},
+        "$bucket": lambda probe: {"groupBy": "$n", "boundaries": [0, 100],
+                                  "default": "o", "output": {"x": probe}},
+        "$bucketAuto": lambda probe: {"groupBy": "$n", "buckets": 2,
+                                      "output": {"x": probe}},
+    }
     failures = []
     for op, probe in GROUP_PROBES.items():
-        try:
-            apply_pipeline(
-                probe_df, [{"$group": {"_id": None, "x": probe}}]
-            )
-        except Exception as exc:  # noqa: BLE001
-            failures.append((op, repr(exc)[:120]))
+        for stage, spec in containers.items():
+            try:
+                apply_pipeline(probe_df, [{stage: spec(probe)}])
+            except Exception as exc:  # noqa: BLE001
+                failures.append((stage, op, repr(exc)[:120]))
     assert not failures, f"{len(failures)} accumulators broke: {failures}"
 
 

@@ -197,6 +197,10 @@ def test_pipeline_group_multi_key(orders):
     )
     assert set(out.columns) == {"st", "pr", "n"}
     assert out.agg(F.sum("n")).first()[0] == orders.count()
+    # no accumulator: the keys come back alone (Mongo), no count column
+    keys = apply_pipeline(orders, [{"$group": {"_id": "$o_orderstatus"}}])
+    assert keys.columns == ["_id"]
+    assert keys.count() == orders.select("o_orderstatus").distinct().count()
 
 
 def test_pipeline_lookup_and_unwind(spark):
@@ -386,6 +390,108 @@ def test_pipeline_bucket_no_default_drops(spark):
         df, [{"$bucket": {"groupBy": "$x", "boundaries": [0, 10]}}]
     ).collect()
     assert [(r["_id"], r["count"]) for r in out] == [(0, 1)]
+
+
+def test_pipeline_bucket_matches_group_accumulators(spark):
+    """$bucket and $bucketAuto compile their outputs with $group's
+    accumulator compiler: $mergeObjects works, an output with two
+    operators is refused, and a missing path is NULL, never an
+    analysis error."""
+    from topic_store_spark.query.pipeline import apply_pipeline
+
+    df = spark.createDataFrame(
+        [(1, (1, None)), (2, (None, "x")), (30, (3, None))],
+        "x int, st struct<u: long, w: string>",
+    )
+    merged = apply_pipeline(df, [{"$bucket": {
+        "groupBy": "$x", "boundaries": [0, 10],
+        "output": {"m": {"$mergeObjects": "$st"}},
+    }}]).collect()
+    assert [(r["_id"], r["m"].asDict()) for r in merged] == [
+        (0, {"u": 1, "w": "x"})]
+
+    two_ops = {"m": {"$max": "$x", "$min": "$x"}}
+    with pytest.raises(ValueError, match="bad accumulator"):
+        apply_pipeline(df, [{"$group": {"_id": None, **two_ops}}])
+    with pytest.raises(ValueError, match="bad accumulator"):
+        apply_pipeline(df, [{"$bucket": {
+            "groupBy": "$x", "boundaries": [0, 10], "output": two_ops}}])
+    with pytest.raises(ValueError, match="bad accumulator"):
+        apply_pipeline(df, [{"$bucketAuto": {
+            "groupBy": "$x", "buckets": 2, "output": two_ops}}])
+
+    missing = apply_pipeline(df, [{"$bucket": {
+        "groupBy": "$nope", "boundaries": [0, 10], "default": "other"}}])
+    assert [(r["_id"], r["count"]) for r in missing.collect()] == [("other", 3)]
+    auto = apply_pipeline(df, [{"$bucketAuto": {
+        "groupBy": "$x", "buckets": 1, "output": {"mx": {"$max": "$nope"}}}}])
+    assert [r["mx"] for r in auto.collect()] == [None]
+    root = apply_pipeline(df, [{"$replaceRoot": {"newRoot": {"y": "$nope"}}}])
+    assert [r["y"] for r in root.collect()] == [None] * 3
+    counts = apply_pipeline(df, [{"$sortByCount": "$nope"}]).collect()
+    assert [(r["_id"], r["count"]) for r in counts] == [(None, 3)]
+
+
+def _nested_docs(spark):
+    return spark.createDataFrame(
+        [(1, (10, "a")), (2, (20, None)), (3, (30, None))],
+        "k int, r struct<a: long, b: string>",
+    )
+
+
+def _columns_and_rows(df, stage):
+    from topic_store_spark.query.pipeline import apply_pipeline
+
+    out = apply_pipeline(df, [stage])
+    rows = [r.asDict(recursive=True) for r in out.orderBy("k").collect()]
+    return out.columns, rows
+
+
+def test_add_fields_dotted_output_writes_nested_field(spark):
+    """A dotted $addFields/$set/$project output writes into the nested
+    document (it used to add a top-level column literally named
+    ``r.c``); writing under a missing document, or two overlapping
+    output paths, refuse loudly."""
+    from topic_store_spark.query.pipeline import apply_pipeline
+
+    df = _nested_docs(spark)
+    cols, got = _columns_and_rows(df, {"$addFields": {"r.c": {"$add": ["$k", 1]}}})
+    assert cols == ["k", "r"]
+    assert [r["r"] for r in got] == [
+        {"a": 10, "b": "a", "c": 2}, {"a": 20, "b": None, "c": 3},
+        {"a": 30, "b": None, "c": 4},
+    ]
+    _, got = _columns_and_rows(df, {"$project": {"r.a": 1, "r.c": "$k"}})
+    assert [r["r"] for r in got] == [{"a": 10, "c": 1}, {"a": 20, "c": 2},
+                                     {"a": 30, "c": 3}]
+    with pytest.raises(ValueError, match="no document 'q'"):
+        apply_pipeline(df, [{"$set": {"q.c": 1}}])
+    with pytest.raises(ValueError, match="conflicting output paths"):
+        apply_pipeline(df, [{"$addFields": {"r": 1, "r.c": 2}}])
+
+
+def test_set_window_fields_dotted_output_writes_nested_field(spark):
+    cols, got = _columns_and_rows(_nested_docs(spark), {"$setWindowFields": {
+        "sortBy": {"k": 1}, "output": {"r.b": {"$locf": "$r.b"}}}})
+    assert cols == ["k", "r"]
+    assert [r["r"] for r in got] == [
+        {"a": 10, "b": "a"}, {"a": 20, "b": "a"}, {"a": 30, "b": "a"}]
+
+
+def test_fill_dotted_output_writes_nested_field(spark):
+    """$fill method and value outputs with dotted names write the nested
+    field (a method output used to do nothing), and a value output for a
+    field the stream lacks is added, as Mongo does."""
+    df = _nested_docs(spark)
+    cols, got = _columns_and_rows(df, {"$fill": {
+        "sortBy": {"k": 1}, "output": {"r.b": {"method": "locf"}}}})
+    assert cols == ["k", "r"]
+    assert [r["r"]["b"] for r in got] == ["a", "a", "a"]
+
+    cols, got = _columns_and_rows(df, {"$fill": {
+        "output": {"r.b": {"value": "z"}, "n": {"value": 0}}}})
+    assert cols == ["k", "r", "n"]
+    assert [(r["r"]["b"], r["n"]) for r in got] == [("a", 0), ("z", 0), ("z", 0)]
 
 
 def test_pipeline_out_and_merge(spark, tmp_path):
@@ -2465,14 +2571,20 @@ def test_linear_fill_repeated_sort_key_raises(spark):
         [(1, 0, 10.0), (1, 1, None), (1, 1, 30.0), (1, 2, 20.0)],
         "g int, k int, v double",
     )
-    with pytest.raises(Exception, match="repeated sortBy"):
-        apply_pipeline(
-            df,
-            [{"$setWindowFields": {
-                "partitionBy": "$g", "sortBy": {"k": 1},
-                "output": {"li": {"$linearFill": "$v"}},
-            }}],
-        ).collect()
+    stages = [
+        {"$setWindowFields": {
+            "partitionBy": "$g", "sortBy": {"k": 1},
+            "output": {"li": {"$linearFill": "$v"}},
+        }},
+        # $fill linear desugars to the same $linearFill, so it raises too
+        {"$fill": {
+            "partitionBy": "$g", "sortBy": {"k": 1},
+            "output": {"v": {"method": "linear"}},
+        }},
+    ]
+    for stage in stages:
+        with pytest.raises(Exception, match="repeated sortBy"):
+            apply_pipeline(df, [stage]).collect()
 
 
 def test_linear_fill_null_first_sort_key_is_not_a_duplicate(spark):
@@ -2842,9 +2954,9 @@ def test_range_window_fractional(spark):
     non-integral bounds ride Spark SQL's RANGE frame, rendered over
     pre-projected temp columns (the DataFrame API's rangeBetween is
     long-only).  Membership is value-based and inclusive both ends,
-    direction-free under descending sort; comparator-lambda
-    accumulators refuse loudly (lambdas don't survive the SQL
-    rendering)."""
+    direction-free under descending sort; the n-ary accumulators
+    collect over the SQL frame and sort/slice with their comparator
+    lambdas outside it."""
     from topic_store_spark.query.pipeline import apply_pipeline
 
     df = spark.createDataFrame(
@@ -2876,13 +2988,17 @@ def test_range_window_fractional(spark):
     ).collect()}
     assert rows3 == {1: 10, 2: 30, 4: 40}
 
-    # n-ary accumulators refuse on the SQL-frame path
-    with pytest.raises(NotImplementedError, match="fractional range"):
-        apply_pipeline(df, [{"$setWindowFields": {
-            "partitionBy": "$g", "sortBy": {"k": 1},
-            "output": {"t": {"$topN": {"sortBy": {"v": 1}, "output": "$v",
-                                       "n": 2},
-                             "window": {"range": [-1.5, 0.5]}}}}}])
+    # n-ary accumulators on the SQL-frame path
+    nary = apply_pipeline(df, [{"$setWindowFields": {
+        "partitionBy": "$g", "sortBy": {"k": 1},
+        "output": {"t": {"$topN": {"sortBy": {"v": 1}, "output": "$v",
+                                   "n": 2},
+                         "window": {"range": [-1.5, 0.5]}},
+                   "b": {"$bottom": {"sortBy": {"v": 1}, "output": "$v"},
+                         "window": {"range": [-1.5, 0.5]}}}}}])
+    assert {(r["g"], r["k"]): (r["t"], r["b"]) for r in nary.collect()} == {
+        (1, 1.0): ([10], 10), (1, 2.2): ([10, 20], 20),
+        (1, 2.9): ([20, 40], 40), (1, 10.5): ([7], 7), (2, 0.5): ([3], 3)}
 
 
 def test_range_window_unit_rejects_fractional_bounds(spark):

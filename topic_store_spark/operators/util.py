@@ -197,10 +197,13 @@ def expose_cached_partitioning(df: DataFrame) -> DataFrame:
     runs EAGERLY as its own job, after which ``isFinalPlan=true`` and
     hash(key) satisfies downstream clustered distributions with no
     further exchange (the mechanism the unigram carrier has leaned on
-    via ``ensure_parallelism``'s probe since r11).
+    via ``ensure_parallelism``'s probe since r11).  The probe also
+    builds the whole cache in a job of its own (a ``javaToPython``
+    stage, one task per partition), so each call costs that job too
+    before any consumer runs.
 
     The trade is explicit: call this ONLY when (a) the relation is
-    persisted (the eager stage's output is what later consumers read —
+    persisted (the eagerly built cache is what later consumers read —
     nothing is computed twice) and (b) at least two downstream
     consumers key on the pinned columns (one consumer can just wear
     its own exchange).  On Spark Connect there is no ``.rdd``; the

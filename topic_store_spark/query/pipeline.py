@@ -1829,58 +1829,60 @@ def _zip_arrays(arg: dict, vars_) -> Column:
     return F.when(any_null, F.lit(None)).otherwise(body)
 
 
-def _attach_computed(df: DataFrame, computed: dict[str, Any]) -> DataFrame:
-    """Attach computed fields in a single ``select`` so every expression
-    evaluates against the stage's INPUT document (Mongo semantics for
-    ``$project``/``$addFields``): a field that shadows an input column
-    overwrites it in place, but sibling expressions still read the input."""
-    if not computed:
-        return df
-    with _schema_scope(df.schema):
-        exprs = {
-            name: compile_value(spec) for name, spec in computed.items()
-        }
+def _attach(
+    df: DataFrame, exprs: dict[str, Column], columns: list[str] | None = None
+) -> DataFrame:
+    """Select ``columns`` (default: all of ``df``'s) with the computed
+    ``exprs`` attached in ONE ``select``, so every expression reads the
+    stage's INPUT document — Mongo's rule for ``$project``/``$addFields``
+    and ``$setWindowFields`` outputs: a field that shadows an input
+    column overwrites it in place, but sibling expressions still read
+    the input.  A dotted name writes into the nested document
+    (``withField`` over quoted segments); writing under a MISSING
+    top-level document refuses loudly (Mongo would create it)."""
+    columns = df.columns if columns is None else columns
+    names = list(exprs)
+    for i, a in enumerate(names):
+        for b in names[i + 1:]:
+            if _path_overlaps(a, b):
+                raise ValueError(f"conflicting output paths {a!r} and {b!r}")
+    top: dict[str, Column] = {}
+    for name, e in exprs.items():
+        head, dot, rest = name.partition(".")
+        if not dot:
+            top[name] = e
+            continue
+        if head not in columns:
+            raise ValueError(
+                f"cannot write {name!r}: there is no document {head!r} "
+                "to write it into"
+            )
+        path = ".".join(f"`{p}`" for p in rest.split("."))
+        top[head] = top.get(head, F.col(f"`{head}`")).withField(path, e)
     cols = [
-        exprs[c].alias(c) if c in exprs else F.col(f"`{c}`")
-        for c in df.columns
+        top[c].alias(c) if c in top else F.col(f"`{c}`") for c in columns
     ]
-    cols += [e.alias(n) for n, e in exprs.items() if n not in df.columns]
+    cols += [e.alias(n) for n, e in top.items() if n not in columns]
     return df.select(*cols)
 
 
-#: Mongo accumulator semantics vs SQL aggregates, where they differ:
-#: - $sum skips non-numeric/missing and returns 0 (never null) when
-#:   nothing numeric was seen — SQL SUM would return NULL;
-#: - $push/$addToSet KEEP null elements — collect_list/collect_set drop
-#:   them, so elements ride inside a struct and unwrap after.
-#: $avg/$min/$max ignore nulls and null out on empty input in both
-#: worlds; $first/$last take the first/last document's value even when
-#: it is null (ignorenulls=False).
-#: raw aggregate per accumulator, split from its FINISHER so the window
-#: path can apply `.over(frame)` to the bare aggregate first (Spark
-#: rejects `coalesce(sum(c), 0).over(w)`); the groupBy path composes
-#: finish(raw(c)) directly.
-_ACC_RAW = {
-    "$sum": lambda c: F.sum(c),
-    "$avg": lambda c: F.avg(c),
-    "$min": lambda c: F.min(c),
-    "$max": lambda c: F.max(c),
-    "$first": lambda c: F.first(c, ignorenulls=False),
-    "$last": lambda c: F.last(c, ignorenulls=False),
-    "$push": lambda c: F.collect_list(F.struct(c.alias("v"))),
-    "$addToSet": lambda c: F.collect_list(F.struct(c.alias("v"))),
-    "$stdDevPop": lambda c: F.stddev_pop(c),
-    "$stdDevSamp": lambda c: F.stddev_samp(c),
-}
-
-#: Mongo accumulator semantics vs SQL aggregates, where they differ:
+#: Mongo accumulator -> Spark SQL aggregate name: the one table the
+#: Column path and the fractional-frame SQL path both render from.
+#: Where Mongo and SQL differ, the finisher repairs the aggregate:
 #: - $sum skips non-numeric/missing and returns 0 (never null) when
 #:   nothing numeric was seen — SQL SUM would return NULL;
 #: - $push/$addToSet KEEP null elements — collect_list/collect_set drop
 #:   them, so elements ride inside a struct and unwrap in the finisher.
 #: $avg/$min/$max ignore nulls and null out on empty input in both
 #: worlds; $first/$last take the first/last document's value even when
-#: it is null (ignorenulls=False).
+#: it is null (SQL first/last default to ignoreNulls=false).
+_ACC_SQL = {
+    "$sum": "sum", "$avg": "avg", "$min": "min", "$max": "max",
+    "$first": "first", "$last": "last",
+    "$push": "collect_list", "$addToSet": "collect_list",
+    "$stdDevPop": "stddev_pop", "$stdDevSamp": "stddev_samp",
+}
+
 _ACC_FINISH = {
     "$sum": lambda c: F.coalesce(c, F.lit(0)),
     "$push": lambda c: F.transform(c, lambda s: s["v"]),
@@ -1889,69 +1891,88 @@ _ACC_FINISH = {
     ),
 }
 
-_ACCUMULATORS = {
-    op: (lambda raw=raw, fin=_ACC_FINISH.get(op, lambda c: c): (
-        lambda c: fin(raw(c))
-    ))()
-    for op, raw in _ACC_RAW.items()
-}
+
+def _identity(c: Column) -> Column:
+    return c
+
+
+def _aggregate(name: str, *args: Any) -> Column:
+    """The bare SQL aggregate ``name(args...)``; Python scalars and lists
+    of them become literals.  The ``call`` of :func:`_accumulator` for
+    grouped outputs."""
+    return F.call_function(
+        name, *[a if isinstance(a, Column) else F.lit(a) for a in args]
+    )
+
+
+def _accumulator(op: str, arg: Any, call=_aggregate) -> tuple[Column, Any]:
+    """A Mongo accumulator as ``(raw, finish)``: ``raw`` is its SQL
+    aggregate, built through ``call(name, *args)``, and ``finish`` the
+    Mongo-semantics repair applied on top.  ``$group``, ``$bucket`` and
+    ``$bucketAuto`` take the bare aggregate; ``$setWindowFields`` passes
+    a ``call`` that applies the window frame, so the finisher wraps the
+    WINDOWED aggregate (Spark rejects ``coalesce(sum(c), 0).over(w)``)."""
+    if op == "$count" or (op == "$sum" and arg == 1):
+        return call("count", 1), _identity
+    if op in ("$median", "$percentile"):
+        return _percentile_agg(op, arg, call), _identity
+    if op in _NARY_ACCS:
+        return _nary_acc(op, arg, call)
+    if op == "$mergeObjects":
+        return _merge_objects_acc(arg, call), _identity
+    if op in _ACC_SQL:
+        c = compile_value(arg)
+        if op in ("$push", "$addToSet"):
+            c = F.struct(c.alias("v"))
+        return call(_ACC_SQL[op], c), _ACC_FINISH.get(op, _identity)
+    raise ValueError(f"unsupported accumulator: {op}")
+
+
+def _accumulate(
+    df: DataFrame, keys: list[str], outputs: dict[str, Any], *extra: Column
+) -> DataFrame:
+    """``df`` grouped by the ``keys`` columns with one aggregate per Mongo
+    accumulator output (after the ``extra`` aggregates) — the output
+    loop of ``$group``, ``$bucket`` and ``$bucketAuto``.  With no
+    aggregate at all the keys come back alone, like Mongo's ``$group``
+    with only ``_id``."""
+    aggs = list(extra)
+    for name, acc in outputs.items():
+        if not isinstance(acc, dict) or len(acc) != 1:
+            raise ValueError(f"bad accumulator for {name}: {acc!r}")
+        raw, finish = _accumulator(*next(iter(acc.items())))
+        aggs.append(finish(raw).alias(name))
+    grouped = df.groupBy(*keys)
+    if aggs:
+        return grouped.agg(*aggs)
+    return grouped.agg(F.count(F.lit(1)).alias("__ts_rows")).drop("__ts_rows")
 
 
 def _compile_group(df: DataFrame, spec: dict[str, Any]) -> DataFrame:
-    with _schema_scope(df.schema):
-        return _compile_group_scoped(df, spec)
-
-
-def _compile_group_scoped(df: DataFrame, spec: dict[str, Any]) -> DataFrame:
     key_expr = spec["_id"]
+    outputs = {k: v for k, v in spec.items() if k != "_id"}
     if key_expr is None:
-        grouped = df.groupBy()
-        key_cols: list[str] = []
-    elif isinstance(key_expr, dict) and not any(
+        return _accumulate(df, [], outputs)
+    if isinstance(key_expr, dict) and not any(
         k.startswith("$") for k in key_expr
     ):
         # scratch names so a key alias that shadows an input column (e.g.
         # {"lang": "$lang"}) never creates a duplicate/ambiguous column
-        keys = [
-            compile_value(v).alias(f"_gk_{k}") for k, v in key_expr.items()
-        ]
-        df = df.select(*keys, "*")
-        grouped = df.groupBy(*[f"_gk_{k}" for k in key_expr])
-        key_cols = [str(k) for k in key_expr]
-    else:
-        df = df.withColumn("_id__group", compile_value(key_expr))
-        grouped = df.groupBy("_id__group")
-        key_cols = ["_id__group"]
-
-    aggs = []
-    for name, acc in spec.items():
-        if name == "_id":
-            continue
-        if not isinstance(acc, dict) or len(acc) != 1:
-            raise ValueError(f"bad accumulator for {name}: {acc!r}")
-        op, arg = next(iter(acc.items()))
-        if op == "$count" or (op == "$sum" and arg == 1):
-            aggs.append(F.count(F.lit(1)).alias(name))
-        elif op in ("$median", "$percentile"):
-            aggs.append(_percentile_agg(op, arg).alias(name))
-        elif op in _NARY_ACCS:
-            raw, fin = _nary_acc(op, arg)
-            aggs.append(fin(raw).alias(name))
-        elif op == "$mergeObjects":
-            aggs.append(_merge_objects_acc(arg).alias(name))
-        elif op in _ACCUMULATORS:
-            aggs.append(_ACCUMULATORS[op](compile_value(arg)).alias(name))
-        else:
-            raise ValueError(f"unsupported accumulator: {op}")
-    out = grouped.agg(*aggs) if aggs else grouped.agg(F.count(F.lit(1)).alias("count"))
-    if key_cols == ["_id__group"]:
-        out = out.withColumnRenamed("_id__group", "_id")
-    elif key_cols:
-        out = out.withColumnsRenamed({f"_gk_{k}": k for k in key_cols})
-    return out
+        keys = [f"_gk_{k}" for k in key_expr]
+        df = df.select(
+            *[compile_value(v).alias(f"_gk_{k}") for k, v in key_expr.items()],
+            "*",
+        )
+        return _accumulate(df, keys, outputs).withColumnsRenamed(
+            {f"_gk_{k}": str(k) for k in key_expr}
+        )
+    df = df.withColumn("_id__group", compile_value(key_expr))
+    return _accumulate(df, ["_id__group"], outputs).withColumnRenamed(
+        "_id__group", "_id"
+    )
 
 
-def _merge_objects_acc(arg: Any) -> Column:
+def _merge_objects_acc(arg: Any, call) -> Column:
     """``$mergeObjects`` as a GROUP accumulator: merge the group's
     documents, later fields overwriting — per FIELD, the last non-null
     value wins (the fixed schema cannot distinguish a missing field,
@@ -1976,14 +1997,11 @@ def _merge_objects_acc(arg: Any) -> Column:
         )
     col = compile_value(arg)
     return F.struct(
-        *[
-            F.last(col[f.name], ignorenulls=True).alias(f.name)
-            for f in t.fields
-        ]
+        *[call("last", col[f.name], True).alias(f.name) for f in t.fields]
     )
 
 
-def _percentile_agg(op: str, arg: Any) -> Column:
+def _percentile_agg(op: str, arg: Any, call) -> Column:
     """``$median`` / ``$percentile`` (Mongo 7 accumulators).  Mongo's
     'approximate' method is t-digest; the dialect computes the EXACT
     continuous percentile instead (Spark ``percentile`` — deterministic,
@@ -2001,17 +2019,16 @@ def _percentile_agg(op: str, arg: Any) -> Column:
     if not isinstance(arg, dict) or "input" not in arg:
         raise ValueError(f"{op} requires {{input: ...}}")
     col = compile_value(arg["input"]).cast("double")
-    if "accuracy" in arg:
-        acc = int(arg["accuracy"])
-        pct = lambda p: F.percentile_approx(col, F.lit(p), acc)  # noqa: E731
-    else:
-        pct = lambda p: F.percentile(col, F.lit(p))  # noqa: E731
     if op == "$median":
-        return pct(0.5)
-    ps = arg["p"]
-    if not isinstance(ps, list) or not ps:
-        raise ValueError("$percentile requires a non-empty p array")
-    return F.array(*[pct(float(p)) for p in ps])
+        p = 0.5
+    else:
+        p = arg["p"]
+        if not isinstance(p, list) or not p:
+            raise ValueError("$percentile requires a non-empty p array")
+        p = [float(x) for x in p]
+    if "accuracy" in arg:
+        return call("percentile_approx", col, p, int(arg["accuracy"]))
+    return call("percentile", col, p)
 
 
 _NARY_ACCS = {
@@ -2020,10 +2037,9 @@ _NARY_ACCS = {
 }
 
 
-def _nary_acc(op: str, arg: Any) -> tuple[Column, Any]:
-    """N-ary accumulator family (Mongo 5.2+): the bare collect_list
-    aggregate plus its finisher, split like _ACC_RAW/_ACC_FINISH so the
-    window path can ``.over(frame)`` the aggregate before finishing.
+def _nary_acc(op: str, arg: Any, call) -> tuple[Column, Any]:
+    """N-ary accumulator family (Mongo 5.2+): the collect_list aggregate
+    plus its finisher, the ``(raw, finish)`` pair of :func:`_accumulator`.
 
     - ``$top/$topN/$bottom/$bottomN`` are sort-aware: collect
       ``struct(sortBy keys..., output)``, array_sort with the
@@ -2050,8 +2066,9 @@ def _nary_acc(op: str, arg: Any) -> tuple[Column, Any]:
                 raise ValueError(f"{op}: n must be a positive integer")
         keys = list(sort_by.items())
         fields = [path_col(k).alias(f"s{i}") for i, (k, _) in enumerate(keys)]
-        raw = F.collect_list(
-            F.struct(*fields, compile_value(arg["output"]).alias("o"))
+        raw = call(
+            "collect_list",
+            F.struct(*fields, compile_value(arg["output"]).alias("o")),
         )
         order = [(f"s{i}", d) for i, (_, d) in enumerate(keys)]
 
@@ -2075,7 +2092,7 @@ def _nary_acc(op: str, arg: Any) -> tuple[Column, Any]:
         raise ValueError(f"{op}: n must be a positive integer")
     val = compile_value(arg["input"])
     if op in ("$maxN", "$minN"):
-        raw = F.collect_list(val)
+        raw = call("collect_list", val)
 
         def fin(c: Column) -> Column:
             s = F.array_sort(c)
@@ -2085,7 +2102,7 @@ def _nary_acc(op: str, arg: Any) -> tuple[Column, Any]:
 
         return raw, fin
     # $firstN / $lastN
-    raw = F.collect_list(F.struct(val.alias("v")))
+    raw = call("collect_list", F.struct(val.alias("v")))
 
     def fin(c: Column) -> Column:
         if op == "$firstN":
@@ -2148,7 +2165,7 @@ class _SqlFrame:
     but Spark SQL's frame syntax can.  Every column input (partition
     key, ordering key, aggregate arguments) rides a PRE-PROJECTED temp
     column, so the rendered SQL contains only backticked identifiers and
-    numeric literals: no expression->SQL round-trip, no ``_jvm`` /
+    scalar literals: no expression->SQL round-trip, no ``_jvm`` /
     ``_jc`` private API (the classic-only ColumnNodeToExpressionConverter
     bridge this replaces breaks under Spark Connect, where managed
     clusters land).  Physical shape is unchanged: one Exchange on the
@@ -2161,52 +2178,29 @@ class _SqlFrame:
     def add(self, value: Column) -> str:
         return self.alloc.add(value)
 
-    def apply(self, agg_sql: str) -> Column:
-        """The aggregate (as SQL text over temp identifiers) applied
-        over this frame."""
-        return F.expr(f"{agg_sql} {self.over}")
+    def call(self, name: str, *args: Any) -> Column:
+        """``name(args...)`` applied over this frame — the ``call`` of
+        :func:`_accumulator` on this path.  Column arguments ride temp
+        identifiers; Python scalars (and lists of them) render as SQL
+        literals, so a percentage stays foldable."""
+        return F.expr(f"{name}({', '.join(map(self._sql, args))}) {self.over}")
+
+    def _sql(self, a: Any) -> str:
+        if isinstance(a, Column):
+            return self.add(a)
+        if isinstance(a, list):
+            return f"array({', '.join(map(self._sql, a))})"
+        if isinstance(a, bool):
+            return "true" if a else "false"
+        return f"{a!r}D" if isinstance(a, float) else repr(a)
 
 
-#: window-path SQL names for the single-input accumulators (_ACC_RAW
-#: parity; $push/$addToSet pre-wrap elements in a struct temp so
-#: collect_list keeps nulls, same trick as the Column path)
-_ACC_SQL = {
-    "$sum": "sum", "$avg": "avg", "$min": "min", "$max": "max",
-    "$first": "first", "$last": "last",
-    "$push": "collect_list", "$addToSet": "collect_list",
-    "$stdDevPop": "stddev_pop", "$stdDevSamp": "stddev_samp",
-}
-
-
-def _percentile_sql(op: str, arg: Any, frame: "_SqlFrame") -> Column:
-    """``$median`` / ``$percentile`` on the SQL-frame path (same
-    exact-percentile / accuracy-switch semantics as
-    :func:`_percentile_agg`).  The OVER clause attaches to EACH
-    percentile aggregate — an ``array(...)`` wrapper is not a window
-    function, so the frame applies inside and the array builds outside
-    (still one WindowExec: identical window specs collapse)."""
-    if not isinstance(arg, dict) or "input" not in arg:
-        raise ValueError(f"{op} requires {{input: ...}}")
-    ident = frame.add(compile_value(arg["input"]).cast("double"))
-    if "accuracy" in arg:
-        acc = int(arg["accuracy"])
-        pct = lambda p: f"percentile_approx({ident}, {p!r}, {acc})"  # noqa: E731
-    else:
-        pct = lambda p: f"percentile({ident}, {p!r})"  # noqa: E731
-    if op == "$median":
-        return frame.apply(pct(0.5))
-    ps = arg["p"]
-    if not isinstance(ps, list) or not ps:
-        raise ValueError("$percentile requires a non-empty p array")
-    return F.array(*[frame.apply(pct(float(p))) for p in ps])
+def _over(frame) -> Any:
+    """The ``call`` of :func:`_accumulator` over a DataFrame-API window."""
+    return lambda name, *args: _aggregate(name, *args).over(frame)
 
 
 def _compile_window_fields(df: DataFrame, spec: dict[str, Any]) -> DataFrame:
-    with _schema_scope(df.schema):
-        return _compile_window_fields_scoped(df, spec)
-
-
-def _compile_window_fields_scoped(df: DataFrame, spec: dict[str, Any]) -> DataFrame:
     """``$setWindowFields``: Mongo 5 window functions -> Spark window
     expressions.  Every output field is computed against the stage's
     input in one ``select`` (same input-document rule as ``$project``).
@@ -2366,7 +2360,7 @@ def _compile_window_fields_scoped(df: DataFrame, spec: dict[str, Any]) -> DataFr
                 # SQL-frame path: render the frame as an OVER clause
                 # over pre-projected temp columns (no private-API
                 # expression->SQL round-trip); the aggregate applies via
-                # frame.apply(...) in the op branches below.  Same
+                # frame.call(...) in the op branches below.  Same
                 # Exchange + WindowExec physical shape as the API path.
                 def _sb(spec_v, side):
                     if spec_v == "unbounded":
@@ -2410,6 +2404,7 @@ def _compile_window_fields_scoped(df: DataFrame, spec: dict[str, Any]) -> DataFr
             frame = sorted_base.rowsBetween(W.unboundedPreceding, W.currentRow)
         else:
             frame = base.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
+        call = frame.call if isinstance(frame, _SqlFrame) else _over(frame)
         if op in ("$derivative", "$integral"):
             if isinstance(frame, _SqlFrame):
                 raise NotImplementedError(
@@ -2421,21 +2416,8 @@ def _compile_window_fields_scoped(df: DataFrame, spec: dict[str, Any]) -> DataFr
             continue
         if op in ("$covariancePop", "$covarianceSamp"):
             x, y = (compile_value(a).cast("double") for a in arg)
-            if isinstance(frame, _SqlFrame):
-                fn = ("covar_pop" if op == "$covariancePop"
-                      else "covar_samp")
-                computed[name] = frame.apply(
-                    f"{fn}({frame.add(x)}, {frame.add(y)})"
-                )
-            else:
-                fn = F.covar_pop if op == "$covariancePop" else F.covar_samp
-                computed[name] = fn(x, y).over(frame)
-            continue
-        if op in ("$median", "$percentile"):
-            if isinstance(frame, _SqlFrame):
-                computed[name] = _percentile_sql(op, arg, frame)
-            else:
-                computed[name] = _percentile_agg(op, arg).over(frame)
+            fn = "covar_pop" if op == "$covariancePop" else "covar_samp"
+            computed[name] = call(fn, x, y)
             continue
         if op == "$expMovingAvg":
             # no window param in Mongo: always the running frame.  Exact
@@ -2464,11 +2446,10 @@ def _compile_window_fields_scoped(df: DataFrame, spec: dict[str, Any]) -> DataFr
             )
             continue
         if op in ("$locf", "$linearFill"):
-            # gap-fill window OUTPUT operators (Mongo 5.2) — same math
-            # as the $fill stage's locf/linear methods, here usable
-            # alongside other window fields.  Neither takes a window
-            # param; $linearFill interpolates against the single
-            # (numeric or date) sortBy key and never extrapolates.
+            # gap-fill window OUTPUT operators (Mongo 5.2), also what
+            # the $fill stage's locf/linear methods desugar to.  Neither
+            # takes a window param; $linearFill interpolates against the
+            # single (numeric or date) sortBy key and never extrapolates.
             if window is not None:
                 raise ValueError(f"{op} does not accept a window")
             if not order:
@@ -2520,36 +2501,12 @@ def _compile_window_fields_scoped(df: DataFrame, spec: dict[str, Any]) -> DataFr
                 )
             )
             continue
-        if op == "$count":
-            if isinstance(frame, _SqlFrame):
-                computed[name] = frame.apply("count(1)")
-                continue
-            agg, finish = F.count(F.lit(1)), (lambda c: c)
-        elif op in _NARY_ACCS:
-            # sort-aware inside the accumulator itself ($top*'s own
-            # sortBy), independent of the stage sortBy; still one
-            # WindowExec — collect over the frame, sort/slice per row
-            if isinstance(frame, _SqlFrame):
-                raise NotImplementedError(
-                    f"{op}: fractional range windows are not supported "
-                    "(comparator lambdas do not survive the SQL frame "
-                    "rendering)"
-                )
-            agg, finish = _nary_acc(op, arg)
-        elif op in _ACC_RAW:
-            finish = _ACC_FINISH.get(op, lambda c: c)
-            if isinstance(frame, _SqlFrame):
-                c = compile_value(arg)
-                if op in ("$push", "$addToSet"):
-                    c = F.struct(c.alias("v"))
-                computed[name] = finish(
-                    frame.apply(f"{_ACC_SQL[op]}({frame.add(c)})")
-                )
-                continue
-            agg = _ACC_RAW[op](compile_value(arg))
-        else:
-            raise ValueError(f"unsupported $setWindowFields operator: {op}")
-        computed[name] = finish(agg.over(frame))
+        # the accumulators: sort-aware n-ary ones ($top*'s own sortBy)
+        # sort/slice the frame's collect per row in their finisher, so
+        # their comparator lambdas stay outside a SQL frame's rendering;
+        # still one WindowExec
+        raw, finish = _accumulator(op, arg, call)
+        computed[name] = finish(raw)
 
     if temp_alloc.cols:
         # fractional SQL frames reference pre-projected temp inputs;
@@ -2558,12 +2515,7 @@ def _compile_window_fields_scoped(df: DataFrame, spec: dict[str, Any]) -> DataFr
         df = df.select(
             "*", *[c.alias(n) for n, c in temp_alloc.cols.items()]
         )
-    cols = [
-        computed[c].alias(c) if c in computed else F.col(f"`{c}`")
-        for c in out_columns
-    ]
-    cols += [e.alias(n) for n, e in computed.items() if n not in out_columns]
-    return df.select(*cols)
+    return _attach(df, computed, out_columns)
 
 
 #: seconds per $derivative/$integral unit (timestamp sortBy only)
@@ -2609,72 +2561,33 @@ def _calculus_window(
     )
 
 
-def _compile_fill(df: DataFrame, spec: dict[str, Any]) -> DataFrame:
-    with _schema_scope(df.schema):
-        return _compile_fill_scoped(df, spec)
+#: $fill method -> the window gap-fill operator it desugars to
+_FILL_METHODS = {"locf": "$locf", "linear": "$linearFill"}
 
 
-def _compile_fill_scoped(df: DataFrame, spec: dict[str, Any]) -> DataFrame:
-    """``$fill``: null repair over a sorted partition — ``locf`` (last
-    observation carried forward), ``linear`` interpolation against the
-    (numeric) sortBy key, or a constant ``value``.  The telemetry
-    gap-repair stage: one WindowExec pass per direction, no shuffle
-    beyond the partition exchange.
-    """
-    from pyspark.sql import Window as W
-
-    part_expr = spec.get("partitionBy")
-    parts = [compile_value(part_expr)] if part_expr is not None else []
-    sort_by = spec.get("sortBy") or {}
-    order = [
-        path_col(k).asc() if direction >= 0 else path_col(k).desc()
-        for k, direction in sort_by.items()
-    ]
-    base = W.partitionBy(*parts).orderBy(*order)
-    fwd = base.rowsBetween(W.unboundedPreceding, W.currentRow)
-    bwd = base.rowsBetween(W.currentRow, W.unboundedFollowing)
-
-    computed: dict[str, Column] = {}
-    for name, method_spec in spec["output"].items():
-        col = path_col(name)
-        if "value" in method_spec:
-            computed[name] = F.coalesce(col, compile_value(method_spec["value"]))
-            continue
-        method = method_spec.get("method")
-        if method == "locf":
-            if not order:
-                raise ValueError("$fill locf requires sortBy")
-            computed[name] = F.last(col, ignorenulls=True).over(fwd)
-        elif method == "linear":
-            if len(sort_by) != 1:
-                raise ValueError("$fill linear requires exactly one sortBy field")
-            key = path_col(next(iter(sort_by))).cast("double")
-            prev_v = F.last(col, ignorenulls=True).over(fwd)
-            prev_k = F.last(
-                F.when(col.isNotNull(), key), ignorenulls=True
-            ).over(fwd)
-            next_v = F.first(col, ignorenulls=True).over(bwd)
-            next_k = F.first(
-                F.when(col.isNotNull(), key), ignorenulls=True
-            ).over(bwd)
-            # Mongo linear never extrapolates: nulls outside the first/last
-            # known values stay null
-            computed[name] = (
-                F.when(col.isNotNull(), col)
-                .when(prev_v.isNull() | next_v.isNull(), F.lit(None))
-                .otherwise(
-                    prev_v
-                    + (next_v - prev_v) * ((key - prev_k) / (next_k - prev_k))
-                )
-            )
+def _fill_stages(spec: dict[str, Any]) -> list[dict[str, Any]]:
+    """``$fill`` as the stages MongoDB's server desugars it to: one
+    ``$setWindowFields`` computing every ``method`` output with ``$locf``
+    (last observation carried forward) or ``$linearFill`` (interpolation
+    against the single sortBy key: no extrapolation, an error on
+    repeated keys), then one ``$addFields`` giving every ``value``
+    output ``{$ifNull: [field, value]}``."""
+    methods: dict[str, Any] = {}
+    values: dict[str, Any] = {}
+    for name, fill in spec["output"].items():
+        if "value" in fill:
+            values[name] = {"$ifNull": [f"${name}", fill["value"]]}
+        elif fill.get("method") in _FILL_METHODS:
+            methods[name] = {_FILL_METHODS[fill["method"]]: f"${name}"}
         else:
-            raise ValueError(f"unsupported $fill method: {method_spec!r}")
-
-    cols = [
-        computed[c].alias(c) if c in computed else F.col(f"`{c}`")
-        for c in df.columns
-    ]
-    return df.select(*cols)
+            raise ValueError(f"unsupported $fill method: {fill!r}")
+    stages: list[dict[str, Any]] = []
+    if methods:
+        window = {k: spec[k] for k in ("partitionBy", "sortBy") if k in spec}
+        stages.append({"$setWindowFields": {**window, "output": methods}})
+    if values:
+        stages.append({"$addFields": values})
+    return stages
 
 
 def _compile_unwind(out: DataFrame, spec: dict[str, Any] | str) -> DataFrame:
@@ -3309,27 +3222,14 @@ def _bucket_auto(out: DataFrame, spec: dict[str, Any]) -> DataFrame:
     bucket = F.lit(0)
     for b in bounds:
         bucket = bucket + (F.col("_ba_v") > F.lit(b)).cast("int")
-    grouped = tmp.withColumn("_ba_bucket", bucket).groupBy("_ba_bucket")
-
-    aggs = [
+    output = spec.get("output", {"count": {"$sum": 1}})
+    agged = _accumulate(
+        tmp.withColumn("_ba_bucket", bucket),
+        ["_ba_bucket"],
+        output,
         F.min("_ba_v").alias("_ba_min"),
         F.max("_ba_v").alias("_ba_max"),
-    ]
-    output = spec.get("output", {"count": {"$sum": 1}})
-    for name, acc in output.items():
-        acc_op, arg = next(iter(acc.items()))
-        if acc_op == "$count" or (acc_op == "$sum" and arg == 1):
-            aggs.append(F.count(F.lit(1)).alias(name))
-        elif acc_op in ("$median", "$percentile"):
-            aggs.append(_percentile_agg(acc_op, arg).alias(name))
-        elif acc_op in _NARY_ACCS:
-            raw, fin = _nary_acc(acc_op, arg)
-            aggs.append(fin(raw).alias(name))
-        elif acc_op in _ACCUMULATORS:
-            aggs.append(_ACCUMULATORS[acc_op](compile_value(arg)).alias(name))
-        else:
-            raise ValueError(f"unsupported $bucketAuto accumulator: {acc_op}")
-    agged = grouped.agg(*aggs)
+    )
     # _id.max chains to the next bucket's min (n rows — window is cheap)
     from pyspark.sql import Window as _W
 
@@ -4135,6 +4035,16 @@ def _rewrite_outer_refs(expr: Any) -> Any:
     return expr
 
 
+#: stages whose specs hold value expressions: each compiles inside a
+#: _schema_scope of its input, so a field path the stream lacks resolves
+#: to NULL (Mongo: missing) instead of failing analysis
+_EXPRESSION_STAGES = {
+    "$project", "$addFields", "$set", "$replaceRoot", "$replaceWith",
+    "$redact", "$setWindowFields", "$group", "$bucket", "$bucketAuto",
+    "$sortByCount", "$_countByValue", "$graphLookup",
+}
+
+
 def apply_pipeline(
     df: DataFrame,
     pipeline: list[dict[str, Any]],
@@ -4144,304 +4054,320 @@ def apply_pipeline(
 
     ``tables`` resolves ``$lookup.from`` names to DataFrames (the engine
     analog of "another collection in the same database")."""
-    from topic_store_spark.query.projection import apply_projection
-
     out = df
-    for stage in pipeline:
+    for i, stage in enumerate(pipeline):
         if len(stage) != 1:
             raise ValueError(f"each stage must have exactly one operator: {stage}")
         op, spec = next(iter(stage.items()))
-        if op == "$lookup":
-            if not tables or spec["from"] not in tables:
-                raise ValueError(f"$lookup: unknown collection {spec.get('from')!r}")
-            foreign = tables[spec["from"]]
-            if "pipeline" in spec or "let" in spec:
-                out = _lookup_pipeline(out, foreign, spec, tables)
-                continue
-            local, remote, as_name = (
-                spec["localField"],
-                spec["foreignField"],
-                spec["as"],
+        scope = (
+            _schema_scope(out.schema)
+            if op in _EXPRESSION_STAGES
+            else _contextlib.nullcontext()
+        )
+        with scope:
+            out = _apply_stage(
+                out, op, spec, tables,
+                first=i == 0, last=i == len(pipeline) - 1,
             )
-            # Mongo $lookup: array of matching foreign docs per row (empty
-            # array when none).  Pre-aggregate the foreign side per key —
-            # only the (dimension-sized) foreign table shuffles; local rows
-            # stay intact through a left join, duplicates preserved.  The
-            # join is NULL-SAFE equality: Mongo matches a null/missing
-            # localField to foreign docs whose foreignField is
-            # null/missing (a plain equi-join silently drops those rows —
-            # r6 $lookup fuzzer find); <=> remains a hash-joinable key.
-            fstruct = F.struct(*[F.col(f"`{c}`").alias(c) for c in foreign.columns])
-            fagg = foreign.groupBy(F.col(f"`{remote}`").alias("_lk_key")).agg(
-                F.array_sort(F.collect_list(fstruct)).alias(as_name)
-            )
-            arr_type = fagg.schema[as_name].dataType.simpleString()
-            out = (
-                out.join(fagg, path_col(local).eqNullSafe(F.col("_lk_key")), "left")
-                .drop("_lk_key")
-                .withColumn(
-                    as_name,
-                    F.coalesce(F.col(f"`{as_name}`"), F.array().cast(arr_type)),
-                )
-            )
-        elif op == "$match":
-            out = out.filter(compile_query(spec, out.schema))
-        elif op == "$redact":
-            # document-level access filter: cond evaluates per document
-            # to $$KEEP (keep) / $$PRUNE (drop).  $$DESCEND (r8): the
-            # static schema bounds the recursion, so per-subdocument
-            # redaction compiles to a depth-limited struct rewrite —
-            # cond re-evaluates per embedded document (struct fields
-            # and array<struct> elements), pruned subdocuments null
-            # out, pruned array elements drop.  One projection, no
-            # Python, no shuffle.
-            redact_vars = {
-                "KEEP": F.lit("KEEP"),
-                "PRUNE": F.lit("PRUNE"),
-                "DESCEND": F.lit("DESCEND"),
-            }
-            with _schema_scope(out.schema):
-                marker = compile_value(spec, redact_vars)
-            if not _mentions_var(spec, "$$DESCEND"):
-                out = out.filter(marker.eqNullSafe(F.lit("KEEP")))
-            else:
-                out = out.filter(
-                    marker.eqNullSafe(F.lit("KEEP"))
-                    | marker.eqNullSafe(F.lit("DESCEND"))
-                )
-                cols = []
-                for f in out.schema.fields:
-                    src = F.col(f"`{f.name}`")
-                    rw = _redact_value(src, f.dataType, spec, redact_vars)
-                    cols.append(
-                        F.when(marker.eqNullSafe(F.lit("KEEP")), src)
-                        .otherwise(rw)
-                        .alias(f.name)
-                    )
-                with _schema_scope(out.schema):
-                    out = out.select(*cols)
-        elif op == "$documents":
-            # literal source stage (Mongo: db-level aggregate only) —
-            # replaces the input relation with the given documents;
-            # restricted to the FIRST stage like Mongo
-            if out is not df:
-                raise ValueError("$documents must be the first stage")
-            if not (isinstance(spec, list) and spec):
-                raise ValueError("$documents takes a non-empty list")
-            out = df.sparkSession.createDataFrame(spec)
-        elif op == "$project":
-            flags = {k: v for k, v in spec.items() if v in (0, 1, True, False)}
-            computed = {k: v for k, v in spec.items() if k not in flags}
-            # computed fields see the *input* document (Mongo semantics):
-            # every expression compiles against the stage input and all are
-            # attached in ONE select, so a computed field that references
-            # (or shadows) another projected field still reads the input
-            # value, never a freshly computed one.
-            out = _attach_computed(out, computed)
-            if flags:
-                proj = dict(flags)
-                if any(v in (1, True) for v in flags.values()):
-                    for name in computed:
-                        proj[name] = 1
-                out = apply_projection(out, proj)
-            elif computed:
-                # computed-only $project is an INCLUSION projection in
-                # Mongo: only the computed fields (plus _id) survive
-                keep = list(computed)
-                if "_id" in out.columns and "_id" not in keep:
-                    keep = ["_id"] + keep
-                out = out.select(*[F.col(f"`{c}`") for c in keep])
-        elif op in ("$addFields", "$set"):
-            # same input-document semantics as $project computed fields
-            out = _attach_computed(out, spec)
-        elif op == "$unset":
-            fields = [spec] if isinstance(spec, str) else list(spec)
-            out = apply_projection(out, {f: 0 for f in fields})
-        elif op in ("$replaceRoot", "$replaceWith"):
-            root = compile_value(
-                spec["newRoot"] if op == "$replaceRoot" else spec
-            )
-            out = out.select(root.alias("_root")).select("_root.*")
-        elif op == "$sample":
-            # Deliberate deviation from Mongo's nondeterministic sample:
-            # a hash-ordered pseudo-random sample keyed on the document
-            # id, so reruns (and the DuckDB oracle) see the same rows —
-            # reproducibility is a feature in a data pipeline.  The
-            # ORDER BY md5 + LIMIT compiles to TakeOrderedAndProject:
-            # per-partition partial top-k, no full sort at scale.
-            if "_id" not in out.columns:
-                raise ValueError(
-                    "$sample requires an _id column (deterministic "
-                    "hash-ordered sampling; $project one first)"
-                )
-            key = F.md5(F.col("_id").cast("string"))
-            out = out.orderBy(key, F.col("_id")).limit(int(spec["size"]))
-        elif op == "$setWindowFields":
-            out = _compile_window_fields(out, spec)
-        elif op == "$fill":
-            out = _compile_fill(out, spec)
-        elif op == "$densify":
-            out = _compile_densify(out, spec)
-        elif op == "$facet":
-            # Each sub-pipeline runs over the SAME input; results land as
-            # one row of array<struct> fields.  Mongo guarantees each
-            # facet array preserves its sub-pipeline's output order, and
-            # collect_list over a shuffled agg does NOT — so the array is
-            # re-sorted by the sub-pipeline's FINAL ordering (tracked
-            # through order-preserving stages); sub-pipelines with no
-            # defined order fall back to whole-struct array_sort so the
-            # facet row stays deterministic.
-            parts = []
-            for name, sub in spec.items():
-                order = _facet_final_order(sub)
-                # r12: the physical sort is dead weight under the
-                # collect + array_sort, but only when the ordering keys
-                # survive to the output — otherwise the comparator
-                # can't reimpose it and the sort must stay
-                sub_df = apply_pipeline(out, _strip_physical_sort(sub), tables)
-                if order and not all(k in sub_df.columns for k, _ in order):
-                    sub_df = apply_pipeline(out, sub, tables)
-                sstruct = F.struct(
-                    *[F.col(f"`{c}`").alias(c) for c in sub_df.columns]
-                )
-                collected = F.collect_list(sstruct)
-                if order and all(k in sub_df.columns for k, _ in order):
-                    arr = F.array_sort(collected, _struct_comparator(order))
-                else:
-                    arr = F.array_sort(collected)
-                parts.append(sub_df.agg(arr.alias(name)))
-            row = parts[0]
-            for p in parts[1:]:
-                row = row.crossJoin(p)
-            out = row
-        elif op == "$graphLookup":
-            out = _graph_lookup(out, spec, tables)
-        elif op == "$group":
-            out = _compile_group(out, spec)
-        elif op == "$sort":
-            order = [
-                F.col(f"`{k}`").asc() if direction >= 0 else F.col(f"`{k}`").desc()
-                for k, direction in spec.items()
-            ]
-            out = out.orderBy(*order)
-        elif op == "$limit":
-            out = out.limit(int(spec))
-        elif op == "$skip":
-            out = out.offset(int(spec))
-        elif op == "$unwind":
-            out = _compile_unwind(out, spec)
-        elif op in ("$sortByCount", "$_countByValue"):
-            # $_countByValue is INTERNAL: $sortByCount minus the
-            # physical sort, substituted by _strip_physical_sort inside
-            # $facet / uncorrelated $lookup sub-pipelines where the
-            # post-collect array_sort reimposes the order anyway.
-            # It is only accepted via the _InternalSpec marker the
-            # compiler injects — the bare name in a user pipeline is an
-            # unknown stage (r12 ADVICE: it silently compiled as an
-            # unsorted $sortByCount).
-            if op == "$_countByValue":
-                if not isinstance(spec, _InternalSpec):
-                    raise ValueError(f"unsupported pipeline stage: {op}")
-                spec = spec.spec
-            field = spec[1:] if isinstance(spec, str) and spec.startswith("$") else spec
-            out = out.groupBy(path_col(field).alias("_id")).agg(
-                F.count(F.lit(1)).alias("count")
-            )
-            if op == "$sortByCount":
-                out = out.orderBy(F.col("count").desc(), F.col("_id").asc())
-        elif op == "$bucket":
-            group_by = compile_value(spec["groupBy"])
-            bounds = spec["boundaries"]
-            default = spec.get("default")
-            # Mongo bucket ids may mix numeric boundaries with a string
-            # default; Spark columns are single-typed, so a non-numeric
-            # default forces the id to string
-            stringify = default is not None and not isinstance(
-                default, (int, float)
-            )
+    return out
 
-            def _id_lit(v):
-                return F.lit(str(v) if stringify else v)
 
-            bucket = _id_lit(default) if default is not None else F.lit(None)
-            for lo, hi in zip(bounds, bounds[1:]):
-                bucket = F.when(
-                    (group_by >= F.lit(lo)) & (group_by < F.lit(hi)), _id_lit(lo)
-                ).otherwise(bucket)
-            outputs = spec.get("output", {"count": {"$sum": 1}})
-            bucketed = out.withColumn("_id__group", bucket)
-            if default is None:
-                bucketed = bucketed.filter(F.col("_id__group").isNotNull())
-            grouped = bucketed.groupBy("_id__group")
-            aggs = []
-            for name, acc in outputs.items():
-                acc_op, arg = next(iter(acc.items()))
-                if acc_op == "$count" or (acc_op == "$sum" and arg == 1):
-                    aggs.append(F.count(F.lit(1)).alias(name))
-                elif acc_op in ("$median", "$percentile"):
-                    aggs.append(_percentile_agg(acc_op, arg).alias(name))
-                elif acc_op in _NARY_ACCS:
-                    raw, fin = _nary_acc(acc_op, arg)
-                    aggs.append(fin(raw).alias(name))
-                elif acc_op in _ACCUMULATORS:
-                    aggs.append(_ACCUMULATORS[acc_op](compile_value(arg)).alias(name))
-                else:
-                    raise ValueError(f"unsupported $bucket accumulator: {acc_op}")
-            out = grouped.agg(*aggs).withColumnRenamed("_id__group", "_id")
-        elif op == "$count":
-            # Mongo desugars $count to $group{_id:null}+$project, so an
-            # EMPTY input yields NO document, not {count: 0} — a bare
-            # agg() always returns one row, hence the >0 filter (r11,
-            # caught writing the $facet/$unionWith composition fuzzer)
-            out = out.agg(F.count(F.lit(1)).alias(str(spec))).filter(
-                F.col(f"`{spec}`") > 0
+def _apply_stage(
+    out: DataFrame,
+    op: str,
+    spec: Any,
+    tables: dict[str, DataFrame] | None,
+    first: bool,
+    last: bool,
+) -> DataFrame:
+    """One pipeline stage over its input ``out``; ``first``/``last`` say
+    where the stage sits in its pipeline."""
+    from topic_store_spark.query.projection import apply_projection
+
+    if op == "$lookup":
+        if not tables or spec["from"] not in tables:
+            raise ValueError(f"$lookup: unknown collection {spec.get('from')!r}")
+        foreign = tables[spec["from"]]
+        if "pipeline" in spec or "let" in spec:
+            return _lookup_pipeline(out, foreign, spec, tables)
+        local, remote, as_name = (
+            spec["localField"],
+            spec["foreignField"],
+            spec["as"],
+        )
+        # Mongo $lookup: array of matching foreign docs per row (empty
+        # array when none).  Pre-aggregate the foreign side per key —
+        # only the (dimension-sized) foreign table shuffles; local rows
+        # stay intact through a left join, duplicates preserved.  The
+        # join is NULL-SAFE equality: Mongo matches a null/missing
+        # localField to foreign docs whose foreignField is
+        # null/missing (a plain equi-join silently drops those rows —
+        # r6 $lookup fuzzer find); <=> remains a hash-joinable key.
+        fstruct = F.struct(*[F.col(f"`{c}`").alias(c) for c in foreign.columns])
+        fagg = foreign.groupBy(F.col(f"`{remote}`").alias("_lk_key")).agg(
+            F.array_sort(F.collect_list(fstruct)).alias(as_name)
+        )
+        arr_type = fagg.schema[as_name].dataType.simpleString()
+        out = (
+            out.join(fagg, path_col(local).eqNullSafe(F.col("_lk_key")), "left")
+            .drop("_lk_key")
+            .withColumn(
+                as_name,
+                F.coalesce(F.col(f"`{as_name}`"), F.array().cast(arr_type)),
             )
-        elif op == "$unionWith":
-            # {"$unionWith": "coll"} or {"coll": ..., "pipeline": [...]}
-            # or (Mongo 6) the coll-LESS form whose pipeline starts with
-            # a $documents literal source; Mongo concatenates
-            # heterogeneous documents — missing fields null-fill on
-            # either side (unionByName allowMissingColumns)
-            coll = spec if isinstance(spec, str) else spec.get("coll")
-            if coll is None:
-                sub = (spec or {}).get("pipeline") if isinstance(spec, dict) else None
-                if not sub or next(iter(sub[0])) != "$documents":
-                    raise ValueError(
-                        "$unionWith without coll requires a pipeline "
-                        "starting with $documents"
-                    )
-                other = apply_pipeline(out.limit(0), sub, tables)
-            else:
-                if not tables or coll not in tables:
-                    raise ValueError(f"$unionWith: unknown collection {coll!r}")
-                other = tables[coll]
-                if isinstance(spec, dict) and spec.get("pipeline"):
-                    other = apply_pipeline(other, spec["pipeline"], tables)
-            out = out.unionByName(other, allowMissingColumns=True)
-        elif op == "$bucketAuto":
-            out = _bucket_auto(out, spec)
-        elif op in ("$out", "$merge"):
-            if stage is not pipeline[-1]:
-                raise ValueError(f"{op} must be the final pipeline stage")
-            from topic_store_spark.api import load as load_storage
-
-            if op == "$out":
-                if isinstance(spec, dict):
-                    # Mongo's {db, coll} form has no storage-path analog
-                    # here — refuse loudly rather than let api.load choke
-                    # on a dict (the engine addresses stores by path)
-                    raise NotImplementedError(
-                        "$out: the {db, coll} document form is not "
-                        "supported — pass a storage path string"
-                    )
-                # Mongo $out replaces the target collection
-                target = load_storage(spec, out.sparkSession)
-                replace = getattr(target, "_overwrite", None)
-                if replace is None:
-                    raise ValueError("$out target storage cannot be replaced")
-                replace(out)
-            else:
-                _merge_into(out, spec, load_storage)
+        )
+    elif op == "$match":
+        out = out.filter(compile_query(spec, out.schema))
+    elif op == "$redact":
+        # document-level access filter: cond evaluates per document
+        # to $$KEEP (keep) / $$PRUNE (drop).  $$DESCEND (r8): the
+        # static schema bounds the recursion, so per-subdocument
+        # redaction compiles to a depth-limited struct rewrite —
+        # cond re-evaluates per embedded document (struct fields
+        # and array<struct> elements), pruned subdocuments null
+        # out, pruned array elements drop.  One projection, no
+        # Python, no shuffle.
+        redact_vars = {
+            "KEEP": F.lit("KEEP"),
+            "PRUNE": F.lit("PRUNE"),
+            "DESCEND": F.lit("DESCEND"),
+        }
+        marker = compile_value(spec, redact_vars)
+        if not _mentions_var(spec, "$$DESCEND"):
+            out = out.filter(marker.eqNullSafe(F.lit("KEEP")))
         else:
-            raise ValueError(f"unsupported pipeline stage: {op}")
+            out = out.filter(
+                marker.eqNullSafe(F.lit("KEEP"))
+                | marker.eqNullSafe(F.lit("DESCEND"))
+            )
+            cols = []
+            for f in out.schema.fields:
+                src = F.col(f"`{f.name}`")
+                rw = _redact_value(src, f.dataType, spec, redact_vars)
+                cols.append(
+                    F.when(marker.eqNullSafe(F.lit("KEEP")), src)
+                    .otherwise(rw)
+                    .alias(f.name)
+                )
+            out = out.select(*cols)
+    elif op == "$documents":
+        # literal source stage (Mongo: db-level aggregate only) —
+        # replaces the input relation with the given documents;
+        # restricted to the FIRST stage like Mongo
+        if not first:
+            raise ValueError("$documents must be the first stage")
+        if not (isinstance(spec, list) and spec):
+            raise ValueError("$documents takes a non-empty list")
+        out = out.sparkSession.createDataFrame(spec)
+    elif op == "$project":
+        flags = {k: v for k, v in spec.items() if v in (0, 1, True, False)}
+        computed = {k: v for k, v in spec.items() if k not in flags}
+        # computed fields see the *input* document (Mongo semantics):
+        # every expression compiles against the stage input and all are
+        # attached in ONE select, so a computed field that references
+        # (or shadows) another projected field still reads the input
+        # value, never a freshly computed one.
+        if computed:
+            out = _attach(
+                out, {k: compile_value(v) for k, v in computed.items()}
+            )
+        if flags or any("." in k for k in computed):
+            # computed fields join an inclusion projection, so a dotted
+            # one keeps only its own path of the parent document
+            proj = dict(flags)
+            if not flags or any(v in (1, True) for v in flags.values()):
+                proj.update(dict.fromkeys(computed, 1))
+            out = apply_projection(out, proj)
+        elif computed:
+            # computed-only $project is an INCLUSION projection in
+            # Mongo: only the computed fields (plus _id) survive
+            keep = list(computed)
+            if "_id" in out.columns and "_id" not in keep:
+                keep = ["_id"] + keep
+            out = out.select(*[F.col(f"`{c}`") for c in keep])
+    elif op in ("$addFields", "$set"):
+        # same input-document semantics as $project computed fields
+        if spec:
+            out = _attach(out, {k: compile_value(v) for k, v in spec.items()})
+    elif op == "$unset":
+        fields = [spec] if isinstance(spec, str) else list(spec)
+        out = apply_projection(out, {f: 0 for f in fields})
+    elif op in ("$replaceRoot", "$replaceWith"):
+        root = compile_value(
+            spec["newRoot"] if op == "$replaceRoot" else spec
+        )
+        out = out.select(root.alias("_root")).select("_root.*")
+    elif op == "$sample":
+        # Deliberate deviation from Mongo's nondeterministic sample:
+        # a hash-ordered pseudo-random sample keyed on the document
+        # id, so reruns (and the DuckDB oracle) see the same rows —
+        # reproducibility is a feature in a data pipeline.  The
+        # ORDER BY md5 + LIMIT compiles to TakeOrderedAndProject:
+        # per-partition partial top-k, no full sort at scale.
+        if "_id" not in out.columns:
+            raise ValueError(
+                "$sample requires an _id column (deterministic "
+                "hash-ordered sampling; $project one first)"
+            )
+        key = F.md5(F.col("_id").cast("string"))
+        out = out.orderBy(key, F.col("_id")).limit(int(spec["size"]))
+    elif op == "$setWindowFields":
+        out = _compile_window_fields(out, spec)
+    elif op == "$fill":
+        out = apply_pipeline(out, _fill_stages(spec), tables)
+    elif op == "$densify":
+        out = _compile_densify(out, spec)
+    elif op == "$facet":
+        # Each sub-pipeline runs over the SAME input; results land as
+        # one row of array<struct> fields.  Mongo guarantees each
+        # facet array preserves its sub-pipeline's output order, and
+        # collect_list over a shuffled agg does NOT — so the array is
+        # re-sorted by the sub-pipeline's FINAL ordering (tracked
+        # through order-preserving stages); sub-pipelines with no
+        # defined order fall back to whole-struct array_sort so the
+        # facet row stays deterministic.
+        parts = []
+        for name, sub in spec.items():
+            order = _facet_final_order(sub)
+            # r12: the physical sort is dead weight under the
+            # collect + array_sort, but only when the ordering keys
+            # survive to the output — otherwise the comparator
+            # can't reimpose it and the sort must stay
+            sub_df = apply_pipeline(out, _strip_physical_sort(sub), tables)
+            if order and not all(k in sub_df.columns for k, _ in order):
+                sub_df = apply_pipeline(out, sub, tables)
+            sstruct = F.struct(
+                *[F.col(f"`{c}`").alias(c) for c in sub_df.columns]
+            )
+            collected = F.collect_list(sstruct)
+            if order and all(k in sub_df.columns for k, _ in order):
+                arr = F.array_sort(collected, _struct_comparator(order))
+            else:
+                arr = F.array_sort(collected)
+            parts.append(sub_df.agg(arr.alias(name)))
+        row = parts[0]
+        for p in parts[1:]:
+            row = row.crossJoin(p)
+        out = row
+    elif op == "$graphLookup":
+        out = _graph_lookup(out, spec, tables)
+    elif op == "$group":
+        out = _compile_group(out, spec)
+    elif op == "$sort":
+        order = [
+            F.col(f"`{k}`").asc() if direction >= 0 else F.col(f"`{k}`").desc()
+            for k, direction in spec.items()
+        ]
+        out = out.orderBy(*order)
+    elif op == "$limit":
+        out = out.limit(int(spec))
+    elif op == "$skip":
+        out = out.offset(int(spec))
+    elif op == "$unwind":
+        out = _compile_unwind(out, spec)
+    elif op in ("$sortByCount", "$_countByValue"):
+        # $_countByValue is INTERNAL: $sortByCount minus the
+        # physical sort, substituted by _strip_physical_sort inside
+        # $facet / uncorrelated $lookup sub-pipelines where the
+        # post-collect array_sort reimposes the order anyway.
+        # It is only accepted via the _InternalSpec marker the
+        # compiler injects — the bare name in a user pipeline is an
+        # unknown stage (r12 ADVICE: it silently compiled as an
+        # unsorted $sortByCount).
+        if op == "$_countByValue":
+            if not isinstance(spec, _InternalSpec):
+                raise ValueError(f"unsupported pipeline stage: {op}")
+            spec = spec.spec
+        if isinstance(spec, str) and not spec.startswith("$"):
+            raise ValueError(
+                f"{op}: {spec!r} is not a $-prefixed field path or an "
+                "expression object"
+            )
+        out = out.groupBy(compile_value(spec).alias("_id")).agg(
+            F.count(F.lit(1)).alias("count")
+        )
+        if op == "$sortByCount":
+            out = out.orderBy(F.col("count").desc(), F.col("_id").asc())
+    elif op == "$bucket":
+        group_by = compile_value(spec["groupBy"])
+        bounds = spec["boundaries"]
+        default = spec.get("default")
+        # Mongo bucket ids may mix numeric boundaries with a string
+        # default; Spark columns are single-typed, so a non-numeric
+        # default forces the id to string
+        stringify = default is not None and not isinstance(
+            default, (int, float)
+        )
+
+        def _id_lit(v):
+            return F.lit(str(v) if stringify else v)
+
+        bucket = _id_lit(default) if default is not None else F.lit(None)
+        for lo, hi in zip(bounds, bounds[1:]):
+            bucket = F.when(
+                (group_by >= F.lit(lo)) & (group_by < F.lit(hi)), _id_lit(lo)
+            ).otherwise(bucket)
+        outputs = spec.get("output", {"count": {"$sum": 1}})
+        bucketed = out.withColumn("_id__group", bucket)
+        if default is None:
+            bucketed = bucketed.filter(F.col("_id__group").isNotNull())
+        out = _accumulate(bucketed, ["_id__group"], outputs).withColumnRenamed(
+            "_id__group", "_id"
+        )
+    elif op == "$count":
+        # Mongo desugars $count to $group{_id:null}+$project, so an
+        # EMPTY input yields NO document, not {count: 0} — a bare
+        # agg() always returns one row, hence the >0 filter (r11,
+        # caught writing the $facet/$unionWith composition fuzzer)
+        out = out.agg(F.count(F.lit(1)).alias(str(spec))).filter(
+            F.col(f"`{spec}`") > 0
+        )
+    elif op == "$unionWith":
+        # {"$unionWith": "coll"} or {"coll": ..., "pipeline": [...]}
+        # or (Mongo 6) the coll-LESS form whose pipeline starts with
+        # a $documents literal source; Mongo concatenates
+        # heterogeneous documents — missing fields null-fill on
+        # either side (unionByName allowMissingColumns)
+        coll = spec if isinstance(spec, str) else spec.get("coll")
+        if coll is None:
+            sub = (spec or {}).get("pipeline") if isinstance(spec, dict) else None
+            if not sub or next(iter(sub[0])) != "$documents":
+                raise ValueError(
+                    "$unionWith without coll requires a pipeline "
+                    "starting with $documents"
+                )
+            other = apply_pipeline(out.limit(0), sub, tables)
+        else:
+            if not tables or coll not in tables:
+                raise ValueError(f"$unionWith: unknown collection {coll!r}")
+            other = tables[coll]
+            if isinstance(spec, dict) and spec.get("pipeline"):
+                other = apply_pipeline(other, spec["pipeline"], tables)
+        out = out.unionByName(other, allowMissingColumns=True)
+    elif op == "$bucketAuto":
+        out = _bucket_auto(out, spec)
+    elif op in ("$out", "$merge"):
+        if not last:
+            raise ValueError(f"{op} must be the final pipeline stage")
+        from topic_store_spark.api import load as load_storage
+
+        if op == "$out":
+            if isinstance(spec, dict):
+                # Mongo's {db, coll} form has no storage-path analog
+                # here — refuse loudly rather than let api.load choke
+                # on a dict (the engine addresses stores by path)
+                raise NotImplementedError(
+                    "$out: the {db, coll} document form is not "
+                    "supported — pass a storage path string"
+                )
+            # Mongo $out replaces the target collection
+            target = load_storage(spec, out.sparkSession)
+            replace = getattr(target, "_overwrite", None)
+            if replace is None:
+                raise ValueError("$out target storage cannot be replaced")
+            replace(out)
+        else:
+            _merge_into(out, spec, load_storage)
+    else:
+        raise ValueError(f"unsupported pipeline stage: {op}")
     return out
