@@ -1397,18 +1397,15 @@ def q_dedup_exact_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_word_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Word-3-gram overlap screens — exact Jaccard (>= 0.8) and
     near-subset containment (>= 0.9) with per-metric hit flags — run
-    through the PREFIX-FILTERED AllPairs/PPJoin plan
-    (``prefix_filter=True``: the Jaccard prefix x prefix join unioned
-    with the containment-sound smaller-prefix x full join, verified on
-    full cap-filtered sets).  This is the plan you'd ship at 100 TB —
-    candidates fall to ~(1-t)^2 of the full shingle self-join's and skew
-    toward rare shingles — and since r6 it's the one that earns the
-    driver CORRECTNESS row; output is bit-identical to the plain capped
-    self-join (equality-tested across thresholds), which stays benched
-    via the char-gram carrier (`q_dedup_char_jaccard`) so both plan
-    families stay visible per round.  Same ``max_shingle_freq``
-    stop-shingle cap: boilerplate word-3-grams ("all rights reserved")
-    carry quadratic pair fan-out at web scale."""
+    through the operator's one plan, AllPairs/PPJoin prefix filtering:
+    the Jaccard prefix x prefix join unioned with the containment-sound
+    smaller-prefix x full join, verified on full cap-filtered sets.
+    Candidates fall to ~(1-t)^2 of a full shingle self-join's and skew
+    toward rare shingles, and the output equals the full self-join's —
+    the DuckDB oracle below IS that full self-join.  Same
+    ``max_shingle_freq`` stop-shingle cap: boilerplate word-3-grams
+    ("all rights reserved") carry quadratic pair fan-out at web
+    scale."""
     from topic_store_spark.operators.dedup import word_overlap_pairs
 
     corpus = _docs_with_near_dups(spark, sf_dir)
@@ -1416,7 +1413,6 @@ def q_dedup_word_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus, n=3, jaccard_num=8, jaccard_den=10,
         containment_num=9, containment_den=10,
         max_shingle_freq=_CHAR_SHINGLE_FREQ_CAP,
-        prefix_filter=True,
     )
 
 
@@ -1703,19 +1699,18 @@ _CHAR_SHINGLE_FREQ_CAP = 64
 def q_dedup_char_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Char-5-gram Jaccard pairs >= 0.8 (catches intra-word edits that
     word shingles miss), with the ``max_shingle_freq`` hot-key cap the
-    100x plan requires (_CHAR_SHINGLE_FREQ_CAP) AND the AllPairs/PPJoin
-    prefix-filtered candidate plan (operators/dedup.py
-    _prefix_filtered_pairs): only each doc's ~20% rarest shingles are
+    100x plan requires (_CHAR_SHINGLE_FREQ_CAP), through the operator's
+    one plan, AllPairs/PPJoin prefix filtering (operators/dedup.py
+    _jaccard_prefix_cands): only each doc's ~20% rarest shingles are
     indexed, candidates fall to ~(1-t)^2 of the full self-join's, and
-    the exact verify keeps the output bit-identical — so the oracle
-    below is the plain full-join SQL."""
+    the exact verify keeps the output equal to the full self-join's —
+    so the oracle below is the plain full-join SQL."""
     from topic_store_spark.operators.dedup import char_jaccard_pairs
 
     corpus = _docs_with_near_dups(spark, sf_dir)
     return char_jaccard_pairs(
         corpus, n=5, threshold_num=8, threshold_den=10,
         max_shingle_freq=_CHAR_SHINGLE_FREQ_CAP,
-        prefix_filter=True,
     )
 
 
@@ -3431,7 +3426,7 @@ cands AS (
 
     # capped variant: stop-shingles (df > cap) drop out of BOTH the join
     # and the size denominators — exact Jaccard in the filtered universe,
-    # mirroring _cooccurring_pairs(max_shingle_freq=64)
+    # mirroring dedup._ordered_docs(max_shingle_freq=64)
     sql["dedup_char_jaccard"] = (
         "WITH "
         + _NEAR_CORPUS

@@ -5,10 +5,9 @@ through the real public APIs (`operators/dedup.py`) and through
 brute-force pure-Python references of the documented definitions:
 
 - `word_overlap_pairs` / `containment_pairs` / `char_jaccard_pairs`
-  vs an all-pairs exact shingle-set reference, BOTH physical plans
-  (plain co-occurrence self-join AND the PPJoin prefix-filtered path)
-  — every metric is integer-exact or a single IEEE division, so the
-  comparison is bit-exact;
+  vs an all-pairs exact shingle-set reference, uncapped AND under a
+  small ``max_shingle_freq`` cap — every metric is integer-exact or a
+  single IEEE division, so the comparison is bit-exact;
 - `exact_duplicates` / `deduplicate_exact` vs a normalized-md5 group
   reference;
 - `duplicated_spans` vs a sliding-window fingerprint + island-merge
@@ -116,21 +115,32 @@ def _char_shingle_set(text: str, n: int) -> frozenset[str]:
 
 
 def _ref_pairs(
-    sets: dict[int, frozenset[str]]
+    sets: dict[int, frozenset[str]], cap: int | None = None
 ) -> dict[tuple[int, int], tuple[int, int, int]]:
     """(a, b) -> (common, union, min_sz) for every id pair sharing a
     shingle (pairs with common == 0 can never appear: candidate
-    generation keys on shared shingles)."""
-    ids = sorted(sets)
-    out = {}
-    for i, a in enumerate(ids):
-        for b in ids[i + 1 :]:
-            common = len(sets[a] & sets[b])
-            if common == 0:
-                continue
-            union = len(sets[a]) + len(sets[b]) - common
-            out[(a, b)] = (common, union, min(len(sets[a]), len(sets[b])))
-    return out
+    generation keys on shared shingles).  ``cap`` is the operators'
+    ``max_shingle_freq``: shingles in more than ``cap`` docs leave the
+    universe before sizes and overlaps are counted.  Built from a
+    shingle -> docs inverted index, so the cost is the pair fan-out of
+    the shared shingles, not all n^2 pairs."""
+    postings: dict[str, list[int]] = {}
+    for doc in sorted(sets):
+        for sh in sets[doc]:
+            postings.setdefault(sh, []).append(doc)
+    if cap is not None:
+        postings = {sh: ds for sh, ds in postings.items() if len(ds) <= cap}
+    sizes: Counter = Counter()
+    common: Counter = Counter()
+    for ds in postings.values():
+        sizes.update(ds)
+        for i, a in enumerate(ds):
+            for b in ds[i + 1 :]:
+                common[(a, b)] += 1
+    return {
+        (a, b): (c, sizes[a] + sizes[b] - c, min(sizes[a], sizes[b]))
+        for (a, b), c in common.items()
+    }
 
 
 def _mkdf(spark, docs):
@@ -155,16 +165,17 @@ def test_overlap_pairs_match_reference(spark):
     jn, jd = rng.choice([(1, 2), (3, 5), (7, 10), (8, 10)])
     cn, cd = rng.choice([(3, 4), (9, 10), (1, 1)])
     word_sets = {i: _word_shingle_set(t, n) for i, t in docs}
-    ref = _ref_pairs(word_sets)
+    caps = (None, 4)
 
     failures: list[str] = []
-    for prefix in (False, True):
+    for cap in caps:
+        ref = _ref_pairs(word_sets, cap)
         got = {
             (r["a_doc"], r["b_doc"]): r
             for r in word_overlap_pairs(
                 df, n=n, jaccard_num=jn, jaccard_den=jd,
                 containment_num=cn, containment_den=cd,
-                prefix_filter=prefix,
+                max_shingle_freq=cap,
             ).collect()
         }
         want = {
@@ -175,7 +186,7 @@ def test_overlap_pairs_match_reference(spark):
         for k in set(got) | set(want):
             if k not in got or k not in want:
                 failures.append(
-                    f"word prefix={prefix} n={n} pair {k}: "
+                    f"word cap={cap} n={n} pair {k}: "
                     f"spark={'present' if k in got else 'MISSING'} "
                     f"ref={'present' if k in want else 'absent'} "
                     f"({ref.get(k)})"
@@ -192,45 +203,48 @@ def test_overlap_pairs_match_reference(spark):
             for col, w in exp.items():
                 if r[col] != w:
                     failures.append(
-                        f"word prefix={prefix} pair {k} {col}: "
+                        f"word cap={cap} pair {k} {col}: "
                         f"spark={r[col]!r} ref={w!r}"
                     )
     assert not failures, "\n".join(failures[:20])
 
     # containment_pairs: same reference, containment threshold only
-    got_c = {
-        (r["a_doc"], r["b_doc"]): r
-        for r in containment_pairs(
-            df, n=n, threshold_num=cn, threshold_den=cd, prefix_filter=True
-        ).collect()
-    }
-    want_c = {k: v for k, v in ref.items() if v[0] * cd >= cn * v[2]}
-    assert set(got_c) == set(want_c), (
-        f"containment pair sets differ: extra={set(got_c) - set(want_c)} "
-        f"missing={set(want_c) - set(got_c)}"
-    )
-    for k, (common, _union, mn) in want_c.items():
-        r = got_c[k]
-        assert (r["common"], r["min_sz"], r["containment"]) == (
-            common, mn, common / mn,
-        ), f"containment pair {k}: {r}"
+    for cap in caps:
+        ref = _ref_pairs(word_sets, cap)
+        got_c = {
+            (r["a_doc"], r["b_doc"]): r
+            for r in containment_pairs(
+                df, n=n, threshold_num=cn, threshold_den=cd,
+                max_shingle_freq=cap,
+            ).collect()
+        }
+        want_c = {k: v for k, v in ref.items() if v[0] * cd >= cn * v[2]}
+        assert set(got_c) == set(want_c), (
+            f"containment cap={cap}: extra={set(got_c) - set(want_c)} "
+            f"missing={set(want_c) - set(got_c)}"
+        )
+        for k, (common, _union, mn) in want_c.items():
+            r = got_c[k]
+            assert (r["common"], r["min_sz"], r["containment"]) == (
+                common, mn, common / mn,
+            ), f"containment cap={cap} pair {k}: {r}"
 
     # char-shingle Jaccard
     cjn, cjd = rng.choice([(1, 2), (7, 10)])
     cn_gram = rng.choice([4, 5])
     char_sets = {i: _char_shingle_set(t, cn_gram) for i, t in docs}
-    cref = _ref_pairs(char_sets)
-    for prefix in (False, True):
+    for cap in caps:
+        cref = _ref_pairs(char_sets, cap)
         got_ch = {
             (r["a_doc"], r["b_doc"]): r
             for r in char_jaccard_pairs(
                 df, n=cn_gram, threshold_num=cjn, threshold_den=cjd,
-                prefix_filter=prefix,
+                max_shingle_freq=cap,
             ).collect()
         }
         want_ch = {k: v for k, v in cref.items() if v[0] * cjd >= cjn * v[1]}
         assert set(got_ch) == set(want_ch), (
-            f"char prefix={prefix}: extra={set(got_ch) - set(want_ch)} "
+            f"char cap={cap}: extra={set(got_ch) - set(want_ch)} "
             f"missing={set(want_ch) - set(got_ch)}"
         )
         for k, (common, union, _mn) in want_ch.items():

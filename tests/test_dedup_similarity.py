@@ -879,10 +879,24 @@ def test_minhash_universal_family_matches_duckdb(spark, docs):
     assert checked >= 30
 
 
+def _word3_sets(corpus) -> dict:
+    """doc_id -> word-3-gram set of each collected ``corpus`` row, for
+    the all-pairs reference ``tests.test_dedup_fuzz._ref_pairs`` (the
+    fixture docs are ASCII, so its tokenizer matches Spark's)."""
+    from tests.test_dedup_fuzz import _word_shingle_set
+
+    return {
+        r["doc_id"]: _word_shingle_set(r["text"], 3)
+        for r in corpus.select("doc_id", "text").collect()
+    }
+
+
 @pytest.mark.parametrize("tnum,tden", [(8, 10), (9, 10), (7, 10)])
 def test_prefix_filter_identical_to_full_join(spark, sf_dir, tnum, tden):
-    """PPJoin prefix filtering returns bit-identical pairs to the full
-    shingle self-join at several thresholds, capped and uncapped."""
+    """PPJoin prefix filtering returns the same pairs as a full shingle
+    self-join — the pure-Python all-pairs reference — at several
+    thresholds, capped and uncapped."""
+    from tests.test_dedup_fuzz import _ref_pairs
     from topic_store_spark.operators.dedup import ngram_jaccard_pairs
 
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -892,16 +906,17 @@ def test_prefix_filter_identical_to_full_join(spark, sf_dir, tnum, tden):
             F.concat("text", F.lit(" qq ww")).alias("text"),
         )
     )
+    sets = _word3_sets(corpus)
     for cap in (None, 64):
-        full = ngram_jaccard_pairs(
-            corpus, threshold_num=tnum, threshold_den=tden,
-            max_shingle_freq=cap,
+        f_rows = sorted(
+            (a, b, c, u, c / u)
+            for (a, b), (c, u, _mn) in _ref_pairs(sets, cap).items()
+            if c * tden >= tnum * u
         )
         fast = ngram_jaccard_pairs(
             corpus, threshold_num=tnum, threshold_den=tden,
-            max_shingle_freq=cap, prefix_filter=True,
+            max_shingle_freq=cap,
         )
-        f_rows = sorted(tuple(r) for r in full.collect())
         p_rows = sorted(tuple(r) for r in fast.collect())
         assert f_rows == p_rows
         assert len(f_rows) > 0
@@ -911,10 +926,7 @@ def test_prefix_filter_prunes_candidates(spark, sf_dir):
     """The prefix relation the candidates join on is a small fraction of
     the full shingle relation (t=0.8 -> ~20% of each doc indexed)."""
     from topic_store_spark.functions.hashing import shingle_key60
-    from topic_store_spark.operators.dedup import (
-        _prefix_filtered_pairs,
-        _shingle_arrays,
-    )
+    from topic_store_spark.operators.dedup import _shingle_arrays
     from topic_store_spark.operators.util import explode_nonempty
 
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -942,9 +954,10 @@ def test_prefix_filter_prunes_candidates(spark, sf_dir):
 @pytest.mark.parametrize("jn,jd,cn,cd", [(8, 10, 9, 10), (7, 10, 8, 10)])
 def test_word_overlap_prefix_filter_identical(spark, sf_dir, jn, jd, cn, cd):
     """The OR-of-thresholds prefix plan (Jaccard prefix x prefix UNION
-    containment smaller-prefix x full) is bit-identical to the plain
-    capped self-join — including near-SUBSET pairs that only the
-    containment branch can find."""
+    containment smaller-prefix x full) returns the same rows as a full
+    capped self-join — the all-pairs reference — including near-SUBSET
+    pairs that only the containment branch can find."""
+    from tests.test_dedup_fuzz import _ref_pairs
     from topic_store_spark.operators.dedup import word_overlap_pairs
 
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -970,18 +983,19 @@ def test_word_overlap_prefix_filter_identical(spark, sf_dir, jn, jd, cn, cd):
         ).alias("text"),
     )
     corpus = docs.unionByName(clones).unionByName(subsets)
+    sets = _word3_sets(corpus)
     for cap in (None, 64):
-        kw = dict(
-            n=3, jaccard_num=jn, jaccard_den=jd,
-            containment_num=cn, containment_den=cd, max_shingle_freq=cap,
-        )
         plain = sorted(
-            tuple(r) for r in word_overlap_pairs(corpus, **kw).collect()
+            (a, b, c, u, mn, c / u, c / mn, jac, con)
+            for (a, b), (c, u, mn) in _ref_pairs(sets, cap).items()
+            for jac, con in [(c * jd >= jn * u, c * cd >= cn * mn)]
+            if jac or con
         )
         fast = sorted(
             tuple(r)
             for r in word_overlap_pairs(
-                corpus, prefix_filter=True, **kw
+                corpus, n=3, jaccard_num=jn, jaccard_den=jd,
+                containment_num=cn, containment_den=cd, max_shingle_freq=cap,
             ).collect()
         )
         assert plain == fast and len(plain) > 0
@@ -993,6 +1007,9 @@ def test_word_overlap_prefix_filter_identical(spark, sf_dir, jn, jd, cn, cd):
 
 
 def test_containment_prefix_filter_identical(spark, sf_dir):
+    """The asymmetric containment prefix plan returns the same rows as a
+    full self-join — the all-pairs reference — capped and uncapped."""
+    from tests.test_dedup_fuzz import _ref_pairs
     from topic_store_spark.operators.dedup import containment_pairs
 
     docs = table(spark, sf_dir, "documents").select("doc_id", "text").limit(120)
@@ -1010,11 +1027,15 @@ def test_containment_prefix_filter_identical(spark, sf_dir):
         ).alias("text"),
     )
     corpus = docs.unionByName(subsets)
+    sets = _word3_sets(corpus)
     for cap in (None, 64):
-        plain = sorted(tuple(r) for r in containment_pairs(
-            corpus, max_shingle_freq=cap).collect())
+        plain = sorted(
+            (a, b, c, mn, c / mn)
+            for (a, b), (c, _u, mn) in _ref_pairs(sets, cap).items()
+            if c * 10 >= 9 * mn
+        )
         fast = sorted(tuple(r) for r in containment_pairs(
-            corpus, max_shingle_freq=cap, prefix_filter=True).collect())
+            corpus, max_shingle_freq=cap).collect())
         assert plain == fast and len(plain) >= 20
 
 

@@ -45,7 +45,10 @@ def _mix_constants(k: int) -> list[tuple[int, int]]:
 
 
 def test_minhash_lsh_matches_reference(spark):
-    from topic_store_spark.operators.dedup import minhash_lsh_pairs
+    from topic_store_spark.operators.dedup import (
+        minhash_lsh_pairs,
+        pair_cache_scope,
+    )
 
     rng = random.Random(0x314A)
     docs = _corpus(rng)
@@ -83,13 +86,15 @@ def test_minhash_lsh_matches_reference(spark):
         if common * td >= tn * union:
             want[(a, b)] = (common, union, common / union)
 
-    got = {
-        (r["a_doc"], r["b_doc"]): (r["common"], r["union_sz"], r["jaccard"])
-        for r in minhash_lsh_pairs(
-            _mkdf(spark, docs), n=n, num_perm=num_perm, bands=bands,
-            threshold_num=tn, threshold_den=td, persist=False,
-        ).collect()
-    }
+    # the operator pins its shingle arrays; the scope releases them
+    with pair_cache_scope():
+        got = {
+            (r["a_doc"], r["b_doc"]): (r["common"], r["union_sz"], r["jaccard"])
+            for r in minhash_lsh_pairs(
+                _mkdf(spark, docs), n=n, num_perm=num_perm, bands=bands,
+                threshold_num=tn, threshold_den=td,
+            ).collect()
+        }
     assert got == want, (
         f"n={n} bands={bands} t={tn}/{td}: "
         f"extra={set(got) - set(want)} missing={set(want) - set(got)} "

@@ -177,6 +177,18 @@ def test_pipeline_project_computed_sees_input_doc(spark):
     assert out2["a"] == 100 and out2["c"] == 11
 
 
+def test_pipeline_project_computed_is_inclusion(spark):
+    """A computed field is an inclusion: beside ``_id: 0`` only the
+    computed fields survive, and any other exclusion beside one is
+    refused, as Mongo does."""
+    df = spark.createDataFrame([("x", 1, "s")], "_id string, k long, s string")
+    out = apply_pipeline(df, [{"$project": {"_id": 0, "x": {"$add": ["$k", 1]}}}])
+    assert out.columns == ["x"]
+    assert [tuple(r) for r in out.collect()] == [(2,)]
+    with pytest.raises(ValueError, match="exclusion projection"):
+        apply_pipeline(df, [{"$project": {"s": 0, "x": {"$add": ["$k", 1]}}}])
+
+
 def test_pipeline_addfields_and_dateparts(spark):
     from topic_store_spark.objectid import new_object_id
     import time
@@ -201,6 +213,11 @@ def test_pipeline_group_multi_key(orders):
     keys = apply_pipeline(orders, [{"$group": {"_id": "$o_orderstatus"}}])
     assert keys.columns == ["_id"]
     assert keys.count() == orders.select("o_orderstatus").distinct().count()
+    # _id: null groups everything and returns a typed null _id (Mongo)
+    total = apply_pipeline(orders, [{"$group": {"_id": None, "n": {"$sum": 1}}}])
+    assert total.columns == ["_id", "n"]
+    assert dict(total.dtypes)["_id"] == "string"
+    assert [tuple(r) for r in total.collect()] == [(None, orders.count())]
 
 
 def test_pipeline_lookup_and_unwind(spark):

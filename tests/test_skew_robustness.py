@@ -129,11 +129,13 @@ def test_action_server_on_demand_capture(spark, tmp_path):
     assert len(docs) == 2 and docs[0]["cam"] == "img"
 
 
-def test_overlap_cap_is_broadcast_anti_join(spark):
-    """The stop-shingle cap must never shuffle the corpus-sized flat
-    shingle relation by shingle: the plan drops hot shingles with a
-    BROADCAST anti-join against the (tiny) over-cap set, and results
-    are exact in the filtered universe."""
+def test_overlap_cap_filters_df_rollup_before_join(spark):
+    """The stop-shingle cap filters the shingle document-frequency
+    rollup BEFORE it joins back to the flat shingle relation, so a hot
+    shingle never reaches the prefix join (per-key fan-out <= cap), and
+    results are exact in the filtered universe."""
+    import re
+
     from topic_store_spark.operators.dedup import word_overlap_pairs
 
     # every doc shares the same 3 boilerplate tokens (one hot shingle in
@@ -145,15 +147,17 @@ def test_overlap_cap_is_broadcast_anti_join(spark):
     df = spark.createDataFrame(rows, ["doc_id", "text"])
     out = word_overlap_pairs(df, n=3, max_shingle_freq=8)
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
-    got = {(r["a_doc"], r["b_doc"]) for r in out.collect()}
+    assert re.search(r"Filter \(.*\bdf#\d+L <= 8\)", plan), plan
+    rows = out.collect()
     # each even/odd twin pair survives on its unique body; the hot
     # boilerplate shingle ('all rights reserved', df=40 > cap) is gone
-    # from numerators AND denominators, so twins are exact dups in the
-    # filtered universe
-    assert got == {(2 * k, 2 * k + 1) for k in range(20)}
-    for r in word_overlap_pairs(df, n=3, max_shingle_freq=8).collect():
-        assert r["jaccard"] == 1.0
+    # from numerators AND denominators (13 shingles per doc, 12 kept),
+    # so twins are exact dups in the filtered universe
+    assert {(r["a_doc"], r["b_doc"]) for r in rows} == {
+        (2 * k, 2 * k + 1) for k in range(20)
+    }
+    for r in rows:
+        assert (r["common"], r["union_sz"], r["jaccard"]) == (12, 12, 1.0)
 
 
 def test_domain_topk_window_is_group_limited(spark):

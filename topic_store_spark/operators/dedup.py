@@ -4,7 +4,9 @@ Five strategies over a ``documents``-shaped table (id + text) or an
 ``embeddings``-shaped table (id + vector):
 
 - ``exact_duplicates``        hash-groupBy on a normalized fingerprint
-- ``ngram_jaccard_pairs``     exact n-gram Jaccard via shingle self-join
+- ``ngram_jaccard_pairs``     exact n-gram Jaccard: AllPairs/PPJoin prefix
+  candidates -> exact verify (``containment_pairs``,
+  ``word_overlap_pairs`` and ``char_jaccard_pairs`` share the plan)
 - ``minhash_lsh_pairs``       MinHash signatures -> LSH bands -> verify
 - ``simhash_pairs``           SimHash bands -> Hamming verify
 - ``embedding_dup_pairs``     quantized-cosine near-dup pairs (brute
@@ -24,10 +26,11 @@ bench corpus, and the difference between "works" and "doesn't" at 100 TB):
 2. Inputs are **repartitioned up to the cluster's parallelism** before
    CPU-bound signature computation (a handful of small input files must
    not serialize hashing onto a handful of cores).
-3. LSH candidate pairs are verified by joining the candidate list to
-   per-doc shingle *arrays* and intersecting (``array_intersect``) —
-   never by re-running the full shingle self-join and filtering after,
-   which would cost more than the brute-force path it replaces.
+3. Prefix and LSH candidate pairs are verified by one step,
+   ``_verify_candidates``: join the candidate list to per-doc shingle
+   *arrays* and intersect (``array_intersect``) — never a full shingle
+   self-join filtered after, which would cost more than the
+   brute-force path it replaces.
 
 Jaccard/minhash self-joins key on shingle/band — the classic hot-key
 hazard is a shingle shared by half the corpus, so the exact path takes a
@@ -52,6 +55,7 @@ from topic_store_spark.functions.hashing import (
     token_md5s,
 )
 from topic_store_spark.functions.text import (
+    char_shingles_from_norm,
     normalize_text,
     shingles_from_tokens,
     tokens,
@@ -141,30 +145,12 @@ def _shingle_arrays(
     )
 
 
-def _pair_jaccard(sh: DataFrame, candidates: DataFrame) -> DataFrame:
-    """Exact Jaccard for an explicit (a_doc, b_doc) candidate list by
-    intersecting the two docs' shingle arrays — per-candidate work only,
-    no shingle self-join."""
-    a = sh.select(
-        F.col("doc").alias("a_doc"),
-        F.col("shs").alias("a_shs"),
-        F.size("shs").alias("a_sz"),
-    )
-    b = sh.select(
-        F.col("doc").alias("b_doc"),
-        F.col("shs").alias("b_shs"),
-        F.size("shs").alias("b_sz"),
-    )
-    joined = candidates.join(a, "a_doc").join(b, "b_doc")
-    # project_once: the threshold filter downstream would otherwise be
-    # pushed into the join condition with the array_intersect inlined
-    # 3x per candidate pair (r13 plan audit)
-    return project_once(
-        joined, common=F.size(F.array_intersect("a_shs", "b_shs"))
-    ).withColumn("union_sz", F.col("a_sz") + F.col("b_sz") - F.col("common"))
-
-
 def _jaccard_out(pairs: DataFrame, threshold_num: int, threshold_den: int) -> DataFrame:
+    """Verified ``(a_doc, b_doc, common, a_sz, b_sz)`` pairs at or above
+    the Jaccard threshold, with ``union_sz`` and the ratio."""
+    pairs = pairs.withColumn(
+        "union_sz", F.col("a_sz") + F.col("b_sz") - F.col("common")
+    )
     return pairs.filter(
         F.col("common") * threshold_den >= threshold_num * F.col("union_sz")
     ).select(
@@ -176,118 +162,15 @@ def _jaccard_out(pairs: DataFrame, threshold_num: int, threshold_den: int) -> Da
     )
 
 
-# tracked persists (r11: shared machinery in operators/util.py, aliased
-# at the top of this module — the same scope/release contract now also
-# covers corpus.py's LM caches): `release_pair_caches()` drains every
-# unscoped tracked intermediate (the overlap plans' cap-filtered
-# shingles, ordered arrays, MinHash shingle/band relations, SimHash
-# signature groups) once the pair output is materialized;
-# `pair_cache_scope` scopes one computation's pins so concurrent
-# computations can't release each other's caches (r10 ADVICE).  NOTE:
-# `spark.catalog.clearCache()` does NOT drain the tracked list — use
-# the scope/release API.
-
-
-def _cooccurring_pairs(sh: DataFrame, max_shingle_freq: int | None) -> DataFrame:
-    """Shared skeleton of the exact overlap family: shingle-keyed
-    self-join -> per-pair common count + both set sizes.
-
-    ``sh`` is (doc, shs array).  Keying on shingle IS the pair pruning —
-    pairs sharing no shingle can never pass a positive threshold.
-    ``max_shingle_freq`` drops shingles appearing in more than that many
-    docs before the self-join: one stop-shingle shared by d docs alone
-    contributes d^2/2 candidate pairs, so an uncapped join is the
-    canonical 100x scale-killer.  When the cap is active, set sizes are
-    recomputed over the SURVIVING shingles too, so the metrics are exact
-    Jaccard/containment in the stop-shingle-filtered universe — a true
-    dup pair keeps its score (both members lose the same hot shingles)
-    instead of being diluted by a full-size denominator.
-
-    The join runs on a 60-bit md5-derived integer key per shingle, not
-    the shingle string: the self-join shuffles longs instead of 20-40
-    byte grams (~25% faster measured at sf0.1, linearly more at wider
-    grams).  Two distinct shingles sharing a key would inflate one
-    pair's ``common`` by 1, but 60-bit collisions over even a
-    billion-shingle vocabulary are ~3e-4 expected occurrences — and the
-    key is a pure function of the shingle, so any engine mirroring the
-    derivation (md5 is bit-identical everywhere) reproduces the exact
-    output."""
-    from topic_store_spark.functions.hashing import shingle_key60
-
-    shingles = explode_nonempty(sh, "shs", "shingle", "doc").select(
-        "doc", shingle_key60(F.col("shingle")).alias("shingle")
-    )
-
-    joinable = shingles
-    if max_shingle_freq is not None:
-        freq = shingles.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-        # drop-side ANTI-join, not keep-side inner join: the KEEP set is
-        # nearly the whole vocabulary (never broadcastable at scale, so
-        # an inner join would shuffle the corpus-sized flat relation by
-        # shingle — with exactly the hot keys the cap exists to tame);
-        # the DROP set is the handful of stop-shingles over the cap —
-        # tiny by definition, broadcast at any corpus size, zero corpus
-        # shuffle.  The flat relation itself is deliberately RECOMPUTED
-        # map-side per pass rather than cached: its lineage is a
-        # stateless scan+explode, and recomputing that beats writing+
-        # reading a corpus-sized cache (measured both ways at sf0.1).
-        hot = freq.filter(F.col("df") > max_shingle_freq).select("shingle")
-        joinable = shingles.join(F.broadcast(hot), "shingle", "left_anti")
-        # three consumers (join left/right + sizes) would each re-derive
-        # the shingle scan AND the anti-join — materialize once (tracked;
-        # see release_pair_caches)
-        joinable = _persist_tracked(joinable)
-        sizes = joinable.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
-    else:
-        sizes = sh.select("doc", F.size("shs").alias("sz"))
-
-    left = joinable.select(F.col("doc").alias("a_doc"), "shingle")
-    right = joinable.select(F.col("doc").alias("b_doc"), "shingle")
-    common = (
-        left.join(right, "shingle")
-        .filter(F.col("a_doc") < F.col("b_doc"))
-        .groupBy("a_doc", "b_doc")
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    return (
-        common.join(sizes.withColumnsRenamed({"doc": "a_doc", "sz": "a_sz"}), "a_doc")
-        .join(sizes.withColumnsRenamed({"doc": "b_doc", "sz": "b_sz"}), "b_doc")
-    )
-
-
-def _prefix_filtered_pairs(
-    sh: DataFrame,
-    threshold_num: int,
-    threshold_den: int,
-    max_shingle_freq: int | None,
-) -> DataFrame:
-    """AllPairs/PPJoin-style prefix filtering (Bayardo et al. 2007,
-    "Scaling Up All Pairs Similarity Search") for the exact-Jaccard
-    self-join: under one GLOBAL shingle order (document frequency
-    ascending, key ascending — rarest first), any pair with
-    ``J(A, B) >= t`` must share a shingle within each side's first
-    ``|X| - ceil(t * |X|) + 1`` ordered shingles, so only that PREFIX is
-    indexed and self-joined.  At t = 0.8 the prefix is ~20% of each doc
-    — candidate pairs fall to ~4% of the full shingle self-join's, and
-    the prefix skews toward RARE shingles (tiny buckets), so the win at
-    web scale is substantially larger than the ratio suggests.
-
-    Candidates are verified with the exact intersection of the FULL
-    (cap-filtered) shingle sets, so results are bit-identical to
-    ``_cooccurring_pairs`` + threshold: same ``(a_doc, b_doc, common,
-    a_sz, b_sz)`` relation restricted to pairs that can pass ``t``
-    (proven by equality tests at several thresholds).
-
-    ``max_shingle_freq`` composes exactly as in ``_cooccurring_pairs``:
-    stop-shingles leave the universe before sizes, ordering, prefixes
-    and verification.  Cost shape: the global df rollup (needed for the
-    cap anyway), ONE doc-keyed shuffle to assemble each doc's ordered
-    shingle array, the (small) prefix self-join, and per-candidate
-    array intersections.
-    """
-    docs = _ordered_docs(sh, max_shingle_freq)
-    cands = _jaccard_prefix_cands(docs, threshold_num, threshold_den)
-    return _verify_candidates(docs, cands)
+# tracked persists (shared machinery in operators/util.py, aliased at
+# the top of this module — the same scope/release contract covers
+# corpus.py's LM caches): `release_pair_caches()` drains every unscoped
+# tracked intermediate (the overlap plans' flat shingle keys and
+# ordered arrays, MinHash shingle/band relations, SimHash signature
+# groups) once the pair output is materialized; `pair_cache_scope`
+# scopes one computation's pins so concurrent computations can't
+# release each other's caches.  NOTE: `spark.catalog.clearCache()`
+# does NOT drain the tracked list — use the scope/release API.
 
 
 def _ordered_docs(sh: DataFrame, max_shingle_freq: int | None) -> DataFrame:
@@ -295,7 +178,23 @@ def _ordered_docs(sh: DataFrame, max_shingle_freq: int | None) -> DataFrame:
     ONE array under the global (df asc, key asc) order — the relation
     every prefix scheme slices and every verification intersects.
     Tracked for :func:`release_pair_caches`, as is the flat
-    ``(doc, shingle)`` relation it is rolled up from."""
+    ``(doc, shingle)`` relation it is rolled up from.
+
+    ``max_shingle_freq`` drops shingles appearing in more than that many
+    docs: one stop-shingle shared by d docs alone puts d docs in one
+    join bucket, the canonical 100x scale-killer.  Sizes count the
+    SURVIVING shingles, so the metrics are exact Jaccard/containment in
+    the stop-shingle-filtered universe — a true dup pair keeps its score
+    (both members lose the same hot shingles) instead of being diluted
+    by a full-size denominator.
+
+    Shingles are keyed by a 60-bit md5-derived integer, not the string:
+    every join and intersection moves longs instead of 20-40 byte grams.
+    Two distinct shingles sharing a key would inflate one pair's
+    ``common`` by 1, but 60-bit collisions over even a billion-shingle
+    vocabulary are ~3e-4 expected occurrences — and the key is a pure
+    function of the shingle, so any engine mirroring the derivation
+    (md5 is bit-identical everywhere) reproduces the exact output."""
     from topic_store_spark.functions.hashing import shingle_key60
 
     # pinned: the df rollup and the join-back both read ``flat``, and
@@ -345,13 +244,22 @@ def _prefix_len(threshold_num: int, threshold_den: int):
 
 
 def _jaccard_prefix_cands(
-    docs: DataFrame, threshold_num: int, threshold_den: int,
-    distinct: bool = True,
+    docs: DataFrame, threshold_num: int, threshold_den: int
 ) -> DataFrame:
     """Candidate (a_doc, b_doc) pairs that can pass the Jaccard
-    threshold: prefix x prefix self-join (both sides' bounds are valid
-    because J >= t lower-bounds the overlap by t*|X| for EACH side),
-    tightened by the two sound PPJoin-paper cuts (Xiao et al. 2008)
+    threshold, with duplicates (the caller dedups once).
+
+    AllPairs prefix filtering (Bayardo et al. 2007, "Scaling Up All
+    Pairs Similarity Search"): under the global shingle order of
+    :func:`_ordered_docs` (rarest first), any pair with ``J(A, B) >= t``
+    must share a shingle within each side's first ``|X| - ceil(t * |X|)
+    + 1`` ordered shingles, so only that PREFIX is self-joined (both
+    sides' bounds are valid because J >= t lower-bounds the overlap by
+    t*|X| for EACH side).  At t = 0.8 the prefix is ~20% of each doc —
+    candidate pairs fall to ~4% of a full shingle self-join's, and the
+    prefix skews toward RARE shingles (tiny buckets).
+
+    Tightened by the two sound PPJoin-paper cuts (Xiao et al. 2008)
     applied as join-time predicates BEFORE the distinct + verify:
 
     - size ratio: J >= t forces min*den >= num*max (else even a full
@@ -362,9 +270,9 @@ def _jaccard_prefix_cands(
       ``num*(|A|+|B|) / (num+den)``.
 
     Both only REMOVE candidates that exact verification would reject,
-    so the output pair set is unchanged (equality-pinned in
-    test_dedup_similarity); at sf0.1 they cut candidates ~2x before
-    the expensive array-intersect verify."""
+    so the output pair set is unchanged (pinned against an all-pairs
+    reference in test_dedup_similarity); at sf0.1 they cut candidates
+    ~2x before the expensive array-intersect verify."""
     num, den = threshold_num, threshold_den
     plen = _prefix_len(num, den)
     prefix = docs.select(
@@ -383,29 +291,23 @@ def _jaccard_prefix_cands(
     out = out.filter(
         F.least("x.sz", "y.sz") * den >= F.greatest("x.sz", "y.sz") * num
     ).filter(ubound * (num + den) >= (F.col("x.sz") + F.col("y.sz")) * num)
-    out = out.select(
+    return out.select(
         F.col("x.doc").alias("a_doc"), F.col("y.doc").alias("b_doc")
     )
-    # ``distinct=False`` (r14): a caller that UNIONs several candidate
-    # sources and dedups ONCE after the union skips this source-local
-    # exchange — the union-level distinct's map-side partial aggregate
-    # collapses the duplicates anyway, so one shuffle replaces two
-    # (guide §2.4); the pair set is unchanged.
-    return out.distinct() if distinct else out
 
 
 def _containment_prefix_cands(
-    docs: DataFrame, threshold_num: int, threshold_den: int,
-    distinct: bool = True,
+    docs: DataFrame, threshold_num: int, threshold_den: int
 ) -> DataFrame:
     """Candidate pairs that can pass the containment threshold
-    ``common >= t * min(|A|, |B|)``.  The overlap bound is relative to
-    the SMALLER side only, so the prefix principle holds only for it:
-    index the smaller doc's prefix against the larger doc's FULL list
-    (prefix x prefix would be unsound — the larger side's own-size
-    prefix can legally miss the intersection).  Asymmetric-join cost:
-    sum over shingles of prefix_df * df, still far below the full
-    self-join's df^2 and skewed toward rare shingles.
+    ``common >= t * min(|A|, |B|)``, with duplicates (the caller dedups
+    once).  The overlap bound is relative to the SMALLER side only, so
+    the prefix principle holds only for it: index the smaller doc's
+    prefix against the larger doc's FULL list (prefix x prefix would be
+    unsound — the larger side's own-size prefix can legally miss the
+    intersection).  Asymmetric-join cost: sum over shingles of
+    prefix_df * df, still far below a full self-join's df^2 and skewed
+    toward rare shingles.
 
     Tightened by the PPJoin positional upper bound (sound — see
     `_jaccard_prefix_cands`): a pair joined at positions (px, py) of
@@ -433,17 +335,24 @@ def _containment_prefix_cands(
         )
     )
     out = out.filter(ubound * den >= F.col("x.sz") * num)
-    out = out.select(
+    return out.select(
         F.least("x.doc", "y.doc").alias("a_doc"),
         F.greatest("x.doc", "y.doc").alias("b_doc"),
     )
-    # see _jaccard_prefix_cands: union-level dedup skips this exchange
-    return out.distinct() if distinct else out
+
+
+def _sized(sh: DataFrame) -> DataFrame:
+    """The (doc, ss, sz) side :func:`_verify_candidates` joins, from a
+    (doc, shs) shingle-array relation."""
+    return sh.select("doc", F.col("shs").alias("ss"), F.size("shs").alias("sz"))
 
 
 def _verify_candidates(docs: DataFrame, cands: DataFrame) -> DataFrame:
-    """Exact (common, a_sz, b_sz) for candidate pairs via full-array
-    intersection — the shared verification step of every prefix plan."""
+    """Exact (a_doc, b_doc, common, a_sz, b_sz) for distinct candidate
+    pairs by intersecting the two docs' full shingle arrays from ``docs``
+    (doc, ss, sz) — per-candidate work only, no shingle self-join.  The
+    one verification step of the prefix plans and the MinHash
+    operators."""
     a = docs.select(
         F.col("doc").alias("a_doc"),
         F.col("ss").alias("a_ss"),
@@ -470,26 +379,17 @@ def ngram_jaccard_pairs(
     threshold_num: int = 8,
     threshold_den: int = 10,
     max_shingle_freq: int | None = None,
-    prefix_filter: bool = False,
 ) -> DataFrame:
     """All pairs with exact n-gram Jaccard >= threshold_num/threshold_den.
 
-    Brute-exact path: co-shingled pairs via shingle-key self-join (pairs
-    that share no shingle can never pass a positive threshold, so keying
-    on shingle IS the pair pruning).  ``prefix_filter=True`` switches to
-    the AllPairs/PPJoin prefix-filtered plan — identical output, ~(1-t)^2
-    of the candidates (see ``_prefix_filtered_pairs``)."""
-    sh = _shingle_arrays(df, text_col, id_col, n)
-    if prefix_filter:
-        pairs = _prefix_filtered_pairs(
-            sh, threshold_num, threshold_den, max_shingle_freq
-        )
-    else:
-        pairs = _cooccurring_pairs(sh, max_shingle_freq)
-    pairs = pairs.withColumn(
-        "union_sz", F.col("a_sz") + F.col("b_sz") - F.col("common")
-    )
-    return _jaccard_out(pairs, threshold_num, threshold_den)
+    AllPairs/PPJoin prefix plan: the globally-ordered cap-filtered
+    shingle arrays (``_ordered_docs``), prefix x prefix candidates
+    (``_jaccard_prefix_cands``), exact verification on the full arrays
+    (``_verify_candidates``) — the same pairs and metrics as a full
+    shingle self-join, from ~(1-t)^2 of its candidates."""
+    docs = _ordered_docs(_shingle_arrays(df, text_col, id_col, n), max_shingle_freq)
+    cands = _jaccard_prefix_cands(docs, threshold_num, threshold_den).distinct()
+    return _jaccard_out(_verify_candidates(docs, cands), threshold_num, threshold_den)
 
 
 def containment_pairs(
@@ -500,29 +400,20 @@ def containment_pairs(
     threshold_num: int = 9,
     threshold_den: int = 10,
     max_shingle_freq: int | None = None,
-    prefix_filter: bool = False,
 ) -> DataFrame:
     """All pairs where the SMALLER document's n-gram set is >= threshold
     contained in the union — containment = common / min(|A|, |B|).
 
     Jaccard misses near-subset duplication (a paragraph quoted inside a
     much longer page scores low Jaccard but containment ~1); this is the
-    standard asymmetric complement.  Identical keyed self-join plan to
-    ``ngram_jaccard_pairs`` — only the final threshold differs, and it
-    stays an exact cross-multiplied integer test.
-
-    ``prefix_filter=True`` uses the containment-sound asymmetric prefix
-    plan — the smaller doc's prefix indexed against full lists
-    (`_containment_prefix_cands`); bit-identical output."""
-    sh = _shingle_arrays(df, text_col, id_col, n)
-    if prefix_filter:
-        docs = _ordered_docs(sh, max_shingle_freq)
-        pairs = _verify_candidates(
-            docs, _containment_prefix_cands(docs, threshold_num, threshold_den)
-        )
-    else:
-        pairs = _cooccurring_pairs(sh, max_shingle_freq)
-    pairs = pairs.withColumn(
+    standard asymmetric complement.  Same plan as
+    ``ngram_jaccard_pairs`` with the containment-sound asymmetric
+    candidates — the smaller doc's prefix indexed against full lists
+    (``_containment_prefix_cands``); the final threshold stays an exact
+    cross-multiplied integer test."""
+    docs = _ordered_docs(_shingle_arrays(df, text_col, id_col, n), max_shingle_freq)
+    cands = _containment_prefix_cands(docs, threshold_num, threshold_den).distinct()
+    pairs = _verify_candidates(docs, cands).withColumn(
         "min_sz", F.least("a_sz", "b_sz")
     )
     return pairs.filter(
@@ -546,51 +437,33 @@ def word_overlap_pairs(
     containment_num: int = 9,
     containment_den: int = 10,
     max_shingle_freq: int | None = None,
-    prefix_filter: bool = False,
 ) -> DataFrame:
-    """Jaccard AND containment in ONE shingle self-join: pairs passing
-    either threshold, with both metrics and per-metric hit flags.
+    """Jaccard AND containment in ONE plan: pairs passing either
+    threshold, with both metrics and per-metric hit flags.
 
     Running ``ngram_jaccard_pairs`` and ``containment_pairs`` separately
-    scans + shuffles the shingle relation twice for the same candidate
-    set; this computes both screens from one per-pair (common, |A|, |B|)
-    triple — the production shape when a curation pipeline applies
-    multiple overlap rules.
+    builds the ordered shingle arrays twice for the same corpus; this
+    computes both screens from one per-pair (common, |A|, |B|) triple —
+    the production shape when a curation pipeline applies multiple
+    overlap rules.
 
-    ``prefix_filter=True`` replaces the full shingle self-join with the
-    UNION of two prefix-filtered candidate sets — the Jaccard
-    prefix x prefix join plus the containment smaller-prefix x full
-    join (see `_containment_prefix_cands` for why containment needs the
-    asymmetric form) — then verifies both metrics exactly on the full
-    cap-filtered sets.  A pair passing the Jaccard threshold is found
-    by the first branch, one passing containment by the second, so the
-    OR-of-thresholds output is bit-identical to the plain plan
-    (equality-tested across thresholds in test_dedup_similarity)."""
-    sh = _shingle_arrays(df, text_col, id_col, n)
-    if prefix_filter:
-        docs = _ordered_docs(sh, max_shingle_freq)
-        # r14: dedup the candidate union ONCE — the source-local
-        # distincts were redundant under the union-level distinct (their
-        # duplicates collapse in its map-side partial aggregate), so the
-        # three candidate exchanges become one (guide §2.4); the pair
-        # set is unchanged (equality-pinned vs the plain self-join in
-        # test_dedup_similarity).
-        cands = (
-            _jaccard_prefix_cands(
-                docs, jaccard_num, jaccard_den, distinct=False
-            )
-            .unionByName(
-                _containment_prefix_cands(
-                    docs, containment_num, containment_den,
-                    distinct=False,
-                )
-            )
-            .distinct()
-        )
-        pairs = _verify_candidates(docs, cands)
-    else:
-        pairs = _cooccurring_pairs(sh, max_shingle_freq)
-    pairs = pairs.withColumns(
+    Candidates are the UNION of the Jaccard prefix x prefix join and the
+    containment smaller-prefix x full join (see
+    `_containment_prefix_cands` for why containment needs the
+    asymmetric form), deduped once after the union — the union-level
+    distinct's map-side partial aggregate collapses each source's
+    duplicates, so one candidate exchange serves both.  A pair passing
+    the Jaccard threshold is found by the first branch, one passing
+    containment by the second, so the OR-of-thresholds output equals a
+    full shingle self-join's (pinned against an all-pairs reference in
+    test_dedup_similarity)."""
+    docs = _ordered_docs(_shingle_arrays(df, text_col, id_col, n), max_shingle_freq)
+    cands = (
+        _jaccard_prefix_cands(docs, jaccard_num, jaccard_den)
+        .unionByName(_containment_prefix_cands(docs, containment_num, containment_den))
+        .distinct()
+    )
+    pairs = _verify_candidates(docs, cands).withColumns(
         {
             "union_sz": F.col("a_sz") + F.col("b_sz") - F.col("common"),
             "min_sz": F.least("a_sz", "b_sz"),
@@ -619,37 +492,21 @@ def char_jaccard_pairs(
     threshold_num: int = 8,
     threshold_den: int = 10,
     max_shingle_freq: int | None = None,
-    prefix_filter: bool = False,
 ) -> DataFrame:
     """All pairs with exact character-n-gram Jaccard >= threshold —
     catches near-dups whitespace/word shingling misses (insertions inside
     words, punctuation edits).  Shingle alphabet is char n-grams of
-    whitespace-normalized lowercase text.
-
-    ``prefix_filter=True`` swaps the full shingle self-join for the
-    AllPairs/PPJoin prefix-filtered plan (``_prefix_filtered_pairs``) —
-    bit-identical output, candidate pairs cut to ~(1-t)^2 and skewed
-    toward rare shingles.  The scale path for high thresholds."""
-    from topic_store_spark.functions.text import char_shingles_from_norm, normalize_text
-
+    whitespace-normalized lowercase text; the plan is
+    ``ngram_jaccard_pairs``' prefix plan over those shingles."""
     norm = ensure_parallelism(df).select(
         F.col(id_col).alias("doc"), normalize_text(F.col(text_col)).alias("_nt")
     )
     sh = norm.select(
         "doc", F.array_distinct(char_shingles_from_norm(F.col("_nt"), n)).alias("shs")
     )
-    if prefix_filter:
-        pairs = _prefix_filtered_pairs(
-            sh, threshold_num, threshold_den, max_shingle_freq
-        )
-    else:
-        pairs = _cooccurring_pairs(sh, max_shingle_freq)
-    pairs = pairs.withColumn(
-        "union_sz", F.col("a_sz") + F.col("b_sz") - F.col("common")
-    )
-    return _jaccard_out(pairs, threshold_num, threshold_den)
-
-
+    docs = _ordered_docs(sh, max_shingle_freq)
+    cands = _jaccard_prefix_cands(docs, threshold_num, threshold_den).distinct()
+    return _jaccard_out(_verify_candidates(docs, cands), threshold_num, threshold_den)
 def _minhash_banded(sh: DataFrame, num_perm: int, bands: int) -> DataFrame:
     """(doc, band) LSH band-key relation from a (doc, shs) shingle-array
     relation, in the scale-canonical flat formulation: explode shingles,
@@ -697,7 +554,6 @@ def minhash_lsh_pairs(
     bands: int = 4,
     threshold_num: int = 8,
     threshold_den: int = 10,
-    persist: bool = True,
 ) -> DataFrame:
     """MinHash + LSH banding, then exact-Jaccard verification.
 
@@ -705,11 +561,9 @@ def minhash_lsh_pairs(
     replaced by a band-bucket join whose fan-out is O(collisions); the
     verify step pays per-candidate array intersection, nothing global.
 
-    ``persist`` caches the shingle arrays and signatures
-    (MEMORY_AND_DISK) because both feed two downstream branches (band
-    self-join; pair verify) — without it each branch recomputes
-    tokenize+shingle+hash.  Standard MinHash practice at any scale; pass
-    False to keep the plan fully lazy.
+    The shingle arrays are persisted (tracked, MEMORY_AND_DISK) because
+    they feed two downstream branches (band self-join; pair verify) —
+    unpinned, each branch recomputes tokenize+shingle.
 
     Signature family: universal-hash mixing over one md5-derived 28-bit
     key per shingle — the md5 cost is paid once, the ``num_perm``
@@ -722,9 +576,7 @@ def minhash_lsh_pairs(
     higher-order function ever runs per shingle (measured 3× faster
     than the array-HOF form at sf0.1).
     """
-    sh = _shingle_arrays(df, text_col, id_col, n)
-    if persist:
-        sh = _persist_tracked(sh)
+    sh = _persist_tracked(_shingle_arrays(df, text_col, id_col, n))
     banded = _minhash_banded(sh, num_perm, bands)
     cands = (
         banded.alias("x")
@@ -733,7 +585,9 @@ def minhash_lsh_pairs(
         .select(F.col("x.doc").alias("a_doc"), F.col("y.doc").alias("b_doc"))
         .distinct()
     )
-    return _jaccard_out(_pair_jaccard(sh, cands), threshold_num, threshold_den)
+    return _jaccard_out(
+        _verify_candidates(_sized(sh), cands), threshold_num, threshold_den
+    )
 
 
 def simhash_pairs(
@@ -1788,7 +1642,6 @@ def minhash_lsh_pairs_incremental(
     bands: int = 4,
     threshold_num: int = 8,
     threshold_den: int = 10,
-    persist: bool = True,
     bloom_prefilter: bool = False,
 ) -> DataFrame:
     """MinHash-LSH near-dup pairs where at least one side is in the NEW
@@ -1813,12 +1666,8 @@ def minhash_lsh_pairs_incremental(
     all_df = corpus_df.select(F.col(id_col), F.col(text_col)).unionByName(
         new_df.select(F.col(id_col), F.col(text_col))
     )
-    sh = _shingle_arrays(all_df, text_col, id_col, n)
-    if persist:
-        sh = _persist_tracked(sh)
-    banded_all = _minhash_banded(sh, num_perm, bands)
-    if persist:
-        banded_all = _persist_tracked(banded_all)
+    sh = _persist_tracked(_shingle_arrays(all_df, text_col, id_col, n))
+    banded_all = _persist_tracked(_minhash_banded(sh, num_perm, bands))
     new_ids = new_df.select(F.col(id_col).alias("doc"))
     banded_new = banded_all.join(new_ids, "doc", "left_semi")
     banded_rhs = banded_all
@@ -1837,4 +1686,6 @@ def minhash_lsh_pairs_incremental(
         )
         .distinct()
     )
-    return _jaccard_out(_pair_jaccard(sh, cands), threshold_num, threshold_den)
+    return _jaccard_out(
+        _verify_candidates(_sized(sh), cands), threshold_num, threshold_den
+    )

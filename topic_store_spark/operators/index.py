@@ -645,7 +645,11 @@ class MinHashIndex:
             )
             .distinct()
         )
-        from topic_store_spark.operators.dedup import _jaccard_out, _pair_jaccard
+        from topic_store_spark.operators.dedup import (
+            _jaccard_out,
+            _sized,
+            _verify_candidates,
+        )
 
         sh_idx = spark.read.parquet(self._shingles_path())
         if self.partitions:
@@ -668,7 +672,7 @@ class MinHashIndex:
             self.prune_log.append(prune)
         sh_all = sh_idx.unionByName(keyed_new)
         return _jaccard_out(
-            _pair_jaccard(sh_all, cands), threshold_num, threshold_den
+            _verify_candidates(_sized(sh_all), cands), threshold_num, threshold_den
         )
 
     def release(self) -> None:

@@ -1952,7 +1952,11 @@ def _compile_group(df: DataFrame, spec: dict[str, Any]) -> DataFrame:
     key_expr = spec["_id"]
     outputs = {k: v for k, v in spec.items() if k != "_id"}
     if key_expr is None:
-        return _accumulate(df, [], outputs)
+        # Mongo returns ``_id: null`` in the one result document; typed,
+        # because a ``void`` column cannot be written by ``$out``/``$merge``
+        return _accumulate(df, [], outputs).select(
+            F.lit(None).cast("string").alias("_id"), "*"
+        )
     if isinstance(key_expr, dict) and not any(
         k.startswith("$") for k in key_expr
     ):
@@ -4162,6 +4166,12 @@ def _apply_stage(
     elif op == "$project":
         flags = {k: v for k, v in spec.items() if v in (0, 1, True, False)}
         computed = {k: v for k, v in spec.items() if k not in flags}
+        if computed and any(
+            v in (0, False) and k != "_id" for k, v in flags.items()
+        ):
+            raise ValueError(
+                "Cannot use expression other than $meta in exclusion projection"
+            )
         # computed fields see the *input* document (Mongo semantics):
         # every expression compiles against the stage input and all are
         # attached in ONE select, so a computed field that references
@@ -4172,12 +4182,10 @@ def _apply_stage(
                 out, {k: compile_value(v) for k, v in computed.items()}
             )
         if flags or any("." in k for k in computed):
-            # computed fields join an inclusion projection, so a dotted
-            # one keeps only its own path of the parent document
-            proj = dict(flags)
-            if not flags or any(v in (1, True) for v in flags.values()):
-                proj.update(dict.fromkeys(computed, 1))
-            out = apply_projection(out, proj)
+            # computed fields are inclusions (``_id: 0`` the one exclusion
+            # beside them), so a dotted one keeps only its own path of
+            # the parent document
+            out = apply_projection(out, {**flags, **dict.fromkeys(computed, 1)})
         elif computed:
             # computed-only $project is an INCLUSION projection in
             # Mongo: only the computed fields (plus _id) survive
