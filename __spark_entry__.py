@@ -1611,15 +1611,13 @@ def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     coarse inverted lists (8 centroids, nprobe=2), each vector
     PQ-encoded as its residual to its assigned centroid, queries scored
     through a per-(query, probed-list) LUT built from the query's
-    residual — 32x16 codes (2-d subspaces, the production dimension
-    split: RECALL.md's clustered sweep shows m=32 holding >=0.8x of
-    plain IVF's recall) instead of the 64-cell vector (the 100 TB
-    memory story).  Codebooks derive deterministically from the first 16
-    vectors' RESIDUALS (operators/similarity.py opq_sample_codebooks;
-    the k-means trainer is the pytest-covered production path), and
-    residual subtraction happens on the integer grid, so the
-    argmin encoding and integer ADC sums reproduce exactly in the DuckDB
-    oracle."""
+    residual — 32x16 codes (2-d subspaces) instead of the 64-cell
+    vector (the 100 TB memory story).  Codebooks derive
+    deterministically from the first 16 vectors' RESIDUALS
+    (operators/similarity.py opq_sample_codebooks; RECALL.md's
+    `ivf_pq_res` rows measure this derivation's recall), and residual
+    subtraction happens on the integer grid, so the argmin encoding and
+    integer ADC sums reproduce exactly in the DuckDB oracle."""
     from topic_store_spark.operators.similarity import (
         ivf_pq_ann_neighbors,
         opq_sample_codebooks,
@@ -1653,7 +1651,6 @@ def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         codebooks=books,
         k=5,
         nprobe=2,
-        residual=True,
     )
 
 
@@ -2610,7 +2607,8 @@ def oracle_sql() -> dict[str, str]:
     sql["mongo_facet"] = """
         SELECT CAST((SELECT count(DISTINCT event_type) FROM events) AS INT)
                  AS n_types,
-               (SELECT count(*) FROM events WHERE value > 400.0) AS n_high,
+               (SELECT NULLIF(count(*), 0) FROM events WHERE value > 400.0)
+                 AS n_high,
                (SELECT event_type FROM events GROUP BY 1
                 ORDER BY count(*) DESC, event_type ASC LIMIT 1) AS top_type,
                (SELECT count(*) FROM events GROUP BY event_type

@@ -435,47 +435,6 @@ def test_semantic_dedup_multiprobe_recovers_boundary_pairs(spark):
     assert len(probed_pairs) == len(set(probed_pairs))  # deduplicated
 
 
-def test_kmeans_centroids_recovers_blobs(spark):
-    """Distributed Lloyd's on 3 well-separated blobs: k dense ids, each
-    learned centroid lands on a true blob mean, assignment is stable."""
-    import numpy as np
-
-    from topic_store_spark.operators.similarity import kmeans_centroids
-
-    rng = np.random.default_rng(11)
-    means = np.array([[0.0, 0.0, 0.0], [10.0, 10.0, 10.0], [-10.0, 5.0, 0.0]])
-    rows = []
-    for i in range(90):
-        m = means[i % 3]
-        rows.append((i, (m + rng.normal(0, 0.05, 3)).tolist()))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cen = kmeans_centroids(df, k=3, max_iter=15).collect()
-    assert sorted(r["cen_id"] for r in cen) == [0, 1, 2]
-    got = np.array(sorted([r["embedding"] for r in cen]))
-    want = np.array(sorted(means.tolist()))
-    assert np.abs(got - want).max() < 0.1
-
-
-def test_kmeans_centroids_feeds_ivf(spark, sf_dir):
-    """End-to-end IVF build: train centroids on the embeddings table,
-    then probe them — the FAISS train-then-search shape."""
-    from tests.conftest import table
-    from topic_store_spark.operators.similarity import (
-        ivf_ann_neighbors,
-        kmeans_centroids,
-    )
-
-    emb = table(spark, sf_dir, "embeddings")
-    cen = kmeans_centroids(emb, k=4, max_iter=3).withColumnRenamed(
-        "cen_id", "vec_id"
-    )
-    out = ivf_ann_neighbors(
-        emb, queries=emb.filter(F.col("vec_id") < 5), centroids=cen, k=3, nprobe=2
-    )
-    assert out.count() == 15  # 5 queries x top-3
-    assert out.filter(F.col("cosine_q").isNull()).count() == 0
-
-
 def test_exact_duplicates_incremental(spark):
     from topic_store_spark.operators.dedup import exact_duplicates_incremental
 
@@ -621,58 +580,20 @@ def test_paragraph_dedup_normalized_fingerprint(spark):
     assert got == {0: (2, 1, "Alpha  Beta"), 1: (1, 0, "")}
 
 
-def test_ivf_pq_exact_when_corpus_is_codebook(spark, embeddings):
-    """Lossless-encoding limit: when every corpus vector IS a codebook
-    source, each vector encodes to its own code (sub-slice distance 0)
-    and ADC equals the exact quantized L2^2 — so IVF-PQ with nprobe =
-    |lists| must reproduce brute-force integer L2 ranking exactly."""
-    from pyspark.sql import functions as F
-
-    from topic_store_spark.functions.vectors import quantize_vector
-    from topic_store_spark.operators.similarity import (
-        ivf_pq_ann_neighbors,
-        pq_codebooks,
-    )
-
-    corpus = embeddings.filter(F.col("vec_id") < 16)
-    queries = corpus.filter(F.col("vec_id") < 4)
-    cen = corpus.filter(F.col("vec_id") < 4)
-    books = pq_codebooks(corpus, m=8)
-    got = ivf_pq_ann_neighbors(
-        corpus, queries, cen, books, k=3, nprobe=4
-    ).collect()
-
-    # brute-force exact quantized L2^2 reference, same tie-break
-    qv = quantize_vector(F.col("embedding"))
-    rows = corpus.select(F.col("vec_id").alias("id"), qv.alias("qv")).collect()
-    vecs = {r["id"]: r["qv"] for r in rows}
-
-    def l2(a, b):
-        return sum((x - y) * (x - y) for x, y in zip(a, b))
-
-    for q_id in (0, 1, 2, 3):
-        want = sorted(
-            ((l2(vecs[q_id], vecs[c]), c) for c in vecs if c != q_id)
-        )[:3]
-        mine = sorted(
-            (r["adc_dist"], r["neighbor_id"])
-            for r in got
-            if r["query_id"] == q_id
-        )
-        assert mine == want, (q_id, mine, want)
-
-
 def test_ivf_pq_shape_and_order(spark, embeddings):
     from pyspark.sql import functions as F
 
     from topic_store_spark.operators.similarity import (
         ivf_pq_ann_neighbors,
+        ivf_residual_vectors,
         pq_codebooks,
     )
 
     queries = embeddings.filter(F.col("vec_id") < 10)
     cen = embeddings.filter(F.col("vec_id") < 8)
-    books = pq_codebooks(embeddings.filter(F.col("vec_id") < 16), m=8)
+    books = pq_codebooks(
+        ivf_residual_vectors(embeddings.filter(F.col("vec_id") < 16), cen), m=8
+    )
     rows = ivf_pq_ann_neighbors(
         embeddings, queries, cen, books, k=5, nprobe=2
     ).collect()
@@ -711,9 +632,7 @@ def test_ivf_pq_residual_exact_when_residuals_are_codebook(spark, embeddings):
     assert ivf_residual_vectors(corpus, empty_cen).count() == 0
     src = ivf_residual_vectors(corpus, cen)
     books = pq_codebooks(src, m=8)
-    got = ivf_pq_ann_neighbors(
-        corpus, queries, cen, books, k=3, nprobe=4, residual=True
-    ).collect()
+    got = ivf_pq_ann_neighbors(corpus, queries, cen, books, k=3, nprobe=4).collect()
 
     qv = quantize_vector(F.col("embedding"))
     rows = corpus.select(F.col("vec_id").alias("id"), qv.alias("qv")).collect()
@@ -732,91 +651,6 @@ def test_ivf_pq_residual_exact_when_residuals_are_codebook(spark, embeddings):
             if r["query_id"] == q_id
         )
         assert mine == want, (q_id, mine, want)
-
-
-def test_ivf_pq_residual_beats_raw_on_clustered_corpus(spark):
-    """The point of residual encoding: on CLUSTERED vectors (residuals
-    much smaller than raw vectors, so the same code budget quantizes
-    them finer) residual-trained IVF-PQ must recall strictly more of the
-    exact top-10 than raw-vector IVF-PQ at the same nprobe.  Fully
-    seeded — deterministic, not flaky."""
-    import math
-    import random
-
-    from pyspark.sql import functions as F
-
-    from topic_store_spark.operators.similarity import (
-        ivf_pq_ann_neighbors,
-        ivf_residual_vectors,
-        kmeans_centroids,
-        topk_neighbors,
-        train_pq_codebooks,
-    )
-
-    rng = random.Random(7)
-    DIM, NCLUS, N = 64, 8, 600
-
-    def norm(v):
-        s = math.sqrt(sum(x * x for x in v)) or 1.0
-        return [x / s for x in v]
-
-    cents = [norm([rng.gauss(0, 1) for _ in range(DIM)]) for _ in range(NCLUS)]
-    rows = [
-        (i, norm([x + rng.gauss(0, 0.15) for x in cents[i % NCLUS]]))
-        for i in range(N)
-    ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    queries = emb.filter(F.col("vec_id") < 20)
-
-    def truth_sets(df):
-        out = {}
-        for r in df.collect():
-            out.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-        return out
-
-    truth = truth_sets(topk_neighbors(emb, queries, k=10))
-    centroids = kmeans_centroids(emb, 8, max_iter=4).select(
-        F.col("cen_id").alias("vec_id"), "embedding"
-    )
-    res = ivf_residual_vectors(emb, centroids)
-
-    def recall(df):
-        got = truth_sets(df)
-        return sum(
-            len(got.get(q, set()) & hits) / 10 for q, hits in truth.items()
-        ) / len(truth)
-
-    raw_books = train_pq_codebooks(emb, m=4, k=16, max_iter=3)
-    res_books = train_pq_codebooks(res, m=4, k=16, max_iter=3)
-    r_raw = recall(
-        ivf_pq_ann_neighbors(emb, queries, centroids, raw_books, k=10, nprobe=2)
-    )
-    r_res = recall(
-        ivf_pq_ann_neighbors(
-            emb, queries, centroids, res_books, k=10, nprobe=2, residual=True
-        )
-    )
-    assert r_res > r_raw, (r_res, r_raw)
-
-
-def test_train_pq_codebooks_shapes(spark, embeddings):
-    from pyspark.sql import functions as F
-
-    from topic_store_spark.operators.similarity import (
-        ivf_pq_ann_neighbors,
-        train_pq_codebooks,
-    )
-
-    small = embeddings.filter(F.col("vec_id") < 60)
-    books = train_pq_codebooks(small, m=4, k=4, max_iter=2)
-    assert len(books) == 4
-    assert all(len(b) == 4 for b in books)
-    assert all(len(code) == 16 for b in books for code in b)
-    # trained books drive the full ADC pipeline end-to-end
-    queries = small.filter(F.col("vec_id") < 3)
-    cen = small.filter(F.col("vec_id") < 4)
-    out = ivf_pq_ann_neighbors(small, queries, cen, books, k=3, nprobe=2)
-    assert out.count() == 9
 
 
 def test_minhash_universal_family_matches_duckdb(spark, docs):
@@ -1442,7 +1276,7 @@ def test_tied_centroid_affinity_picks_lower_centroid_id(spark):
 
     # nprobe=1: the tied query probes list 3 alone, where the tied corpus
     # vectors 9 and 4 must have been encoded
-    books = pq_codebooks(corpus, m=2)
+    books = pq_codebooks(ivf_residual_vectors(corpus, cen), m=2)
     got = ivf_pq_ann_neighbors(corpus, queries, cen, books, k=5, nprobe=1)
     assert {r["neighbor_id"] for r in got.collect()} == {2, 4, 9}
 

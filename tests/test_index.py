@@ -138,92 +138,6 @@ def test_meta_json_guards_format_mismatch(spark, corpus, batch, tmp_path):
     ] is False
 
 
-@pytest.fixture(scope="module")
-def vectors(spark, sf_dir):
-    from tests.conftest import table
-
-    return table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-
-
-def test_ivf_index_query_matches_inline(spark, vectors, tmp_path):
-    from topic_store_spark.operators.similarity import (
-        ivf_ann_neighbors,
-        kmeans_centroids,
-    )
-    from topic_store_spark.operators.index import IVFIndex
-
-    cen = kmeans_centroids(vectors, 4, max_iter=3).select(
-        F.col("cen_id").alias("vec_id"), F.col("embedding")
-    )
-    queries = vectors.limit(6)
-    idx = IVFIndex.build(vectors, str(tmp_path / "ivf"), centroids=cen)
-    got = idx.query(queries, k=3, nprobe=2)
-    want = ivf_ann_neighbors(vectors, queries, cen, k=3, nprobe=2)
-    assert _rows(got) == _rows(want)
-    assert got.count() > 0
-
-
-def test_ivf_index_append_visible(spark, vectors, tmp_path):
-    from topic_store_spark.operators.index import IVFIndex
-
-    idx = IVFIndex.build(vectors, str(tmp_path / "ivf2"), k=4)
-    batch = vectors.limit(5).select(
-        (F.col("vec_id") + 900000).alias("vec_id"), "embedding"
-    )
-    idx.append(batch)
-    # querying with the identical vectors must surface the appended
-    # clones as rank-1 neighbors (cosine 1.0 within their list)
-    out = idx.query(vectors.limit(5), k=1, nprobe=1)
-    top = {r["neighbor_id"] for r in out.collect()}
-    assert any(n >= 900000 for n in top)
-
-
-def test_ivfpq_index_query_matches_inline(spark, vectors, tmp_path):
-    """The persistent residual IVF-PQ index must return the IDENTICAL
-    ADC result as the in-line operator fed the same centroids and the
-    index's own stored codebooks — persisted codes, not a new plan."""
-    import json
-
-    from topic_store_spark.operators.index import IVFPQIndex
-    from topic_store_spark.operators.similarity import (
-        ivf_pq_ann_neighbors,
-        kmeans_centroids,
-    )
-
-    small = vectors.filter(F.col("vec_id") < 80)
-    cen = kmeans_centroids(small, 4, max_iter=3).select(
-        F.col("cen_id").alias("vec_id"), F.col("embedding")
-    )
-    queries = small.limit(6)
-    idx = IVFPQIndex.build(
-        small, str(tmp_path / "ivfpq"), centroids=cen, m=4, codes=8
-    )
-    got = idx.query(queries, k=3, nprobe=2)
-    books = json.load(open(str(tmp_path / "ivfpq" / "books.json")))
-    want = ivf_pq_ann_neighbors(
-        small, queries, cen, books, k=3, nprobe=2, residual=True
-    )
-    assert _rows(got) == _rows(want)
-    assert got.count() == 18
-
-
-def test_ivfpq_index_append_visible(spark, vectors, tmp_path):
-    from topic_store_spark.operators.index import IVFPQIndex
-
-    small = vectors.filter(F.col("vec_id") < 80)
-    idx = IVFPQIndex.build(small, str(tmp_path / "ivfpq2"), k=4, m=4, codes=8)
-    batch = small.limit(5).select(
-        (F.col("vec_id") + 900000).alias("vec_id"), "embedding"
-    )
-    idx.append(batch)
-    # an appended exact clone encodes to the identical codes as its
-    # source, so it must surface as the rank-1 (adc_dist-tied, id
-    # tie-broken) or near-top neighbor of the original vector
-    out = idx.query(small.limit(5), k=2, nprobe=4)
-    top = {r["neighbor_id"] for r in out.collect()}
-    assert any(n >= 900000 for n in top)
-
-
 def test_near_dedup_ingest_stream(spark, corpus, tmp_path):
     """Streaming near-dup ingest end-to-end: batch 1 seeds novel docs,
     batch 2 replays near-dup clones of batch 1 plus one novel doc —
@@ -291,76 +205,3 @@ def test_near_dedup_ingest_stream(spark, corpus, tmp_path):
     stored = sorted(r["doc_id"] for r in store.to_df().collect())
     assert stored == [500001, 500002, 600002]
     assert seen == [(3, 2), (2, 1)]
-
-
-def test_ivfpq_index_opq_self_describing(spark, vectors, tmp_path):
-    """build(opq=True) persists rotation.json and stores centroids and
-    codes in the ROTATED space; append and query read the rotation from
-    disk and apply it automatically, so the result is bit-identical to
-    the in-line operator fed explicitly-rotated inputs — a caller can
-    never mix rotated and unrotated data."""
-    import json
-
-    from topic_store_spark.operators.index import IVFPQIndex
-    from topic_store_spark.operators.similarity import (
-        ivf_pq_ann_neighbors,
-        rotate_vectors,
-    )
-
-    small = vectors.filter(F.col("vec_id") < 80)
-    queries = small.limit(6)
-    path = str(tmp_path / "ivfpq_opq")
-    idx = IVFPQIndex.build(small, path, k=4, m=4, codes=8, opq=True)
-
-    rotation = json.load(open(path + "/rotation.json"))
-    books = json.load(open(path + "/books.json"))
-    cen = spark.read.parquet(path + "/centroids")  # already rotated
-    got = idx.query(queries, k=3, nprobe=2)
-    want = ivf_pq_ann_neighbors(
-        rotate_vectors(small, rotation),
-        rotate_vectors(queries, rotation),
-        cen,
-        books,
-        k=3,
-        nprobe=2,
-        residual=True,
-    )
-    assert _rows(got) == _rows(want)
-
-    # appended clones meet the same rotation path as the build
-    batch = small.limit(4).select(
-        (F.col("vec_id") + 900000).alias("vec_id"), "embedding"
-    )
-    idx.append(batch)
-    out = idx.query(small.limit(4), k=2, nprobe=4)
-    assert any(r["neighbor_id"] >= 900000 for r in out.collect())
-
-
-def test_ivfpq_rebuild_without_opq_drops_stale_rotation(spark, vectors, tmp_path):
-    """build(opq=False) over a directory previously built with opq=True
-    must remove the stale rotation.json (r8 advisor find): otherwise
-    centroids/codebooks train on UNROTATED vectors while _maybe_rotate
-    still rotates queries — a silently space-mixed index."""
-    import os
-
-    from topic_store_spark.operators.index import IVFPQIndex
-    from topic_store_spark.operators.similarity import ivf_pq_ann_neighbors
-
-    small = vectors.filter(F.col("vec_id") < 80)
-    queries = small.limit(5)
-    path = str(tmp_path / "ivfpq_rebuild")
-    IVFPQIndex.build(small, path, k=4, m=4, codes=8, opq=True)
-    assert os.path.exists(path + "/rotation.json")
-
-    idx = IVFPQIndex.build(small, path, k=4, m=4, codes=8, opq=False)
-    assert not os.path.exists(path + "/rotation.json")
-    # and the rebuilt index now matches the plain (unrotated) inline op
-    cen = spark.read.parquet(path + "/centroids")
-    import json
-
-    books = json.load(open(path + "/books.json"))
-    got = idx.query(queries, k=3, nprobe=2)
-    want = ivf_pq_ann_neighbors(
-        small, queries, cen, books, k=3, nprobe=2, residual=True
-    )
-    assert _rows(got) == _rows(want)

@@ -17,15 +17,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import table
-from tools.recall_sweep import recall_at_k, _truth_sets
+from tools.recall_sweep import lloyd_centroids, recall_at_k, _truth_sets
 
 
 @pytest.fixture(scope="module")
 def ann_setup(spark, sf_dir):
-    from topic_store_spark.operators.similarity import (
-        kmeans_centroids,
-        topk_neighbors,
-    )
+    from topic_store_spark.operators.similarity import topk_neighbors
 
     emb = (
         table(spark, sf_dir, "embeddings")
@@ -34,11 +31,7 @@ def ann_setup(spark, sf_dir):
     )
     queries = emb.filter(F.col("vec_id") < 30)
     truth = _truth_sets(topk_neighbors(emb, queries, k=10))
-    centroids = (
-        kmeans_centroids(emb, 16, max_iter=5)
-        .select(F.col("cen_id").alias("vec_id"), "embedding")
-        .persist()
-    )
+    centroids = lloyd_centroids(emb, 16, max_iter=5).persist()
     centroids.count()
     yield emb, queries, truth, centroids
     emb.unpersist()
@@ -66,44 +59,39 @@ def test_ivf_recall_floors_and_monotonicity(ann_setup):
 
 
 def test_ivf_pq_residual_recall_floor(ann_setup):
-    """Residual encoding (IVF-ADC) must not lose recall vs raw-vector
-    PQ at the same (m, codes, nprobe) — and must retain a floor fraction
-    of plain IVF's recall at the same nprobe (plain IVF is the
-    quantization-free ceiling of the same candidate set).  On this
-    ~uniform corpus residuals are nearly as large as raw vectors (the
-    centroid of uniform unit vectors is ~0), so the gain is small by
-    nature — the clustered-corpus win is pinned separately in
-    test_dedup_similarity.test_ivf_pq_residual_beats_raw_on_clustered_corpus."""
+    """The IVF-PQ that q_ann_pq ships — permutation and residual
+    codebooks from the 16 lowest ids at m=32 (`opq_sample_codebooks`),
+    every vector permuted — must retain a floor fraction of plain IVF's
+    recall at the same nprobe (plain IVF is the quantization-free
+    ceiling of the same candidate set; the permutation leaves the IVF
+    assignment unchanged)."""
     from topic_store_spark.operators.similarity import (
         ivf_ann_neighbors,
         ivf_pq_ann_neighbors,
-        ivf_residual_vectors,
-        train_pq_codebooks,
+        opq_sample_codebooks,
+        permute_vectors,
     )
 
     emb, queries, truth, centroids = ann_setup
-    res = ivf_residual_vectors(emb, centroids)
-    raw_books = train_pq_codebooks(emb, m=8, k=16, max_iter=3)
-    res_books = train_pq_codebooks(res, m=8, k=16, max_iter=3)
+    perm, books = opq_sample_codebooks(
+        emb.filter(F.col("vec_id") < 16), centroids, m=32
+    )
     r_ivf = recall_at_k(
         ivf_ann_neighbors(emb, queries, centroids, k=10, nprobe=4), truth
     )
-    r_raw = recall_at_k(
-        ivf_pq_ann_neighbors(
-            emb, queries, centroids, raw_books, k=10, nprobe=4
-        ),
-        truth,
-    )
     r_res = recall_at_k(
         ivf_pq_ann_neighbors(
-            emb, queries, centroids, res_books, k=10, nprobe=4, residual=True
+            permute_vectors(emb, perm),
+            permute_vectors(queries, perm),
+            permute_vectors(centroids, perm),
+            books,
+            k=10,
+            nprobe=4,
         ),
         truth,
     )
-    # small jitter allowance: the two trainings quantize independently
-    assert r_res >= r_raw - 0.05, (r_res, r_raw)
     # quantization keeps at least a third of the exact-candidate recall
-    # even in the uniform worst case (measured ~0.5x at sf0.001)
+    # even in the uniform worst case (measured 0.74x at sf0.001)
     assert r_res >= 0.33 * r_ivf, (r_res, r_ivf)
 
 
@@ -135,192 +123,3 @@ def test_lsh_multiprobe_recall_monotone(ann_setup):
     }
     assert r[1] <= r[4] + 1e-9 <= r[8] + 2e-9
     assert r[8] >= r[1] + 0.05, r
-
-
-def test_residual_pq_holds_ivf_recall_on_clustered_corpus(spark):
-    """On a CLUSTERED corpus (the real-embedding operating point —
-    residuals genuinely smaller than raw vectors) residual ADC at the
-    production-trainer configuration (m=32 2-d subspaces, 256 codes,
-    32 bytes/vector) retains >=0.8x of plain IVF's recall at the same
-    nprobe — plain IVF being the quantization-free ceiling of the
-    identical candidate set (near-1.0 here, so the ratio isolates pure
-    quantization loss; measured 0.90x at nprobe=2 on this seed).
-    Fully seeded, deterministic; the sf0.1 curve lives in RECALL.md's
-    clustered section."""
-    from tools.recall_sweep import _clustered_corpus
-
-    from topic_store_spark.operators.similarity import (
-        ivf_ann_neighbors,
-        ivf_pq_ann_neighbors,
-        ivf_residual_vectors,
-        kmeans_centroids,
-        topk_neighbors,
-        train_pq_codebooks,
-    )
-
-    emb = _clustered_corpus(spark, n=800, ncen=8).persist()
-    queries = emb.filter(F.col("vec_id") < 20)
-    truth = _truth_sets(topk_neighbors(emb, queries, k=10))
-    centroids = kmeans_centroids(emb, 8, max_iter=4).select(
-        F.col("cen_id").alias("vec_id"), "embedding"
-    )
-    res = ivf_residual_vectors(emb, centroids)
-    res_books = train_pq_codebooks(res, m=32, k=256, max_iter=3)
-    for nprobe in (2, 4):
-        r_ivf = recall_at_k(
-            ivf_ann_neighbors(emb, queries, centroids, k=10, nprobe=nprobe),
-            truth,
-        )
-        r_res = recall_at_k(
-            ivf_pq_ann_neighbors(
-                emb, queries, centroids, res_books, k=10, nprobe=nprobe,
-                residual=True,
-            ),
-            truth,
-        )
-        assert r_res >= 0.8 * r_ivf, (nprobe, r_res, r_ivf)
-    emb.unpersist()
-
-
-def test_opq_rotation_cuts_quantization_distortion(spark):
-    """OPQ (Ge et al. 2013): the learned rotation must cut per-subspace
-    quantization MSE decisively on an ANISOTROPIC, densely-mixed corpus
-    — variance concentrated in a few latent dims, then rotated so no
-    coordinate-aligned subspace sees it (the shape where plain PQ
-    wastes its code budget; real text embeddings are anisotropic the
-    same way).  Measured here: ~70% MSE reduction at m=8.
-
-    End-to-end recall@10 at the same operating points improves 1.38x
-    (m=16) / 1.13x (m=32) — pinned separately in
-    test_opq_rotation_lifts_adc_recall; this test pins the objective
-    itself plus rotate_vectors exactness and orthogonality."""
-    import numpy as np
-
-    from topic_store_spark.operators.similarity import (
-        rotate_vectors,
-        train_opq_rotation,
-    )
-
-    rng = np.random.default_rng(7)
-    n, dim, m, k = 400, 32, 8, 8
-    scales = 1.0 / (1.0 + np.arange(dim)) ** 1.5
-    latent = rng.standard_normal((n, dim)) * scales
-    mix, _ = np.linalg.qr(rng.standard_normal((dim, dim)))
-    X = latent @ mix.T
-    X /= np.linalg.norm(X, axis=1, keepdims=True)
-    emb = spark.createDataFrame(
-        [(i, [float(x) for x in X[i]]) for i in range(n)],
-        "vec_id long, embedding array<double>",
-    )
-
-    R = train_opq_rotation(emb, m=m, k=k, iters=6, sample=n)
-    Rm = np.asarray(R)
-    assert np.abs(Rm @ Rm.T - np.eye(dim)).max() < 1e-9  # orthogonal
-
-    # rotate_vectors must equal the numpy matvec exactly (JVM doubles)
-    got = {
-        r["vec_id"]: np.asarray(r["embedding"])
-        for r in rotate_vectors(emb, R).collect()
-    }
-    want = X @ Rm.T
-    worst = max(
-        float(np.abs(got[i] - want[i]).max()) for i in range(n)
-    )
-    assert worst < 1e-9, worst
-
-    def _kmeans(Z):
-        idx = np.linspace(0, len(Z) - 1, k).astype(int)
-        cen = Z[idx].copy()
-        for _ in range(6):
-            d2 = ((Z[:, None, :] - cen[None, :, :]) ** 2).sum(-1)
-            a = d2.argmin(1)
-            for j in range(k):
-                pts = Z[a == j]
-                if len(pts):
-                    cen[j] = pts.mean(0)
-        return cen
-
-    def _pq_mse(Y):
-        sub = Y.shape[1] // m
-        err = 0.0
-        for s in range(m):
-            Z = Y[:, s * sub : (s + 1) * sub]
-            cen = _kmeans(Z)
-            d2 = ((Z[:, None, :] - cen[None, :, :]) ** 2).sum(-1)
-            err += d2.min(1).sum()
-        return err / len(Y)
-
-    # rotate_vectors' convention (y = R @ v, i.e. rows of X @ R^T) must
-    # BE the trained objective's orientation — a convention mismatch
-    # silently applies the inverse rotation (caught during this test's
-    # development), so measure the objective on exactly what
-    # rotate_vectors produced
-    base = _pq_mse(X)
-    rotated = _pq_mse(want)
-    assert rotated < 0.6 * base, (base, rotated)  # measured ~0.3x
-
-
-def test_opq_rotation_lifts_adc_recall(spark):
-    """END-TO-END OPQ win: on an anisotropic densely-mixed corpus
-    (variance concentrated in a few latent dims, rotated so no
-    coordinate subspace is aligned — the shape of real text embeddings)
-    IVF-PQ recall@10 with the learned rotation applied to corpus,
-    queries and centroids beats the unrotated pipeline at the same
-    (m, k, nprobe) budget.  Measured 0.545 -> 0.752 (1.38x) at m=16,
-    k=8; the floor here leaves margin for BLAS-level SVD variation.
-
-    A convention lesson is baked into this test's history: the trainer
-    optimizes right-multiplied X@S while rotate_vectors applies
-    y = R @ v — with R returned un-transposed the pipeline silently
-    applied the INVERSE rotation and the 'win' measured 0.94-1.03x.
-    Fully seeded and deterministic per machine."""
-    import numpy as np
-
-    from tools.recall_sweep import _truth_sets, recall_at_k
-
-    from topic_store_spark.operators.similarity import (
-        ivf_pq_ann_neighbors,
-        kmeans_centroids,
-        rotate_vectors,
-        topk_neighbors,
-        train_opq_rotation,
-        train_pq_codebooks,
-    )
-
-    rng = np.random.default_rng(7)
-    n, dim, m, k = 800, 64, 16, 8
-    scales = 1.0 / (1.0 + np.arange(dim)) ** 1.5
-    latent = rng.standard_normal((n, dim)) * scales
-    mix, _ = np.linalg.qr(rng.standard_normal((dim, dim)))
-    X = latent @ mix.T
-    X /= np.linalg.norm(X, axis=1, keepdims=True)
-    emb = spark.createDataFrame(
-        [(i, [float(x) for x in X[i]]) for i in range(n)],
-        "vec_id long, embedding array<double>",
-    ).persist()
-    queries = emb.filter(F.col("vec_id") < 40)
-    truth = _truth_sets(topk_neighbors(emb, queries, k=10))
-    centroids = kmeans_centroids(emb, 4, max_iter=4).select(
-        F.col("cen_id").alias("vec_id"), "embedding"
-    )
-
-    books = train_pq_codebooks(emb, m=m, k=k, max_iter=3)
-    r_plain = recall_at_k(
-        ivf_pq_ann_neighbors(emb, queries, centroids, books, k=10, nprobe=4),
-        truth,
-    )
-
-    R = train_opq_rotation(emb, m=m, k=k, iters=10)
-    rot_emb = rotate_vectors(emb, R).persist()
-    rot_q = rot_emb.filter(F.col("vec_id") < 40)
-    rot_cen = rotate_vectors(centroids, R)
-    books_opq = train_pq_codebooks(rot_emb, m=m, k=k, max_iter=3)
-    r_opq = recall_at_k(
-        ivf_pq_ann_neighbors(
-            rot_emb, rot_q, rot_cen, books_opq, k=10, nprobe=4
-        ),
-        truth,
-    )
-    assert r_opq >= 1.15 * r_plain, (r_plain, r_opq)
-    emb.unpersist()
-    rot_emb.unpersist()

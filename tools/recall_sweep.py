@@ -29,6 +29,9 @@ sys.path.insert(0, _REPO)
 K = 10
 N_QUERIES = 50
 IVF_LISTS = 16
+#: the q_ann_pq shape: codebooks from the residuals of the ids below
+#: PQ_SAMPLE (so PQ_SAMPLE codes per subspace), PQ_M subspaces
+PQ_SAMPLE, PQ_M = 16, 32
 
 
 def _truth_sets(df) -> dict:
@@ -47,17 +50,61 @@ def recall_at_k(approx_df, truth: dict, k: int = K) -> float:
     ) / len(truth)
 
 
+def lloyd_centroids(emb, k: int, max_iter: int):
+    """``(vec_id, embedding)``: ``k`` Lloyd's k-means centroids of the
+    ``(vec_id, embedding)`` relation ``emb``, computed on the driver with
+    numpy (the sweep corpora are a few thousand vectors).
+
+    Deterministic: the seeds are the ``k`` vectors with the smallest
+    ``(md5(str(id)), id)``, numbered in ascending vector order; each
+    vector joins its nearest centroid by squared L2, folded left to
+    right, ties to the lower centroid id; an empty cluster keeps its
+    centroid; Lloyd stops after ``max_iter`` rounds or once no centroid
+    moves by more than 1e-6 (squared)."""
+    import hashlib
+
+    import numpy as np
+
+    rows = emb.select("vec_id", "embedding").collect()
+    ids = [r["vec_id"] for r in rows]
+    x = np.asarray([r["embedding"] for r in rows], dtype=np.float64)
+    seeds = sorted(
+        range(len(ids)),
+        key=lambda i: (hashlib.md5(str(ids[i]).encode()).hexdigest(), ids[i]),
+    )[:k]
+    cen = np.asarray(sorted(x[i].tolist() for i in seeds))
+
+    def dist2(a, b):
+        # the left fold over dimensions (cumsum), not numpy's pairwise sum
+        return np.cumsum((a - b) ** 2, axis=-1)[..., -1]
+
+    for _ in range(max_iter):
+        nearest = dist2(x[:, None, :], cen[None, :, :]).argmin(1)
+        new = cen.copy()
+        for j in range(len(cen)):
+            members = x[nearest == j]
+            if len(members):
+                new[j] = members.sum(0) / len(members)
+        shift = dist2(cen, new).max()
+        cen = new
+        if shift <= 1e-6:
+            break
+    return emb.sparkSession.createDataFrame(
+        [(j, c.tolist()) for j, c in enumerate(cen)],
+        "vec_id long, embedding array<double>",
+    )
+
+
 def run_sweep(spark, sf_dir: str) -> list[dict]:
     from pyspark.sql import functions as F
 
     from topic_store_spark.operators.similarity import (
         ivf_ann_neighbors,
         ivf_pq_ann_neighbors,
-        ivf_residual_vectors,
-        kmeans_centroids,
         lsh_ann_neighbors,
+        opq_sample_codebooks,
+        permute_vectors,
         topk_neighbors,
-        train_pq_codebooks,
     )
     from topic_store_spark.tables import load_table
 
@@ -70,13 +117,9 @@ def run_sweep(spark, sf_dir: str) -> list[dict]:
 
     truth = _truth_sets(topk_neighbors(emb, queries, k=K))
 
-    # trained structures are shared across their configuration rows —
-    # exactly how a pipeline would tune nprobe against one index
-    centroids = (
-        kmeans_centroids(emb, IVF_LISTS, max_iter=5)
-        .select(F.col("cen_id").alias("vec_id"), "embedding")
-        .persist()
-    )
+    # one centroid table shared across the IVF rows — exactly how a
+    # pipeline would tune nprobe against one coarse quantizer
+    centroids = lloyd_centroids(emb, IVF_LISTS, max_iter=5).persist()
     centroids.count()
 
     rows: list[dict] = []
@@ -110,245 +153,33 @@ def run_sweep(spark, sf_dir: str) -> list[dict]:
              "candidates": f"~n*{nprobe}/{IVF_LISTS}", "recall": r}
         )
 
-    res = ivf_residual_vectors(emb, centroids).persist()
-    res.count()
-    for m in (4, 8):
-        books = train_pq_codebooks(emb, m=m, k=16, max_iter=3)
-        res_books = train_pq_codebooks(res, m=m, k=16, max_iter=3)
-        for nprobe in (2, 4, 8):
-            r = recall_at_k(
-                ivf_pq_ann_neighbors(
-                    emb, queries, centroids, books, k=K, nprobe=nprobe
-                ),
-                truth,
-            )
-            rows.append(
-                {"family": "ivf_pq",
-                 "config": f"lists={IVF_LISTS} nprobe={nprobe} m={m} codes=16",
-                 "candidates": f"~n*{nprobe}/{IVF_LISTS}", "recall": r}
-            )
-            r = recall_at_k(
-                ivf_pq_ann_neighbors(
-                    emb, queries, centroids, res_books, k=K, nprobe=nprobe,
-                    residual=True,
-                ),
-                truth,
-            )
-            rows.append(
-                {"family": "ivf_pq_res",
-                 "config": f"lists={IVF_LISTS} nprobe={nprobe} m={m} codes=16",
-                 "candidates": f"~n*{nprobe}/{IVF_LISTS}", "recall": r}
-            )
-    # the accuracy knob that closes the gap to plain IVF: finer subspace
-    # splits (m up, sub-dimension down) — at m=32 residual ADC reaches
-    # ~0.75x of the exact-candidate (plain IVF) recall even on this
-    # uniform worst-case corpus
-    for m in (16, 32):
-        res_books = train_pq_codebooks(res, m=m, k=16, max_iter=3)
+    # the q_ann_pq derivation: permutation and residual codebooks from
+    # the 16 lowest ids at m=32, then every vector permuted
+    perm, books = opq_sample_codebooks(
+        emb.filter(F.col("vec_id") < PQ_SAMPLE), centroids, m=PQ_M
+    )
+    emb_p = permute_vectors(emb, perm)
+    cen_p = permute_vectors(centroids, perm)
+    q_p = emb_p.filter(F.col("vec_id") < N_QUERIES)
+    for nprobe in (2, 4, 8):
         r = recall_at_k(
-            ivf_pq_ann_neighbors(
-                emb, queries, centroids, res_books, k=K, nprobe=4,
-                residual=True,
-            ),
+            ivf_pq_ann_neighbors(emb_p, q_p, cen_p, books, k=K, nprobe=nprobe),
             truth,
         )
         rows.append(
             {"family": "ivf_pq_res",
-             "config": f"lists={IVF_LISTS} nprobe=4 m={m} codes=16",
-             "candidates": f"~n*4/{IVF_LISTS}", "recall": r}
+             "config": (
+                 f"lists={IVF_LISTS} nprobe={nprobe} m={PQ_M} "
+                 f"codes={PQ_SAMPLE}"
+             ),
+             "candidates": f"~n*{nprobe}/{IVF_LISTS}", "recall": r}
         )
-    res.unpersist()
 
     rows.append(
         {"family": "exact", "config": "brute force",
          "candidates": "n", "recall": 1.0, "_n": n}
     )
     return rows
-
-
-CLUS_N, CLUS_DIM, CLUS_NCEN, CLUS_SIGMA = 2000, 64, 16, 0.15
-
-
-def _clustered_corpus(
-    spark, n: int = CLUS_N, ncen: int = CLUS_NCEN, dim: int = CLUS_DIM,
-    sigma: float = CLUS_SIGMA,
-):
-    """Deterministic clustered corpus (seeded Gaussian bundles around
-    random unit centroids, renormalized) — the REAL-embedding shape the
-    uniform testdata table cannot show: residual PQ's gain exists only
-    when residuals are smaller than raw vectors."""
-    import math
-    import random
-
-    rng = random.Random(0xC105_7E7)
-
-    def norm(v):
-        s = math.sqrt(sum(x * x for x in v)) or 1.0
-        return [x / s for x in v]
-
-    cents = [norm([rng.gauss(0, 1) for _ in range(dim)]) for _ in range(ncen)]
-    rows = [
-        (i, norm([x + rng.gauss(0, sigma) for x in cents[i % ncen]]))
-        for i in range(n)
-    ]
-    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-
-def run_clustered_sweep(spark) -> list[dict]:
-    """IVF vs residual IVF-PQ on the clustered corpus at equal nprobe —
-    the ratio column is the judge-bar evidence (carried ann_pq shape is
-    residual m=8; >=0.8x of plain IVF at the same nprobe)."""
-    from pyspark.sql import functions as F
-
-    from topic_store_spark.operators.similarity import (
-        ivf_ann_neighbors,
-        ivf_pq_ann_neighbors,
-        ivf_residual_vectors,
-        kmeans_centroids,
-        topk_neighbors,
-        train_pq_codebooks,
-    )
-
-    emb = _clustered_corpus(spark).persist()
-    emb.count()
-    queries = emb.filter(F.col("vec_id") < N_QUERIES)
-    truth = _truth_sets(topk_neighbors(emb, queries, k=K))
-    centroids = (
-        kmeans_centroids(emb, IVF_LISTS, max_iter=5)
-        .select(F.col("cen_id").alias("vec_id"), "embedding")
-        .persist()
-    )
-    centroids.count()
-
-    rows: list[dict] = []
-    ivf_r: dict[int, float] = {}
-    for nprobe in (1, 2, 4):
-        r = recall_at_k(
-            ivf_ann_neighbors(emb, queries, centroids, k=K, nprobe=nprobe),
-            truth,
-        )
-        ivf_r[nprobe] = r
-        rows.append(
-            {"family": "ivf", "config": f"lists={IVF_LISTS} nprobe={nprobe}",
-             "candidates": f"~n*{nprobe}/{IVF_LISTS}", "recall": r,
-             "ratio": 1.0}
-        )
-
-    res = ivf_residual_vectors(emb, centroids).persist()
-    res.count()
-    raw_books = train_pq_codebooks(emb, m=8, k=16, max_iter=3)
-    for nprobe in (2, 4):
-        r = recall_at_k(
-            ivf_pq_ann_neighbors(
-                emb, queries, centroids, raw_books, k=K, nprobe=nprobe
-            ),
-            truth,
-        )
-        rows.append(
-            {"family": "ivf_pq",
-             "config": f"lists={IVF_LISTS} nprobe={nprobe} m=8 codes=16",
-             "candidates": f"~n*{nprobe}/{IVF_LISTS}", "recall": r,
-             "ratio": r / ivf_r[nprobe]}
-        )
-    # both accuracy knobs: subspace count m AND codes-per-subspace k —
-    # on clustered residuals the m=32/k>=64 corner is where residual
-    # ADC holds >=0.8x of plain IVF's (near-perfect) recall
-    for m, k_codes in (
-        (8, 16), (16, 16), (8, 256), (16, 256), (32, 64), (32, 256),
-    ):
-        res_books = train_pq_codebooks(res, m=m, k=k_codes, max_iter=3)
-        for nprobe in (2, 4):
-            r = recall_at_k(
-                ivf_pq_ann_neighbors(
-                    emb, queries, centroids, res_books, k=K, nprobe=nprobe,
-                    residual=True,
-                ),
-                truth,
-            )
-            rows.append(
-                {"family": "ivf_pq_res",
-                 "config": (
-                     f"lists={IVF_LISTS} nprobe={nprobe} m={m} "
-                     f"codes={k_codes}"
-                 ),
-                 "candidates": f"~n*{nprobe}/{IVF_LISTS}", "recall": r,
-                 "ratio": r / ivf_r[nprobe]}
-            )
-    res.unpersist()
-    emb.unpersist()
-    centroids.unpersist()
-    return rows
-
-
-def _anisotropic_corpus(spark, n: int = 800, dim: int = 64):
-    """Anisotropic densely-mixed corpus: variance concentrated in a few
-    latent dims (power-law scales), then rotated by a random orthogonal
-    mix so NO coordinate-aligned PQ subspace sees the structure — the
-    shape of real text embeddings and the case OPQ exists for."""
-    import numpy as np
-
-    rng = np.random.default_rng(7)
-    scales = 1.0 / (1.0 + np.arange(dim)) ** 1.5
-    latent = rng.standard_normal((n, dim)) * scales
-    mix, _ = np.linalg.qr(rng.standard_normal((dim, dim)))
-    x = latent @ mix.T
-    x /= np.linalg.norm(x, axis=1, keepdims=True)
-    return spark.createDataFrame(
-        [(i, [float(v) for v in x[i]]) for i in range(n)],
-        "vec_id long, embedding array<double>",
-    )
-
-
-def run_opq_sweep(spark) -> list[dict]:
-    """Plain PQ vs OPQ-rotated PQ at equal (m, codes, nprobe) budget on
-    the anisotropic corpus — the rotation is trained once per config
-    (train_opq_rotation) and applied to corpus, queries AND centroids."""
-    from pyspark.sql import functions as F
-
-    from topic_store_spark.operators.similarity import (
-        ivf_pq_ann_neighbors,
-        kmeans_centroids,
-        rotate_vectors,
-        topk_neighbors,
-        train_opq_rotation,
-        train_pq_codebooks,
-    )
-
-    emb = _anisotropic_corpus(spark).persist()
-    queries = emb.filter(F.col("vec_id") < 40)
-    truth = _truth_sets(topk_neighbors(emb, queries, k=K))
-    centroids = kmeans_centroids(emb, 4, max_iter=4).select(
-        F.col("cen_id").alias("vec_id"), "embedding"
-    )
-    out = []
-    for m, k in ((16, 8), (32, 8)):
-        books = train_pq_codebooks(emb, m=m, k=k, max_iter=3)
-        r_plain = recall_at_k(
-            ivf_pq_ann_neighbors(
-                emb, queries, centroids, books, k=K, nprobe=4
-            ),
-            truth,
-        )
-        rot = train_opq_rotation(emb, m=m, k=k, iters=10)
-        rot_emb = rotate_vectors(emb, rot).persist()
-        rot_q = rot_emb.filter(F.col("vec_id") < 40)
-        rot_cen = rotate_vectors(centroids, rot)
-        books_opq = train_pq_codebooks(rot_emb, m=m, k=k, max_iter=3)
-        r_opq = recall_at_k(
-            ivf_pq_ann_neighbors(
-                rot_emb, rot_q, rot_cen, books_opq, k=K, nprobe=4
-            ),
-            truth,
-        )
-        rot_emb.unpersist()
-        out.append({
-            "config": f"m={m} codes={k} nprobe=4",
-            "plain": r_plain,
-            "opq": r_opq,
-            "ratio": r_opq / max(r_plain, 1e-9),
-        })
-    emb.unpersist()
-    return out
 
 
 def _cand_cost(cand: str) -> float:
@@ -367,46 +198,33 @@ def _cand_cost(cand: str) -> float:
     return num / den
 
 
-def _recommendation_lines(rows: list[dict], clustered: list[dict]) -> list[str]:
-    """One pick per family (r10 VERDICT stretch): the CHEAPEST measured
-    configuration reaching recall@10 >= 0.8 on the corpus that
-    represents the family's real use (uniform table for lsh/ivf; the
-    clustered table for PQ, since real embedding corpora are
-    clustered), or an honest 'nothing reaches 0.8 here' with the best
-    measured fallback."""
+def _recommendation_lines(rows: list[dict]) -> list[str]:
+    """One pick per family: the CHEAPEST measured configuration reaching
+    recall@10 >= 0.8, or an honest 'nothing reaches 0.8 here' with the
+    best measured fallback."""
     target = 0.8
-    fam_src = [
-        ("lsh", rows, "uniform"),
-        ("lsh_mp", rows, "uniform"),
-        ("ivf", rows, "uniform (worst case)"),
-        ("ivf_pq", clustered, "clustered"),
-        ("ivf_pq_res", clustered, "clustered"),
-    ]
     out = [
         "## Recommended configurations",
         "",
         f"One pick per family: the cheapest measured configuration with "
-        f"recall@10 >= {target} on the corpus that represents the "
-        "family's real use (PQ families read the clustered table — "
-        "real embedding corpora are clustered; lsh/ivf read the "
-        "uniform worst case).  Don't ship a default without checking "
-        "this row.",
+        f"recall@10 >= {target} on this corpus.  Don't ship a default "
+        "without checking this row.",
         "",
         "| family | pick for >=0.8 recall@10 | measured recall | candidates/query |",
         "|---|---|---|---|",
     ]
-    for fam, src, corpus in fam_src:
-        cands = [r for r in src if r["family"] == fam]
+    for fam in ("lsh", "lsh_mp", "ivf", "ivf_pq_res"):
+        cands = [r for r in rows if r["family"] == fam]
         ok = [r for r in cands if r["recall"] >= target]
         if ok:
             best = min(ok, key=lambda r: _cand_cost(r["candidates"]))
             out.append(
-                f"| {fam} | `{best['config']}` ({corpus}) "
+                f"| {fam} | `{best['config']}` "
                 f"| {best['recall']:.3f} | {best['candidates']} |")
         elif cands:
             best = max(cands, key=lambda r: r["recall"])
             out.append(
-                f"| {fam} | none reaches {target} on {corpus} — best is "
+                f"| {fam} | none reaches {target} — best is "
                 f"`{best['config']}` | {best['recall']:.3f} "
                 f"| {best['candidates']} |")
     out += [
@@ -421,17 +239,16 @@ def _recommendation_lines(rows: list[dict], clustered: list[dict]) -> list[str]:
     return out
 
 
-def write_md(
-    rows: list[dict], sf_dir: str, clustered: list[dict] | None = None,
-    opq: list[dict] | None = None,
-) -> None:
+def write_md(rows: list[dict], sf_dir: str) -> None:
     n = next((r["_n"] for r in rows if "_n" in r), "?")
     lines = [
         "# ANN recall@10 vs exact top-10",
         "",
         f"Corpus: `{sf_dir}/embeddings.parquet` ({n} vectors), "
         f"{N_QUERIES} queries, k={K}; ground truth = `topk_neighbors` "
-        "(exact integer dot product).  Regenerate with "
+        "(exact integer dot product).  IVF centroids: "
+        f"{IVF_LISTS} Lloyd's k-means centroids (5 rounds, md5-ranked "
+        "seeds).  Regenerate with "
         "`python tools/recall_sweep.py --write-md`.",
         "",
         "Recall@10 = mean over queries of |approx top-10 ∩ exact "
@@ -463,20 +280,14 @@ def write_md(
         "(quality-aware multi-probe: flip the smallest-margin sign "
         "bits, Lu et al. 2007) buys most of it back at ~probes x the "
         "per-bucket candidate cost — recall is provably non-decreasing "
-        "in probes (candidate superset, asserted in tests); IVF-PQ "
-        "sits below plain "
-        "IVF at the same nprobe by its quantization loss, shrinking as "
-        "m grows.  `ivf_pq_res` is the RESIDUAL (IVF-ADC) variant — "
-        "codes quantize (vector - assigned centroid); on this uniform "
-        "corpus the centroid of unit vectors is ~0 so residuals are "
-        "nearly as large as raw vectors and the gain at m=4/8 is small "
-        "(the clustered-corpus case, where residual encoding roughly "
-        "halves the recall gap, is pinned in test_dedup_similarity."
-        "test_ivf_pq_residual_beats_raw_on_clustered_corpus); the knob "
-        "that closes the gap to plain IVF is subspace count — at m=32 "
-        "residual ADC reaches ~0.75x of the exact-candidate recall at "
-        "the same nprobe (0.426 vs 0.572), from 0.30x at the r5 m=8 "
-        "no-residual configuration.  A tuning regression (broken "
+        "in probes (candidate superset, asserted in tests).  "
+        "`ivf_pq_res` is the residual (IVF-ADC) IVF-PQ that `ann_pq` "
+        "runs, in its derivation: the variance-balanced dimension "
+        "permutation and the residual codebooks come from the "
+        f"{PQ_SAMPLE} lowest ids (`opq_sample_codebooks`, "
+        f"m={PQ_M}, so {PQ_SAMPLE} codes per 2-d subspace), then every "
+        "vector is permuted.  It sits below plain IVF at the same "
+        "nprobe by its quantization loss.  A tuning regression (broken "
         "bucket key, wrong probe set) breaks these relationships — "
         "`tests/test_recall.py` asserts the floors and the "
         "monotone/exact-limit structure every suite run.",
@@ -486,78 +297,7 @@ def write_md(
         "table is the sf0.1 curve a user would tune against.",
         "",
     ]
-    if clustered:
-        lines += [
-            "## Clustered corpus (the real-embedding shape)",
-            "",
-            f"{CLUS_N} vectors, {CLUS_DIM}-d, {CLUS_NCEN} seeded "
-            f"Gaussian clusters (sigma {CLUS_SIGMA}, renormalized), "
-            f"same {N_QUERIES} queries/k; kmeans-trained coarse "
-            "centroids and PQ codebooks (the production trainers).  "
-            "`vs ivf` = recall divided by plain IVF at the SAME nprobe "
-            "— the fraction of the exact-candidate recall the 8x/16x "
-            "smaller PQ representation retains.",
-            "",
-            "| family | configuration | candidates/query | recall@10 "
-            "| vs ivf |",
-            "|---|---|---|---|---|",
-        ]
-        for r in clustered:
-            lines.append(
-                f"| {r['family']} | {r['config']} | {r['candidates']} "
-                f"| {r['recall']:.3f} | {r['ratio']:.2f}x |"
-            )
-        lines += [
-            "",
-            "Here plain IVF is near-perfect (clusters align with the "
-            "coarse lists), so `vs ivf` isolates pure quantization "
-            "loss: it rises with BOTH knobs — subspaces m and codes k "
-            "— and clears 0.8x at m=32 (2-d subspaces) with k>=64, "
-            "0.9x at k=256 (32 bytes/vector, 8x memory cut).  That "
-            "production-trainer configuration is asserted as a floor "
-            "in `tests/test_recall.py::"
-            "test_residual_pq_holds_ivf_recall_on_clustered_corpus`.  "
-            "The ORACLE-carried `ann_pq` runs m=32 with a deliberately "
-            "tiny deterministic codebook (16 codes derived from the "
-            "first 16 residuals) so DuckDB reproduces the encoding "
-            "bit-for-bit — a correctness artifact, not the tuning "
-            "recommendation.",
-            "",
-        ]
-    lines += _recommendation_lines(rows, clustered or [])
-    if opq:
-        lines += [
-            "## OPQ rotation (anisotropic corpus)",
-            "",
-            "800 vectors, 64-d, power-law latent variance densely "
-            "mixed by a random orthogonal matrix (seeded) — the shape "
-            "where coordinate-aligned PQ subspaces waste their code "
-            "budget.  `opq` trains a rotation (Ge et al. 2013 "
-            "alternating Procrustes, `train_opq_rotation`) and applies "
-            "it to corpus, queries and centroids (`rotate_vectors`, "
-            "one SQL-literal matvec, no shuffle); codebooks retrain on "
-            "the rotated vectors at the SAME (m, codes, nprobe).",
-            "",
-            "| configuration | plain PQ | OPQ | ratio |",
-            "|---|---|---|---|",
-        ]
-        for r in opq:
-            lines.append(
-                f"| {r['config']} | {r['plain']:.3f} | {r['opq']:.3f} "
-                f"| {r['ratio']:.2f}x |"
-            )
-        lines += [
-            "",
-            "The rotation cuts per-subspace quantization MSE ~70% on "
-            "this corpus (pinned in tests/test_recall.py::"
-            "test_opq_rotation_cuts_quantization_distortion) and the "
-            "recall lift is pinned with margin in "
-            "test_opq_rotation_lifts_adc_recall.  On the UNIFORM "
-            "corpus above OPQ is a no-op by construction (isotropy "
-            "leaves nothing to rotate), which is why it is not a "
-            "column there.",
-            "",
-        ]
+    lines += _recommendation_lines(rows)
     with open(os.path.join(_REPO, "RECALL.md"), "w") as f:
         f.write("\n".join(lines))
 
@@ -574,20 +314,8 @@ def main() -> None:
     rows = run_sweep(spark, sf_dir)
     for r in rows:
         print(f"{r['family']:7s} {r['config']:30s} recall@{K} = {r['recall']:.3f}")
-    clustered = run_clustered_sweep(spark)
-    for r in clustered:
-        print(
-            f"clustered {r['family']:11s} {r['config']:32s} "
-            f"recall@{K} = {r['recall']:.3f} ({r['ratio']:.2f}x ivf)"
-        )
-    opq = run_opq_sweep(spark)
-    for r in opq:
-        print(
-            f"opq {r['config']:28s} plain={r['plain']:.3f} "
-            f"opq={r['opq']:.3f} ({r['ratio']:.2f}x)"
-        )
     if "--write-md" in sys.argv:
-        write_md(rows, sf_dir, clustered, opq)
+        write_md(rows, sf_dir)
         print("wrote RECALL.md")
 
 

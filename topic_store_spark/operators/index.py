@@ -44,288 +44,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-class IVFIndex:
-    """Persistent IVF inverted-list index — the similarity-side sibling
-    of ``MinHashIndex``: ``build`` trains nothing (pass centroids from
-    `similarity.kmeans_centroids` or train in-line with ``k``), writes
-    ``centroids/`` and the assigned inverted lists ``lists/``;
-    ``append`` assigns only the batch against the FROZEN centroids;
-    ``query`` probes via `similarity.search_lists` — identical results
-    to running `ivf_ann_neighbors` over the same corpus + centroids.
-    """
-
-    def __init__(
-        self,
-        path: str,
-        id_col: str = "vec_id",
-        vec_col: str = "embedding",
-    ) -> None:
-        self.path = path
-        self.id_col = id_col
-        self.vec_col = vec_col
-
-    def _lists_path(self) -> str:
-        return os.path.join(self.path, "lists")
-
-    def _cen_path(self) -> str:
-        return os.path.join(self.path, "centroids")
-
-    @classmethod
-    def build(
-        cls,
-        corpus: DataFrame,
-        path: str,
-        centroids: DataFrame | None = None,
-        k: int | None = None,
-        **kw,
-    ) -> "IVFIndex":
-        idx = cls(path, **kw)
-        if centroids is None:
-            if k is None:
-                raise ValueError("pass trained centroids or k to train")
-            from topic_store_spark.operators.similarity import kmeans_centroids
-
-            centroids = kmeans_centroids(
-                corpus, k, id_col=idx.id_col, vec_col=idx.vec_col
-            ).select(
-                F.col("cen_id").alias(idx.id_col),
-                F.col("embedding").alias(idx.vec_col),
-            )
-        from topic_store_spark.operators.similarity import assign_to_lists
-
-        centroids.write.mode("overwrite").parquet(idx._cen_path())
-        cen = corpus.sparkSession.read.parquet(idx._cen_path())
-        assign_to_lists(corpus, cen, idx.id_col, idx.vec_col).write.mode(
-            "overwrite"
-        ).parquet(idx._lists_path())
-        return idx
-
-    def append(self, new_df: DataFrame) -> None:
-        """Assign the batch against the frozen centroids and append —
-        corpus cost per batch: zero."""
-        from topic_store_spark.operators.similarity import assign_to_lists
-
-        cen = new_df.sparkSession.read.parquet(self._cen_path())
-        assign_to_lists(new_df, cen, self.id_col, self.vec_col).write.mode(
-            "append"
-        ).parquet(self._lists_path())
-
-    def query(
-        self, queries: DataFrame, k: int = 5, nprobe: int = 2
-    ) -> DataFrame:
-        from topic_store_spark.operators.similarity import search_lists
-
-        spark = queries.sparkSession
-        return search_lists(
-            spark.read.parquet(self._lists_path()),
-            queries,
-            spark.read.parquet(self._cen_path()),
-            k,
-            nprobe,
-            self.id_col,
-            self.vec_col,
-        )
-
-
-class IVFPQIndex:
-    """Persistent residual IVF-PQ index — the production form of
-    `similarity.ivf_pq_ann_neighbors`, where the searched representation
-    IS what's stored: ``centroids/`` (coarse quantizer), ``books.json``
-    (PQ codebooks, trained on residuals), and ``codes/`` —
-    ``(id, list_id, codes array<int>)``, ``m`` small codes per vector
-    instead of the vector (~32x smaller at m=8 over 64 cells).  At
-    100 TB this is the difference between scanning vectors and scanning
-    codes: every query reads codes/ only; the corpus vectors are needed
-    once, at build/append time.
-
-    ``build`` trains (or takes) centroids, trains residual codebooks
-    (`train_pq_codebooks` over `ivf_residual_vectors`), encodes the
-    corpus and writes all three; ``append`` encodes ONLY the batch
-    against the frozen quantizers; ``query`` is ADC over stored codes —
-    bit-identical to the in-line operator with the same
-    centroids/codebooks (pinned by ``tests/test_index.py``).
-
-    ``build(opq=True)`` additionally learns an OPQ rotation
-    (`similarity.train_opq_rotation`) and persists it as
-    ``rotation.json`` — the index is SELF-DESCRIBING: centroids and
-    codes are stored in the rotated space, and ``append``/``query``
-    read the rotation from disk and apply it to incoming batches and
-    queries automatically, so a caller cannot mix rotated and
-    unrotated data (the MinHashIndex meta.json lesson)."""
-
-    def __init__(
-        self,
-        path: str,
-        id_col: str = "vec_id",
-        vec_col: str = "embedding",
-        residual: bool = True,
-    ) -> None:
-        self.path = path
-        self.id_col = id_col
-        self.vec_col = vec_col
-        self.residual = residual
-
-    def _cen_path(self) -> str:
-        return os.path.join(self.path, "centroids")
-
-    def _codes_path(self) -> str:
-        return os.path.join(self.path, "codes")
-
-    def _books_path(self) -> str:
-        return os.path.join(self.path, "books.json")
-
-    def _rotation_path(self) -> str:
-        return os.path.join(self.path, "rotation.json")
-
-    def _load_books(self) -> list:
-        import json
-
-        with open(self._books_path()) as f:
-            return json.load(f)
-
-    def _maybe_rotate(self, df: DataFrame) -> DataFrame:
-        """Apply the persisted OPQ rotation when one exists (build,
-        append and query all come through here, so every vector that
-        meets the index is in the same space)."""
-        import json
-
-        if not os.path.exists(self._rotation_path()):
-            return df
-        from topic_store_spark.operators.similarity import rotate_vectors
-
-        with open(self._rotation_path()) as f:
-            rotation = json.load(f)
-        return rotate_vectors(df, rotation, self.vec_col)
-
-    def _cen(self, spark: SparkSession):
-        from topic_store_spark.operators.similarity import _quantized
-
-        return _quantized(
-            spark.read.parquet(self._cen_path()), self.id_col, self.vec_col,
-            "cen",
-        )
-
-    def _encode(self, df: DataFrame, books: list) -> DataFrame:
-        from topic_store_spark.operators.similarity import (
-            PQCoder,
-            _pq_encode_corpus,
-            _quantized,
-        )
-
-        c = _quantized(
-            self._maybe_rotate(df), self.id_col, self.vec_col, "c"
-        )
-        return _pq_encode_corpus(
-            c, self._cen(df.sparkSession), PQCoder(books), self.residual
-        )
-
-    @classmethod
-    def build(
-        cls,
-        corpus: DataFrame,
-        path: str,
-        centroids: DataFrame | None = None,
-        k: int | None = None,
-        m: int = 8,
-        codes: int = 16,
-        max_iter: int = 3,
-        opq: bool = False,
-        **kw,
-    ) -> "IVFPQIndex":
-        import json
-
-        from topic_store_spark.operators.similarity import (
-            ivf_residual_vectors,
-            kmeans_centroids,
-            rotate_vectors,
-            train_opq_rotation,
-            train_pq_codebooks,
-        )
-
-        idx = cls(path, **kw)
-        # `corpus` stays the caller's UNROTATED relation throughout —
-        # _encode rotates internally via _maybe_rotate, so only the
-        # TRAINING view rotates here (rotating `corpus` itself would
-        # double-rotate at encoding time)
-        train_corpus = corpus
-        if not opq and os.path.exists(idx._rotation_path()):
-            # rebuilding in place over a previously-OPQ directory: a
-            # stale rotation.json would train centroids/codebooks on
-            # unrotated vectors while _maybe_rotate still rotates
-            # queries/appends — a silently space-mixed index.  Drop it
-            # (mirrors MinHashIndex.build's meta.json removal).
-            os.remove(idx._rotation_path())
-        if opq:
-            rotation = train_opq_rotation(
-                corpus, m=m, k=codes, id_col=idx.id_col, vec_col=idx.vec_col
-            )
-            os.makedirs(path, exist_ok=True)
-            with open(idx._rotation_path(), "w") as f:
-                json.dump(rotation, f)
-            train_corpus = rotate_vectors(corpus, rotation, idx.vec_col)
-            if centroids is not None:
-                centroids = rotate_vectors(centroids, rotation, idx.vec_col)
-        if centroids is None:
-            if k is None:
-                raise ValueError("pass trained centroids or k to train")
-            centroids = kmeans_centroids(
-                train_corpus, k, id_col=idx.id_col, vec_col=idx.vec_col
-            ).select(
-                F.col("cen_id").alias(idx.id_col),
-                F.col("embedding").alias(idx.vec_col),
-            )
-        centroids.write.mode("overwrite").parquet(idx._cen_path())
-        cen_df = corpus.sparkSession.read.parquet(idx._cen_path())
-        train_src = (
-            ivf_residual_vectors(
-                train_corpus, cen_df, id_col=idx.id_col, vec_col=idx.vec_col
-            )
-            if idx.residual
-            else train_corpus
-        )
-        books = train_pq_codebooks(
-            train_src, m=m, k=codes, max_iter=max_iter,
-            id_col=idx.id_col, vec_col=idx.vec_col,
-        )
-        os.makedirs(path, exist_ok=True)
-        with open(idx._books_path(), "w") as f:
-            json.dump(books, f)
-        idx._encode(corpus, books).write.mode("overwrite").parquet(
-            idx._codes_path()
-        )
-        return idx
-
-    def append(self, new_df: DataFrame) -> None:
-        """Encode the BATCH against the frozen centroids + codebooks and
-        append its codes — corpus cost per batch: zero."""
-        self._encode(new_df, self._load_books()).write.mode("append").parquet(
-            self._codes_path()
-        )
-
-    def query(
-        self, queries: DataFrame, k: int = 5, nprobe: int = 2
-    ) -> DataFrame:
-        """ADC top-k of every query against the STORED codes."""
-        from topic_store_spark.operators.similarity import (
-            PQCoder,
-            _pq_adc_rank,
-            _pq_query_luts,
-            _quantized,
-        )
-
-        spark = queries.sparkSession
-        coder = PQCoder(self._load_books())
-        q = _quantized(
-            self._maybe_rotate(queries), self.id_col, self.vec_col, "q"
-        )
-        luts = _pq_query_luts(
-            q, self._cen(spark), coder, nprobe, self.residual
-        )
-        return _pq_adc_rank(
-            spark.read.parquet(self._codes_path()), luts, k
-        )
-
-
 class MinHashIndex:
     """Handle to a persisted LSH index directory (see module doc)."""
 

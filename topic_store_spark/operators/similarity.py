@@ -26,13 +26,6 @@ for bit.
   generation is a bucket-key join instead of a cross join.  Hyperplanes
   are deterministic pseudo-randoms derived from md5, so results are
   reproducible run-to-run and machine-to-machine.
-- ``train_opq_rotation`` / ``rotate_vectors``   OPQ (Ge et al. 2013):
-  a learned orthogonal rotation that redistributes variance across the
-  PQ subspaces before encoding — trained driver-side on a bounded
-  sample, applied JVM-side as one SQL-literal matvec.  Measured on an
-  anisotropic mixed corpus: ~70% quantization-MSE reduction and
-  1.38x/1.13x recall@10 at m=16/32 (RECALL.md OPQ section,
-  tests/test_recall.py).
 """
 
 from __future__ import annotations
@@ -288,9 +281,10 @@ def assign_to_lists(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Inverted-list assignment: each corpus vector to its nearest
-    centroid.  Returns ``(c_id, c_qv, c_n, list_id)`` — the relation an
-    IVF index persists (`operators/index.py` IVFIndex) and
-    ``search_lists`` probes (see :func:`_nearest_list`).
+    centroid.  Returns ``(c_id, c_qv, c_n, list_id)`` — the relation
+    ``search_lists`` probes (see :func:`_nearest_list`).  The assignment
+    half of ``ivf_ann_neighbors``, kept callable on its own as the
+    reference the exact-tie tests probe.
     """
     cen = _quantized(centroids, id_col, vec_col, "cen")
     c = _quantized(corpus, id_col, vec_col, "c")
@@ -311,9 +305,9 @@ def search_lists(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Probe an inverted-list relation (``assign_to_lists`` output, live
-    or re-read from a persisted index) with a query set — the search
-    half of ``ivf_ann_neighbors``."""
+    """Probe an inverted-list relation (``assign_to_lists`` output) with
+    a query set — the search half of ``ivf_ann_neighbors``, kept
+    callable on its own as the reference the exact-tie tests probe."""
     cen = _quantized(centroids, id_col, vec_col, "cen")
     q = _quantized(queries, id_col, vec_col, "q")
     probes = _probe_lists(
@@ -348,9 +342,7 @@ def ivf_ann_neighbors(
     per query instead of the whole corpus.  Affinity ranking uses
     ``dot / sqrt(centroid_norm)`` on exact integer dots — IEEE ops on
     identical operands, so assignment is reproducible engine-to-engine.
-    Composition of ``assign_to_lists`` + ``search_lists`` (split so the
-    assignment relation can be persisted as a standing index —
-    `operators/index.py`).
+    Composition of ``assign_to_lists`` + ``search_lists``.
     """
     assigned = assign_to_lists(corpus, centroids, id_col, vec_col)
     return search_lists(
@@ -513,7 +505,9 @@ def pq_codebooks(
     driver-side collect is O(k * dim) — dimension-sized, never corpus.
 
     Returns ``codebooks[s][j] = quantized int sub-vector`` for use as
-    literals in :func:`ivf_pq_ann_neighbors`.
+    literals in :func:`ivf_pq_ann_neighbors`.  Over
+    :func:`ivf_residual_vectors` output it is the distributed reference
+    of the codebooks :func:`opq_sample_codebooks` derives on the driver.
     """
     rows = bounded_collect(
         sources.select(
@@ -535,50 +529,10 @@ def pq_codebooks(
     ]
 
 
-def train_pq_codebooks(
-    df: DataFrame,
-    m: int = 8,
-    k: int = 16,
-    max_iter: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[list[list[int]]]:
-    """Train PQ codebooks the FAISS way: an independent k-means per
-    subspace over the corpus's sub-vectors (m distributed Lloyd runs via
-    :func:`kmeans_centroids`); centroid means are quantized to the same
-    integer grid the ADC arithmetic uses.  Only k*dim/m cells per
-    subspace ever reach the driver."""
-    dim_row = df.select(F.size(F.col(vec_col)).alias("d")).first()
-    if dim_row is None:
-        raise ValueError("train_pq_codebooks: empty input")
-    dim = dim_row["d"]
-    if dim % m != 0:
-        raise ValueError(f"train_pq_codebooks: dim {dim} not divisible by m={m}")
-    sub = dim // m
-    books: list[list[list[int]]] = []
-    for s in range(m):
-        sliced = df.select(
-            F.col(id_col), F.slice(F.col(vec_col), s * sub + 1, sub).alias("_sub")
-        )
-        cen = bounded_collect(
-            kmeans_centroids(
-                sliced, k, max_iter=max_iter, id_col=id_col, vec_col="_sub"
-            ).orderBy("cen_id"),
-            k,
-            "train_pq_codebooks",
-        ).to_pylist()
-        books.append(
-            [[int(round(x * 1000)) for x in r["embedding"]] for r in cen]
-        )
-    return books
-
-
 class PQCoder:
     """Shared product-quantization expression builder: encodes vectors
     to per-subspace argmin codes and builds per-query ADC lookup tables
-    against a fixed codebook set.  Used by both the in-line
-    :func:`ivf_pq_ann_neighbors` and the persistent
-    `operators.index.IVFPQIndex`.
+    against a fixed codebook set, for :func:`ivf_pq_ann_neighbors`.
 
     The per-subspace expressions are built as SQL STRINGS (one F.expr
     per subspace), not as Column trees: the Column form costs thousands
@@ -677,13 +631,17 @@ def ivf_residual_vectors(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """``(id_col, vec_col)``: each corpus vector's RESIDUAL to its
-    assigned IVF centroid — the training input for residual PQ codebooks
-    (standard IVF-ADC, Jégou et al. 2011, "Product Quantization for
-    Nearest Neighbor Search" §IV).  Computed on the shared integer grid
-    (quantized vector minus quantized centroid) and scaled back to
-    floats, so downstream ``quantize_vector`` recovers the exact ints
-    the search-time encoder subtracts — trainer and searcher quantize
-    identically by construction."""
+    assigned IVF centroid (standard IVF-ADC, Jégou et al. 2011, "Product
+    Quantization for Nearest Neighbor Search" §IV).  Computed on the
+    shared integer grid (quantized vector minus quantized centroid) and
+    scaled back to floats, so downstream ``quantize_vector`` recovers
+    the exact ints the search-time encoder subtracts.
+
+    The distributed reference of the residuals
+    :func:`opq_sample_codebooks` computes on the driver: composed with
+    :func:`variance_balanced_permutation` and :func:`pq_codebooks` it
+    is what the fused derivation is tested equal to, and its codebooks
+    drive the residual-exactness and exact-tie tests."""
     cen = _quantized(centroids, id_col, vec_col, "cen")
     c = _quantized(corpus, id_col, vec_col, "c")
     return _nearest_list(c, cen, "c_qv", "cen_qv").select(
@@ -706,7 +664,6 @@ def ivf_pq_ann_neighbors(
     nprobe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    residual: bool = False,
 ) -> DataFrame:
     """IVF-PQ approximate top-k (the FAISS IVFPQ composition): coarse
     IVF inverted lists bound the candidate set, and within the probed
@@ -717,25 +674,24 @@ def ivf_pq_ann_neighbors(
     Why it matters at 100 TB: the searched representation shrinks ~32x
     (64 int cells -> 8 small codes per vector), so the inverted lists
     that actually move through the probe join carry codes, not vectors —
-    ADC is ``m`` table lookups + adds per candidate, and the per-query
-    LUT (``m * k`` integer distances) is computed once on the tiny
+    ADC is ``m`` table lookups + adds per candidate, and each LUT
+    (``m * k`` integer distances) is computed once on the tiny
     broadcast side.  Here the codes ride next to the vectors for
     oracle-checkability; a production index would persist codes only.
 
-    ``residual=True`` encodes each vector's residual to its assigned
-    coarse centroid and builds the query LUT from the query's residual
-    to each PROBED centroid (one LUT per (query, list) instead of per
-    query) — standard IVF-ADC (Jégou et al. 2011).  Residuals are far
-    smaller than raw vectors, so the same code budget quantizes them
-    much more finely: measured recall@10 roughly doubles vs no-residual
-    at equal nprobe (RECALL.md).  Pair with codebooks trained on
+    The codes are the RESIDUAL (IVF-ADC) form, Jégou et al. 2011: each
+    vector is encoded as its residual to its assigned coarse centroid,
+    and the query LUT is built from the query's residual to each PROBED
+    centroid (one LUT per (query, list) instead of per query).  The
+    codebooks are residual sub-vectors too — :func:`opq_sample_codebooks`
+    derives them, or :func:`pq_codebooks` over
     :func:`ivf_residual_vectors` output.
 
     Determinism contract (shared with the SQL oracle): encoding is
     integer argmin of exact L2^2 on the quantized grid, ties to the
     lower code id (``array_position`` returns the FIRST minimum); ADC
     sums exact integers; residual subtraction happens on the integer
-    grid, so both variants stay bit-reproducible cross-engine.
+    grid, so the result is bit-reproducible cross-engine.
 
     Returns ``(query_id, neighbor_id, rank, adc_dist)`` — rank 1 is the
     SMALLEST approximate distance, tie-broken on neighbor id.
@@ -744,21 +700,17 @@ def ivf_pq_ann_neighbors(
     cen = _quantized(centroids, id_col, vec_col, "cen")
     c = _quantized(corpus, id_col, vec_col, "c")
     q = _quantized(queries, id_col, vec_col, "q")
-    encoded = _pq_encode_corpus(c, cen, coder, residual)
-    luts = _pq_query_luts(q, cen, coder, nprobe, residual)
+    encoded = _pq_encode_corpus(c, cen, coder)
+    luts = _pq_query_luts(q, cen, coder, nprobe)
     return _pq_adc_rank(encoded, luts, k)
 
 
-def _pq_encode_corpus(
-    c: DataFrame, cen: DataFrame, coder: PQCoder, residual: bool,
-) -> DataFrame:
+def _pq_encode_corpus(c: DataFrame, cen: DataFrame, coder: PQCoder) -> DataFrame:
     """``(c_id, list_id, codes)``: coarse-assign every corpus vector
-    and PQ-encode it (residual or raw) in staged projections.  The full
-    vector is DROPPED here — downstream carries ``m`` codes/row."""
-    enc_vec = (
-        F.zip_with(F.col("best.c_qv"), F.col("best.cen_qv"), lambda x, y: x - y)
-        if residual
-        else F.col("best.c_qv")
+    and PQ-encode its residual in staged projections.  The full vector
+    is DROPPED here — downstream carries ``m`` codes/row."""
+    enc_vec = F.zip_with(
+        F.col("best.c_qv"), F.col("best.cen_qv"), lambda x, y: x - y
     )
     assigned = _nearest_list(c, cen, "cen_id", "c_qv", "cen_qv").select(
         "c_id", enc_vec.alias("c_ev"), F.col("best.cen_id").alias("list_id")
@@ -767,18 +719,13 @@ def _pq_encode_corpus(
 
 
 def _pq_query_luts(
-    q: DataFrame, cen: DataFrame, coder: PQCoder, nprobe: int, residual: bool,
+    q: DataFrame, cen: DataFrame, coder: PQCoder, nprobe: int
 ) -> DataFrame:
     """``(q_id, list_id, lut)``: the nprobe nearest lists per query with
-    the ADC lookup table for each probe.  No-residual LUTs depend on the
-    query alone; residual LUTs on the (query, probed list) pair — either
-    way this side is probe-sized (the residual zip_with stays the HOF
-    form deliberately: probe-count rows, never corpus-scale)."""
-    q_enc = (
-        F.zip_with(F.col("q_qv"), F.col("cen_qv"), lambda x, y: x - y)
-        if residual
-        else F.col("q_qv")
-    )
+    the ADC lookup table of the query's residual to each probed
+    centroid.  This side is probe-sized (the residual zip_with stays the
+    HOF form deliberately: probe-count rows, never corpus-scale)."""
+    q_enc = F.zip_with(F.col("q_qv"), F.col("cen_qv"), lambda x, y: x - y)
     probes = _probe_lists(
         q, cen, nprobe,
         "q_id", q_enc.alias("q_ev"), F.col("cen_id").alias("list_id"),
@@ -802,105 +749,6 @@ def _pq_adc_rank(
         .withColumn("adc_dist", adc)
     )
     return _topk(scored, k, F.col("adc_dist").asc(), F.col("adc_dist"))
-
-
-def kmeans_centroids(
-    df: DataFrame,
-    k: int,
-    max_iter: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    tol: float = 1e-6,
-) -> DataFrame:
-    """Distributed Lloyd's k-means over an embedding column — trains the
-    centroid table ``ivf_ann_neighbors`` probes (the missing half of an
-    IVF index build; FAISS-style train-then-assign, expressed as
-    DataFrame ops).
-
-    Returns ``(cen_id long, embedding array<double>)``, ``cen_id`` dense
-    0..k-1.
-
-    Determinism + scale shape:
-
-    - init is k-means||-flavored but deterministic: the k seeds are the
-      vectors with the smallest ``md5(id)`` (a reproducible uniform
-      sample — no RNG, no driver-side data);
-    - each iteration = ONE broadcast of the k centroids over the corpus
-      (nearest-centroid assignment, tie on lower cen_id) + ONE
-      groupBy(cluster) mean with map-side partials.  The corpus never
-      shuffles its vectors by cluster — only k*dim partial sums move;
-    - per-iteration results are materialized (``materialize_iter``), so
-      lineage stays flat and the convergence check costs one k-row
-      comparison, not a recompute of every prior round;
-    - empty clusters keep their previous centroid (standard Lloyd
-      fallback), so the output is always exactly k rows.
-    """
-    from topic_store_spark.operators.util import materialize_iter
-
-    dim_row = df.select(F.size(F.col(vec_col)).alias("d")).first()
-    if dim_row is None:
-        raise ValueError("kmeans_centroids: empty input")
-    vecs = df.select(
-        F.col(id_col).alias("_km_id"),
-        F.col(vec_col).cast("array<double>").alias("_km_v"),
-    )
-    seeds = (
-        vecs.orderBy(F.md5(F.col("_km_id").cast("string")), F.col("_km_id"))
-        .limit(k)
-        .select("_km_v")
-    )
-    centroids = materialize_iter(
-        seeds.select(
-            (F.row_number().over(Window.orderBy("_km_v")) - 1).alias("cen_id"),
-            F.col("_km_v").alias("_km_c"),
-        )
-    )
-
-    def _dist2(a: str, b: str) -> Column:
-        return F.aggregate(
-            F.zip_with(F.col(a), F.col(b), lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
-    for _ in range(max_iter):
-        w = Window.partitionBy("_km_id").orderBy("d2", "cen_id")
-        assigned = (
-            vecs.crossJoin(F.broadcast(centroids))
-            .withColumn("d2", _dist2("_km_v", "_km_c"))
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("cen_id", "_km_v")
-        )
-        # mean per cluster: element-wise partial sums via posexplode —
-        # only (k * dim) aggregated cells shuffle, never the vectors
-        sums = (
-            assigned.select("cen_id", F.posexplode("_km_v").alias("pos", "x"))
-            .groupBy("cen_id", "pos")
-            .agg(F.sum("x").alias("sx"), F.count(F.lit(1)).alias("n"))
-            .groupBy("cen_id")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("pos", (F.col("sx") / F.col("n")).alias("m")))
-                ).alias("pm")
-            )
-            .select("cen_id", F.transform("pm", lambda s: s["m"]).alias("_km_new"))
-        )
-        new_centroids = materialize_iter(
-            centroids.join(sums, "cen_id", "left").select(
-                "cen_id", F.coalesce("_km_new", "_km_c").alias("_km_c")
-            )
-        )
-        shift = (
-            centroids.alias("o")
-            .join(new_centroids.alias("n"), "cen_id")
-            .select(F.max(_dist2("o._km_c", "n._km_c")).alias("s"))
-            .first()["s"]
-        )
-        centroids = new_centroids
-        if shift is not None and shift <= tol:
-            break
-    return centroids.select("cen_id", F.col("_km_c").alias("embedding"))
 
 
 # ---------------------------------------------------------------------------
@@ -1023,20 +871,18 @@ def variance_balanced_permutation(
     PERMUTATION (the parametric-OPQ allocation intuition of Ge et al.
     2013 §4: spread variance evenly across subspaces).  A signless
     permutation is an exactly-orthogonal matrix whose application is
-    EXACT on the shared integer grid — so unlike the float Procrustes
-    rotation (`train_opq_rotation`), the permuted encoding reproduces
-    bit-for-bit in the DuckDB oracle (the r7 blocker for carrying OPQ
-    in `ann_pq`).
+    EXACT on the shared integer grid — so the permuted encoding
+    reproduces bit-for-bit in the DuckDB oracle.
 
     Allocation for 2-d subspaces: sort dims by residual variance
     (exact integer numerator ``n*sum(x^2) - sum(x)^2``, ties by dim
     index) and pair the s-th highest with the s-th lowest —
     ``perm[2s], perm[2s+1] = sorted[s], sorted[D-1-s]``.
 
-    ``residuals`` is the (BOUNDED — the codebook training sample, 16
-    vectors in the carried config) residual relation from
-    `ivf_residual_vectors`; the collect here is the same bounded
-    driver-side step the codebook derivation already takes."""
+    ``residuals`` is the (BOUNDED — the codebook sample, 16 vectors in
+    the carried config) residual relation from `ivf_residual_vectors`.
+    The distributed reference :func:`opq_sample_codebooks` is tested
+    equal to; ``q_ann_pq`` runs the fused form."""
     rows = bounded_collect(
         residuals.select(vec_col), MAX_BUILD_ROWS, "variance_balanced_permutation"
     ).to_pylist()
@@ -1055,103 +901,3 @@ def permute_vectors(
     array rebuild, exact for any value (no float arithmetic at all)."""
     cells = ", ".join(f"element_at({_q(vec_col)}, {i + 1})" for i in perm)
     return df.withColumn(vec_col, F.expr(f"array({cells})"))
-
-
-def train_opq_rotation(
-    df: DataFrame,
-    m: int,
-    k: int = 16,
-    iters: int = 8,
-    sample: int = 4096,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[list[float]]:
-    """Learn an OPQ rotation (Ge et al. 2013, "Optimized Product
-    Quantization"): an orthogonal matrix ``R`` that redistributes
-    variance across the ``m`` PQ subspaces so the independent
-    per-subspace codebooks waste less of their code budget.  Alternating
-    optimization: fix ``R``, train per-subspace k-means on the rotated
-    sample; fix the codes, solve the orthogonal Procrustes problem
-    ``min_R ||X R - C||_F`` (SVD of ``X^T C``).
-
-    Driver-side by design: the rotation is a ``dim x dim`` matrix and
-    training needs only a SAMPLE (first ``sample`` vectors by id —
-    deterministic), never the corpus.  numpy's SVD and the index-grid
-    k-means init keep the result reproducible run-to-run.
-
-    Returns ``R`` as row-major ``dim x dim`` floats in the
-    ``y = R @ v`` convention :func:`rotate_vectors` applies (the
-    internal solver works in the right-multiplied ``X S`` form; the
-    transpose is taken on return so the two compose EXACTLY — an
-    orthogonal matrix's transpose is its inverse, so mixing the
-    conventions silently applies the inverse rotation).  Apply to
-    corpus, queries AND IVF centroids (an orthogonal map preserves
-    inner products, so coarse assignments are unchanged up to grid
-    rounding), then train codebooks on the rotated residuals exactly
-    as without OPQ.
-    """
-    import numpy as np
-
-    rows = (
-        df.select(F.col(id_col).alias("_i"), F.col(vec_col).alias("_v"))
-        .orderBy("_i")
-        .limit(sample)
-        .collect()
-    )
-    if not rows:
-        raise ValueError("train_opq_rotation: empty input")
-    X = np.asarray([list(r["_v"]) for r in rows], dtype=np.float64)
-    dim = X.shape[1]
-    if dim % m != 0:
-        raise ValueError(f"train_opq_rotation: dim {dim} not divisible by m={m}")
-    sub = dim // m
-    R = np.eye(dim)
-
-    def _kmeans(Z: "np.ndarray") -> "np.ndarray":
-        # deterministic init: evenly spaced sample rows
-        idx = np.linspace(0, len(Z) - 1, k).astype(int)
-        cen = Z[idx].copy()
-        for _ in range(6):
-            d2 = ((Z[:, None, :] - cen[None, :, :]) ** 2).sum(-1)
-            a = d2.argmin(1)
-            for j in range(k):
-                pts = Z[a == j]
-                if len(pts):
-                    cen[j] = pts.mean(0)
-        return cen
-
-    for _ in range(iters):
-        Y = X @ R
-        C = np.empty_like(Y)
-        for s in range(m):
-            Z = Y[:, s * sub : (s + 1) * sub]
-            cen = _kmeans(Z)
-            d2 = ((Z[:, None, :] - cen[None, :, :]) ** 2).sum(-1)
-            C[:, s * sub : (s + 1) * sub] = cen[d2.argmin(1)]
-        U, _, Vt = np.linalg.svd(X.T @ C)
-        R = U @ Vt
-    return [[float(x) for x in row] for row in R.T]
-
-
-def rotate_vectors(
-    df: DataFrame,
-    rotation: list[list[float]],
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Apply a ``dim x dim`` rotation to ``vec_col`` (out = R @ v), all
-    JVM-side: the matrix rides as ONE SQL array-literal string (the
-    PQCoder pattern — a Column tree would cost thousands of py4j
-    round-trips), the matvec is transform+aggregate over it.  O(dim^2)
-    arithmetic per row, no shuffle, no Python in the hot path."""
-    dim = len(rotation)
-    if any(len(row) != dim for row in rotation):
-        raise ValueError("rotate_vectors: rotation must be square")
-    rows_sql = ",".join(
-        "array(" + ",".join(f"{x!r}D" for x in row) + ")" for row in rotation
-    )
-    matvec = (
-        f"transform(array({rows_sql}), r -> aggregate("
-        f"zip_with(r, `{vec_col}`, (a, b) -> a * cast(b AS double)), "
-        f"0D, (s, x) -> s + x))"
-    )
-    return df.withColumn(vec_col, F.expr(matvec))
